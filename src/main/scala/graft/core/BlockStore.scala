@@ -12,19 +12,31 @@ import graft.operators.Kernels
   * the reference's single contiguous `_vectors` matrix
   * (pico_vdb.py:136, 686-689). `norms` carries per-row double L2 norms
   * when the rows are NOT pre-normalized (cosine mode); null otherwise.
+  * `meta` is the row-aligned metadata JSON, the analog of the
+  * reference's `_docs` list beside `_vectors`: null for packs that carry
+  * no meta, and a null entry is a live record without metadata.
   */
 final class VecBlock[K](
     val ids: Array[K],
     val data: Array[Float],
     val dim: Int,
-    val norms: Array[Double]) extends Serializable {
+    val norms: Array[Double],
+    val meta: Array[String] = null) extends Serializable {
   def rows: Int = ids.length
 }
+
+/** One ranked hit with its row copied out of the pack: `meta` is null
+  * when the pack carries no meta or the record has none.
+  */
+final case class PackedHit[K](id: K, score: Double, meta: String,
+                              vector: Array[Float])
 
 /** Distributed packed-matrix vector store: `RDD[VecBlock]` persisted as
   * deserialized JVM objects, so "ingest-to-queryable" is one
   * normalize+pack pass and queries stream each block's matrix with SIMD
   * kernels — no per-row object overhead, no columnar-cache serialization.
+  * A pack built by [[BlockStore.fromMetaDataset]] also holds each row's
+  * meta, so [[topKMergedRows]] returns whole hits from the scan itself.
   *
   * Scale model: each block is one bounded slab (≤ `maxBlockFloats`
   * floats ≈ 128 MB) of one partition; a 100 TB store is just more
@@ -127,6 +139,55 @@ final class BlockStore[K](
     }
   }
 
+  /** [[topKMerged]] that also returns each hit's row (meta and vector),
+    * so a caller needs no second lookup to build its answer. Each
+    * partition scores its blocks with [[BlockStore.scoreBlock]] into the
+    * same bounded heaps as [[topKMerged]] (kernels, scores and tie order
+    * are identical), then copies its survivors' rows once, after its
+    * last block. Heaps and rows merge up one treeAggregate, which keeps
+    * only the rows its merged heaps still hold: one job, at most Q×k
+    * rows per merge. A task keeps its partition's blocks referenced until
+    * the copy: free for a persisted pack, and up to one partition's packed
+    * data for a transient one.
+    *
+    * Returns per input query (in input order): the ranked hits.
+    */
+  def topKMergedRows(
+      queries: Array[(Long, Array[Float])],
+      k: Int,
+      betterThan: Option[Double] = None,
+      normalizeQueries: Boolean = true,
+      exact: Boolean = false): Array[Array[PackedHit[K]]] = {
+    val (bc, threshold) = prepare(queries, betterThan, normalizeQueries)
+    val kk = k
+    val ex = exact
+    val localOrd = ord
+    val nq = queries.length
+    try {
+      val merged = blocks.mapPartitions { it =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val (_, qs, qn) = bc.value
+          val heaps = Array.fill(qs.length)(new BoundedTopKG[K](kk)(localOrd))
+          val scanned = scala.collection.mutable.ArrayBuffer.empty[VecBlock[K]]
+          it.foreach { b =>
+            BlockStore.scoreBlock(heaps, b, qs, qn, threshold, ex)
+            scanned += b
+          }
+          Iterator.single(HeapsWithRows.of(heaps, scanned))
+        }
+      }.treeAggregate(null: HeapsWithRows[K])(
+        seqOp = HeapsWithRows.merge[K],
+        combOp = HeapsWithRows.merge[K],
+        depth = 2)
+      if (merged == null) Array.fill(nq)(Array.empty[PackedHit[K]])
+      else merged.heaps.map(_.sortedHits().map { case (id, s) =>
+        val (meta, vector) = merged.rows.get(id)
+        PackedHit(id, s, meta, vector)
+      })
+    } finally bc.destroy()
+  }
+
   private def prepare(
       queries: Array[(Long, Array[Float])],
       betterThan: Option[Double],
@@ -180,24 +241,48 @@ object BlockStore {
         packPartition(it, normalize, assumeNormalized, maxBlockFloats)),
       normalize || assumeNormalized)
 
+  /** [[fromDataset]] over (id, vector, meta) rows: each block keeps the
+    * rows' meta row-aligned in [[VecBlock.meta]].
+    */
+  def fromMetaDataset[K: ClassTag: Ordering](
+      ds: Dataset[(K, Array[Float], String)],
+      normalize: Boolean,
+      assumeNormalized: Boolean = false,
+      maxBlockFloats: Int = MaxBlockFloats): BlockStore[K] =
+    new BlockStore[K](
+      ds.rdd.mapPartitions(it =>
+        packRows(it, withMeta = true, normalize, assumeNormalized, maxBlockFloats)),
+      normalize || assumeNormalized)
+
   private[graft] def packPartition[K: ClassTag](
       it: Iterator[(K, Array[Float])],
       normalize: Boolean,
       assumeNormalized: Boolean = false,
-      maxBlockFloats: Int = MaxBlockFloats): Iterator[VecBlock[K]] = {
+      maxBlockFloats: Int = MaxBlockFloats): Iterator[VecBlock[K]] =
+    packRows(it.map { case (id, v) => (id, v, null: String) }, withMeta = false,
+      normalize, assumeNormalized, maxBlockFloats)
+
+  private def packRows[K: ClassTag](
+      it: Iterator[(K, Array[Float], String)],
+      withMeta: Boolean,
+      normalize: Boolean,
+      assumeNormalized: Boolean,
+      maxBlockFloats: Int): Iterator[VecBlock[K]] = {
     if (!it.hasNext) return Iterator.empty
     new Iterator[VecBlock[K]] {
       override def hasNext: Boolean = it.hasNext
       override def next(): VecBlock[K] = {
-        val (id0, v0) = it.next()
+        val (id0, v0, meta0) = it.next()
         val dim = v0.length
         val maxRows = math.max(1, maxBlockFloats / math.max(1, dim))
         val ids = Array.newBuilder[K]
         var data = new Array[Float](math.min(maxRows, 4096) * dim)
         val norms = Array.newBuilder[Double]
+        val metas = if (withMeta) Array.newBuilder[String] else null
         var rows = 0
         var row: Array[Float] = v0
         var id: K = id0
+        var meta: String = meta0
         var more = true
         while (more) {
           if ((rows + 1) * dim > data.length)
@@ -221,16 +306,18 @@ object BlockStore {
             if (!assumeNormalized) norms += math.sqrt(Kernels.normSqD(row))
           }
           ids += id
+          if (metas != null) metas += meta
           rows += 1
           if (rows < maxRows && it.hasNext) {
-            val n = it.next(); id = n._1; row = n._2
+            val n = it.next(); id = n._1; row = n._2; meta = n._3
             require(row.length == dim, s"vector dim ${row.length} != $dim in block")
           } else more = false
         }
         val packed = if (rows * dim == data.length) data
                      else java.util.Arrays.copyOf(data, rows * dim)
         new VecBlock[K](ids.result(), packed, dim,
-          if (normalize || assumeNormalized) null else norms.result())
+          if (normalize || assumeNormalized) null else norms.result(),
+          if (metas == null) null else metas.result())
       }
     }
   }
@@ -432,6 +519,59 @@ object BlockStore {
           t0 = tEnd
         }
       }
+  }
+}
+
+/** One partition's (or one merge's) per-query heaps plus the rows of
+  * the ids they hold, keyed by id: (meta, vector). The partial result of
+  * [[BlockStore.topKMergedRows]].
+  */
+private[core] final class HeapsWithRows[K](
+    val heaps: Array[BoundedTopKG[K]],
+    val rows: java.util.HashMap[K, (String, Array[Float])]) extends Serializable
+
+private[core] object HeapsWithRows {
+
+  /** Copy the rows of every id the heaps hold out of the blocks they
+    * were scored from.
+    */
+  def of[K](heaps: Array[BoundedTopKG[K]],
+            blocks: Iterable[VecBlock[K]]): HeapsWithRows[K] = {
+    val want = held(heaps)
+    val rows = new java.util.HashMap[K, (String, Array[Float])](want.size * 2)
+    val bi = blocks.iterator
+    while (!want.isEmpty && bi.hasNext) {
+      val b = bi.next()
+      var r = 0
+      while (r < b.rows && !want.isEmpty) {
+        val id = b.ids(r)
+        if (want.remove(id))
+          rows.put(id, (if (b.meta == null) null else b.meta(r),
+            java.util.Arrays.copyOfRange(b.data, r * b.dim, (r + 1) * b.dim)))
+        r += 1
+      }
+    }
+    new HeapsWithRows(heaps, rows)
+  }
+
+  /** treeAggregate seqOp/combOp: absorb b's heaps into a's, then keep
+    * only the rows the merged heaps still hold.
+    */
+  def merge[K](a: HeapsWithRows[K], b: HeapsWithRows[K]): HeapsWithRows[K] =
+    if (a == null) b
+    else if (b == null) a
+    else {
+      var i = 0
+      while (i < a.heaps.length) { a.heaps(i).absorb(b.heaps(i)); i += 1 }
+      a.rows.putAll(b.rows)
+      a.rows.keySet.retainAll(held(a.heaps))
+      a
+    }
+
+  private def held[K](heaps: Array[BoundedTopKG[K]]): java.util.HashSet[K] = {
+    val ids = new java.util.HashSet[K]()
+    heaps.foreach(_.drain().foreach { case (_, id) => ids.add(id) })
+    ids
   }
 }
 

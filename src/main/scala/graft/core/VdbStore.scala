@@ -905,13 +905,19 @@ final class VdbStore private (
     * arbitrary Scala predicates can be passed pre-applied via `where`
     * using a UDF, costing a full scan in both systems.
     *
-    * Scoring runs on the packed BlockStore gemm path (one shuffle-free
-    * treeAggregate pass, per-partition bounded heaps) in exact mode —
+    * The exact strategies score on the packed BlockStore path (one
+    * shuffle-free treeAggregate pass, per-partition bounded heaps):
+    * float32 SIMD kernels by default, or, under `graft.query.exact`,
     * double accumulation bit-identical to the DotProduct expression, so
     * results match the declarative/Window plan. Unfiltered queries hit a
     * store-version-cached pack; filtered ones pack their candidate set
     * transiently (the reference also runs filtered queries on a sliced
-    * matrix, pico_vdb.py:683-689).
+    * matrix, pico_vdb.py:683-689). Hits are assembled in that same scan:
+    * the pack holds each row's meta beside its vector, as the
+    * reference's `_docs` sits beside `_vectors` (pico_vdb.py:136), and
+    * each partition copies its survivors' rows after scoring, so an
+    * exact query is one Spark job. The accelerated strategies rank
+    * first and then fetch their hits' rows with [[get]].
     */
   /** `whereFn` is the reference's arbitrary-callable predicate
     * (pico_vdb.py:643-654): an opaque function over (record id, raw
@@ -1032,9 +1038,26 @@ final class VdbStore private (
       else "exact-filtered")
 
     val queries = vectors.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
-    // (qid, id, score, rank) on the driver — Q x k rows either way
-    val ranked: Seq[(Long, String, Double, Int)] =
-    if (hnswFiltered.isDefined || annFiltered.isDefined) {
+    // The accelerated strategies rank (qid, id, score, rank) on the
+    // driver — Q x k rows — and then fetch the rows of the (<= Q x k)
+    // distinct hit ids; a hit whose row is gone by then is dropped.
+    def collectRanked(df: DataFrame): Seq[(Long, String, Double, Int)] =
+      df.select(col("qid"), col("id"), col("score"), col("rank"))
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+    def withRows(ranked: Seq[(Long, String, Double, Int)]): Seq[Seq[VdbHit]] = {
+      val byId = get(ranked.map(_._2).distinct, includeVector = true)
+        .map(h => h.id -> h).toMap
+      val grouped = ranked.groupBy(_._1)
+      vectors.indices.map { i =>
+        grouped.getOrElse(i.toLong, Seq.empty).sortBy(_._4).flatMap {
+          case (_, id, score, _) =>
+            byId.get(id).map(h => VdbHit(id, score, h.metaJson, h.vector))
+        }
+      }
+    }
+    val answers: Seq[Seq[VdbHit]] =
+    if (hnswFiltered.isDefined || annFiltered.isDefined) withRows {
       // filtered-accelerator strategies: membership pushed into the
       // accelerated scan — the HNSW per-shard beam search with
       // result-collection filtering + adaptive ef widening
@@ -1090,10 +1113,7 @@ final class VdbStore private (
             idx.searchMergedAllowed[String](normQ, scanK, member, denySet,
               probes, normalized = true, exact = conf.queryExact)
       }
-      val raw = rawDf
-        .select(col("qid"), col("id"), col("score"), col("rank"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+      val raw = collectRanked(rawDf)
       if (!isBloom) raw
       else {
         // exact verification of the (≤ Q x scanK) distinct candidate
@@ -1146,10 +1166,7 @@ final class VdbStore private (
       // exact sibling is the `exact` strategy below).
       val ef = if (efSearch > 0) efSearch else conf.hnswEf
       val normQ = queries.map { case (i, v) => (i, NormalizeL2.normalize(v)) }
-      hnsw.get.searchMerged(normQ, topK, ef)
-        .select(col("qid"), col("id"), col("score"), col("rank"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+      withRows(collectRanked(hnsw.get.searchMerged(normQ, topK, ef)))
     } else ann match {
       case Some(idx) if q8Enabled =>
         // composed IVF-SQ8 strategy (round 12): IVF prunes the probed
@@ -1161,11 +1178,8 @@ final class VdbStore private (
         // has nothing left to flip on the rescore side).
         val probes = if (nProbe > 0) nProbe else conf.annNProbeFor(idx.nList)
         val normQ = queries.map { case (i, v) => (i, NormalizeL2.normalize(v)) }
-        idx.searchMergedQ8[String](normQ, topK, probes,
-            normalized = true, overfetch = conf.q8Overfetch)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(idx.searchMergedQ8[String](normQ, topK, probes,
+            normalized = true, overfetch = conf.q8Overfetch)))
       case Some(idx) if pqM.isDefined =>
         // composed IVF-PQ strategy (round 16, the reference's IVFPQ
         // analog reachable from query() like every other accelerator,
@@ -1180,11 +1194,8 @@ final class VdbStore private (
         // one serves), mirroring the flat q8 > pq order.
         val probes = if (nProbe > 0) nProbe else conf.annNProbeFor(idx.nList)
         val normQ = queries.map { case (i, v) => (i, NormalizeL2.normalize(v)) }
-        idx.searchMergedPq[String](normQ, topK, probes,
-            normalized = true, overfetch = conf.pqOverfetch, m = pqM.get)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(idx.searchMergedPq[String](normQ, topK, probes,
+            normalized = true, overfetch = conf.pqOverfetch, m = pqM.get)))
       case Some(idx) if bitBits.isDefined =>
         // composed IVF-bit strategy (round 16): the cheapest composed
         // rung — IVF prunes the probed buckets, bits/8-byte sign
@@ -1195,11 +1206,8 @@ final class VdbStore private (
         // q8 > pq > bit order.
         val probes = if (nProbe > 0) nProbe else conf.annNProbeFor(idx.nList)
         val normQ = queries.map { case (i, v) => (i, NormalizeL2.normalize(v)) }
-        idx.searchMergedBit[String](normQ, topK, probes,
-            normalized = true, overfetch = conf.bitOverfetch, bits = bitBits.get)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(idx.searchMergedBit[String](normQ, topK, probes,
+            normalized = true, overfetch = conf.bitOverfetch, bits = bitBits.get)))
       case Some(idx) =>
         // explicit arg > graft.ann.nprobe conf > nList/2 recall-first
         // default for THIS index's list count (VERDICT r6 #5)
@@ -1216,63 +1224,40 @@ final class VdbStore private (
         // copy of the store alongside `assigned` (dropped with the
         // index on refit/rebuild), the same trade the reference makes
         // keeping a FAISS index beside its numpy matrix.
-        idx.searchMerged[String](normQ, topK, probes,
-            normalized = true, exact = conf.queryExact)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(idx.searchMerged[String](normQ, topK, probes,
+            normalized = true, exact = conf.queryExact)))
       case None if useQ8 =>
         // int8 scan -> k x graft.q8.overfetch candidates -> exact
         // double rescore (candidate-restricted pass over the fp32
         // blocks, no store scan/shuffle). Scores are double-accumulated
         // — identical to the exact strategy under graft.query.exact.
-        q8Store().rescoredTopK(queries, topK, conf.q8Overfetch)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(q8Store().rescoredTopK(queries, topK, conf.q8Overfetch)))
       case None if usePq =>
         // ADC scan (m bytes/row) -> k x graft.pq.overfetch candidates
         // -> exact double rescore — the same rescore machinery as q8
         // (Q8Store.rescoreCandidates), so scores are double-accumulated
         // identically.
-        pqStoreAcc().rescoredTopK(queries, topK, conf.pqOverfetch)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(pqStoreAcc().rescoredTopK(queries, topK, conf.pqOverfetch)))
       case None if useBit =>
         // Hamming scan (bits/8 bytes/row, XOR+popcount) ->
         // k x graft.bit.overfetch candidates -> the same exact double
         // rescore as q8/pq.
-        bitStoreAcc().rescoredTopK(queries, topK, conf.bitOverfetch)
-          .select(col("qid"), col("id"), col("score"), col("rank"))
-          .collect()
-          .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3))).toSeq
+        withRows(collectRanked(bitStoreAcc().rescoredTopK(queries, topK, conf.bitOverfetch)))
       case None =>
-        val bs = if (unfiltered) blockStore() else packCandidates(cand)
+        // exact strategies: the pack holds meta beside the vectors, so
+        // the scan returns whole hits — one job, no lookup after it.
         // float32 SIMD scoring by default — the reference's own
         // precision (pico_vdb.py:26 Float = np.float32); set
         // graft.query.exact=true for double accumulation bit-identical
         // to the declarative/DotProduct plan.
-        val merged = bs.topKMerged(queries, topK, betterThan,
-          normalizeQueries = true, exact = conf.queryExact)
-        merged.iterator.zipWithIndex.flatMap { case (hits, qi) =>
-          hits.iterator.zipWithIndex.map { case ((id, s), r) =>
-            (queries(qi)._1, id, s, r + 1)
-          }
-        }.toSeq
+        val bs = if (unfiltered) blockStore() else packCandidates(cand)
+        bs.topKMergedRows(queries, topK, betterThan,
+            normalizeQueries = true, exact = conf.queryExact)
+          .toSeq.map(_.toSeq.map(h =>
+            VdbHit(h.id, h.score, Option(h.meta), Some(h.vector))))
     }
-
-    // Fetch metadata/vectors for the (<= Q x k) distinct hit ids only.
-    val hitIds = ranked.map(_._2).distinct
-    val rows = get(hitIds, includeVector = true)
-    val byId = rows.map(h => h.id -> h).toMap
-    val grouped = ranked.groupBy(_._1)
-    vectors.indices.map { i =>
-      grouped.getOrElse(i.toLong, Seq.empty).sortBy(_._4).flatMap {
-        case (_, id, score, _) =>
-          byId.get(id).map(h => VdbHit(id, score, h.metaJson, h.vector))
-      }.filter(h => whereFn.forall(f => f(h.id, h.metaJson.orNull))) // post-score recheck
-    }
+    // post-score recheck
+    answers.map(_.filter(h => whereFn.forall(f => f(h.id, h.metaJson.orNull))))
   }
 
 
@@ -1628,8 +1613,8 @@ final class VdbStore private (
         // (Q x scanK rows — result-sized, released in-call like every
         // other bloom pin) so the re-rank/assembly action reads it from
         // cache instead of re-running the verification joins. Identical
-        // row semantics; measured 24 -> ~15 driver jobs per bloom call
-        // at sf0.1 (most were AQE stage materializations of the
+        // row semantics; measured 24 -> 19 driver jobs per bloom call
+        // (q97 at sf0.1; most were AQE stage materializations of the
         // duplicated subtrees).
         val flagged = rawHits
           .join(cand.select(col("_id_").as("id"), lit(true).as("_m")),
@@ -1642,11 +1627,21 @@ final class VdbStore private (
           .filter(col("_verified") < topK && col("_scanned") >= scanK)
           .select(col("qid"))
           .persist()
+        // held from its persist on, so a failure of the count below (or
+        // of anything after it) releases it with the other pins
+        bloomHeld += refillQids
         // RDD-level count (round 22): Dataset.count() appends a whole
         // count-aggregate subtree (partial agg + Exchange + final) that
         // AQE materializes as extra driver jobs per call; counting the
         // frame's own execution RDD returns the identical row count,
         // fills the persist just the same, and skips those stages.
+        // Invariant: this is the first force of refillQids' lazy
+        // execution plan, and it comes after persist(), so the plan
+        // reads through its own cache entry and the count fills it. A
+        // Dataset whose plan was forced before its persist would count
+        // the uncached plan and leave the entry empty. The job runs
+        // outside SQLExecution.withNewExecutionId: it posts no SQL
+        // execution events, which nothing here reads.
         val nRefill = refillQids.queryExecution.toRdd.count()
         lastBloomRefills = math.min(nRefill, Int.MaxValue.toLong).toInt
         val verified = flagged.filter(col("_m"))
@@ -1662,7 +1657,7 @@ final class VdbStore private (
           .filter(col("_rr") <= topK)
           .select(col("qid"), col("id"), col("score"), col("_rr").as("rank"))
         val assembled =
-          if (nRefill == 0) { refillQids.unpersist(); kept }
+          if (nRefill == 0) kept
           else {
             VdbStore.log.info(
               s"graft: queryDF bloom rung refilling $nRefill queries whose " +
@@ -1679,7 +1674,6 @@ final class VdbStore private (
             // materialization below: kept (left_anti) and subQ
             // (left_semi) read it, and unpersisting first would re-run
             // the verification aggregations (round-18 review)
-            bloomHeld += refillQids
             kept.unionByName(refilled)
           }
         // surrogate -> user qid: a plain equi-join — the hits side is
@@ -1712,9 +1706,10 @@ final class VdbStore private (
         val pinned = mapped
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         bloomPinnedInFlight = Some(pinned)
-        // same RDD-level materialization as nRefill above: every
-        // partition of the pinned result computes and caches, without
-        // the count-aggregate's extra AQE stages
+        // same RDD-level materialization as nRefill above, under the
+        // same invariant: `pinned` is a fresh Dataset whose plan is first
+        // forced here, after its persist, so every partition computes
+        // and caches, without the count-aggregate's extra AQE stages
         pinned.queryExecution.toRdd.count()
         bloomBulkSlot.swap(List(pinned))
         bloomPinnedInFlight = None
@@ -1906,10 +1901,15 @@ final class VdbStore private (
       bs
   }
 
+  /** Pack (id, vector, meta) rows: the meta column rides row-aligned
+    * beside the vectors, like the reference's `_docs` beside `_vectors`
+    * (pico_vdb.py:136), so the exact strategies answer from the scan.
+    */
   private def packCandidates(cand: DataFrame): BlockStore[String] = {
     import spark.implicits._
-    BlockStore.fromDataset(
-      cand.select(col("_id_"), col("_vector_")).as[(String, Array[Float])],
+    BlockStore.fromMetaDataset(
+      cand.select(col("_id_"), col("_vector_"), col("meta"))
+        .as[(String, Array[Float], String)],
       normalize = false, assumeNormalized = true)
   }
 
@@ -2015,9 +2015,11 @@ final class VdbStore private (
     val src =
       if (ids.size <= conf.inListMax) active.filter(col("_id_").isin(ids: _*))
       else active.join(broadcast(ids.distinct.toDF("_id_")), Seq("_id_"), "left_semi")
-    val rows = src
-      .select(col("_id_"), col("meta"), col("_vector_"))
-      .collect()
+    // the vector column is most of each cached row: read it only when
+    // the caller asked for vectors
+    val cols = Seq(col("_id_"), col("meta")) ++
+      (if (includeVector) Seq(col("_vector_")) else Nil)
+    val rows = src.select(cols: _*).collect()
     val byId = rows.map(r => r.getString(0) -> r).toMap
     ids.flatMap(byId.get).map { r =>
       VdbHit(r.getString(0), Double.NaN, Option(r.getString(1)),

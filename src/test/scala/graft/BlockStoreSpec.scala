@@ -129,11 +129,45 @@ class BlockStoreSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("topKMergedRows ranks like topKMerged and returns each hit's packed row") {
+    import spark.implicits._
+    val rng = new java.util.Random(31)
+    val dim = 8
+    val rows = (0 until 600).map { i =>
+      (f"id$i%04d", randVec(rng, dim), if (i % 4 == 0) null else s"m$i")
+    }
+    val source = rows.map(r => r._1 -> r).toMap
+    val ds = spark.createDataset(rows).repartition(3)
+    // ~20 rows per block: survivors come from many blocks per partition
+    val bs = BlockStore.fromMetaDataset(ds, normalize = false,
+      assumeNormalized = true, maxBlockFloats = dim * 20)
+    val queries = Array.tabulate(9)(i => (i.toLong, randVec(rng, dim)))
+    for (exact <- Seq(false, true); k <- Seq(1, 7, 700)) {
+      val ranked = bs.topKMerged(queries, k, exact = exact)
+      val withRows = bs.topKMergedRows(queries, k, exact = exact)
+      assert(withRows.map(_.map(h => (h.id, h.score)).toSeq).toSeq ==
+        ranked.map(_.toSeq).toSeq)
+      withRows.flatten.foreach { h =>
+        val (_, v, m) = source(h.id)
+        assert(h.meta == m && h.vector.toSeq == v.toSeq)
+      }
+    }
+    // a pack without meta returns null meta; a threshold can empty a list
+    val plain = BlockStore.fromDataset(ds.map(r => (r._1, r._2)),
+      normalize = false, assumeNormalized = true)
+    val hits = plain.topKMergedRows(queries, 3, betterThan = Some(10.0)) ++
+      plain.topKMergedRows(queries, 3)
+    assert(hits.take(queries.length).forall(_.isEmpty))
+    assert(hits.flatten.nonEmpty && hits.flatten.forall(_.meta == null))
+  }
+
   test("empty store yields empty hit lists") {
     import spark.implicits._
     val df = Seq.empty[(String, Array[Float])].toDS()
     val bs = BlockStore.fromDataset(df, normalize = true)
     val merged = bs.topKMerged(Array((0L, Array(1f, 0f))), k = 3)
     assert(merged.length == 1 && merged.head.isEmpty)
+    val withRows = bs.topKMergedRows(Array((0L, Array(1f, 0f))), k = 3)
+    assert(withRows.length == 1 && withRows.head.isEmpty)
   }
 }

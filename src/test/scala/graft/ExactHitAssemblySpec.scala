@@ -171,22 +171,29 @@ class ExactHitAssemblySpec extends AnyFunSuite {
     val rng = new Random(22)
     val qs = Seq.fill(5)(vec(rng))
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // jobs per job group: each measured call runs under its own group,
+    // so a late event from an earlier call can never be counted
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        if (j.properties != null &&
-            j.properties.getProperty("spark.job.description") == "graft.vdb.query")
-          jobs.incrementAndGet()
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
         ()
       }
     }
+    var calls = 0
     def jobsOf(call: => Unit): Int = {
-      Thread.sleep(500) // listener delivery is async; drain earlier events
-      jobs.set(0)
-      call
-      Thread.sleep(1000)
-      jobs.get()
+      calls += 1
+      val group = s"exact-hit-assembly-$calls"
+      sc.setJobGroup(group, group)
+      try call finally sc.clearJobGroup()
+      // listener delivery is async: wait for the call's jobs to surface
+      val deadline = System.nanoTime() + 10000000000L
+      while (!jobs.containsKey(group) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      Thread.sleep(500)
+      jobs.getOrDefault(group, 0)
     }
     s.query(qs, topK = 5) // builds the store-version-cached pack
     sc.addSparkListener(listener)
