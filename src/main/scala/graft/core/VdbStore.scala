@@ -1726,9 +1726,10 @@ final class VdbStore private (
           bloomPinnedInFlight.foreach(_.unpersist(false))
           throw t
       }
-    // INNER join, matching query()'s hit-assembly semantics: a hit
-    // whose row vanished under a concurrent mutation is dropped, never
-    // emitted with null id/meta (review r17). There is deliberately NO
+    // INNER join, matching the get-based assembly of query()'s
+    // accelerated strategies: a hit whose row vanished under a
+    // concurrent mutation is dropped, never emitted with null id/meta
+    // (review r17). There is deliberately NO
     // post-score whereFn recheck here (the fourth documented deviation
     // in the scaladoc): query()'s recheck re-validates the live
     // callable on the DRIVER after scoring (pico_vdb.py:768-770), but
