@@ -272,6 +272,57 @@ class IvfMergedEngineSpec extends AnyFunSuite {
       idx.unpersistAssigned()
     }
   }
+
+  test("a filtered call that short-circuits resets lastFilteredPasses to 0") {
+    val data = rows(normalized = true)
+    val idx = index(data, normalized = true)
+    val qs = queries(data)
+    val few = SetMember(Array(3L, 130L))
+    val none = SetMember(Array.empty[Long])
+    def reprobe(): Unit = {
+      idx.searchMergedAllowed[Long](qs, 5, few, deny = false, nProbe = 1)
+      assert(idx.lastFilteredPasses > 1)
+    }
+    reprobe()
+    idx.searchMergedAllowed[Long](qs, 5, none, deny = false, nProbe = 1)
+    assert(idx.lastFilteredPasses == 0, "empty allow set")
+    reprobe()
+    idx.searchMergedAllowed[Long](Array.empty, 5, few, deny = false, nProbe = 1)
+    assert(idx.lastFilteredPasses == 0, "empty batch")
+    reprobe()
+    idx.searchMergedQ8Allowed[Long](qs, 5, none, deny = false, nProbe = 1)
+    assert(idx.lastFilteredPasses == 0, "q8, empty allow set")
+    reprobe()
+    idx.searchMergedQ8Allowed[Long](Array.empty, 5, few, deny = false,
+      nProbe = 1, overfetch = 4)
+    assert(idx.lastFilteredPasses == 0, "q8, empty batch")
+    idx.unpersistAssigned()
+  }
+
+  test("covering searchPackedAllowed is immune to a query source whose row order changes between evaluations") {
+    val data = rows(normalized = true)
+    val idx = index(data, normalized = true)
+    val qs = queries(data)
+    // the covering branch scans the flat pack; with two or more block
+    // partitions the query side is read once per block partition
+    assert(idx.flatPackSizes().count(_ > 0) >= 2)
+    val member = SetMember(data.map(_._1).filter(_ % 3 == 0).toArray)
+    // each evaluation of a partition returns its rows in a new order,
+    // as an order-unstable shuffled upstream would
+    val unstable = spark.sparkContext.parallelize(qs.toSeq, 2).mapPartitions { it =>
+      val part = it.toVector
+      new Random(IvfMergedEngineSpec.evaluations.incrementAndGet())
+        .shuffle(part).iterator
+    }
+    for (exact <- Seq(false, true)) {
+      val got = idx.searchPackedAllowed[Long](spark.createDataset(unstable), 5,
+        member, deny = false, nProbe = nList, exact = exact)
+      val same = key(got) == key(idx.searchMergedAllowed[Long](qs, 5, member,
+        deny = false, nProbe = nList, exact = exact))
+      assert(same, s"rows attributed to the wrong queries (exact=$exact)")
+    }
+    idx.unpersistAssigned()
+  }
 }
 
 object IvfMergedEngineSpec {
