@@ -1062,8 +1062,10 @@ final class VdbStore private (
       // accelerated scan — the HNSW per-shard beam search with
       // result-collection filtering + adaptive ef widening
       // (searchMergedMember), or the IVF probed scan with adaptive
-      // re-probe (searchMergedAllowed — its scaladoc has the O16
-      // story). Precision matches the exact strategy: fp32 kernels by
+      // re-probe (searchMergedAllowed/searchMergedQ8Allowed, both
+      // served by IvfIndex.mergedProbedTopK — the engine's scaladoc has
+      // the pass rules, searchMergedAllowed's the O16 story).
+      // Precision matches the exact strategy: fp32 kernels by
       // default, graft.query.exact flips both to double — so at a
       // covering beam/nProbe results are bit-equal to exact-filtered.
       val isBloom =

@@ -567,7 +567,10 @@ final class IvfIndex(
     * only (bucket × its probing queries) pairs with the gemm kernels,
     * and per-query bounded heaps merge UP a treeAggregate —
     * partitions × Q × k tuples over the tree, the same volume
-    * contract as the exact path, minus the un-probed work.
+    * contract as the exact path, minus the un-probed work. The
+    * engine is [[mergedProbedTopK]], shared by every driver-batch
+    * search; this entry point supplies the fp32 bucket pack and
+    * kernels.
     *
     * Scoring arithmetic, tie rule, and output shape match
     * [[searchPacked]] exactly (same kernels over the same buckets;
@@ -581,133 +584,10 @@ final class IvfIndex(
                       exact: Boolean = false)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BlockStore, BoundedTopKG}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val np = resolveNProbe(nProbe)
-    val dimLocal = dim
-    // fail loudly on a mis-dimensioned query (same contract as
-    // `search`): dotPackedD iterates q.length over the packed slab, so
-    // a wrong-dim vector would silently read into the NEXT row
-    if (dimLocal > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dimLocal,
-        s"IvfIndex.searchMerged: query $qid has dim ${v.length}, index dim is $dimLocal")
-    }
-    val (packed, _) = packedBuckets[K](normalized)
-    // query prep matches searchPacked: zero -> e0 in normalized mode,
-    // raw/raw cosine (zero query scores 0) otherwise
-    val qids = queries.map(_._1)
-    val qvecs = queries.map { q =>
-      val v = q._2
-      if (normalized && Kn.normSqD(v) == 0.0) {
-        val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-      } else v
-    }
-    val qnorms =
-      if (normalized) null
-      else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-    // Full scan (np = nList, requested or snapped by resolveNProbe's
-    // crossover): route to the FLAT slab pack and the literal
-    // BlockStore.topKMerged — scoring the ~nList small bucket blocks
-    // through the treeAggregate below walls ~2x slower (small blocks
-    // lose the gemm kernels' panel amortization; VERDICT r13 wrong
-    // #2). Same kernels, same heaps, same tie rule over the same rows,
-    // so results are bit-identical (q48/q49 oracle + cross-path parity
-    // specs); queries go in PREPPED (zero -> e0 / raw cosine), with
-    // normalizeQueries=false so topKMerged's own prep is a no-op.
-    if (np >= nList && nList > 0) {
-      val hits = flatPack[K](normalized).topKMerged(
-        qids.zip(qvecs), k, normalizeQueries = false, exact = exact)
-      val rows: Seq[(Long, K, Double, Int)] =
-        hits.iterator.zipWithIndex.flatMap { case (hs, qi) =>
-          hs.iterator.zipWithIndex.map { case ((id, s), r) =>
-            (qids(qi), id, s, r + 1)
-          }
-        }.toSeq
-      return spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-    }
-    // driver-side probe inversion: cid -> indices of queries probing
-    // it. Probes use the PREPPED vector (zero -> e0) so probe
-    // selection and scoring see the same query, like search/searchDs.
-    // The probe scans (Q × nList × dim flops) run parallel over
-    // queries — sequential they were most of this path's fixed
-    // overhead (~0.4 s at 1000 × 316 × 1024); the inversion itself is
-    // a cheap ordered loop.
-    //
-    // cidToQ == null (the full-bucket-scan seqOp below) survives only
-    // for the degenerate nList = 0 empty index.
-    val cidToQ: Array[Array[Int]] =
-      if (np >= nList) null
-      else {
-        val probesPerQ = new Array[Array[Int]](queries.length)
-        java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-          probesPerQ(i) = IvfIndex.probeIds(centroids, qvecs(i), np)
-        }
-        val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-        var qi = 0
-        while (qi < queries.length) {
-          probesPerQ(qi).foreach(c => inv(c) += qi)
-          qi += 1
-        }
-        inv.map(_.toArray)
-      }
-    val bc = spark.sparkContext.broadcast((qvecs, qnorms, cidToQ))
-    val kk = k
-    val ex = exact
-    val localOrd = ord
-    try {
-      val merged = packed.treeAggregate(null: Array[BoundedTopKG[K]])(
-        seqOp = (acc, pair) => {
-          val (qv, qn, c2q) = bc.value
-          val heaps = if (acc != null) acc
-                      else Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd))
-          if (c2q == null) {
-            // full scan: every query scores every bucket, no views
-            BlockStore.scoreBlock(heaps, pair._2, qv, qn,
-              Double.NegativeInfinity, ex)
-          } else {
-            val cid = pair._1
-            val idxs = if (cid >= 0 && cid < c2q.length) c2q(cid)
-                       else Array.emptyIntArray
-            if (idxs.length > 0) {
-              // subset views share the global per-query heap objects, so
-              // scoreBlock's writes land in the right accumulators
-              val subQ = new Array[Array[Float]](idxs.length)
-              val subH = new Array[BoundedTopKG[K]](idxs.length)
-              val subN = if (qn == null) null else new Array[Double](idxs.length)
-              var i = 0
-              while (i < idxs.length) {
-                subQ(i) = qv(idxs(i))
-                subH(i) = heaps(idxs(i))
-                if (subN != null) subN(i) = qn(idxs(i))
-                i += 1
-              }
-              BlockStore.scoreBlock(subH, pair._2, subQ, subN,
-                Double.NegativeInfinity, ex)
-            }
-          }
-          heaps
-        },
-        combOp = (a, b) =>
-          if (a == null) b
-          else if (b == null) a
-          else {
-            var i = 0
-            while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-            a
-          },
-        depth = 2)
-      val rows: Seq[(Long, K, Double, Int)] =
-        if (merged == null) Seq.empty
-        else merged.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sortedHits().iterator.zipWithIndex.map { case ((id, s), r) =>
-            (qids(i), id, s, r + 1)
-          }
-        }.toSeq
-      spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-    } finally bc.destroy()
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    mergedProbedTopK("searchMerged", queries, k, resolveNProbe(nProbe),
+      normalized, overfetch = 0, member = null, deny = false,
+      fp32Tier[K](normalized, exact, flatFullScan = true))
 
   /** Membership-filtered IVF top-k with adaptive re-probe (round 16) —
     * the reference's adaptive over-fetch contract (O16: FAISS fetches
@@ -746,126 +626,214 @@ final class IvfIndex(
                              exact: Boolean = false)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BlockStore, BoundedTopKG}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
     // exact-tier resolve semantics apply: for THIS path an all-list
     // scan is literally the exact filtered result (recall 1.0 over the
     // filtered set), the same claim the snap warning makes
-    val np0 = resolveNProbe(nProbe)
+    mergedProbedTopK("searchMergedAllowed", queries, k, resolveNProbe(nProbe),
+      normalized, overfetch = 0, member, deny,
+      fp32Tier[K](normalized, exact, flatFullScan = false))
+
+  /** The fp32 tier of [[mergedProbedTopK]]. With `flatFullScan`, an
+    * all-list probe (requested, or snapped by [[resolveNProbe]]'s
+    * crossover) routes to the FLAT slab pack and the literal
+    * [[graft.core.BlockStore.topKMerged]]: scoring the ~nList small
+    * bucket blocks through the probed treeAggregate walls ~2x slower
+    * (small blocks lose the gemm kernels' panel amortization; VERDICT
+    * r13 wrong #2). Same kernels, same heaps, same tie rule over the
+    * same rows, so results are bit-identical (q48/q49 oracle +
+    * cross-path parity specs); queries go in PREPPED, with
+    * normalizeQueries=false so topKMerged's own prep is a no-op.
+    */
+  private def fp32Tier[K](normalized: Boolean, exact: Boolean,
+      flatFullScan: Boolean)(
+      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)])
+      : IvfIndex.ProbedTier[K, graft.core.VecBlock[K], Array[Float]] =
+    new IvfIndex.ProbedTier(packedBuckets[K](normalized)._1, identity,
+      IvfIndex.fp32Scorer[K](exact),
+      fullScan =
+        if (!flatFullScan) null
+        else (qs, k) => flatPack[K](normalized).topKMerged(qs, k,
+          normalizeQueries = false, exact = exact))
+
+  /** The engine of the driver-batch searches — [[searchMerged]],
+    * [[searchMergedAllowed]], [[searchMergedQ8]],
+    * [[searchMergedQ8Allowed]], [[searchMergedPq]] and
+    * [[searchMergedBit]] differ only in their [[IvfIndex.ProbedTier]]:
+    * the code pack and the per-task block scorer. Everything else
+    * lives once here:
+    *
+    *  - query prep: the dim check (named after the entry point),
+    *    zero → e0 in normalized mode (probes and scores see the same
+    *    vector, the search/searchDs rule), raw/raw cosine norms
+    *    otherwise (a zero query scores 0)
+    *  - probe passes: the probe scans run parallel over queries on the
+    *    driver (sequential they were most of the fixed overhead, ~0.4 s
+    *    at 1000 × 316 × 1024), then a cid → probing-query inversion. An
+    *    unfiltered call (`member == null`) runs ONE pass over its
+    *    `np` nearest buckets; an underfilled query is not re-probed. A
+    *    filtered call re-probes every query whose heap holds fewer
+    *    than `k` rows over the NEXT slice of its centroid ranking,
+    *    doubling the probe count per pass (the [[searchMergedAllowed]]
+    *    contract). The refill target is `k`, not `k * overfetch`:
+    *    overfetch slots buffer quantization error, they are not a fill
+    *    obligation — sweeping the whole store to fill them would
+    *    defeat probing.
+    *  - the scan: one depth-2 treeAggregate per pass (and per
+    *    `tier.chunk` queries), the query slice plus the inversion
+    *    broadcast down, subset views of the per-query heaps per
+    *    probed bucket, heaps merged up
+    *  - the exact fp32 tail ([[rescoreProbedMerged]], over every
+    *    bucket any pass probed) when `overfetch > 0`, the
+    *    (qid, id, score, rank) emit, and the `lastFilteredPasses`
+    *    telemetry of filtered calls
+    *
+    * An empty batch, or an allow set matching nothing, returns no
+    * rows without a Spark job (0 passes).
+    */
+  private def mergedProbedTopK[K, B, Q](
+      name: String, queries: Array[(Long, Array[Float])], k: Int, np: Int,
+      normalized: Boolean, overfetch: Int,
+      member: graft.core.MemberTest[K], deny: Boolean,
+      tier: => IvfIndex.ProbedTier[K, B, Q])(
+      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
+      ctQ: scala.reflect.ClassTag[Q],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
+    import graft.core.BoundedTopKG
+    import graft.operators.{Kernels => Kn}
+    val spark = assigned.sparkSession
+    val sc = spark.sparkContext
     val dimLocal = dim
+    // fail loudly on a mis-dimensioned query (same contract as
+    // `search`): dotPackedD iterates q.length over the packed slab, so
+    // a wrong-dim vector would silently read into the NEXT row
     if (dimLocal > 0) queries.foreach { case (qid, v) =>
       require(v.length == dimLocal,
-        s"IvfIndex.searchMergedAllowed: query $qid has dim ${v.length}, index dim is $dimLocal")
+        s"IvfIndex.$name: query $qid has dim ${v.length}, index dim is $dimLocal")
     }
     val qids = queries.map(_._1)
-    if (queries.isEmpty || (member.matchesNothing && !deny))
-      // empty batch, or an allow-set matching nothing: no pass can
-      // ever admit a row — skip the cluster sweep entirely
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    val (packed, _) = packedBuckets[K](normalized)
-    val qvecs = queries.map { q =>
-      val v = q._2
-      if (normalized && Kn.normSqD(v) == 0.0) {
-        val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-      } else v
-    }
-    val qnorms =
-      if (normalized) null
-      else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-    val bcSet = spark.sparkContext.broadcast((member, deny))
-    val kk = k
-    val ex = exact
-    val localOrd = ord
-    val global = Array.fill(queries.length)(new BoundedTopKG[K](kk)(localOrd))
-    try {
-      var prevNp = 0
-      var curNp = math.max(1, math.min(np0, math.max(nList, 1)))
-      var active: Array[Int] = queries.indices.toArray
-      var passes = 0
-      while (active.nonEmpty && prevNp < nList && nList > 0) {
-        passes += 1
-        // this pass scans ranking slices [prevNp, curNp) of each
-        // still-underfilled query, in parallel like searchMerged's
-        // probe scan
-        val act = active
-        val slices = new Array[Array[Int]](act.length)
-        java.util.stream.IntStream.range(0, act.length).parallel().forEach { i =>
-          val full = IvfIndex.probeIds(centroids, qvecs(act(i)), curNp)
-          slices(i) = java.util.Arrays.copyOfRange(
-            full, math.min(prevNp, full.length), full.length)
+    val filtered = member != null
+    var passes = 0
+    val hits: Array[Array[(K, Double)]] =
+      if (queries.isEmpty || (filtered && member.matchesNothing && !deny))
+        Array.empty
+      else {
+        val t = tier
+        val qvecs = queries.map { case (_, v) =>
+          if (normalized && Kn.normSqD(v) == 0.0) {
+            val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
+          } else v
         }
-        val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-        var ai = 0
-        while (ai < act.length) {
-          slices(ai).foreach(c => inv(c) += ai)
-          ai += 1
-        }
-        val cidToA: Array[Array[Int]] = inv.map(_.toArray)
-        val subQ = act.map(qvecs)
-        val subN = if (qnorms == null) null else act.map(qnorms)
-        val bc = spark.sparkContext.broadcast((subQ, subN, cidToA))
-        try {
-          val merged = packed.treeAggregate(null: Array[BoundedTopKG[K]])(
-            seqOp = (acc, pair) => {
-              val (qv, qn, c2a) = bc.value
-              val (mem, dny) = bcSet.value
-              val heaps = if (acc != null) acc
-                          else Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd))
-              val cid = pair._1
-              val idxs = if (cid >= 0 && cid < c2a.length) c2a(cid)
-                         else Array.emptyIntArray
-              if (idxs.length > 0) {
-                val sq = new Array[Array[Float]](idxs.length)
-                val sh = new Array[BoundedTopKG[K]](idxs.length)
-                val sn = if (qn == null) null else new Array[Double](idxs.length)
-                var i = 0
-                while (i < idxs.length) {
-                  sq(i) = qv(idxs(i))
-                  sh(i) = heaps(idxs(i))
-                  if (sn != null) sn(i) = qn(idxs(i))
+        val qnorms =
+          if (normalized) null else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
+        if (t.fullScan != null && np >= nList && nList > 0)
+          t.fullScan(qids.zip(qvecs), k)
+        else {
+          val scanK =
+            if (overfetch <= 0) k
+            else math.min(math.max(k.toLong * overfetch, k.toLong),
+              Int.MaxValue.toLong).toInt
+          val localOrd = ord
+          val codes = t.encode(qvecs)
+          val open = t.open
+          val heaps = Array.fill(queries.length)(new BoundedTopKG[K](scanK)(localOrd))
+          val probed = new java.util.BitSet(nList)
+          val bcMem = sc.broadcast((member, deny))
+          try {
+            var prevNp = 0
+            var curNp = math.max(1, math.min(np, math.max(nList, 1)))
+            var active: Array[Int] = queries.indices.toArray
+            while (active.nonEmpty && prevNp < nList && nList > 0) {
+              passes += 1
+              // this pass scans ranking slices [lo, hi) of each active query
+              val act = active
+              val lo = prevNp
+              val hi = curNp
+              val slices = new Array[Array[Int]](act.length)
+              java.util.stream.IntStream.range(0, act.length).parallel().forEach { i =>
+                val full = IvfIndex.probeIds(centroids, qvecs(act(i)), hi)
+                slices(i) = java.util.Arrays.copyOfRange(
+                  full, math.min(lo, full.length), full.length)
+              }
+              var c0 = 0
+              while (c0 < act.length) {
+                val c1 = math.min(act.length, c0 + t.chunk)
+                val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
+                var i = c0
+                while (i < c1) {
+                  slices(i).foreach { c => inv(c) += i - c0; probed.set(c) }
                   i += 1
                 }
-                BlockStore.scoreBlockMember(sh, pair._2, sq, sn, mem, dny, ex)
+                val chunk = java.util.Arrays.copyOfRange(act, c0, c1)
+                val bc = sc.broadcast((chunk.map(codes),
+                  if (qnorms == null) null else chunk.map(qnorms),
+                  inv.map(_.toArray), open))
+                try {
+                  val acc = t.packed.treeAggregate(null: IvfIndex.ProbedAcc[K, B])(
+                    seqOp = (acc, pair) => {
+                      val (qs, qn, c2q, mk) = bc.value
+                      val a =
+                        if (acc != null) acc
+                        else {
+                          val (mem, dny) = bcMem.value
+                          new IvfIndex.ProbedAcc[K, B](
+                            Array.fill(qs.length)(new BoundedTopKG[K](scanK)(localOrd)),
+                            mk(qs, qn, mem, dny))
+                        }
+                      val cid = pair._1
+                      val idxs = if (cid >= 0 && cid < c2q.length) c2q(cid)
+                                 else Array.emptyIntArray
+                      // subset views share the task's heap objects, so
+                      // the scorer's writes land in the right accumulators
+                      if (idxs.length > 0) a.score(idxs.map(a.heaps), idxs, cid, pair._2)
+                      a
+                    },
+                    combOp = (x, y) =>
+                      if (x == null) y
+                      else if (y == null) x
+                      else {
+                        var j = 0
+                        while (j < x.heaps.length) { x.heaps(j).absorb(y.heaps(j)); j += 1 }
+                        x
+                      },
+                    depth = 2)
+                  if (acc != null) {
+                    var j = 0
+                    while (j < chunk.length) { heaps(chunk(j)).absorb(acc.heaps(j)); j += 1 }
+                  }
+                } finally bc.destroy()
+                c0 = c1
               }
-              heaps
-            },
-            combOp = (a, b) =>
-              if (a == null) b
-              else if (b == null) a
-              else {
-                var i = 0
-                while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-                a
-              },
-            depth = 2)
-          if (merged != null) {
-            var i = 0
-            while (i < act.length) { global(act(i)).absorb(merged(i)); i += 1 }
-          }
-        } finally bc.destroy()
-        prevNp = curNp
-        active = act.filter(qi => global(qi).filled < kk)
-        curNp = math.min(nList, math.max(curNp * 2, curNp + 1))
+              prevNp = hi
+              active =
+                if (filtered) act.filter(qi => heaps(qi).filled < k)
+                else Array.emptyIntArray
+              curNp = math.min(nList, math.max(curNp * 2, curNp + 1))
+            }
+            if (passes > 1)
+              // active at exit = queries STILL underfilled after the full
+              // sweep: the filtered store holds fewer than k rows for them
+              org.slf4j.LoggerFactory.getLogger("graft.ann").info(
+                s"IvfIndex.$name re-probed adaptively — {} passes " +
+                  "from initial nProbe {}; {} queries have < k filtered rows in the store",
+                passes, np, active.length + 0)
+            val out =
+              if (overfetch <= 0) heaps
+              else rescoreProbedMerged[K](heaps, qvecs, qnorms, probed, k, normalized)
+            out.map(_.sortedHits())
+          } finally bcMem.destroy()
+        }
       }
-      lastFilteredPassesVar = passes
-      if (passes > 1)
-        // active at exit = queries STILL underfilled after the full
-        // sweep: the filtered store holds fewer than k rows for them
-        org.slf4j.LoggerFactory.getLogger("graft.ann").info(
-          "IvfIndex: filtered search re-probed adaptively — {} passes " +
-            "from initial nProbe {}; {} queries have < k filtered rows in the store",
-          passes, np0, active.length + 0)
-      val rows: Seq[(Long, K, Double, Int)] =
-        global.iterator.zipWithIndex.flatMap { case (h, i) =>
-          h.sortedHits().iterator.zipWithIndex.map { case ((id, s), r) =>
-            (qids(i), id, s, r + 1)
-          }
-        }.toSeq
-      spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-    } finally bcSet.destroy()
+    if (filtered) lastFilteredPassesVar = passes
+    val rows: Seq[(Long, K, Double, Int)] =
+      hits.iterator.zipWithIndex.flatMap { case (hs, i) =>
+        hs.iterator.take(k).zipWithIndex.map { case ((id, s), r) =>
+          (qids(i), id, s, r + 1)
+        }
+      }.toSeq
+    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
   }
 
   /** Latest [[searchPackedAllowed]] call's persisted state (query prep
@@ -952,12 +920,13 @@ final class IvfIndex(
     // covering probes: the probe shuffle would land every query on
     // every bucket anyway — route through the flat slab pack (the
     // searchPacked full-scan shape) with the member scan; this single
-    // pass IS the exact filtered result. The query side is consumed by
-    // exactly ONE job here (the scored-rows materialization), so the
-    // adaptive path's per-row keying/persist/count below is pure
-    // overhead on this branch — one driver job saved per covering call
-    // (round 22; row keys are unnecessary too: the slab keeps each
-    // row's heap at its own index, duplicate qids stay independent).
+    // pass IS the exact filtered result. No row keys: the slab keeps
+    // each row's heap at its own index, duplicate qids stay
+    // independent. The cartesian reads each query partition once per
+    // block partition and reduceByKey merges the heaps BY INDEX, so
+    // the prepped slabs are persisted and counted first: an
+    // order-unstable upstream (a shuffled source) re-read per block
+    // partition would hand each read's heaps to another read's qids.
     if (np0 >= nList && nList > 0) {
       lastFilteredPassesVar = 1
       val bs = flatPack[K](normalized)
@@ -971,7 +940,10 @@ final class IvfIndex(
             if (normStore) null else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
           Iterator((pi, (qids, qvecs, qnorms)))
         }
-      }
+      }.setName("graft.ivf.filtered.qprep")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      swapPackedAllowedState(List(qblocks))
+      qblocks.count()
       val partials = qblocks.cartesian(bs.blocks).map {
         case ((pi, (qids, qvecs, qnorms)), block) =>
           val (mem, dny) = bcMem.value
@@ -1228,95 +1200,19 @@ final class IvfIndex(
     * the DuckDB oracle through this path at nProbe = nList).
     *
     * Query prep, probe selection, duplicate-qid independence, tie
-    * rule, and output shape all match [[searchMerged]]. Nothing
-    * shuffles; both passes are depth-2 treeAggregates.
+    * rule, and output shape come from [[mergedProbedTopK]], the engine
+    * of every driver-batch search. Nothing shuffles; both passes are
+    * depth-2 treeAggregates.
     */
   def searchMergedQ8[K](queries: Array[(Long, Array[Float])], k: Int,
                         nProbe: Int = 0, normalized: Boolean = true,
                         overfetch: Int = 0)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BoundedTopKG, Q8Block, Q8Store, VecBlock}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val np = resolveNProbe(nProbe, tier = "q8")
-    val dimLocal = dim
-    if (dimLocal > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dimLocal,
-        s"IvfIndex.searchMergedQ8: query $qid has dim ${v.length}, index dim is $dimLocal")
-    }
-    val q8Packed = packedQ8Buckets[K](normalized)
-    val qids = queries.map(_._1)
-    // query prep matches searchMerged: zero -> e0 in normalized mode,
-    // raw/raw cosine (zero query scores 0) otherwise
-    val qvecs = queries.map { q =>
-      val v = q._2
-      if (normalized && Kn.normSqD(v) == 0.0) {
-        val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-      } else v
-    }
-    val qnorms =
-      if (normalized) null
-      else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-    val probesPerQ = new Array[Array[Int]](queries.length)
-    java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-      probesPerQ(i) = IvfIndex.probeIds(centroids, qvecs(i), np)
-    }
-    val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-    var qi = 0
-    while (qi < queries.length) {
-      probesPerQ(qi).foreach(c => inv(c) += qi)
-      qi += 1
-    }
-    val cidToQ: Array[Array[Int]] = inv.map(_.toArray)
-    // scan-only keeps k; rescored keeps k*overfetch candidates per query
-    val scanK =
-      if (overfetch <= 0) k
-      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
-    val bc = spark.sparkContext.broadcast((qvecs, qnorms, cidToQ))
-    val kk = scanK
-    val localOrd = ord
-    val merged =
-      try {
-        q8Packed.treeAggregate(null: Array[BoundedTopKG[K]])(
-          seqOp = (acc, pair) => {
-            val (qv, qn, c2q) = bc.value
-            val heaps = if (acc != null) acc
-                        else Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd))
-            val cid = pair._1
-            val idxs = if (cid >= 0 && cid < c2q.length) c2q(cid)
-                       else Array.emptyIntArray
-            if (idxs.length > 0) {
-              val subQ = new Array[Array[Float]](idxs.length)
-              val subH = new Array[BoundedTopKG[K]](idxs.length)
-              val subN = if (qn == null) null else new Array[Double](idxs.length)
-              var i = 0
-              while (i < idxs.length) {
-                subQ(i) = qv(idxs(i))
-                subH(i) = heaps(idxs(i))
-                if (subN != null) subN(i) = qn(idxs(i))
-                i += 1
-              }
-              Q8Store.scoreBlock(subH, pair._2, subQ, subN)
-            }
-            heaps
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else {
-              var i = 0
-              while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-              a
-            },
-          depth = 2)
-      } finally bc.destroy()
-    if (overfetch <= 0) return emitMergedHits[K](spark, qids, merged, k)(outEnc)
-    emitMergedHits[K](spark, qids,
-      rescoreProbedMerged[K](merged, queries.length, qvecs, qnorms,
-        cidToQ, k, normalized), k)(outEnc)
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    mergedProbedTopK("searchMergedQ8", queries, k,
+      resolveNProbe(nProbe, tier = "q8"), normalized, overfetch,
+      member = null, deny = false, q8Tier[K](normalized))
 
   /** [[searchMergedAllowed]] composed with the int8 tier (round 16):
     * the membership-filtered probed scan over the QUANTIZED bucket
@@ -1343,160 +1239,31 @@ final class IvfIndex(
                                overfetch: Int = 0)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BoundedTopKG, Q8Store}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val np0 = resolveNProbe(nProbe, tier = "q8")
-    val dimLocal = dim
-    if (dimLocal > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dimLocal,
-        s"IvfIndex.searchMergedQ8Allowed: query $qid has dim ${v.length}, index dim is $dimLocal")
-    }
-    val qids = queries.map(_._1)
-    if (queries.isEmpty || (member.matchesNothing && !deny))
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    val q8Packed = packedQ8Buckets[K](normalized)
-    val qvecs = queries.map { q =>
-      val v = q._2
-      if (normalized && Kn.normSqD(v) == 0.0) {
-        val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-      } else v
-    }
-    val qnorms =
-      if (normalized) null
-      else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-    val scanK =
-      if (overfetch <= 0) k
-      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
-    val bcSet = spark.sparkContext.broadcast((member, deny))
-    val kk = k
-    val sk = scanK
-    val localOrd = ord
-    val global = Array.fill(queries.length)(new BoundedTopKG[K](sk)(localOrd))
-    // accumulated cid -> GLOBAL query indices across every pass — the
-    // rescore tail must cover each query's whole probed footprint
-    val probedAcc = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-    try {
-      var prevNp = 0
-      var curNp = math.max(1, math.min(np0, math.max(nList, 1)))
-      var active: Array[Int] = queries.indices.toArray
-      var passes = 0
-      while (active.nonEmpty && prevNp < nList && nList > 0) {
-        passes += 1
-        val act = active
-        val slices = new Array[Array[Int]](act.length)
-        java.util.stream.IntStream.range(0, act.length).parallel().forEach { i =>
-          val full = IvfIndex.probeIds(centroids, qvecs(act(i)), curNp)
-          slices(i) = java.util.Arrays.copyOfRange(
-            full, math.min(prevNp, full.length), full.length)
-        }
-        val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-        var ai = 0
-        while (ai < act.length) {
-          slices(ai).foreach { c => inv(c) += ai; probedAcc(c) += act(ai) }
-          ai += 1
-        }
-        val cidToA: Array[Array[Int]] = inv.map(_.toArray)
-        val subQ = act.map(qvecs)
-        val subN = if (qnorms == null) null else act.map(qnorms)
-        val bc = spark.sparkContext.broadcast((subQ, subN, cidToA))
-        try {
-          val merged = q8Packed.treeAggregate(null: Array[BoundedTopKG[K]])(
-            seqOp = (acc, pair) => {
-              val (qv, qn, c2a) = bc.value
-              val (mem, dny) = bcSet.value
-              val heaps = if (acc != null) acc
-                          else Array.fill(qv.length)(new BoundedTopKG[K](sk)(localOrd))
-              val cid = pair._1
-              val idxs = if (cid >= 0 && cid < c2a.length) c2a(cid)
-                         else Array.emptyIntArray
-              if (idxs.length > 0) {
-                val sq = new Array[Array[Float]](idxs.length)
-                val sh = new Array[BoundedTopKG[K]](idxs.length)
-                val sn = if (qn == null) null else new Array[Double](idxs.length)
-                var i = 0
-                while (i < idxs.length) {
-                  sq(i) = qv(idxs(i))
-                  sh(i) = heaps(idxs(i))
-                  if (sn != null) sn(i) = qn(idxs(i))
-                  i += 1
-                }
-                Q8Store.scoreBlockMember(sh, pair._2, sq, sn, mem, dny)
-              }
-              heaps
-            },
-            combOp = (a, b) =>
-              if (a == null) b
-              else if (b == null) a
-              else {
-                var i = 0
-                while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-                a
-              },
-            depth = 2)
-          if (merged != null) {
-            var i = 0
-            while (i < act.length) { global(act(i)).absorb(merged(i)); i += 1 }
-          }
-        } finally bc.destroy()
-        prevNp = curNp
-        // refill target is k (the FINAL result size): overfetch slots
-        // buffer quantization error, they are not a fill obligation —
-        // sweeping the whole store to fill them would defeat probing
-        active = act.filter(qi => global(qi).filled < kk)
-        curNp = math.min(nList, math.max(curNp * 2, curNp + 1))
-      }
-      lastFilteredPassesVar = passes
-      if (passes > 1)
-        org.slf4j.LoggerFactory.getLogger("graft.ann").info(
-          "IvfIndex: filtered q8 search re-probed adaptively — {} passes " +
-            "from initial nProbe {}; {} queries have < k filtered rows in the store",
-          passes, np0, active.length + 0)
-      if (overfetch <= 0)
-        return emitMergedHits[K](spark, qids, global, kk)(outEnc)
-      val cidToQAll: Array[Array[Int]] = probedAcc.map(_.toArray)
-      emitMergedHits[K](spark, qids,
-        rescoreProbedMerged[K](global, queries.length, qvecs, qnorms,
-          cidToQAll, kk, normalized), kk)(outEnc)
-    } finally bcSet.destroy()
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    mergedProbedTopK("searchMergedQ8Allowed", queries, k,
+      resolveNProbe(nProbe, tier = "q8"), normalized, overfetch, member, deny,
+      q8Tier[K](normalized))
 
-  /** Shared emit tail of the composed merged scans
-    * ([[searchMergedQ8]] / [[searchMergedPq]]): per-query heaps ->
-    * (qid, id, score, rank) rows under the common tie rule — ONE place
-    * for the output shape, so the Q8/PQ paths cannot drift.
-    */
-  private def emitMergedHits[K](
-      spark: org.apache.spark.sql.SparkSession, qids: Array[Long],
-      heaps: Array[graft.core.BoundedTopKG[K]], outK: Int)(
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    val rows: Seq[(Long, K, Double, Int)] =
-      if (heaps == null) Seq.empty
-      else heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.sortedHits().iterator.take(outK).zipWithIndex.map {
-          case ((id, s), r) => (qids(i), id, s, r + 1)
-        }
-      }.toSeq
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+  private def q8Tier[K](normalized: Boolean)(
+      implicit ct: scala.reflect.ClassTag[K],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)])
+      : IvfIndex.ProbedTier[K, graft.core.Q8Block[K], Array[Float]] =
+    new IvfIndex.ProbedTier[K, graft.core.Q8Block[K], Array[Float]](
+      packedQ8Buckets[K](normalized), identity, IvfIndex.q8Scorer[K])
 
-  /** Shared rescore tail of the composed merged scans
-    * ([[searchMergedQ8]] / [[searchMergedPq]]): invert the scan's
-    * candidate lists, probe ONLY probed buckets' co-resident fp32
-    * slabs (each row is assigned to exactly one centroid, so unprobed
-    * buckets cannot hold a candidate — the rescore never even
-    * id-probes the un-probed (1 - nProbe/nList) fraction of the
-    * store), exact sequential-double scores for candidate hits only.
-    * Returns the per-query k-heaps.
+  /** The rescore tail of [[mergedProbedTopK]] (`overfetch > 0`):
+    * invert the scan's candidate lists, probe ONLY the `probed`
+    * buckets' co-resident fp32 slabs (each row is assigned to exactly
+    * one centroid, so unprobed buckets cannot hold a candidate — the
+    * rescore never even id-probes the un-probed (1 - nProbe/nList)
+    * fraction of the store), exact sequential-double scores for
+    * candidate hits only. Returns the per-query k-heaps.
     */
   private def rescoreProbedMerged[K](
       merged: Array[graft.core.BoundedTopKG[K]],
-      nQueries: Int,
       qvecs: Array[Array[Float]],
       qnorms: Array[Double],
-      cidToQ: Array[Array[Int]],
+      probed: java.util.BitSet,
       k: Int,
       normalized: Boolean)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
@@ -1505,20 +1272,12 @@ final class IvfIndex(
     import graft.core.{BoundedTopKG, Q8Store}
     val spark = assigned.sparkSession
     val localOrd = ord
-    val approx: Array[Array[(K, Double)]] =
-      if (merged == null) Array.fill(nQueries)(Array.empty[(K, Double)])
-      else merged.map(_.sortedHits())
-    val candMap = Q8Store.CandIndex.build[K](approx)
-    val (fpPacked0, _) = packedBuckets[K](normalized)
-    val probedCids = {
-      val s = new java.util.BitSet(nList)
-      cidToQ.zipWithIndex.foreach { case (qs, c) => if (qs.nonEmpty) s.set(c) }
-      s
-    }
-    val fpPacked = fpPacked0.filter(pair => probedCids.get(pair._1))
+    val candMap = Q8Store.CandIndex.build[K](merged.map(_.sortedHits()))
+    val fpPacked = packedBuckets[K](normalized)._1
+      .filter(pair => probed.get(pair._1))
     val bc2 = spark.sparkContext.broadcast((candMap, qvecs, qnorms))
     val kk2 = k
-    try {
+    val rescored = try {
       fpPacked.treeAggregate(null: Array[BoundedTopKG[K]])(
         seqOp = (acc, pair) => {
           val (cands, qv, qn) = bc2.value
@@ -1537,6 +1296,8 @@ final class IvfIndex(
           },
         depth = 2)
     } finally bc2.destroy()
+    if (rescored != null) rescored
+    else Array.fill(qvecs.length)(new BoundedTopKG[K](kk2)(localOrd))
   }
 
   /** IVF-PQ driver-batch top-k (round 15): [[searchMerged]]'s
@@ -1562,17 +1323,18 @@ final class IvfIndex(
     * quality measured, not asserted — PQ codes are coarser than int8).
     * `overfetch > 0`: keeps `k * overfetch` ADC candidates per query,
     * rescored over the co-resident fp32 buckets restricted to probed
-    * cids (the exact tail [[searchMergedQ8]] uses, shared verbatim) —
-    * at overfetch covering the probed rows the result is bit-equal to
-    * `searchMerged(exact = true)` at the same nProbe (spec-pinned; the
-    * q80 catalog entry hash-matches the DuckDB oracle through this
-    * path at nProbe = nList). The codebook is trained ONCE per
-    * (normalized, K, m) from a bounded content-hashed sample of the
-    * bucket slabs and cached beside the code pack — train cost is
-    * N-independent, encode is one narrow map.
+    * cids (the engine's [[rescoreProbedMerged]] tail, shared with
+    * [[searchMergedQ8]]) — at overfetch covering the probed rows the
+    * result is bit-equal to `searchMerged(exact = true)` at the same
+    * nProbe (spec-pinned; the q80 catalog entry hash-matches the
+    * DuckDB oracle through this path at nProbe = nList). The codebook
+    * is trained ONCE per (normalized, K, m) from a bounded
+    * content-hashed sample of the bucket slabs and cached beside the
+    * code pack — train cost is N-independent, encode is one narrow
+    * map.
     *
     * Query prep, probe selection, duplicate-qid independence, tie
-    * rule, and output shape all match [[searchMerged]]. Nothing
+    * rule, and output shape come from [[mergedProbedTopK]]. Nothing
     * shuffles; both passes are depth-2 treeAggregates. Batches whose
     * per-task ADC tables would exceed `graft.pq.table.budget.mb`
     * (default 64) are split into sequential scan chunks — bit-equal
@@ -1584,157 +1346,27 @@ final class IvfIndex(
                         byResidual: Boolean = true)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BoundedTopKG, PqStore}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val np = resolveNProbe(nProbe, tier = "pq")
-    val dimLocal = dim
-    if (dimLocal > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dimLocal,
-        s"IvfIndex.searchMergedPq: query $qid has dim ${v.length}, index dim is $dimLocal")
-    }
-    val mm = if (m > 0) m else graft.core.PqStore.autoM(dimLocal)
-    val (codebook, pqPacked) = packedPqBuckets[K](normalized, mm, byResidual)
-    val qids = queries.map(_._1)
-    // query prep matches searchMerged: zero -> e0 in normalized mode,
-    // raw/raw cosine (zero query scores 0) otherwise
-    val qvecs = queries.map { q =>
-      val v = q._2
-      if (normalized && Kn.normSqD(v) == 0.0) {
-        val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-      } else v
-    }
-    val qnorms =
-      if (normalized) null
-      else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-    val probesPerQ = new Array[Array[Int]](queries.length)
-    java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-      probesPerQ(i) = IvfIndex.probeIds(centroids, qvecs(i), np)
-    }
-    val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-    var qi = 0
-    while (qi < queries.length) {
-      probesPerQ(qi).foreach(c => inv(c) += qi)
-      qi += 1
-    }
-    val cidToQ: Array[Array[Int]] = inv.map(_.toArray)
-    val scanK =
-      if (overfetch <= 0) k
-      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
-    val kk = scanK
-    val localOrd = ord
-    // ADC tables cost `chunk * m * ksub * 4` bytes PER TASK (one table
-    // per query, built once per task) — chunk the batch so that stays
-    // under graft.pq.table.budget.mb. The headline 1000q/m=64 batch is
-    // one chunk (unchanged plan); oversized batches trade extra passes
-    // over the (RAM-resident) code pack for bounded task memory instead
-    // of an executor OOM.
-    val bytesPerQuery = mm.toLong * codebook.ksub.toLong * 4L
-    val budgetBytes =
-      new graft.core.GraftConf(spark).pqTableBudgetMb.toLong << 20
-    val chunkSize = math.max(1,
-      math.min(Int.MaxValue.toLong, budgetBytes / math.max(1L, bytesPerQuery)).toInt)
-    val merged = new Array[BoundedTopKG[K]](queries.length)
-    var chunkStart = 0
-    while (chunkStart < queries.length) {
-      val chunkEnd = math.min(queries.length, chunkStart + chunkSize)
-      val nChunk = chunkEnd - chunkStart
-      val qvChunk = java.util.Arrays.copyOfRange(qvecs, chunkStart, chunkEnd)
-      val qnChunk =
-        if (qnorms == null) null
-        else java.util.Arrays.copyOfRange(qnorms, chunkStart, chunkEnd)
-      val c2qChunk: Array[Array[Int]] =
-        if (nChunk == queries.length) cidToQ
-        else {
-          val invLocal =
-            Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-          var qi = chunkStart
-          while (qi < chunkEnd) {
-            probesPerQ(qi).foreach(c => invLocal(c) += qi - chunkStart)
-            qi += 1
-          }
-          invLocal.map(_.toArray)
-        }
-      val bc = spark.sparkContext.broadcast(
-        (qvChunk, qnChunk, c2qChunk, codebook,
-          if (byResidual) centroids else null))
-      val heapsChunk: Array[BoundedTopKG[K]] =
-        try {
-          val acc0 = pqPacked.treeAggregate(null: PqStore.PqAcc[K])(
-            seqOp = (acc, pair) => {
-              val (qv, qn, c2q, cbk, cents) = bc.value
-              val a =
-                if (acc != null) acc
-                else {
-                  // ADC tables once per task, amortized over every probed
-                  // bucket slab the task scans (@transient on the acc —
-                  // only heaps cross the combine tree)
-                  val tabs = new Array[Array[Float]](qv.length)
-                  var i = 0
-                  while (i < qv.length) { tabs(i) = cbk.adcTable(qv(i)); i += 1 }
-                  new PqStore.PqAcc[K](
-                    Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd)), tabs)
-                }
-              val cid = pair._1
-              val idxs = if (cid >= 0 && cid < c2q.length) c2q(cid)
-                         else Array.emptyIntArray
-              if (idxs.length > 0) {
-                val subT = new Array[Array[Float]](idxs.length)
-                val subH = new Array[BoundedTopKG[K]](idxs.length)
-                val subN = if (qn == null) null else new Array[Double](idxs.length)
-                // residual reconstruction: dot(q, v) ~ dot(q, c_cid) +
-                // dot(q, r) — the per-(query, bucket) scalar is the ONLY
-                // bucket-dependent piece (the ADC table is shared), so
-                // residual encoding costs O(dim) per probed pair here,
-                // the same order as the probe scan itself
-                val c =
-                  if (cents != null && cid >= 0 && cid < cents.length) cents(cid)
-                  else null
-                val subO = if (c == null) null else new Array[Double](idxs.length)
-                var i = 0
-                while (i < idxs.length) {
-                  subT(i) = a.tables(idxs(i))
-                  subH(i) = a.heaps(idxs(i))
-                  if (subN != null) subN(i) = qn(idxs(i))
-                  if (subO != null) {
-                    val q = qv(idxs(i))
-                    var s = 0.0
-                    var t = 0
-                    while (t < q.length) { s += q(t) * c(t); t += 1 }
-                    subO(i) = s
-                  }
-                  i += 1
-                }
-                PqStore.scoreBlock(subH, subT, cbk.ksub, pair._2, subN, subO)
-              }
-              a
-            },
-            combOp = (x, y) =>
-              if (x == null) y
-              else if (y == null) x
-              else {
-                var i = 0
-                while (i < x.heaps.length) { x.heaps(i).absorb(y.heaps(i)); i += 1 }
-                x
-              },
-            depth = 2)
-          if (acc0 == null) null else acc0.heaps
-        } finally bc.destroy()
-      var i = 0
-      while (i < nChunk) {
-        merged(chunkStart + i) =
-          if (heapsChunk == null) new BoundedTopKG[K](kk)(localOrd)
-          else heapsChunk(i)
-        i += 1
-      }
-      chunkStart = chunkEnd
-    }
-    if (overfetch <= 0) return emitMergedHits[K](spark, qids, merged, k)(outEnc)
-    emitMergedHits[K](spark, qids,
-      rescoreProbedMerged[K](merged, queries.length, qvecs, qnorms,
-        cidToQ, k, normalized), k)(outEnc)
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    mergedProbedTopK("searchMergedPq", queries, k,
+      resolveNProbe(nProbe, tier = "pq"), normalized, overfetch,
+      member = null, deny = false, {
+        val mm = if (m > 0) m else graft.core.PqStore.autoM(dim)
+        val (codebook, pqPacked) = packedPqBuckets[K](normalized, mm, byResidual)
+        // ADC tables cost `chunk * m * ksub * 4` bytes PER TASK (one
+        // table per query, built once per task) — chunk the batch so
+        // that stays under graft.pq.table.budget.mb. The headline
+        // 1000q/m=64 batch is one chunk (unchanged plan); oversized
+        // batches trade extra passes over the (RAM-resident) code pack
+        // for bounded task memory instead of an executor OOM.
+        val bytesPerQuery = mm.toLong * codebook.ksub.toLong * 4L
+        val budgetBytes =
+          new graft.core.GraftConf(assigned.sparkSession).pqTableBudgetMb.toLong << 20
+        new IvfIndex.ProbedTier[K, graft.core.PqBlock[K], Array[Float]](
+          pqPacked, identity,
+          IvfIndex.pqScorer[K](codebook, if (byResidual) centroids else null),
+          chunk = math.max(1, math.min(Int.MaxValue.toLong,
+            budgetBytes / math.max(1L, bytesPerQuery)).toInt))
+      })
 
   /** IVF-bit driver-batch top-k (round 15): the binary-sketch analog
     * of [[searchMergedPq]] and the cheapest rung of the composed
@@ -1748,8 +1380,9 @@ final class IvfIndex(
     * oracled as q83 at nProbe = nList). No per-query tables (the PQ
     * ADC budget term does not exist), no training, no offsets — the
     * sketch is scale-invariant so one pack serves both store modes'
-    * candidate scans; query prep, tie rule, and output shape match
-    * [[searchMergedPq]]. Same honest caveat as the flat tier:
+    * candidate scans; query prep, tie rule, and output shape come
+    * from [[mergedProbedTopK]], and the query sketches are made once
+    * on the driver. Same honest caveat as the flat tier:
     * Hamming candidates are concentration-limited on uniform data —
     * compose on clustered embeddings or behind a wider overfetch.
     */
@@ -1758,97 +1391,13 @@ final class IvfIndex(
                          overfetch: Int = 0, bits: Int = 256)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BitStore, BoundedTopKG}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val np = resolveNProbe(nProbe, tier = "bit")
-    val dimLocal = dim
-    if (dimLocal > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dimLocal,
-        s"IvfIndex.searchMergedBit: query $qid has dim ${v.length}, index dim is $dimLocal")
-    }
-    val bitPacked = packedBitBuckets[K](normalized, bits)
-    val qids = queries.map(_._1)
-    val qvecs = queries.map { q =>
-      val v = q._2
-      if (normalized && Kn.normSqD(v) == 0.0) {
-        val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-      } else v
-    }
-    val qnorms =
-      if (normalized) null
-      else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-    val probesPerQ = new Array[Array[Int]](queries.length)
-    java.util.stream.IntStream.range(0, queries.length).parallel().forEach { i =>
-      probesPerQ(i) = IvfIndex.probeIds(centroids, qvecs(i), np)
-    }
-    val inv = Array.fill(nList)(new scala.collection.mutable.ArrayBuffer[Int](4))
-    var qi = 0
-    while (qi < queries.length) {
-      probesPerQ(qi).foreach(c => inv(c) += qi)
-      qi += 1
-    }
-    val cidToQ: Array[Array[Int]] = inv.map(_.toArray)
-    val scanK =
-      if (overfetch <= 0) k
-      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
-    // query sketches driver-side: bits/8 bytes each under the same
-    // seeded hyperplanes the pack used (dims validated above)
-    val qDim = if (dimLocal > 0) dimLocal else qvecs(0).length
-    val planes = BitStore.hyperplanes(bits, qDim, BitStore.DefaultSeed)
-    val w = (bits + 63) >>> 6
-    val qcodes = new Array[Long](qvecs.length * w)
-    java.util.stream.IntStream.range(0, qvecs.length).parallel().forEach { i =>
-      BitStore.encodeRow(qvecs(i), 0, qDim, planes, bits, qcodes, i * w)
-    }
-    val bc = spark.sparkContext.broadcast((qcodes, cidToQ))
-    val kk = scanK
-    val localOrd = ord
-    val nBits = bits
-    val merged: Array[BoundedTopKG[K]] =
-      try {
-        val acc0 = bitPacked.treeAggregate(null: Array[BoundedTopKG[K]])(
-          seqOp = (acc, pair) => {
-            val (qc, c2q) = bc.value
-            val heaps =
-              if (acc != null) acc
-              else Array.fill(qc.length / w)(new BoundedTopKG[K](kk)(localOrd))
-            val cid = pair._1
-            val idxs = if (cid >= 0 && cid < c2q.length) c2q(cid)
-                       else Array.emptyIntArray
-            if (idxs.length > 0) {
-              val subH = new Array[BoundedTopKG[K]](idxs.length)
-              val subC = new Array[Long](idxs.length * w)
-              var i = 0
-              while (i < idxs.length) {
-                subH(i) = heaps(idxs(i))
-                System.arraycopy(qc, idxs(i) * w, subC, i * w, w)
-                i += 1
-              }
-              BitStore.scoreBlock(subH, pair._2, subC, nBits)
-            }
-            heaps
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else {
-              var i = 0
-              while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-              a
-            },
-          depth = 2)
-        acc0
-      } finally bc.destroy()
-    val heaps =
-      if (merged != null) merged
-      else Array.fill(queries.length)(new BoundedTopKG[K](kk)(localOrd))
-    if (overfetch <= 0) return emitMergedHits[K](spark, qids, heaps, k)(outEnc)
-    emitMergedHits[K](spark, qids,
-      rescoreProbedMerged[K](heaps, queries.length, qvecs, qnorms,
-        cidToQ, k, normalized), k)(outEnc)
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    mergedProbedTopK("searchMergedBit", queries, k,
+      resolveNProbe(nProbe, tier = "bit"), normalized, overfetch,
+      member = null, deny = false,
+      new IvfIndex.ProbedTier[K, graft.core.BitBlock[K], Array[Long]](
+        packedBitBuckets[K](normalized, bits), IvfIndex.bitSketches(_, bits),
+        IvfIndex.bitScorer[K](bits)))
 
   /** Bulk (Dataset-query) IVF-SQ8 top-k (round 12): [[searchPacked]]'s
     * probe-shuffle shape over the int8 bucket slabs — the composed
@@ -2391,6 +1940,138 @@ object IvfIndex {
     }
     scored.sorted.take(np).map(_._2)
   }
+
+  /** A task's block scorer in [[IvfIndex.mergedProbedTopK]]: scores
+    * code block `b` of bucket `cid` into `heaps`, the heaps of the
+    * queries at positions `idxs` of the scan's batch.
+    */
+  private[operators] type ProbedScorer[K, B] =
+    (Array[graft.core.BoundedTopKG[K]], Array[Int], Int, B) => Unit
+
+  /** One code tier of [[IvfIndex.mergedProbedTopK]]:
+    *  - `packed`: its bucket pack, keyed by centroid id
+    *  - `encode`: the per-query form the tasks receive, made once on
+    *    the driver from the prepped query vectors
+    *  - `open`: builds a task's scorer from the scan's encoded queries,
+    *    their norms (null for a normalized store) and the membership
+    *    filter (null: every row passes). Runs once per task, so
+    *    per-task state (PQ's ADC tables) is built once.
+    *  - `chunk`: the most queries one scan may carry
+    *  - `fullScan`: when set, serves an all-list probe instead of the
+    *    probed scan (fp32's flat slab pack)
+    */
+  private[operators] final class ProbedTier[K, B, Q](
+      val packed: org.apache.spark.rdd.RDD[(Int, B)],
+      val encode: Array[Array[Float]] => Array[Q],
+      val open: (Array[Q], Array[Double], graft.core.MemberTest[K], Boolean)
+        => ProbedScorer[K, B],
+      val chunk: Int = Int.MaxValue,
+      val fullScan: (Array[(Long, Array[Float])], Int)
+        => Array[Array[(K, Double)]] = null)
+
+  /** A task's accumulator: the per-query heaps, plus the tier's scorer.
+    * The scorer is `@transient` — only heaps cross the combine tree
+    * (without the marker every partition would ship its PQ tables,
+    * Q x m x ksub floats, up the treeAggregate: measured 9.7 s ->
+    * sub-second scan for the identical result). seqOp only ever runs
+    * on task-local accs (null start), so a deserialized null scorer is
+    * never read.
+    */
+  private[operators] final class ProbedAcc[K, B](
+      val heaps: Array[graft.core.BoundedTopKG[K]],
+      @transient val score: ProbedScorer[K, B]) extends Serializable
+
+  /** The fp32 block scorer: the packed kernels, or survivor compaction
+    * under a membership filter.
+    */
+  private[operators] def fp32Scorer[K](exact: Boolean)(
+      implicit ct: scala.reflect.ClassTag[K])
+      : (Array[Array[Float]], Array[Double], graft.core.MemberTest[K], Boolean)
+        => ProbedScorer[K, graft.core.VecBlock[K]] =
+    (qs, qn, mem, deny) => (heaps, idxs, _, b) => {
+      import graft.core.BlockStore
+      val sq = idxs.map(qs)
+      val sn = if (qn == null) null else idxs.map(qn)
+      if (mem == null)
+        BlockStore.scoreBlock(heaps, b, sq, sn, Double.NegativeInfinity, exact)
+      else BlockStore.scoreBlockMember(heaps, b, sq, sn, mem, deny, exact)
+    }
+
+  /** The int8 block scorer. */
+  private[operators] def q8Scorer[K](
+      implicit ct: scala.reflect.ClassTag[K])
+      : (Array[Array[Float]], Array[Double], graft.core.MemberTest[K], Boolean)
+        => ProbedScorer[K, graft.core.Q8Block[K]] =
+    (qs, qn, mem, deny) => (heaps, idxs, _, b) => {
+      import graft.core.Q8Store
+      val sq = idxs.map(qs)
+      val sn = if (qn == null) null else idxs.map(qn)
+      if (mem == null) Q8Store.scoreBlock(heaps, b, sq, sn)
+      else Q8Store.scoreBlockMember(heaps, b, sq, sn, mem, deny)
+    }
+
+  /** The PQ block scorer: one ADC table per query, built once per task
+    * and shared across all buckets. With residual codes (`cents` non-null)
+    * dot(q, v) ~ dot(q, c_cid) + dot(q, r): the per-(query, bucket)
+    * scalar is the ONLY bucket-dependent piece, so residual encoding
+    * costs O(dim) per probed pair, the same order as the probe scan.
+    */
+  private[operators] def pqScorer[K](cb: graft.core.PqCodebook,
+      cents: Array[Array[Double]])
+      : (Array[Array[Float]], Array[Double], graft.core.MemberTest[K], Boolean)
+        => ProbedScorer[K, graft.core.PqBlock[K]] =
+    (qs, qn, _, _) => {
+      val tables = qs.map(cb.adcTable)
+      (heaps, idxs, cid, b) => {
+        val c =
+          if (cents != null && cid >= 0 && cid < cents.length) cents(cid)
+          else null
+        val offsets =
+          if (c == null) null
+          else idxs.map { i =>
+            val q = qs(i)
+            var s = 0.0
+            var t = 0
+            while (t < q.length) { s += q(t) * c(t); t += 1 }
+            s
+          }
+        graft.core.PqStore.scoreBlock(heaps, idxs.map(tables), cb.ksub, b,
+          if (qn == null) null else idxs.map(qn), offsets)
+      }
+    }
+
+  /** Sign-bit sketches of the prepped queries under the seeded
+    * hyperplanes the bit pack used (dims validated by the engine).
+    */
+  private[operators] def bitSketches(qvecs: Array[Array[Float]],
+      bits: Int): Array[Array[Long]] = {
+    import graft.core.BitStore
+    val qDim = qvecs(0).length
+    val planes = BitStore.hyperplanes(bits, qDim, BitStore.DefaultSeed)
+    val w = (bits + 63) >>> 6
+    val codes = new Array[Array[Long]](qvecs.length)
+    java.util.stream.IntStream.range(0, qvecs.length).parallel().forEach { i =>
+      val c = new Array[Long](w)
+      BitStore.encodeRow(qvecs(i), 0, qDim, planes, bits, c, 0)
+      codes(i) = c
+    }
+    codes
+  }
+
+  /** The Hamming block scorer over [[bitSketches]]. */
+  private[operators] def bitScorer[K](bits: Int)
+      : (Array[Array[Long]], Array[Double], graft.core.MemberTest[K], Boolean)
+        => ProbedScorer[K, graft.core.BitBlock[K]] =
+    (qs, _, _, _) => (heaps, idxs, _, b) => {
+      val w = (bits + 63) >>> 6
+      val sub = new Array[Long](idxs.length * w)
+      var i = 0
+      while (i < idxs.length) {
+        System.arraycopy(qs(idxs(i)), 0, sub, i * w, w)
+        i += 1
+      }
+      graft.core.BitStore.scoreBlock(heaps, b, sub, bits)
+    }
 
   /** √N-scaled list count (the FAISS guideline for IVF coarse
     * quantizers): balanced buckets of ~√N rows keep both the probe
