@@ -137,8 +137,9 @@ final class IvfIndex(
   @volatile private var lastStrategyVar: String = ""
   def lastSearchStrategy: String = lastStrategyVar
 
-  // telemetry for [[searchMergedAllowed]]'s adaptive loop: how many
-  // probe passes the most recent filtered search took (1 = the initial
+  // telemetry for the filtered searches' adaptive loops: how many
+  // probe passes the most recent filtered search took (0 = it
+  // short-circuited on an empty batch or allow set; 1 = the initial
   // probe set filled every query; >1 = O16 refill kicked in)
   @volatile private var lastFilteredPassesVar: Int = 0
   def lastFilteredPasses: Int = lastFilteredPassesVar
@@ -1811,9 +1812,9 @@ final class IvfIndex(
     * second copy of the packed floats, paid only by indexes that
     * actually serve full scans.
     *
-    * Repack topology is ADAPTIVE (VERDICT r14 wrong #3, measured by
-    * FlatPackProbe): the bucket pack's partitions follow the cid
-    * hash, and k-means bucket sizes are never uniform — a dominant
+    * Repack topology is ADAPTIVE (VERDICT r14 wrong #3): the bucket
+    * pack's partitions follow the cid hash, and k-means bucket sizes
+    * are never uniform — a dominant
     * bucket leaves one partition holding several full slabs that ONE
     * task then scans sequentially, straggling the whole treeAggregate
     * (measured 8x on a degenerate-clustering corpus: 4.0 s vs 0.5 s
@@ -1872,7 +1873,8 @@ final class IvfIndex(
   }
 
   /** Per-slab row counts of the full-scan flat pack — diagnostics for
-    * the slab-geometry question (VERDICT r14 wrong #3; FlatPackProbe).
+    * the slab-geometry question (VERDICT r14 wrong #3) and for specs
+    * that need a multi-partition pack.
     */
   private[graft] def flatPackSizes(normalized: Boolean = true): Seq[Int] = {
     val sp = assigned.sparkSession
