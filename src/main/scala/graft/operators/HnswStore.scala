@@ -3,8 +3,9 @@ package graft.operators
 import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
 
 import graft.core.{BlockStore, BoundedTopKG, Hnsw, VecBlock}
 
@@ -41,7 +42,10 @@ final class HnswShard[K](
   * ONE such graph serially). Queries broadcast down, per-shard beam
   * searches run locally, and bounded top-k heaps merge up a
   * treeAggregate — candidate traffic is O(shards × Q × k), independent
-  * of N, identical to BlockStore.topKMerged. Sharded recall ≈ the
+  * of N, identical to BlockStore.topKMerged. The six searches
+  * ({driver batch, query table} × {unfiltered, member, member + int8})
+  * are one engine, [[shardTopK]]: each supplies only its partitions and
+  * its per-shard scorer. Sharded recall ≈ the
   * per-shard graph recall (each shard must surface only ITS OWN true
   * top-k rows; the exact union-merge loses nothing), so recall does not
   * degrade as shards are added. The trade is per-query entry overhead
@@ -292,9 +296,8 @@ final class HnswStore[K](
     out
   }
 
-  /** Batch top-k as one shuffle-free job, the [[graft.core.BlockStore.topKMerged]]
-    * shape: broadcast the query matrix, per-shard bounded heaps, merge
-    * up a treeAggregate, rank on the driver (Q×k rows).
+  /** Batch top-k over a driver-side query array, one shuffle-free job
+    * ([[shardTopK]]'s driver-batch topology).
     *
     * `exact=true` ignores the graphs and scores every row with the
     * sequential-double arithmetic of the declarative path
@@ -311,433 +314,234 @@ final class HnswStore[K](
     */
   def searchMerged(queries: Array[(Long, Array[Float])], k: Int,
                    ef: Int = 64, exact: Boolean = false)(
-      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)])
-      : DataFrame = {
-    // mis-dimensioned queries fail loudly (ADVICE r13): in exact mode
-    // dotPackedD iterates q.length over the packed slab, so a short
-    // query would silently score row PREFIXES and a long one would read
-    // into the next row — the IvfIndex.search contract, same wording
-    val d = dim
-    if (d > 0) queries.foreach { case (qid, v) =>
-      require(v.length == d,
-        s"HnswStore.searchMerged: query $qid has dim ${v.length}, store dim is $d")
-    }
-    val (qids, qvecs, qnorms, qunits) =
-      HnswStore.prepQueries(queries, normalized, exact)
-    val bc = shards.sparkContext.broadcast((qvecs, qnorms, qunits))
-    val kk = k
-    val efk = math.max(ef, k)
-    val ex = exact
-    val localOrd = ord
-    val merged =
-      try {
-        shards.treeAggregate(null: Array[BoundedTopKG[K]])(
-          seqOp = (acc, shard) => {
-            val (qv, qn, qu) = bc.value
-            val heaps = if (acc != null) acc
-                        else Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd))
-            HnswStore.scoreShard(heaps, shard, qv, qn, qu, kk, efk, ex)
-            heaps
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else {
-              var i = 0
-              while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-              a
-            },
-          depth = 2)
-      } finally bc.destroy()
-    val rows: Seq[(Long, K, Double, Int)] =
-      if (merged == null) Seq.empty
-      else merged.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map {
-          case ((id, s), r) => (qids(i), id, s, r + 1)
-        }
-      }.toSeq
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame =
+    shardTopK("searchMerged", Left(queries), shards, k, exact)(
+      HnswStore.scoreShard[K](k, ef, exact))
 
-  /** Exact member-scan fallbacks the most recent [[searchMergedMember]]
-    * call's shards performed (one count per (query, shard) whose
-    * filtered beam exhausted its component under k accepted rows —
-    * see the underfill proof in [[HnswStore.scoreShardMember]]). 0 =
-    * every shard filled every query from its graph; grows as the
-    * filter gets selective relative to shard size — the
-    * lastFilteredPasses analog for the graph strategy.
+  /** Exact member-scan fallbacks the most recent filtered search's
+    * shards performed (one count per (query, shard) whose filtered beam
+    * exhausted its component under k accepted rows — see the underfill
+    * proof in [[HnswStore.scoreShardMember]]). 0 = every shard filled
+    * every query from its graph, or the call short-circuited; grows as
+    * the filter gets selective relative to shard size — the
+    * lastFilteredPasses analog for the graph strategy. Unfiltered
+    * searches leave it as it is.
     */
   @volatile private var lastMemberWideningsVar: Long = 0L
   def lastMemberFallbackScans: Long = lastMemberWideningsVar
 
-  /** Membership-filtered batch top-k (round 17) — the graph-strategy
-    * twin of [[graft.operators.IvfIndex.searchMergedAllowed]], closing
-    * the last strategy×filter combination that fell back to the
-    * per-call exact repack scan. The filter ships as ONE broadcast
-    * [[graft.core.MemberTest]] (exact allow/deny set or Bloom — the
-    * caller owns Bloom FP verification + refill, as in the IVF twin)
-    * and applies at beam RESULT collection inside each shard's graph
-    * ([[graft.core.Hnsw.searchFiltered]] — the FAISS
+  /** Membership-filtered batch top-k (round 17), closing the last
+    * strategy×filter combination that fell back to the per-call exact
+    * repack scan. The filter is one [[graft.core.MemberTest]] (exact
+    * allow/deny set or Bloom — the caller owns Bloom FP verification +
+    * refill, as for IVF's `searchMergedAllowed`), broadcast by
+    * [[shardTopK]], and applies at beam RESULT collection inside each
+    * shard's graph ([[graft.core.Hnsw.searchFiltered]] — the FAISS
     * `SearchParametersHNSW.sel` shape: traversal never skips nodes, so
     * selective filters cannot disconnect the walk; the beam instead
-    * keeps expanding until ef ACCEPTED rows are in hand, the
-    * searchMergedAllowed adaptive-widening analog built into the walk
-    * itself). A (query, shard) whose beam STILL underfills k has
-    * provably exhausted its entry component (see the proof in
-    * [[HnswStore.scoreShardMember]]) and snaps to the exact member
-    * scan over the slab ([[graft.core.BlockStore.scoreBlockMember]])
-    * — so a query returns fewer than k rows ONLY when the filtered
-    * store holds fewer than k rows, the exact path's contract.
-    * `exact = true` (or `ef >= every shard's rows`) makes the whole
-    * call the exact filtered scan — scoring arithmetic identical to
+    * keeps expanding until ef ACCEPTED rows are in hand). A (query,
+    * shard) whose beam STILL underfills k has provably exhausted its
+    * entry component (see the proof in [[HnswStore.scoreShardMember]])
+    * and snaps to the exact member scan over the slab
+    * ([[graft.core.BlockStore.scoreBlockMember]]) — so a query returns
+    * fewer than k rows ONLY when the filtered store holds fewer than k
+    * rows, the exact path's contract. `exact = true` (or
+    * `ef >= every shard's rows`) makes the whole call the exact
+    * filtered scan — scoring arithmetic identical to
     * [[searchMerged]]`(exact = true)` over the member rows, which is
-    * what the q89 oracle hash-matches.
-    *
-    * Scale terms: one bounded/constant membership broadcast, one
-    * depth-2 treeAggregate (shards × Q × k heap traffic — identical
-    * to [[searchMerged]]), zero shuffles, zero repacks: the per-call
-    * O(matches) candidate repack of the exact filtered path — the
-    * scale cliff this twin removes — never happens; filtering rides
-    * the CACHED shard slabs.
+    * what the q89 oracle hash-matches. Filtering rides the CACHED shard
+    * slabs: no per-call candidate repack.
     */
   def searchMergedMember(queries: Array[(Long, Array[Float])], k: Int,
                          member: graft.core.MemberTest[K], deny: Boolean,
                          ef: Int = 64, exact: Boolean = false)(
-      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)])
-      : DataFrame = {
-    val d = dim
-    if (d > 0) queries.foreach { case (qid, v) =>
-      require(v.length == d,
-        s"HnswStore.searchMergedMember: query $qid has dim ${v.length}, store dim is $d")
-    }
-    val (qids, qvecs, qnorms, qunits) =
-      HnswStore.prepQueries(queries, normalized, exact)
-    if (queries.isEmpty || (member.matchesNothing && !deny)) {
-      lastMemberWideningsVar = 0L
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    }
-    val sc = shards.sparkContext
-    val widen = sc.longAccumulator("graft.hnsw.member.fallback.scans")
-    val bc = sc.broadcast((qvecs, qnorms, qunits, member, deny))
-    val kk = k
-    val efk = math.max(ef, k)
-    val ex = exact
-    val localOrd = ord
-    val localCt = ct // bound locally so the closure doesn't capture `this`
-    val merged =
-      try {
-        shards.treeAggregate(null: Array[BoundedTopKG[K]])(
-          seqOp = (acc, shard) => {
-            val (qv, qn, qu, mem, dny) = bc.value
-            val heaps = if (acc != null) acc
-                        else Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd))
-            HnswStore.scoreShardMember(heaps, shard, qv, qn, qu, kk, efk,
-              ex, mem, dny, widen)(localCt)
-            heaps
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else {
-              var i = 0
-              while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-              a
-            },
-          depth = 2)
-      } finally bc.destroy()
-    lastMemberWideningsVar = widen.value
-    val rows: Seq[(Long, K, Double, Int)] =
-      if (merged == null) Seq.empty
-      else merged.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map {
-          case ((id, s), r) => (qids(i), id, s, r + 1)
-        }
-      }.toSeq
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame =
+    shardTopK("searchMergedMember", Left(queries), shards, k, exact,
+      member, deny)(HnswStore.scoreShardMember[K](k, ef, exact))
 
-  /** Dataset-query twin of [[searchMergedMember]] (round 17) — the
-    * [[searchPacked]] shape with the membership filter pushed into
-    * each (query slab × graph shard) pair's beam searches (and the
-    * same underfill → exact-member-scan snap), so bulk pipelines
-    * whose query batch is a TABLE get the graph rung too. Same
-    * persisted-store precondition as [[searchPacked]] (an uncached
-    * shard RDD would rebuild every graph per query partition), same
-    * reduction topology, and bit-identical to [[searchMergedMember]]
-    * at the same (k, ef, exact) — spec-pinned.
+  /** [[searchMergedMember]] over a query table ([[shardTopK]]'s
+    * Dataset topology), bit-identical to it at the same (k, ef, exact)
+    * — spec-pinned — with one exception: a non-exact covering beam on a
+    * cosine store runs the fp32 member scan, whose last score bits
+    * depend on a query's slot in its batch (BlockStore.scoreBlock's
+    * four-query panels). Requires a persisted store, like
+    * [[searchPacked]].
     */
   def searchPackedMember(queries: Dataset[(Long, Array[Float])], k: Int,
                          member: graft.core.MemberTest[K], deny: Boolean,
                          ef: Int = 64, exact: Boolean = false)(
-      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)])
-      : DataFrame = {
-    val kk = k
-    val efk = math.max(ef, k)
-    val ex = exact
-    val norm = normalized
-    val localOrd = ord
-    val localCt = ct
-    require(HnswStore.effectivelyPersisted(shards),
-      "searchPackedMember requires a persisted store (call .persist() and " +
-        "materialize once) — every query partition would otherwise " +
-        "rebuild every shard graph")
-    if (member.matchesNothing && !deny) {
-      lastMemberWideningsVar = 0L
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    }
-    val sc = shards.sparkContext
-    val widen = sc.longAccumulator("graft.hnsw.member.fallback.scans")
-    val bcMem = sc.broadcast((member, deny))
-    val qblocks = queries.rdd.mapPartitionsWithIndex { (pi, it) =>
-      val arr = it.toArray
-      if (arr.isEmpty) Iterator.empty
-      else Iterator((pi, HnswStore.prepQueries(arr, norm, ex)))
-    }.setName("graft.hnsw.qprep").persist(StorageLevel.MEMORY_AND_DISK)
-    swapQPrep(qblocks)
-    qblocks.count()
-    materialize()
-    val partials = qblocks.cartesian(shards).map {
-      case ((pi, (qids, qvecs, qnorms, qunits)), shard) =>
-        val (mem, dny) = bcMem.value
-        val heaps =
-          Array.fill(qids.length)(new BoundedTopKG[K](kk)(localOrd))
-        HnswStore.scoreShardMember(heaps, shard, qvecs, qnorms, qunits,
-          kk, efk, ex, mem, dny, widen)(localCt)
-        (pi, (qids, heaps))
-    }
-    val merged = partials.reduceByKey { (x, y) =>
-      val a = x._2; val b = y._2
-      var i = 0
-      while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-      x
-    }
-    val rows = merged.flatMap { case (_, (qids, heaps)) =>
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map {
-          case ((id, s), r) => (qids(qi), id, s, r + 1)
-        }
-      }
-    }.setName("graft.hnsw.member.out")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize eagerly so the fallback telemetry (an accumulator,
-    // populated only by task execution) is current when this returns —
-    // the review-r17 stale-counter fix; the output is Q × k rows
-    rows.count()
-    lastMemberWideningsVar = widen.value
-    swapQPrep(rows) // latest-call slot: qblocks superseded, rows cached
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame =
+    shardTopK("searchPackedMember", Right(queries), shards, k, exact,
+      member, deny)(HnswStore.scoreShardMember[K](k, ef, exact))
 
   /** The int8 composition of [[searchMergedMember]] (round 18 — VERDICT
     * r17 missing #3): each shard's filtered beam walks the graph over
     * an INT8-quantized copy of its unit slab
     * ([[graft.core.Hnsw.searchFilteredQ8]] — 4× less traversal
-    * bandwidth, derived lazily per shard and cached with it), keeps
+    * bandwidth, derived once per store, see [[q8Codes]]), keeps
     * `k × overfetch` accepted survivors, and rescores them against the
     * co-resident fp32 slab with the exact engine's double arithmetic —
-    * the `searchMergedQ8Allowed` candidate-generation/rescore split,
-    * graph-style. Same membership rungs/polarity, underfill →
-    * exact-member-scan snap (the component-exhaustion proof carries:
-    * quantized sims reorder the walk, never terminate it under `ef`
-    * accepted), treeAggregate topology and telemetry as the fp32 twin.
-    * At a store-covering `ef` the quantized MEMBER SCAN keeps the int8
-    * machinery in the loop (no silent fp32 reroute), and with covering
-    * overfetch every member row is a candidate — the result is the
-    * exact filtered top-k (double-accumulated), which the q102 catalog
-    * entry hash-matches. Bloom callers own verification + refill, as
-    * everywhere.
+    * IVF's candidate-generation/rescore split, graph-style. Same
+    * membership rungs/polarity, underfill → exact-member-scan snap (the
+    * component-exhaustion proof carries: quantized sims reorder the
+    * walk, never terminate it under `ef` accepted) and telemetry as
+    * [[searchMergedMember]]. At a store-covering `ef` the quantized
+    * MEMBER SCAN keeps the int8 machinery in the loop (no silent fp32
+    * reroute), and with covering overfetch every member row is a
+    * candidate — the result is the exact filtered top-k
+    * (double-accumulated), which the q102 catalog entry hash-matches.
     */
   def searchMergedMemberQ8(queries: Array[(Long, Array[Float])], k: Int,
                            member: graft.core.MemberTest[K], deny: Boolean,
                            ef: Int = 64, overfetch: Int = 4)(
-      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)])
-      : DataFrame = {
-    val d = dim
-    if (d > 0) queries.foreach { case (qid, v) =>
-      require(v.length == d,
-        s"HnswStore.searchMergedMemberQ8: query $qid has dim ${v.length}, store dim is $d")
-    }
-    val (qids, qvecs, qnorms, qunits) =
-      HnswStore.prepQueries(queries, normalized, exact = false)
-    if (queries.isEmpty || (member.matchesNothing && !deny)) {
-      lastMemberWideningsVar = 0L
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    }
-    val sc = shards.sparkContext
-    val widen = sc.longAccumulator("graft.hnsw.member.fallback.scans")
-    val bc = sc.broadcast((qvecs, qnorms, qunits, member, deny))
-    val kk = k
-    val efk = math.max(ef, k)
-    val scanK = math.min(math.max(k.toLong * math.max(1, overfetch), k.toLong),
-      Int.MaxValue.toLong).toInt
-    val localOrd = ord
-    val localCt = ct
-    val merged =
-      try {
-        q8Shards().treeAggregate(null: Array[BoundedTopKG[K]])(
-          seqOp = (acc, pair) => {
-            val (qv, qn, qu, mem, dny) = bc.value
-            val heaps = if (acc != null) acc
-                        else Array.fill(qv.length)(new BoundedTopKG[K](kk)(localOrd))
-            HnswStore.scoreShardMemberQ8(heaps, pair._1, pair._2, qv, qn, qu,
-              kk, efk, scanK, mem, dny, widen)(localCt, localOrd)
-            heaps
-          },
-          combOp = (a, b) =>
-            if (a == null) b
-            else if (b == null) a
-            else {
-              var i = 0
-              while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-              a
-            },
-          depth = 2)
-      } finally bc.destroy()
-    lastMemberWideningsVar = widen.value
-    val rows: Seq[(Long, K, Double, Int)] =
-      if (merged == null) Seq.empty
-      else merged.iterator.zipWithIndex.flatMap { case (h, i) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map {
-          case ((id, s), r) => (qids(i), id, s, r + 1)
-        }
-      }.toSeq
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame =
+    shardTopK("searchMergedMemberQ8", Left(queries), q8Shards(), k,
+      exact = false, member, deny)(
+      HnswStore.scoreShardMemberQ8[K](k, ef, overfetch))
 
-  /** Dataset-query twin of [[searchMergedMemberQ8]] (round 18) — the
-    * [[searchPackedMember]] topology with the int8 beam + fp32 rescore
-    * per (query slab × shard) pair; bit-identical to the merged twin
-    * at the same (k, ef, overfetch) — spec-pinned. Same persisted-store
-    * precondition and latest-call query-prep cache as every packed
-    * entry point.
+  /** [[searchMergedMemberQ8]] over a query table ([[shardTopK]]'s
+    * Dataset topology), bit-identical to it at the same (k, ef,
+    * overfetch) — spec-pinned. Requires a persisted store, like
+    * [[searchPacked]].
     */
   def searchPackedMemberQ8(queries: Dataset[(Long, Array[Float])], k: Int,
                            member: graft.core.MemberTest[K], deny: Boolean,
                            ef: Int = 64, overfetch: Int = 4)(
-      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)])
-      : DataFrame = {
-    val kk = k
-    val efk = math.max(ef, k)
-    val scanK = math.min(math.max(k.toLong * math.max(1, overfetch), k.toLong),
-      Int.MaxValue.toLong).toInt
-    val norm = normalized
-    val localOrd = ord
-    val localCt = ct
-    require(HnswStore.effectivelyPersisted(shards),
-      "searchPackedMemberQ8 requires a persisted store (call .persist() and " +
-        "materialize once) — every query partition would otherwise " +
-        "rebuild every shard graph")
-    if (member.matchesNothing && !deny) {
-      lastMemberWideningsVar = 0L
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    }
-    val sc = shards.sparkContext
-    val widen = sc.longAccumulator("graft.hnsw.member.fallback.scans")
-    val bcMem = sc.broadcast((member, deny))
-    val qblocks = queries.rdd.mapPartitionsWithIndex { (pi, it) =>
-      val arr = it.toArray
-      if (arr.isEmpty) Iterator.empty
-      else Iterator((pi, HnswStore.prepQueries(arr, norm, exact = false)))
-    }.setName("graft.hnsw.qprep").persist(StorageLevel.MEMORY_AND_DISK)
-    swapQPrep(qblocks)
-    qblocks.count()
-    materialize()
-    val partials = qblocks.cartesian(q8Shards()).map {
-      case ((pi, (qids, qvecs, qnorms, qunits)), (shard, q8)) =>
-        val (mem, dny) = bcMem.value
-        val heaps =
-          Array.fill(qids.length)(new BoundedTopKG[K](kk)(localOrd))
-        HnswStore.scoreShardMemberQ8(heaps, shard, q8, qvecs, qnorms, qunits,
-          kk, efk, scanK, mem, dny, widen)(localCt, localOrd)
-        (pi, (qids, heaps))
-    }
-    val merged = partials.reduceByKey { (x, y) =>
-      val a = x._2; val b = y._2
-      var i = 0
-      while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-      x
-    }
-    val rows = merged.flatMap { case (_, (qids, heaps)) =>
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map {
-          case ((id, s), r) => (qids(qi), id, s, r + 1)
-        }
-      }
-    }.setName("graft.hnsw.member.q8.out")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    rows.count()
-    lastMemberWideningsVar = widen.value
-    swapQPrep(rows)
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame =
+    shardTopK("searchPackedMemberQ8", Right(queries), q8Shards(), k,
+      exact = false, member, deny)(
+      HnswStore.scoreShardMemberQ8[K](k, ef, overfetch))
 
-  /** Dataset-query twin of [[searchMerged]] — the gemmQueries shape,
-    * for query tables beyond driver memory: each query partition packs
-    * ONCE (persisted + materialized before the cartesian stage, so the
-    * first task wave doesn't race to re-pack it — the r6 lesson),
-    * every (query slab × graph shard) pair runs its beam searches (or
-    * the exact scoreBlock) into bounded heaps, heaps absorb per query
-    * partition in a reduceByKey, and ranked rows come out. Shuffle
-    * volume O(qparts × shards × k) candidate heaps — no pruning exists
-    * to exploit (a graph store probes every shard by design; IVF's
-    * searchPacked prunes to probed buckets instead). The packed query
-    * cache is bounded to the latest call (see [[lastQPrep]]).
-    *
-    * Bit-identical to [[searchMerged]] at the same (k, ef, exact) —
-    * the per-(query, shard) work and the merge tie rule are the same
-    * code; only the reduction topology differs (spec-pinned).
+  /** [[searchMerged]] over a query table beyond driver memory
+    * ([[shardTopK]]'s Dataset topology, the gemmQueries shape), and
+    * bit-identical to it at the same (k, ef, exact) — spec-pinned. The
+    * store must be persisted: an uncached shard RDD would rebuild every
+    * graph once per query partition.
     */
   def searchPacked(queries: Dataset[(Long, Array[Float])], k: Int,
                    ef: Int = 64, exact: Boolean = false)(
-      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)])
-      : DataFrame = {
-    val kk = k
-    val efk = math.max(ef, k)
-    val ex = exact
-    val norm = normalized
-    val localOrd = ord
-    // hard precondition, not gemmQueries' "caller's choice": an
-    // uncached BlockStore merely re-PACKS per query partition, but an
-    // uncached shard RDD re-runs the HNSW GRAPH BUILD (the dominant
-    // cost — ~6 s per 100k rows) once per query partition in the
-    // cartesian below (review r13)
-    require(HnswStore.effectivelyPersisted(shards),
-      "searchPacked requires a persisted store (call .persist() and " +
-        "materialize once) — every query partition would otherwise " +
-        "rebuild every shard graph")
-    val qblocks = queries.rdd.mapPartitionsWithIndex { (pi, it) =>
-      val arr = it.toArray
-      if (arr.isEmpty) Iterator.empty
-      else Iterator((pi, HnswStore.prepQueries(arr, norm, ex)))
-    }.setName("graft.hnsw.qprep").persist(StorageLevel.MEMORY_AND_DISK)
-    swapQPrep(qblocks)
-    qblocks.count()
-    materialize()
-    val partials = qblocks.cartesian(shards).map {
-      case ((pi, (qids, qvecs, qnorms, qunits)), shard) =>
-        val heaps =
-          Array.fill(qids.length)(new BoundedTopKG[K](kk)(localOrd))
-        HnswStore.scoreShard(heaps, shard, qvecs, qnorms, qunits, kk, efk, ex)
-        (pi, (qids, heaps))
-    }
-    val merged = partials.reduceByKey { (x, y) =>
-      val a = x._2; val b = y._2
-      var i = 0
-      while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-      x
-    }
-    val rows = merged.flatMap { case (_, (qids, heaps)) =>
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map {
-          case ((id, s), r) => (qids(qi), id, s, r + 1)
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame =
+    shardTopK("searchPacked", Right(queries), shards, k, exact)(
+      HnswStore.scoreShard[K](k, ef, exact))
+
+  /** The one query engine behind the six searches above, REPOSE's
+    * shape: a partition-local index plus one global top-k merge. `score`
+    * adds one partition of `parts` (a shard, or a shard and its int8
+    * codes) to every query's bounded heap; this method owns the rest —
+    * the dim (driver batch) or persistence (Dataset) precondition
+    * naming `entry`, query prep, the short-circuits that return no rows
+    * without a Spark job (an empty driver batch; an allow set that
+    * matches nothing), the membership broadcast and fallback-scan
+    * accumulator, the reduction and the ranked emit. `member == null`
+    * is an unfiltered call. `exact` selects the query prep: exact calls
+    * skip the unit copies the graph walk reads.
+    *
+    * A driver batch (`Left`) broadcasts its prepped queries, scores
+    * every shard into per-query heaps and merges them up one depth-2
+    * treeAggregate: shards × Q × k heap traffic, zero shuffles, the
+    * [[graft.core.BlockStore.topKMerged]] shape. A query table
+    * (`Right`) packs each query partition ONCE (persisted and counted
+    * before the cartesian stage, so the first task wave doesn't race to
+    * re-pack it — the r6 lesson; only the latest call's slab stays
+    * cached, see [[lastQPrep]]), scores every (query slab × partition)
+    * pair and absorbs heaps per query partition in a reduceByKey:
+    * shuffle volume O(qparts × shards × k) — a graph store probes every
+    * shard by design. Both run the same per-(query, shard) code and
+    * merge tie rule, so a merged call and its packed twin return the
+    * same rows (see [[searchPackedMember]] for the one place where the
+    * last score bits can differ). A filtered query-table call persists
+    * and counts its output (Q × k rows) before it returns, because the
+    * fallback accumulator fills only as tasks run and
+    * [[lastMemberFallbackScans]] must be current (the review-r17
+    * stale-counter fix); an unfiltered one stays lazy.
+    */
+  private def shardTopK[P: ClassTag](
+      entry: String,
+      queries: Either[Array[(Long, Array[Float])], Dataset[(Long, Array[Float])]],
+      parts: => RDD[P], k: Int, exact: Boolean,
+      member: graft.core.MemberTest[K] = null, deny: Boolean = false)(
+      score: HnswStore.Scorer[K, P])(
+      implicit outEnc: Encoder[(Long, K, Double, Int)]): DataFrame = {
+    queries match {
+      case Left(batch) =>
+        // mis-dimensioned queries fail loudly (ADVICE r13): in exact mode
+        // dotPackedD iterates q.length over the packed slab, so a short
+        // query would silently score row PREFIXES and a long one would
+        // read into the next row — the IvfIndex.search contract
+        val d = dim
+        if (d > 0) batch.foreach { case (qid, v) =>
+          require(v.length == d,
+            s"HnswStore.$entry: query $qid has dim ${v.length}, store dim is $d")
         }
-      }
+      case Right(_) =>
+        // a hard precondition: an uncached BlockStore merely re-PACKS
+        // per query partition, but an uncached shard RDD re-runs the
+        // HNSW GRAPH BUILD (~6 s per 100k rows) once per query
+        // partition in the cartesian (review r13)
+        require(HnswStore.effectivelyPersisted(shards),
+          s"$entry requires a persisted store (call .persist() and " +
+            "materialize once) — every query partition would otherwise " +
+            "rebuild every shard graph")
     }
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
+    val filtered = member != null
+    val sc = shards.sparkContext
+    val widen =
+      if (filtered) sc.longAccumulator("graft.hnsw.member.fallback.scans") else null
+    val localOrd = ord
+    val out: Dataset[(Long, K, Double, Int)] =
+      if (queries.fold(_.isEmpty, _ => false) ||
+          (filtered && member.matchesNothing && !deny))
+        spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
+      else queries match {
+        case Left(batch) =>
+          val prep = HnswStore.prepQueries(batch, normalized, exact)
+          val bc = sc.broadcast((prep, member, deny))
+          val merged =
+            try parts.treeAggregate(null: Array[BoundedTopKG[K]])(
+              seqOp = (acc, part) => {
+                val (q, mem, dny) = bc.value
+                val heaps =
+                  if (acc != null) acc else HnswStore.heaps(q._1.length, k)(localOrd)
+                score(heaps, part, q, mem, dny, widen)
+                heaps
+              },
+              combOp = (a, b) =>
+                if (a == null) b else if (b == null) a else HnswStore.absorbAll(a, b),
+              depth = 2)
+            finally bc.destroy()
+          val rows =
+            if (merged == null) Seq.empty
+            else HnswStore.ranked(prep._1, merged, k).toSeq
+          spark.createDataset(rows)(outEnc)
+        case Right(ds) =>
+          val norm = normalized
+          val bcMem = if (filtered) sc.broadcast((member, deny)) else null
+          val qblocks = ds.rdd.mapPartitionsWithIndex { (pi, it) =>
+            val arr = it.toArray
+            if (arr.isEmpty) Iterator.empty
+            else Iterator((pi, HnswStore.prepQueries(arr, norm, exact)))
+          }.setName("graft.hnsw.qprep").persist(StorageLevel.MEMORY_AND_DISK)
+          swapQPrep(qblocks)
+          qblocks.count()
+          materialize()
+          val rows = qblocks.cartesian(parts).map { case ((pi, q), part) =>
+            val heaps = HnswStore.heaps(q._1.length, k)(localOrd)
+            val (mem, dny) = if (bcMem == null) (null, false) else bcMem.value
+            score(heaps, part, q, mem, dny, widen)
+            (pi, (q._1, heaps))
+          }.reduceByKey { (x, y) => HnswStore.absorbAll(x._2, y._2); x }
+            .flatMap { case (_, (qids, heaps)) => HnswStore.ranked(qids, heaps, k) }
+          if (filtered) {
+            rows.setName(s"graft.hnsw.$entry.out")
+              .persist(StorageLevel.MEMORY_AND_DISK)
+            rows.count()
+            swapQPrep(rows) // latest-call slot: qblocks superseded, rows cached
+          }
+          spark.createDataset(rows)(outEnc)
+      }
+    // after the filtered call's jobs (or none, on a short-circuit: 0)
+    if (filtered) lastMemberWideningsVar = widen.value
+    out.toDF("qid", "id", "score", "rank")
   }
 }
 
@@ -750,17 +554,31 @@ object HnswStore {
   def load[K: ClassTag: Ordering](spark: SparkSession, path: String)
       : HnswStore[K] = HnswIO.load[K](spark, path)
 
-  /** Shared query prep (searchMerged + searchPacked): zero -> e0 in
-    * normalized mode (the write-time invariant's convention); cosine
-    * mode keeps raw vectors + norms for exact scoring and derives unit
-    * copies for graph traversal (zero-norm queries stay zero so every
-    * sim is 0, matching the exact path's zero-score rule).
+  /** A prepped query batch: (qids, scoring vectors, their norms in
+    * cosine mode else null, unit copies for the graph walk).
+    */
+  private[operators] type QPrep =
+    (Array[Long], Array[Array[Float]], Array[Double], Array[Array[Float]])
+
+  /** One partition's contribution to every query's heap, called by
+    * [[HnswStore!.shardTopK]] with the heaps, the partition, the
+    * prepped batch, the membership filter and its polarity (null and
+    * false when unfiltered) and the fallback-scan accumulator (null
+    * when unfiltered).
+    */
+  private[operators] type Scorer[K, P] = (Array[BoundedTopKG[K]], P, QPrep,
+    graft.core.MemberTest[K], Boolean, LongAccumulator) => Unit
+
+  /** The engine's query prep: zero -> e0 in normalized mode (the
+    * write-time invariant's convention); cosine mode keeps raw vectors
+    * + norms for exact scoring and derives unit copies for graph
+    * traversal (zero-norm queries stay zero so every sim is 0, matching
+    * the exact path's zero-score rule).
     */
   private[operators] def prepQueries(
       queries: Array[(Long, Array[Float])],
       normalized: Boolean,
-      exact: Boolean): (Array[Long], Array[Array[Float]], Array[Double],
-                        Array[Array[Float]]) = {
+      exact: Boolean): QPrep = {
     val qids = queries.map(_._1)
     val qvecs = queries.map { q =>
       val v = q._2
@@ -799,20 +617,33 @@ object HnswStore {
         rdd.dependencies.nonEmpty &&
         rdd.dependencies.forall(d => effectivelyPersisted(d.rdd)))
 
-  /** One shard's contribution to every query's heap: the exact
-    * sequential-double scoreBlock, or one beam search per query.
-    * Validates every query's dimension against the SHARD dim
-    * (executor-side — covers the Dataset-query path, whose queries
-    * never materialize on the driver; ADVICE r13).
+  /** Per-query heaps for one partition's (or one merge's) scores. */
+  private def heaps[K](n: Int, k: Int)(implicit ord: Ordering[K])
+      : Array[BoundedTopKG[K]] =
+    Array.fill(n)(new BoundedTopKG[K](k)(ord))
+
+  /** Absorb `b`'s heaps into `a`'s, query by query; returns `a`. */
+  private def absorbAll[K](a: Array[BoundedTopKG[K]],
+                           b: Array[BoundedTopKG[K]]): Array[BoundedTopKG[K]] = {
+    var i = 0
+    while (i < a.length) { a(i).absorb(b(i)); i += 1 }
+    a
+  }
+
+  /** The (qid, id, score, rank) rows of merged heaps, best first. */
+  private def ranked[K](qids: Array[Long], heaps: Array[BoundedTopKG[K]],
+                        k: Int): Iterator[(Long, K, Double, Int)] =
+    heaps.iterator.zipWithIndex.flatMap { case (h, i) =>
+      h.sortedHits().iterator.take(k).zipWithIndex.map {
+        case ((id, s), r) => (qids(i), id, s, r + 1)
+      }
+    }
+
+  /** Every query's dimension against the SHARD dim, executor-side — it
+    * covers the Dataset-query path, whose queries never materialize on
+    * the driver (ADVICE r13).
     */
-  private[operators] def scoreShard[K](
-      heaps: Array[BoundedTopKG[K]],
-      shard: HnswShard[K],
-      qvecs: Array[Array[Float]],
-      qnorms: Array[Double],
-      qunits: Array[Array[Float]],
-      k: Int, ef: Int, exact: Boolean): Unit = {
-    val d = shard.block.dim
+  private def requireShardDim(d: Int, qvecs: Array[Array[Float]]): Unit = {
     var vi = 0
     while (vi < qvecs.length) {
       require(qvecs(vi).length == d,
@@ -820,165 +651,154 @@ object HnswStore {
           "a truncated dot product would silently score row prefixes")
       vi += 1
     }
-    if (exact) {
-      BlockStore.scoreBlock(heaps, shard.block, qvecs, qnorms,
-        Double.NegativeInfinity, exact = true)
-    } else {
-      val ids = shard.block.ids
-      var qi = 0
-      while (qi < qunits.length) {
-        val hits = shard.graph.search(qunits(qi), k, ef)
-        var h = 0
-        while (h < hits.length) {
-          heaps(qi).offer(hits(h)._2, ids(hits(h)._1))
-          h += 1
+  }
+
+  /** The unfiltered scorer: the exact sequential-double scoreBlock, or
+    * one beam search per query at `max(ef, k)`.
+    */
+  private[operators] def scoreShard[K](k: Int, ef: Int, exact: Boolean)
+      : Scorer[K, HnswShard[K]] = {
+    val efk = math.max(ef, k)
+    (heaps, shard, q, _, _, _) => {
+      val (_, qvecs, qnorms, qunits) = q
+      requireShardDim(shard.block.dim, qvecs)
+      if (exact) {
+        BlockStore.scoreBlock(heaps, shard.block, qvecs, qnorms,
+          Double.NegativeInfinity, exact = true)
+      } else {
+        val ids = shard.block.ids
+        var qi = 0
+        while (qi < qunits.length) {
+          val hits = shard.graph.search(qunits(qi), k, efk)
+          var h = 0
+          while (h < hits.length) {
+            heaps(qi).offer(hits(h)._2, ids(hits(h)._1))
+            h += 1
+          }
+          qi += 1
         }
-        qi += 1
       }
     }
   }
 
-  /** One shard's contribution to every query's heap under a
-    * membership filter — see [[HnswStore!.searchMergedMember]]. In
+  /** The membership scorer — see [[HnswStore!.searchMergedMember]]. In
     * exact mode (or when the beam already covers the slab) this IS the
     * exact member scan; otherwise each query runs the filtered beam
     * search, snapping to the exact member scan on underfill (see the
     * component-exhaustion proof inline) — so a shard under-reports a
     * query only when it truly holds fewer than k member rows.
     */
-  private[operators] def scoreShardMember[K](
-      heaps: Array[BoundedTopKG[K]],
-      shard: HnswShard[K],
-      qvecs: Array[Array[Float]],
-      qnorms: Array[Double],
-      qunits: Array[Array[Float]],
-      k: Int, ef: Int, exact: Boolean,
-      member: graft.core.MemberTest[K], deny: Boolean,
-      widen: org.apache.spark.util.LongAccumulator)(
-      implicit ct: ClassTag[K]): Unit = {
-    val d = shard.block.dim
-    var vi = 0
-    while (vi < qvecs.length) {
-      require(qvecs(vi).length == d,
-        s"HnswStore: query dim ${qvecs(vi).length} != store dim $d — " +
-          "a truncated dot product would silently score row prefixes")
-      vi += 1
-    }
-    val rows = shard.block.rows
-    if (exact || ef >= rows) {
-      BlockStore.scoreBlockMember(heaps, shard.block, qvecs, qnorms,
-        member, deny, exact)
-    } else {
-      val ids = shard.block.ids
-      val accept = (i: Int) => member.contains(ids(i)) != deny
-      var qi = 0
-      while (qi < qunits.length) {
-        val hits = shard.graph.searchFiltered(qunits(qi), k, ef, accept)
-        if (hits.length >= k) {
-          var h = 0
-          while (h < hits.length) {
-            heaps(qi).offer(hits(h)._2, ids(hits(h)._1))
-            h += 1
+  private[operators] def scoreShardMember[K: ClassTag](k: Int, ef: Int,
+      exact: Boolean): Scorer[K, HnswShard[K]] = {
+    val efk = math.max(ef, k)
+    (heaps, shard, q, member, deny, widen) => {
+      val (_, qvecs, qnorms, qunits) = q
+      requireShardDim(shard.block.dim, qvecs)
+      if (exact || efk >= shard.block.rows) {
+        BlockStore.scoreBlockMember(heaps, shard.block, qvecs, qnorms,
+          member, deny, exact)
+      } else {
+        val ids = shard.block.ids
+        val accept = (i: Int) => member.contains(ids(i)) != deny
+        var qi = 0
+        while (qi < qunits.length) {
+          val hits = shard.graph.searchFiltered(qunits(qi), k, efk, accept)
+          if (hits.length >= k) {
+            var h = 0
+            while (h < hits.length) {
+              heaps(qi).offer(hits(h)._2, ids(hits(h)._1))
+              h += 1
+            }
+          } else {
+            // underfill proof: searchFiltered's early-exit requires
+            // ef accepted nodes in hand, so with FEWER the walk ran the
+            // frontier dry — the entire entry component was visited and
+            // holds < k accepted nodes. Re-walking at a wider ef would
+            // visit the same set; only the exact member scan can add
+            // rows (members outside the component), so snap straight to
+            // it. This is the completeness half of the contract: a shard
+            // under-reports a query only when it truly holds < k member
+            // rows.
+            widen.add(1L)
+            val qv = Array(qvecs(qi))
+            val qn = if (qnorms == null) null else Array(qnorms(qi))
+            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.block,
+              qv, qn, member, deny, exact)
           }
-        } else {
-          // underfill proof: searchFiltered's early-exit requires
-          // ef accepted nodes in hand, so with FEWER the walk ran the
-          // frontier dry — the entire entry component was visited and
-          // holds < k accepted nodes. Re-walking at a wider ef would
-          // visit the same set; only the exact member scan can add
-          // rows (members outside the component), so snap straight to
-          // it. This is the completeness half of the contract: a shard
-          // under-reports a query only when it truly holds < k member
-          // rows.
-          if (widen != null) widen.add(1L)
-          val qv = Array(qvecs(qi))
-          val qn = if (qnorms == null) null else Array(qnorms(qi))
-          BlockStore.scoreBlockMember(Array(heaps(qi)), shard.block,
-            qv, qn, member, deny, exact)
+          qi += 1
         }
-        qi += 1
       }
     }
   }
 
-  /** One shard's contribution under a membership filter with the INT8
-    * traversal composition — see [[HnswStore!.searchMergedMemberQ8]].
-    * At a covering beam (`ef >=` shard rows) the quantized MEMBER SCAN
-    * over the shard's int8 unit slab replaces the walk (keeping the
-    * compressed tier in the covering-parity path, the q84/q95 rule),
-    * with ONE fused fp32 double rescore of the `scanK` survivors from
-    * the co-resident slab; otherwise each query runs the int8 filtered
-    * beam collecting up to `scanK` accepted survivors (beam widened to
+  /** The membership scorer with the INT8 traversal composition — see
+    * [[HnswStore!.searchMergedMemberQ8]]. At a covering beam (`ef >=`
+    * shard rows) the quantized MEMBER SCAN over the shard's int8 unit
+    * slab replaces the walk (keeping the compressed tier in the
+    * covering-parity path, the q84/q95 rule), with ONE fused fp32
+    * double rescore of the `scanK = k × overfetch` survivors from the
+    * co-resident slab; otherwise each query runs the int8 filtered beam
+    * collecting up to `scanK` accepted survivors (beam widened to
     * `max(ef, scanK)` — the candidate cut needs that many accepted in
     * hand) and rescores them in double, snapping to the exact member
     * scan on component exhaustion exactly like [[scoreShardMember]].
-    * All scores leaving this method are double-accumulated (rescore or
+    * All scores leaving this scorer are double-accumulated (rescore or
     * exact snap), the quantized tiers' arithmetic contract.
     */
-  private[operators] def scoreShardMemberQ8[K](
-      heaps: Array[BoundedTopKG[K]],
-      shard: HnswShard[K],
-      q8: graft.core.Q8Block[K],
-      qvecs: Array[Array[Float]],
-      qnorms: Array[Double],
-      qunits: Array[Array[Float]],
-      k: Int, ef: Int, scanK: Int,
-      member: graft.core.MemberTest[K], deny: Boolean,
-      widen: org.apache.spark.util.LongAccumulator)(
-      implicit ct: ClassTag[K], ord: Ordering[K]): Unit = {
+  private[operators] def scoreShardMemberQ8[K: ClassTag: Ordering](k: Int,
+      ef: Int, overfetch: Int): Scorer[K, (HnswShard[K], graft.core.Q8Block[K])] = {
     import graft.core.Q8Store
-    val d = shard.block.dim
-    var vi = 0
-    while (vi < qvecs.length) {
-      require(qvecs(vi).length == d,
-        s"HnswStore: query dim ${qvecs(vi).length} != store dim $d — " +
-          "a truncated dot product would silently score row prefixes")
-      vi += 1
-    }
-    val rows = shard.block.rows
-    val ids = shard.block.ids
-    if (ef >= rows) {
-      // covering beam: int8 member scan (unit rows, so qnorms = null —
-      // the dequantized dot IS the cosine estimate) + fused rescore
-      val scanHeaps =
-        Array.fill(qunits.length)(new BoundedTopKG[K](scanK)(ord))
-      Q8Store.scoreBlockMember(scanHeaps, q8, qunits, null, member, deny)
-      val cands = Q8Store.CandIndex.build[K](scanHeaps.map(_.sortedHits()))
-      Q8Store.rescoreBlock(heaps, shard.block, cands, qvecs, qnorms)
-    } else {
-      val accept = (i: Int) => member.contains(ids(i)) != deny
-      val data = shard.block.data
-      val vnorms = shard.block.norms
-      var qi = 0
-      while (qi < qunits.length) {
-        val hits = shard.graph.searchFilteredQ8(qunits(qi), scanK,
-          math.max(ef, scanK), accept, q8.codes, q8.scales)
-        if (hits.length >= k) {
-          // fp32 double rescore of the <= scanK survivors (exact-path
-          // arithmetic: unit dot, or raw/raw over the stored norms)
-          var h = 0
-          while (h < hits.length) {
-            val node = hits(h)._1
-            var s = Kernels.dotPackedD(qvecs(qi), data, node * d)
-            if (vnorms != null) {
-              val qn = qnorms(qi)
-              val vn = vnorms(node)
-              s = if (qn == 0.0 || vn == 0.0) 0.0 else s / (qn * vn)
+    val efk = math.max(ef, k)
+    val scanK = math.min(math.max(k.toLong * math.max(1, overfetch), k.toLong),
+      Int.MaxValue.toLong).toInt
+    (heaps, pair, q, member, deny, widen) => {
+      val (shard, q8) = pair
+      val (_, qvecs, qnorms, qunits) = q
+      val d = shard.block.dim
+      requireShardDim(d, qvecs)
+      val ids = shard.block.ids
+      if (efk >= shard.block.rows) {
+        // covering beam: int8 member scan (unit rows, so qnorms = null —
+        // the dequantized dot IS the cosine estimate) + fused rescore
+        val scanHeaps = HnswStore.heaps[K](qunits.length, scanK)
+        Q8Store.scoreBlockMember(scanHeaps, q8, qunits, null, member, deny)
+        val cands = Q8Store.CandIndex.build[K](scanHeaps.map(_.sortedHits()))
+        Q8Store.rescoreBlock(heaps, shard.block, cands, qvecs, qnorms)
+      } else {
+        val accept = (i: Int) => member.contains(ids(i)) != deny
+        val data = shard.block.data
+        val vnorms = shard.block.norms
+        var qi = 0
+        while (qi < qunits.length) {
+          val hits = shard.graph.searchFilteredQ8(qunits(qi), scanK,
+            math.max(efk, scanK), accept, q8.codes, q8.scales)
+          if (hits.length >= k) {
+            // fp32 double rescore of the <= scanK survivors (exact-path
+            // arithmetic: unit dot, or raw/raw over the stored norms)
+            var h = 0
+            while (h < hits.length) {
+              val node = hits(h)._1
+              var s = Kernels.dotPackedD(qvecs(qi), data, node * d)
+              if (vnorms != null) {
+                val qn = qnorms(qi)
+                val vn = vnorms(node)
+                s = if (qn == 0.0 || vn == 0.0) 0.0 else s / (qn * vn)
+              }
+              heaps(qi).offer(s, ids(node))
+              h += 1
             }
-            heaps(qi).offer(s, ids(node))
-            h += 1
+          } else {
+            // component exhausted (the scoreShardMember proof carries —
+            // int8 sims reorder the walk, never end it under ef
+            // accepted); exact=true matches the double rescore arithmetic
+            widen.add(1L)
+            val qv = Array(qvecs(qi))
+            val qn = if (qnorms == null) null else Array(qnorms(qi))
+            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.block,
+              qv, qn, member, deny, exact = true)
           }
-        } else {
-          // component exhausted (the scoreShardMember proof carries —
-          // int8 sims reorder the walk, never end it under ef
-          // accepted); exact=true matches the double rescore arithmetic
-          if (widen != null) widen.add(1L)
-          val qv = Array(qvecs(qi))
-          val qn = if (qnorms == null) null else Array(qnorms(qi))
-          BlockStore.scoreBlockMember(Array(heaps(qi)), shard.block,
-            qv, qn, member, deny, exact = true)
+          qi += 1
         }
-        qi += 1
       }
     }
   }

@@ -195,8 +195,7 @@ class HnswEngineSpec extends AnyFunSuite {
         store.searchMergedMember(qs, 10, tiny, deny = false, partial).collect()
         assert(store.lastMemberFallbackScans > 0)
       }
-      def noJob(what: String)(call: => DataFrame): Unit = {
-        snap()
+      def emptyWithoutJob(what: String)(call: => DataFrame): Unit = {
         sc.addSparkListener(listener)
         started.set(0)
         val n = try {
@@ -205,6 +204,10 @@ class HnswEngineSpec extends AnyFunSuite {
           started.get()
         } finally sc.removeSparkListener(listener)
         assert(n == 0, s"$what ran $n Spark jobs")
+      }
+      def noJob(what: String)(call: => DataFrame): Unit = {
+        snap()
+        emptyWithoutJob(what)(call)
         assert(store.lastMemberFallbackScans == 0, s"$what kept the fallback count")
       }
       noJob("searchMergedMember, empty batch")(
@@ -219,9 +222,14 @@ class HnswEngineSpec extends AnyFunSuite {
         store.searchPackedMember(qds, 5, none, deny = false, partial))
       noJob("searchPackedMemberQ8, empty allow set")(
         store.searchPackedMemberQ8(qds, 5, none, deny = false, partial))
-      assert(store.searchMerged(Array.empty, 5, partial).collect().isEmpty)
-      assert(store.searchMerged(Array.empty, 5, partial, exact = true)
-        .collect().isEmpty)
+      // an unfiltered call leaves the fallback count as it is
+      snap()
+      val scans = store.lastMemberFallbackScans
+      emptyWithoutJob("searchMerged, empty batch")(
+        store.searchMerged(Array.empty, 5, partial))
+      emptyWithoutJob("searchMerged exact, empty batch")(
+        store.searchMerged(Array.empty, 5, partial, exact = true))
+      assert(store.lastMemberFallbackScans == scans)
     }
   }
 
