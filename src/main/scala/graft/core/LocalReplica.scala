@@ -540,6 +540,28 @@ final class LocalReplica private[core] (
           s"graft: failed to write replica PQ cache at $path: ${e.getMessage}")
     }
 
+  /** One query's top-`k` over `slabs`: one heap per slab, scanned in
+    * parallel (replicas pack bounded slabs exactly so a single query has
+    * parallel grain) and merged by absorb; serial under two slabs.
+    * Per-(row, query) scores are slab-independent and the heap union is
+    * order-free, so this equals the sequential scan.
+    */
+  private def scanSlabs[B](slabs: Array[B], k: Int)(
+      scan: (B, BoundedTopKG[String]) => Unit): BoundedTopKG[String] =
+    if (slabs.length < 2) {
+      val h = new BoundedTopKG[String](k)
+      if (slabs.length == 1) scan(slabs(0), h)
+      h
+    } else {
+      val parts = new Array[BoundedTopKG[String]](slabs.length)
+      java.util.stream.IntStream.range(0, slabs.length).parallel().forEach { i =>
+        val h = new BoundedTopKG[String](k)
+        scan(slabs(i), h)
+        parts(i) = h
+      }
+      parts.reduce { (a, b) => a.absorb(b); a }
+    }
+
   /** Full-precision rescore of `cands` against the fp32 slabs, in the
     * replica's `exactScore` precision (ADVICE r16): double
     * accumulation under `graft.query.exact` — the distributed rescore
@@ -588,7 +610,7 @@ final class LocalReplica private[core] (
     // scratch tiling: that trade amortizes the expansion over a query
     // batch, and at batch size ONE it made the int8 scan ~8x slower
     // than the fp32 exact scan (measured in VdbStoreBench before this)
-    def scanBlock(b: Q8Block[String], h: BoundedTopKG[String]): Unit = {
+    val merged = scanSlabs(q8Blocks, scanK) { (b, h) =>
       var r = 0
       while (r < b.rows) {
         val s = graft.operators.Kernels.dotQ8F(q, b.codes, r * b.dim)
@@ -597,20 +619,6 @@ final class LocalReplica private[core] (
         r += 1
       }
     }
-    val merged =
-      if (q8Blocks.length < 2) {
-        val h = new BoundedTopKG[String](scanK)
-        if (q8Blocks.length == 1) scanBlock(q8Blocks(0), h)
-        h
-      } else {
-        val parts = new Array[BoundedTopKG[String]](q8Blocks.length)
-        java.util.stream.IntStream.range(0, q8Blocks.length).parallel().forEach { i =>
-          val h = new BoundedTopKG[String](scanK)
-          scanBlock(q8Blocks(i), h)
-          parts(i) = h
-        }
-        parts.reduce { (a, b) => a.absorb(b); a }
-      }
     rescoreExact(q, merged.sortedHits().map(_._1).toSeq, topK)
   }
 
@@ -627,21 +635,9 @@ final class LocalReplica private[core] (
     val scanK = math.max(topK, topK * math.max(1, overfetch))
     val table = pqBookVar.adcTable(q)
     val ksub = pqBookVar.ksub
-    val merged =
-      if (pqBlocks.length < 2) {
-        val h = new BoundedTopKG[String](scanK)
-        if (pqBlocks.length == 1)
-          PqStore.scoreBlock(Array(h), Array(table), ksub, pqBlocks(0), null)
-        h
-      } else {
-        val parts = new Array[BoundedTopKG[String]](pqBlocks.length)
-        java.util.stream.IntStream.range(0, pqBlocks.length).parallel().forEach { i =>
-          val h = new BoundedTopKG[String](scanK)
-          PqStore.scoreBlock(Array(h), Array(table), ksub, pqBlocks(i), null)
-          parts(i) = h
-        }
-        parts.reduce { (a, b) => a.absorb(b); a }
-      }
+    val merged = scanSlabs(pqBlocks, scanK) { (b, h) =>
+      PqStore.scoreBlock(Array(h), Array(table), ksub, b, null)
+    }
     rescoreExact(q, merged.sortedHits().map(_._1).toSeq, topK)
   }
 
@@ -692,30 +688,13 @@ final class LocalReplica private[core] (
         Array.range(0, bucketBlocks.length)
       else graft.operators.IvfIndex.probeIds(centroids, q, nProbe)
     val blocks: Array[VecBlock[String]] = probed.flatMap(bucketBlocks(_))
-    // parallel per-slab scoring (replicas pack bounded slabs exactly so
-    // a single query has parallel grain): per-slab heaps merged by
-    // absorb — per-(row, query) scores are slab-independent and the
-    // heap union is order-free, so this equals the sequential scan
-    def scanInto(h: BoundedTopKG[String], b: VecBlock[String]): Unit =
+    val merged = scanSlabs(blocks, topK) { (b, h) =>
       if (member == null)
         BlockStore.scoreBlock(Array(h), b, qs, null, threshold, exactScore)
       else
         BlockStore.scoreBlockMember(Array(h), b, qs, null, member,
           deny = false, exact = exactScore, threshold = threshold)
-    val merged =
-      if (blocks.length < 2) {
-        val h = new BoundedTopKG[String](topK)
-        if (blocks.length == 1) scanInto(h, blocks(0))
-        h
-      } else {
-        val parts = new Array[BoundedTopKG[String]](blocks.length)
-        java.util.stream.IntStream.range(0, blocks.length).parallel().forEach { i =>
-          val h = new BoundedTopKG[String](topK)
-          scanInto(h, blocks(i))
-          parts(i) = h
-        }
-        parts.reduce { (a, b) => a.absorb(b); a }
-      }
+    }
     merged.sortedHits().map { case (id, s) =>
       VdbHit(id, s, Option(metaOf.get(id)), None)
     }.toSeq
