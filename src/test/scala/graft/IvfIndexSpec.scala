@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{VdbRecord, VdbStore}
 import graft.operators.IvfIndex
@@ -12,6 +13,17 @@ import graft.operators.IvfIndex
 class IvfIndexSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  // every index a test builds, released when the test ends, pass or fail:
+  // a built index pins its `assigned` rows (and any packs) in the cache
+  // of the test JVM that every later suite shares
+  private val built = new java.util.concurrent.ConcurrentLinkedQueue[IvfIndex]()
+
+  private def owned(idx: IvfIndex): IvfIndex = { built.add(idx); idx }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally while (!built.isEmpty) built.poll().unpersistAssigned()
 
   /** 4 well-separated unit clusters in 8-dim: base direction e_{2c} with
     * small deterministic jitter, normalized.
@@ -33,7 +45,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("IVF top-k equals exact top-k on separated clusters (test_task14 analog)") {
     val data = clusteredData()
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4))
     assert(idx.nList == 4)
 
     val queries = data.filter(_._1 % 17 == 0).toArray
@@ -59,8 +71,8 @@ class IvfIndexSpec extends AnyFunSuite {
   test("search rejects a mis-dimensioned query up front (ADVICE r8)") {
     // truncated dot products would silently score garbage, and the
     // searchDs bit-parity claim is scoped to index-dimensioned queries
-    val idx = IvfIndex.build(clusteredData().toDF("vec_id", "vec"),
-      "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(clusteredData().toDF("vec_id", "vec"),
+      "vec_id", "vec", nList = 4))
     val bad = Array((7L, Array.fill(5)(0.1f))) // index dim is 8
     val e = intercept[IllegalArgumentException] {
       idx.search(bad, k = 3, nProbe = 1)
@@ -71,7 +83,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("searchDs (Dataset query side) matches driver-array search, ids/ranks/scores") {
     val data = clusteredData()
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val driver = idx.search(queries, k = 5, nProbe = 2)
       .select("qid", "rank", "id", "score").collect()
@@ -99,7 +111,7 @@ class IvfIndexSpec extends AnyFunSuite {
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     } :+ (999L, new Array[Float](8)) // zero store row (vnorm=0 branch)
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 4, normalized = false)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4, normalized = false))
     val queries = (data.filter(_._1 % 29 == 0) :+
       ((1000L, new Array[Float](8)))).toArray // all-zero query -> e0
     def key(res: org.apache.spark.sql.DataFrame) =
@@ -116,7 +128,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("repeated full-scan searchPacked calls keep ONE cached query slab (VERDICT r14 wrong #1)") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val sc = spark.sparkContext
     def liveQPreps: Int =
       sc.getPersistentRDDs.values.count(_.name == "graft.ivf.fullscan.qprep")
@@ -136,7 +148,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // normalize-the-query-first), so scores can differ by fp
     // reassociation — ranks/ids must agree wherever scores aren't ties
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val qds = spark.createDataset(queries.toSeq)
     def rkey(res: org.apache.spark.sql.DataFrame) =
@@ -155,8 +167,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 120).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 29 == 0).toArray
     val rds = rkey(ridx.searchDs(rq.toSeq.toDF("vec_id", "vec"),
       "vec_id", "vec", k = 5, nProbe = 2, normalized = false))
@@ -166,7 +178,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchDs auto-routes bulk batches through the packed path (VERDICT r9 #3)") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     // batch above the default 1024-row threshold: unique qids (the
     // declarative groupBy merges duplicate qids), repeated vectors fine
     val bulk = (0 until 1200).map(i => (i.toLong, data(i % data.size)._2))
@@ -210,7 +222,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // on the query grouping, so scores compare on exact bits in both
     // precision modes
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val qds = spark.createDataset(queries.toSeq)
     def bkey(res: org.apache.spark.sql.DataFrame) =
@@ -226,8 +238,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 23 == 0).toArray
     assert(bkey(ridx.searchMerged[Long](rq, k = 5, nProbe = 2,
         normalized = false, exact = true)) ==
@@ -272,7 +284,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
     // normalized store, covering probes: exact filtered by construction
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val allowSet = data.map(_._1).filter(_ % 3 == 0).toSet
     val member = SetMember(allowSet.toArray)
@@ -300,8 +312,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 23 == 0).toArray
     val rAllow = rdata.map(_._1).filter(_ % 2 == 1).toSet
     assert(key(ridx.searchMergedAllowed[Long](rq, k = 5, SetMember(rAllow.toArray),
@@ -324,7 +336,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("searchPackedAllowed (bulk filtered twin): bit-equal to searchMergedAllowed, covering + partial probes, deny, adaptive, dup qids") {
     import graft.core.SetMember
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val qds = queries.toSeq.toDS().repartition(3)
     val allowSet = data.map(_._1).filter(_ % 3 == 0).toSet
@@ -400,7 +412,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchMergedQ8 (IVF-SQ8): rescored path bit-equal to searchMerged exact; scan-only agrees on separated data") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     def bkey(res: org.apache.spark.sql.DataFrame) =
       res.select("qid", "rank", "id", "score").collect()
@@ -412,10 +424,14 @@ class IvfIndexSpec extends AnyFunSuite {
     // overfetch covering every probed row -> no candidate can be lost,
     // and the fp32 rescore uses the exact engine's sequential-double
     // arithmetic: bit-equal to searchMerged(exact = true), both at
-    // partial probing and at nProbe = nList (the q59 oracle anchor)
-    Seq(2, 4).foreach { np =>
-      assert(bkey(idx.searchMergedQ8[Long](queries, k = 5, nProbe = np,
-          overfetch = 1000)) ==
+    // partial probing (nProbe 1: 2 of 4 lists would snap to the
+    // all-list scan) and at nProbe = nList (the q59 oracle anchor)
+    Seq(1, 4).foreach { np =>
+      val got = bkey(idx.searchMergedQ8[Long](queries, k = 5, nProbe = np,
+        overfetch = 1000))
+      if (np == 1)
+        assert(idx.lastSearchStrategy.startsWith("probe(np=1"), idx.lastSearchStrategy)
+      assert(got ==
         bkey(idx.searchMerged[Long](queries, k = 5, nProbe = np, exact = true)),
         s"rescored parity failed at nProbe=$np")
     }
@@ -433,8 +449,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 23 == 0).toArray
     assert(bkey(ridx.searchMergedQ8[Long](rq, k = 5, nProbe = 4,
         normalized = false, overfetch = 1000)) ==
@@ -452,7 +468,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchMergedPq (IVF-PQ): rescored path bit-equal to searchMerged exact; ADC agrees on separated data") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     def bkey(res: org.apache.spark.sql.DataFrame) =
       res.select("qid", "rank", "id", "score").collect()
@@ -464,11 +480,14 @@ class IvfIndexSpec extends AnyFunSuite {
     // overfetch covering every probed row -> no candidate can be lost,
     // and the fp32 rescore is the exact engine's sequential-double
     // tail (shared with searchMergedQ8): bit-equal to
-    // searchMerged(exact = true) at partial probing and at
+    // searchMerged(exact = true) at partial probing (nProbe 1) and at
     // nProbe = nList (the q80 oracle anchor)
-    Seq(2, 4).foreach { np =>
-      assert(bkey(idx.searchMergedPq[Long](queries, k = 5, nProbe = np,
-          overfetch = 1000, m = 2)) ==
+    Seq(1, 4).foreach { np =>
+      val got = bkey(idx.searchMergedPq[Long](queries, k = 5, nProbe = np,
+        overfetch = 1000, m = 2))
+      if (np == 1)
+        assert(idx.lastSearchStrategy.startsWith("probe(np=1"), idx.lastSearchStrategy)
+      assert(got ==
         bkey(idx.searchMerged[Long](queries, k = 5, nProbe = np, exact = true)),
         s"rescored parity failed at nProbe=$np")
     }
@@ -486,8 +505,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 23 == 0).toArray
     assert(bkey(ridx.searchMergedPq[Long](rq, k = 5, nProbe = 4,
         normalized = false, overfetch = 1000, m = 4)) ==
@@ -506,7 +525,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchMergedBit (IVF-bit): rescored path bit-equal to searchMerged exact; both modes; dup qids") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     def bkey(res: org.apache.spark.sql.DataFrame) =
       res.select("qid", "rank", "id", "score").collect()
@@ -514,11 +533,14 @@ class IvfIndexSpec extends AnyFunSuite {
           java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
     // covering overfetch -> the Hamming cut keeps every probed row and
     // the shared fp32 tail is the exact arithmetic: bit-equal to
-    // searchMerged(exact) at partial probing and at nProbe = nList
-    // (the q83 oracle anchor)
-    Seq(2, 4).foreach { np =>
-      assert(bkey(idx.searchMergedBit[Long](queries, k = 5, nProbe = np,
-          overfetch = 1000, bits = 128)) ==
+    // searchMerged(exact) at partial probing (nProbe 1) and at
+    // nProbe = nList (the q83 oracle anchor)
+    Seq(1, 4).foreach { np =>
+      val got = bkey(idx.searchMergedBit[Long](queries, k = 5, nProbe = np,
+        overfetch = 1000, bits = 128))
+      if (np == 1)
+        assert(idx.lastSearchStrategy.startsWith("probe(np=1"), idx.lastSearchStrategy)
+      assert(got ==
         bkey(idx.searchMerged[Long](queries, k = 5, nProbe = np, exact = true)),
         s"rescored parity failed at nProbe=$np")
     }
@@ -528,8 +550,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 23 == 0).toArray
     assert(bkey(ridx.searchMergedBit[Long](rq, k = 5, nProbe = 4,
         normalized = false, overfetch = 1000, bits = 128)) ==
@@ -554,7 +576,7 @@ class IvfIndexSpec extends AnyFunSuite {
     // single-chunk default (both ADC-only scores and the rescored
     // exact tail), including duplicate qids split across chunks.
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     // 600 queries at m=4/ksub=160 (160 sampled rows cap the codebook)
     // = 2,560 B of table each: one chunk at the 64 MB default, two
     // chunks (409 + 191) at 1 MB. id 3's vector repeats, so duplicate-
@@ -618,8 +640,8 @@ class IvfIndexSpec extends AnyFunSuite {
       }
       (i.toLong, v)
     }
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = nClusters, normalized = false)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = nClusters, normalized = false))
     val queries = data.filter(_._1 % 37 == 0).toArray
     def topIds(res: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
       res.select("qid", "id").collect()
@@ -640,7 +662,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchPackedQ8 (bulk IVF-SQ8): fused rescore bit-equal to searchPacked exact") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val qds = spark.createDataset(queries.toSeq)
     def bkey(res: org.apache.spark.sql.DataFrame) =
@@ -652,10 +674,13 @@ class IvfIndexSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // covering overfetch -> per-bucket candidate cut keeps everything,
     // fused fp32 rescore is the exact arithmetic: bit-equal to
-    // searchPacked(exact) at the same probes
-    Seq(2, 4).foreach { np =>
-      assert(bkey(idx.searchPackedQ8[Long](qds, k = 5, nProbe = np,
-          overfetch = 1000)) ==
+    // searchPacked(exact) at the same probes (nProbe 1 is partial)
+    Seq(1, 4).foreach { np =>
+      val got = bkey(idx.searchPackedQ8[Long](qds, k = 5, nProbe = np,
+        overfetch = 1000))
+      if (np == 1)
+        assert(idx.lastSearchStrategy.startsWith("probe(np=1"), idx.lastSearchStrategy)
+      assert(got ==
         bkey(idx.searchPacked[Long](qds, k = 5, nProbe = np, exact = true)),
         s"fused rescore parity failed at nProbe=$np")
     }
@@ -669,8 +694,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = spark.createDataset(rdata.filter(_._1 % 23 == 0))
     assert(bkey(ridx.searchPackedQ8[Long](rq, k = 5, nProbe = 4,
         normalized = false, overfetch = 1000)) ==
@@ -687,7 +712,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchPackedPq (bulk IVF-PQ): fused rescore bit-equal to searchPacked exact; merged agrees") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val qds = spark.createDataset(queries.toSeq)
     def bkey(res: org.apache.spark.sql.DataFrame) =
@@ -699,11 +724,14 @@ class IvfIndexSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // covering overfetch -> per-bucket candidate cut keeps everything,
     // fused fp32 rescore is the exact arithmetic: bit-equal to
-    // searchPacked(exact) at the same probes (the q81 oracle anchor at
-    // nProbe = nList)
-    Seq(2, 4).foreach { np =>
-      assert(bkey(idx.searchPackedPq[Long](qds, k = 5, nProbe = np,
-          overfetch = 1000, m = 2)) ==
+    // searchPacked(exact) at the same probes (nProbe 1 is partial; the
+    // q81 oracle anchor at nProbe = nList)
+    Seq(1, 4).foreach { np =>
+      val got = bkey(idx.searchPackedPq[Long](qds, k = 5, nProbe = np,
+        overfetch = 1000, m = 2))
+      if (np == 1)
+        assert(idx.lastSearchStrategy.startsWith("probe(np=1"), idx.lastSearchStrategy)
+      assert(got ==
         bkey(idx.searchPacked[Long](qds, k = 5, nProbe = np, exact = true)),
         s"fused rescore parity failed at nProbe=$np")
     }
@@ -722,8 +750,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = spark.createDataset(rdata.filter(_._1 % 23 == 0))
     Seq(true, false).foreach { byRes =>
       assert(bkey(ridx.searchPackedPq[Long](rq, k = 5, nProbe = 4,
@@ -744,7 +772,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("searchPackedBit (bulk IVF-bit, round 18): fused rescore bit-equal to searchPacked exact; merged agrees") {
     val data = clusteredData()
-    val idx = IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
     val qds = spark.createDataset(queries.toSeq)
     def bkey(res: org.apache.spark.sql.DataFrame) =
@@ -756,11 +784,14 @@ class IvfIndexSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     // covering overfetch -> per-bucket Hamming cut keeps everything,
     // fused fp32 rescore is the exact arithmetic: bit-equal to
-    // searchPacked(exact) at the same probes (the q101 oracle anchor
-    // at nProbe = nList)
-    Seq(2, 4).foreach { np =>
-      assert(bkey(idx.searchPackedBit[Long](qds, k = 5, nProbe = np,
-          overfetch = 1000)) ==
+    // searchPacked(exact) at the same probes (nProbe 1 is partial; the
+    // q101 oracle anchor at nProbe = nList)
+    Seq(1, 4).foreach { np =>
+      val got = bkey(idx.searchPackedBit[Long](qds, k = 5, nProbe = np,
+        overfetch = 1000))
+      if (np == 1)
+        assert(idx.lastSearchStrategy.startsWith("probe(np=1"), idx.lastSearchStrategy)
+      assert(got ==
         bkey(idx.searchPacked[Long](qds, k = 5, nProbe = np, exact = true)),
         s"fused rescore parity failed at nProbe=$np")
     }
@@ -780,8 +811,8 @@ class IvfIndexSpec extends AnyFunSuite {
     val rdata = (0 until 100).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
     }
-    val ridx = IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
-      nList = 4, normalized = false)
+    val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
+      nList = 4, normalized = false))
     val rq = spark.createDataset(rdata.filter(_._1 % 23 == 0))
     assert(bkey(ridx.searchPackedBit[Long](rq, k = 5, nProbe = 4,
         normalized = false, overfetch = 1000)) ==
@@ -797,8 +828,8 @@ class IvfIndexSpec extends AnyFunSuite {
   }
 
   test("searchPacked/searchMerged reject a mis-dimensioned query like search does") {
-    val idx = IvfIndex.build(clusteredData().toDF("vec_id", "vec"),
-      "vec_id", "vec", nList = 4)
+    val idx = owned(IvfIndex.build(clusteredData().toDF("vec_id", "vec"),
+      "vec_id", "vec", nList = 4))
     val bad = Array((7L, Array.fill(5)(0.1f))) // index dim is 8
     val em = intercept[IllegalArgumentException] {
       idx.searchMerged[Long](bad, k = 3, nProbe = 1)
@@ -819,8 +850,8 @@ class IvfIndexSpec extends AnyFunSuite {
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 2f))
     }
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 4,
-      normalized = false, cacheAssigned = false)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4,
+      normalized = false, cacheAssigned = false))
     val qds = data.take(3).toDF("vec_id", "vec")
     val frame = idx.searchDs(qds, "vec_id", "vec", k = 3, nProbe = 2,
       normalized = false)
@@ -843,7 +874,7 @@ class IvfIndexSpec extends AnyFunSuite {
       (i.toLong, v.map(x => (x / n).toFloat))
     }
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 16)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 16))
     val queries = data.take(6).toArray
     def bkey(d: org.apache.spark.sql.DataFrame) =
       d.select("qid", "rank", "id", "score").collect()
@@ -917,7 +948,7 @@ class IvfIndexSpec extends AnyFunSuite {
       (i.toLong, v.map(x => (x / n).toFloat))
     }
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 8)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 8))
     val queries = data.take(5).toArray
     val ann = idx.search(queries, k = 10, nProbe = 8)
       .select("qid", "rank", "id").collect()
@@ -947,7 +978,7 @@ class IvfIndexSpec extends AnyFunSuite {
       (i.toLong, v.map(x => (x / n).toFloat))
     }
     val df = data.toDF("vec_id", "vec")
-    val idx = IvfIndex.build(df, "vec_id", "vec", nList = 16)
+    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 16))
     val queries = data.filter(_._1 % 40 == 0).toArray // 50 queries
     val exact = queries.map { case (qid, q) =>
       qid -> data.map { case (id, v) =>
