@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.HnswStore
 
@@ -11,6 +12,23 @@ import graft.operators.HnswStore
 class HnswStoreSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
+
+  // every store a test builds, released when the test ends, pass or
+  // fail, with the shard caches an appended store's union reads (append
+  // persists its new segment, which only the union references)
+  private val built = new java.util.concurrent.ConcurrentLinkedQueue[HnswStore[Long]]()
+
+  private def owned(store: HnswStore[Long]): HnswStore[Long] = {
+    built.add(store); store
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally while (!built.isEmpty) {
+      val store = built.poll()
+      store.unpersist()
+      store.shards.dependencies.foreach(_.rdd.unpersist(false))
+    }
 
   private def randData(n: Int, dim: Int, seed: Int,
                        unit: Boolean): Seq[(Long, Array[Float])] = {
@@ -41,8 +59,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("exact mode matches brute-force cosine across multiple shards") {
     val data = randData(500, 16, seed = 7, unit = false)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 7)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 7))
     val queries = data.take(10).toArray
     val got = store.searchMerged(queries, k = 8, exact = true)
       .select(col("qid"), col("rank"), col("id"), col("score")).collect()
@@ -60,8 +78,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("graph search: high recall vs exact on unit data, recall grows with ef") {
     val data = randData(1200, 16, seed = 11, unit = true)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, assumeNormalized = true, numShards = 4)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, assumeNormalized = true, numShards = 4))
     val queries = data.filter(_._1 % 89 == 0).toArray
     def recallAt(ef: Int): Double = {
       val exact = store.searchMerged(queries, 10, exact = true)
@@ -84,8 +102,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("cosine mode: graph scores are true cosine (match exact within float32)") {
     val data = randData(300, 8, seed = 23, unit = false) // RAW rows
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 2)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 2))
     val queries = data.take(5).toArray
     val exact = store.searchMerged(queries, 3, exact = true)
       .select("qid", "rank", "id", "score").collect()
@@ -110,9 +128,9 @@ class HnswStoreSpec extends AnyFunSuite {
     val data = randData(800, 16, seed = 31, unit = true)
     val queries = data.take(10).toArray
     def recall(shards: Int): Double = {
-      val store = HnswStore.fromDataset[Long](
+      val store = owned(HnswStore.fromDataset[Long](
         data.toDS(), normalize = false, assumeNormalized = true,
-        numShards = shards)
+        numShards = shards))
       val exact = store.searchMerged(queries, 10, exact = true)
         .select("qid", "id").collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -134,8 +152,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("zero-norm cosine query scores 0 on both paths; empty store is empty") {
     val data = randData(50, 8, seed = 41, unit = false)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 2)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 2))
     val zq = Array((99L, new Array[Float](8)))
     val ex = store.searchMerged(zq, 3, exact = true).select("score").collect()
     assert(ex.nonEmpty && ex.forall(_.getDouble(0) == 0.0))
@@ -143,8 +161,8 @@ class HnswStoreSpec extends AnyFunSuite {
     assert(ap.forall(_.getDouble(0) == 0.0))
     store.unpersist()
 
-    val empty = HnswStore.fromDataset[Long](
-      spark.emptyDataset[(Long, Array[Float])], normalize = false)
+    val empty = owned(HnswStore.fromDataset[Long](
+      spark.emptyDataset[(Long, Array[Float])], normalize = false))
     assert(empty.searchMerged(data.take(2).toArray, 3, exact = true).count() == 0)
     assert(empty.searchMerged(data.take(2).toArray, 3, ef = 16).count() == 0)
   }
@@ -155,13 +173,13 @@ class HnswStoreSpec extends AnyFunSuite {
     val extra = (300 until 400).map { i =>
       (i.toLong, Array.fill(8)(rngB.nextFloat() - 0.5f))
     }
-    val store = HnswStore.fromDataset[Long](
-      base.toDS(), normalize = false, numShards = 3)
+    val store = owned(HnswStore.fromDataset[Long](
+      base.toDS(), normalize = false, numShards = 3))
     val (r0, s0) = store.materialize()
     assert(r0 == 300 && s0 == 3)
 
-    val appended = store.append(
-      spark.sparkContext.parallelize(extra, 2))
+    val appended = owned(store.append(
+      spark.sparkContext.parallelize(extra, 2)))
     val (r1, s1) = appended.materialize()
     assert(r1 == 400 && s1 == 5, s"rows=$r1 shards=$s1")
 
@@ -178,7 +196,7 @@ class HnswStoreSpec extends AnyFunSuite {
     }
     check(appended)
 
-    val compacted = appended.compact(numShards = 2)
+    val compacted = owned(appended.compact(numShards = 2))
     val (r2, s2) = compacted.materialize()
     assert(r2 == 400 && s2 == 2, s"rows=$r2 shards=$s2")
     check(compacted)
@@ -190,12 +208,12 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("searchPacked (Dataset queries) is bit-identical to searchMerged, both modes") {
     val data = randData(400, 16, seed = 71, unit = false) // cosine mode
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 5).persist()
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 5).persist())
     // unpersisted store is a hard error, not a silent per-partition
     // graph rebuild
-    val bare = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 2)
+    val bare = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 2))
     intercept[IllegalArgumentException] {
       bare.searchPacked(data.take(3).toSeq.toDS(), 3, exact = true)
     }
@@ -216,9 +234,9 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("repeated searchPacked calls keep ONE cached query slab (VERDICT r14 wrong #1)") {
     val data = randData(200, 8, seed = 91, unit = true)
-    val store = HnswStore.fromDataset[Long](
+    val store = owned(HnswStore.fromDataset[Long](
       data.toDS(), normalize = false, assumeNormalized = true,
-      numShards = 2).persist()
+      numShards = 2).persist())
     store.materialize()
     val sc = spark.sparkContext
     def liveQPreps: Int =
@@ -234,8 +252,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("mis-dimensioned queries are rejected on both search paths") {
     val data = randData(60, 8, seed = 83, unit = false)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 2).persist()
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 2).persist())
     val bad = Array((1L, new Array[Float](5)))
     // searchMerged validates driver-side before any job
     val e1 = intercept[IllegalArgumentException] {
@@ -256,14 +274,14 @@ class HnswStoreSpec extends AnyFunSuite {
     val base = randData(200, 8, seed = 89, unit = false)
     val extra = (200 until 260).map(i =>
       (i.toLong, Array.fill(8)(new scala.util.Random(i).nextFloat() - 0.5f)))
-    val store = HnswStore.fromDataset[Long](
-      base.toDS(), normalize = false, numShards = 2).persist()
+    val store = owned(HnswStore.fromDataset[Long](
+      base.toDS(), normalize = false, numShards = 2).persist())
     store.materialize()
     // append() persists the new shards; the union reports
     // StorageLevel.NONE but delegates to persisted parents — the
     // precondition must walk the union (ADVICE r13), since no graph
     // rebuild would actually occur
-    val appended = store.append(spark.sparkContext.parallelize(extra, 1))
+    val appended = owned(store.append(spark.sparkContext.parallelize(extra, 1)))
     val queries = (base ++ extra).take(5).toArray
     val got = appended.searchPacked(queries.toSeq.toDS(), 4, exact = true)
     assert(got.count() == 5 * 4)
@@ -274,8 +292,8 @@ class HnswStoreSpec extends AnyFunSuite {
     // cosine mode (raw rows) so the brute oracle's dot/(|q||v|) is the
     // store's own exact arithmetic — the existing exact-parity fixture
     val data = randData(600, 16, seed = 101, unit = false)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 5)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 5))
     val queries = data.take(8).toArray
     val memberIds = data.map(_._1).filter(_ % 3 == 0)
     val member = graft.core.SetMember(memberIds.toArray)
@@ -306,8 +324,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("searchMergedMember: selective filter fills k past the beam; sub-k only when members < k (exact-scan snap)") {
     val data = randData(1200, 16, seed = 103, unit = true)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, assumeNormalized = true, numShards = 3)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, assumeNormalized = true, numShards = 3))
     val queries = data.take(6).toArray
     // ~3% selectivity vs a k-sized beam: an UNFILTERED ef=8 beam holds
     // ~0 members, but the filtered beam keeps walking until 8 ACCEPTED
@@ -345,8 +363,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("searchPackedMember (Dataset queries) is bit-identical to searchMergedMember, covering + partial beam + deny") {
     val data = randData(500, 16, seed = 107, unit = false)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 4).persist()
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 4).persist())
     store.materialize()
     val queries = data.take(12).toArray
     val qds = queries.toSeq.toDS().repartition(5)
@@ -368,8 +386,8 @@ class HnswStoreSpec extends AnyFunSuite {
       frame(store.searchMergedMember(queries, 6, member, deny = true, ef = 16)))
     // unpersisted store is a hard error (would rebuild graphs per
     // query partition), matching searchPacked's contract
-    val bare = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 2)
+    val bare = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 2))
     intercept[IllegalArgumentException] {
       bare.searchPackedMember(qds, 3, member, deny = false)
     }
@@ -379,8 +397,8 @@ class HnswStoreSpec extends AnyFunSuite {
   test("searchMergedMemberQ8 (round 18): covering beam + covering overfetch == exact member scan; partial beam fills k; packed twin bit-identical") {
     // cosine mode so the parity covers the norms path of the rescore
     val data = randData(600, 16, seed = 109, unit = false)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 4).persist()
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 4).persist())
     store.materialize()
     val queries = data.take(8).toArray
     val member = graft.core.SetMember(
@@ -438,8 +456,8 @@ class HnswStoreSpec extends AnyFunSuite {
     // matches-nothing short-circuits; unpersisted store is a hard error
     val none = graft.core.SetMember(Array.empty[Long])
     assert(store.searchMergedMemberQ8(queries, 5, none, deny = false).count() == 0)
-    val bare = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, numShards = 2)
+    val bare = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, numShards = 2))
     intercept[IllegalArgumentException] {
       bare.searchPackedMemberQ8(qds, 3, member, deny = false)
     }
@@ -448,8 +466,8 @@ class HnswStoreSpec extends AnyFunSuite {
 
   test("graph search is deterministic across repeated calls") {
     val data = randData(400, 16, seed = 53, unit = true)
-    val store = HnswStore.fromDataset[Long](
-      data.toDS(), normalize = false, assumeNormalized = true, numShards = 3)
+    val store = owned(HnswStore.fromDataset[Long](
+      data.toDS(), normalize = false, assumeNormalized = true, numShards = 3))
     val queries = data.take(6).toArray
     def run() = store.searchMerged(queries, 5, ef = 64)
       .select("qid", "rank", "id", "score").collect()
