@@ -88,7 +88,7 @@ class HnswEngineSpec extends AnyFunSuite {
             s"searchPacked differs ($ctx exact=$exact)")
         }
         for ((member, k) <- Seq((third, 6), (tiny, 5)); deny <- Seq(false, true)) {
-          val c = s"$ctx deny=$deny members=${if (member eq tiny) 3 else 100}"
+          val c = s"$ctx deny=$deny members=${if (member eq tiny) "3" else "every third"}"
           for (exact <- Seq(false, true)) {
             val merged = key(store.searchMergedMember(qs, k, member, deny, ef, exact))
             val scans = store.lastMemberFallbackScans
