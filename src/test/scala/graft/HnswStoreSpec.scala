@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
+import graft.core.Hnsw
 import graft.operators.HnswStore
 
 /** Distributed sharded-HNSW store: exact-mode parity with the
@@ -14,8 +15,7 @@ class HnswStoreSpec extends AnyFunSuite {
   import spark.implicits._
 
   // every store a test builds, released when the test ends, pass or
-  // fail, with the shard caches an appended store's union reads (append
-  // persists its new segment, which only the union references)
+  // fail (an appended store releases the segment it persisted)
   private val built = new java.util.concurrent.ConcurrentLinkedQueue[HnswStore[Long]]()
 
   private def owned(store: HnswStore[Long]): HnswStore[Long] = {
@@ -24,11 +24,7 @@ class HnswStoreSpec extends AnyFunSuite {
 
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test)
-    finally while (!built.isEmpty) {
-      val store = built.poll()
-      store.unpersist()
-      store.shards.dependencies.foreach(_.rdd.unpersist(false))
-    }
+    finally while (!built.isEmpty) built.poll().unpersist()
 
   private def randData(n: Int, dim: Int, seed: Int,
                        unit: Boolean): Seq[(Long, Array[Float])] = {
@@ -204,6 +200,61 @@ class HnswStoreSpec extends AnyFunSuite {
     val g = compacted.searchMerged(queries, k = 6, ef = 64)
     assert(g.count() == queries.length * 6)
     compacted.unpersist(); appended.unpersist(); store.unpersist()
+  }
+
+  test("append's store releases the segment it persisted, never the source store") {
+    val sc = spark.sparkContext
+    val store = owned(HnswStore.fromDataset[Long](
+      randData(120, 8, seed = 17, unit = false).toDS(), normalize = false,
+      numShards = 2).persist())
+    store.materialize()
+    val before = sc.getPersistentRDDs.keySet
+    val appended = owned(store.append(sc.parallelize(
+      (120 until 150).map(i => (i.toLong, Array.fill(8)(i.toFloat))), 1)))
+    assert(appended.materialize() == ((150L, 3)))
+    assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
+      "append persists its new segment")
+    appended.unpersist()
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "the appended store's unpersist releases its segment")
+    assert(sc.getPersistentRDDs.contains(store.shards.id),
+      "the source store stays persisted")
+    store.unpersist()
+  }
+
+  test("rebuildTouched rebuilds as many graphs as it replaces: k touched shards, k builds, k shards") {
+    val k = 4
+    var rows = randData(200, 8, seed = 29, unit = true).toMap
+    var store = owned(HnswStore.fromDataset[Long](rows.toSeq.toDS(),
+      normalize = false, assumeNormalized = true, numShards = k).persist())
+    assert(store.materialize() == ((200L, k)))
+    val rng = new scala.util.Random(31)
+    (1 to 5).foreach { refresh =>
+      // one id of every shard: each refresh touches all k shards
+      val touched = store.shards.map(_.block.ids.head).collect().toSet
+      assert(touched.size == k)
+      val changed = touched.toSeq.map { id =>
+        val v = Array.fill(8)(rng.nextFloat() - 0.5f)
+        val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+        (id, v.map(x => (x / n).toFloat))
+      }
+      rows = rows ++ changed
+      val builds = Hnsw.buildsInJvm
+      val next = owned(store.rebuildTouched(touched,
+        spark.sparkContext.parallelize(changed, 1)).persist())
+      assert(next.materialize() == ((200L, k)), s"refresh $refresh")
+      assert(Hnsw.buildsInJvm == builds + k, s"refresh $refresh")
+      store.unpersist()
+      store = next
+    }
+    val queries = rows.toSeq.sortBy(_._1).take(5).toArray
+    val want = brute(rows.toSeq, queries.toSeq, 5)
+    store.searchMerged(queries, 5, exact = true)
+      .select(col("qid"), col("rank"), col("id")).collect()
+      .foreach { r =>
+        assert(r.getLong(2) == want(r.getLong(0))(r.getInt(1) - 1)._1)
+      }
+    store.unpersist()
   }
 
   test("searchPacked (Dataset queries) is bit-identical to searchMerged, both modes") {

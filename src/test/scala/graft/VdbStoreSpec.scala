@@ -476,6 +476,73 @@ class VdbStoreSpec extends AnyFunSuite {
     assert(s.count() == 40) // 40 - 5 deleted + 5 inserted
   }
 
+  test("a write's snapshot is constant-size: plan and partitions after 20 upsert + delete cycles") {
+    // picovdb writes in place (pico_vdb.py:403-537): a write costs
+    // O(batch), never O(history). Each cycle updates one row, inserts
+    // a named and a content-hash row, and deletes one row; the snapshot
+    // it leaves must not carry the store's history in its plan or its
+    // partition count.
+    val s = freshStore(4)
+    val live = scala.collection.mutable.Set.empty[String]
+    s.upsert((0 until 40).map { i =>
+      val v = new Array[Float](4); v(i % 4) = 1f
+      live += f"r$i%03d"
+      rec(f"r$i%03d", v)
+    })
+    def cycle(k: Int): Unit = {
+      val hashed = Array(1f, k.toFloat, 0f, 2f)
+      val rep = s.upsert(Seq(rec(f"r$k%03d", Array(0f, 1f, 1f, 0f)),
+        rec(s"w$k", Array(0f, 0f, 1f, k.toFloat)), rec(null, hashed)))
+      live ++= rep.insert
+      assert(rep.update == Seq(f"r$k%03d"))
+      assert(s.delete(Seq(f"r${k + 20}%03d")) == Seq(f"r${k + 20}%03d"))
+      live -= f"r${k + 20}%03d"
+    }
+    def shape(): (Int, Int) =
+      (s.df.queryExecution.toString.length, s.df.rdd.getNumPartitions)
+    cycle(0)
+    val (plan1, parts1) = shape()
+    (1 until 20).foreach { k =>
+      cycle(k)
+      val (plan, parts) = shape()
+      assert(plan <= 2 * plan1, s"cycle ${k + 1}: plan $plan chars, $plan1 after cycle 1")
+      assert(parts <= 2 * parts1, s"cycle ${k + 1}: $parts partitions, $parts1 after cycle 1")
+    }
+    assert(s.count() == live.size)
+    assert(s.get(live.toSeq.sorted).map(_.id) == live.toSeq.sorted)
+    // each cycle after the first reuses the slot the previous cycle's
+    // delete left: 40 rows + 40 inserts - 19 reused slots
+    assert(s.capacity() == 61)
+  }
+
+  test("concurrent writers serialize: four threads upserting disjoint ids lose no row") {
+    // The reference serializes writers under its RW lock
+    // (pico_vdb.py:1019-1063); a writer that reads the store while
+    // another is mid-write must not swap in a snapshot without it.
+    val s = freshStore(4)
+    s.upsert(Seq(rec("base", Array(1f, 0f, 0f, 0f))))
+    val threads = 4
+    val perThread = 25
+    val start = new java.util.concurrent.CyclicBarrier(threads)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val writers = (0 until threads).map { t =>
+      new Thread(() => {
+        try {
+          start.await()
+          s.upsert((0 until perThread).map { i =>
+            val v = new Array[Float](4); v(t) = 1f; v((t + 1) % 4) = i.toFloat
+            rec(f"t$t-$i%02d", v)
+          })
+        } catch { case e: Throwable => failures.add(e) }
+      })
+    }
+    writers.foreach(_.start()); writers.foreach(_.join())
+    assert(failures.isEmpty, failures.toString)
+    val ids = for (t <- 0 until threads; i <- 0 until perThread) yield f"t$t-$i%02d"
+    assert(s.count() == 1 + threads * perThread)
+    assert(s.get(ids).map(_.id) == ids)
+  }
+
   test("within-batch duplicate ids: last record wins (sequential upsert law)") {
     val s = freshStore(3)
     s.upsert(Seq(rec("a", Array(1f, 0f, 0f), """{"v": 1}"""),
