@@ -28,7 +28,8 @@ final case class VdbStats(active: Long, deleted: Long, total: Long, dim: Int,
   * The reference keeps three row-aligned structures behind a RW lock; here
   * the whole store is ONE immutable DataFrame swapped behind a @volatile
   * pointer — Spark's immutability gives the reference's snapshot-read
-  * semantics (pico_vdb.py:593-679) with no locks. Deletes keep tombstone
+  * semantics (pico_vdb.py:593-679) with no reader locks; writers
+  * serialize on one lock, as the reference's do. Deletes keep tombstone
   * rows (meta null, deleted=true) so `capacity`/`get_all(include_deleted)`
   * reproduce the reference's slot model (pico_vdb.py:514-537); `vacuum`
   * drops them (pico_vdb.py:831-853). Vectors are L2-normalized at write
@@ -463,37 +464,36 @@ final class VdbStore private (
     Option[(Long, (Int, Int), graft.operators.HnswStore[String])] = None
 
   // --- shard-local invalidation bookkeeping (round 16): the ids
-  // touched since the CACHED graph store was built, as a lazy unioned
-  // DataFrame (never collected until a refresh decides to go
-  // incremental, and then only under graft.hnsw.incr.cap). `valid`
+  // touched since the CACHED graph store was built. Every write already
+  // holds its ids on the driver, so the delta is a driver-side set,
+  // bounded by graft.hnsw.incr.cap: past the cap the delta is poisoned,
+  // since the refresh would fall back to a full rebuild anyway. `valid`
   // means every swap since the cached build declared its touched set —
   // any untracked swap (compiler-forced: swap() requires the argument)
   // poisons the delta and the next refresh falls back to a full
   // rebuild rather than serving a silently wrong graph.
-  @volatile private var hnswDirty: Option[DataFrame] = None
-  @volatile private var hnswDirtyCount: Long = 0L
+  @volatile private var hnswDirty: Set[String] = Set.empty
   @volatile private var hnswDirtyValid: Boolean = false
 
-  private def hnswNoteMutation(touched: Option[DataFrame], n: Long): Unit =
+  private def hnswNoteMutation(touch: HnswTouch): Unit =
     hnswLock.synchronized {
       if (hnswParams.isDefined && hnswCache.isDefined && hnswDirtyValid) {
-        touched match {
-          case Some(ids) if n > 0 =>
-            val sel = ids.select(col("_id_"))
-            hnswDirty = Some(hnswDirty.map(_.unionByName(sel)).getOrElse(sel))
-            hnswDirtyCount += n
-          case Some(_) => // tracked, nothing touched (vacuum)
+        val grown = touch match {
+          case HnswTouchIds(ids) => Some(hnswDirty ++ ids)
+          case HnswTouchNone => Some(hnswDirty) // tracked, nothing touched (vacuum)
+          case HnswTouchUnknown => None
+        }
+        grown.filter(_.size <= conf.hnswIncrCap) match {
+          case Some(ids) => hnswDirty = ids
           case None =>
-            hnswDirty = None
-            hnswDirtyCount = 0L
+            hnswDirty = Set.empty
             hnswDirtyValid = false
         }
       }
     }
 
   private def hnswResetDirty(): Unit = {
-    hnswDirty = None
-    hnswDirtyCount = 0L
+    hnswDirty = Set.empty
     hnswDirtyValid = hnswCache.isDefined
   }
 
@@ -614,22 +614,21 @@ final class VdbStore private (
               // and rebuild ONLY the slabs holding touched rows. Gated
               // like the IVF incremental path (annIncrRatio of the
               // store) and by graft.hnsw.incr.cap (the touched set is
-              // collected + broadcast, so it must be driver-sized); a
-              // mutation wave past either gate amortizes a full
-              // rebuild anyway.
+              // held on the driver and broadcast, so it must be
+              // driver-sized); a mutation wave past either gate
+              // amortizes a full rebuild anyway.
               val incr: Option[graft.operators.HnswStore[String]] = old match {
                 case Some((_, p, prev)) if p == params && hnswDirtyValid &&
-                    hnswDirtyCount <= conf.hnswIncrCap &&
-                    hnswDirtyCount.toDouble <=
+                    hnswDirty.size <= conf.hnswIncrCap &&
+                    hnswDirty.size.toDouble <=
                       conf.annIncrRatio * math.max(1L, act.count()) =>
-                  if (hnswDirtyCount == 0L) {
+                  if (hnswDirty.isEmpty) {
                     // tombstone-only churn (vacuum): active rows are
                     // byte-identical, the graphs are already current
                     hnswLastRebuildModeVar = "incremental"
                     Some(prev)
                   } else {
-                    val dirtySet = hnswDirty.get.select(col("_id_"))
-                      .distinct().as[String].collect().toSet
+                    val dirtySet = hnswDirty
                     val changed = act
                       .join(broadcast(dirtySet.toSeq.toDF("_id_")),
                         Seq("_id_"), "left_semi")
@@ -746,7 +745,7 @@ final class VdbStore private (
     * (pico_vdb.py:424-427). Within a batch, the LAST record for an id wins
     * (the reference processes items sequentially).
     */
-  def upsert(records: Seq[VdbRecord]): UpsertReport = timed("upsert") {
+  def upsert(records: Seq[VdbRecord]): UpsertReport = writeOp("upsert") {
     records.foreach { r =>
       require(r.vector.length == dim,
         s"Vector dimension mismatch: expected $dim, got ${r.vector.length}")
@@ -785,39 +784,32 @@ final class VdbStore private (
     val inserts = batchIds.filterNot(updates)
 
     // inserts consume tombstone slots (free-list reuse analog). Batch ids
-    // are excluded from the kept set FIRST — a re-inserted id's own
+    // are dropped from the store FIRST — a re-inserted id's own
     // tombstone must never survive next to its new active row, and it
     // counts as that insert's consumed slot — so only the remaining
     // inserts draw from the non-batch tombstones. The CONSUMED side is
     // what's batch-bounded (<= inserts.size), so select IT: TakeOrdered
     // the largest-id tombstones (same selection as keeping the smallest
-    // survivors), collect the bounded id set, and broadcast-anti-join it
-    // out — the surviving tombstones stay fully distributed. The r3
-    // shape (orderBy.limit(nTomb-reuse)) was a global Sort+Limit
-    // funnelling ~all tombstones through one partition on
-    // tombstone-heavy stores (VERDICT r3 "what's wrong" #1).
-    // Update-only batches touch no slots: no batch id can be tombstoned
-    // (it would be an insert), so skip the tombstone work entirely.
-    val keptTombstones =
-      if (inserts.isEmpty) current.filter(col("deleted"))
-      else {
-        val tombstones = current.filter(col("deleted"))
-          .join(broadcast(batchIds.toDF("_id_")), Seq("_id_"), "left_anti")
-        val consumeN = inserts.size - tombstonedBatchN
-        val consumed =
-          if (consumeN <= 0) Array.empty[String]
-          else tombstones.orderBy(col("_id_").desc).limit(consumeN)
-            .select("_id_").as[String].collect()
-        if (consumed.isEmpty) tombstones
-        else tombstones.join(broadcast(consumed.toSeq.toDF("_id_")),
-          Seq("_id_"), "left_anti")
-      }
+    // survivors) and collect the bounded id set. The r3 shape
+    // (orderBy.limit(nTomb-reuse)) was a global Sort+Limit funnelling
+    // ~all tombstones through one partition on tombstone-heavy stores
+    // (VERDICT r3 "what's wrong" #1). Update-only batches touch no
+    // slots: no batch id can be tombstoned (it would be an insert).
+    val consumeN = inserts.size - tombstonedBatchN
+    val consumed =
+      if (inserts.isEmpty || consumeN <= 0) Array.empty[String]
+      else current.filter(col("deleted"))
+        .join(broadcast(batchIds.toDF("_id_")), Seq("_id_"), "left_anti")
+        .orderBy(col("_id_").desc).limit(consumeN)
+        .select("_id_").as[String].collect()
 
-    val next = active
-      .join(broadcast(lastWins.select("_id_")), Seq("_id_"), "left_anti")
+    // One pass over the store: one broadcast anti-join drops the
+    // superseded rows and the consumed tombstones, and the batch's rows
+    // are appended, so the next snapshot reads the current one once.
+    val next = current
+      .join(broadcast((batchIds ++ consumed).toDF("_id_")), Seq("_id_"), "left_anti")
       .unionByName(lastWins)
-      .unionByName(keptTombstones)
-    swap(next, HnswTouchIds(batchIds.toDF("_id_"), batchIds.size))
+    swap(next, HnswTouchIds(batchIds))
     annMutationsSinceFit += batchIds.size
     UpsertReport(updates.toSeq.sorted, inserts.sorted)
   }
@@ -838,7 +830,7 @@ final class VdbStore private (
     * pico_vdb.py:403-498); callers that guarantee unique batch ids can
     * skip the aggregate with `dedupIds=false`.
     */
-  def upsertDF(batch: DataFrame, dedupIds: Boolean = true): (Long, Long) = {
+  def upsertDF(batch: DataFrame, dedupIds: Boolean = true): (Long, Long) = writeLock.synchronized {
     val prepared0 = batch
       .withColumn("_vecf_", col("vector").cast(ArrayType(FloatType)))
       .withColumn("_vector_", normalize_l2(col("_vecf_")))
@@ -889,8 +881,7 @@ final class VdbStore private (
       if (hnswParams.isDefined && hnswCache.isDefined && hnswDirtyValid &&
           nTouched <= conf.hnswIncrCap) {
         import spark.implicits._
-        val idArr = prepared.select(col("_id_")).as[String].collect()
-        HnswTouchIds(idArr.toSeq.toDF("_id_"), idArr.length.toLong)
+        HnswTouchIds(prepared.select(col("_id_")).as[String].collect())
       } else HnswTouchUnknown
     swap(next, touch)
     annMutationsSinceFit += nUpd + nIns
@@ -1991,7 +1982,7 @@ final class VdbStore private (
     * `isin` expression tree — a 1M-id delete stays a hash join, not a
     * megabyte-scale plan (VERDICT r1 "what's wrong" #2).
     */
-  def delete(ids: Seq[String]): Seq[String] = timed("delete") {
+  def delete(ids: Seq[String]): Seq[String] = writeOp("delete") {
     import spark.implicits._
     val idsDf = ids.distinct.toDF("_id_")
     val removed = active
@@ -2005,7 +1996,7 @@ final class VdbStore private (
           when(col("_hit_").isNotNull, lit(null: String)).otherwise(col("meta")))
         .withColumn("deleted", col("deleted") || coalesce(col("_hit_"), lit(false)))
         .drop("_hit_")
-      swap(next, HnswTouchIds(removed.toDF("_id_"), removed.size))
+      swap(next, HnswTouchIds(removed))
       annMutationsSinceFit += removed.size
     }
     removed.sorted
@@ -2101,7 +2092,7 @@ final class VdbStore private (
   /** Drop tombstones and compact partitions (pico_vdb.py:831-853). */
   // vacuum drops tombstones only — no ACTIVE row changes, so the graph
   // delta is empty (tracked, nothing touched)
-  def vacuum(): Unit = swap(active, HnswTouchNone)
+  def vacuum(): Unit = writeLock.synchronized { swap(active, HnswTouchNone) }
 
   // ------------------------------------------------------------- side data
   // `additionalData` holds the RAW JSON value text per key — the
@@ -2111,8 +2102,10 @@ final class VdbStore private (
 
   /** Store plain-string values (JSON-encoded internally). */
   def storeAdditionalData(kv: (String, String)*): Unit =
-    additionalData = additionalData ++
-      kv.map { case (k, v) => k -> VdbStore.jsonQuote(v) }
+    writeLock.synchronized {
+      additionalData = additionalData ++
+        kv.map { case (k, v) => k -> VdbStore.jsonQuote(v) }
+    }
 
   /** Store raw JSON values (objects, arrays, numbers, booleans, null —
     * caller supplies valid JSON text, e.g. `"{\"a\": [1, 2]}"`).
@@ -2124,7 +2117,7 @@ final class VdbStore private (
       require(StoreIO.isJsonValue(v),
         s"additional_data value for '$k' is not a JSON value: $v")
     }
-    additionalData = additionalData ++ kv
+    writeLock.synchronized { additionalData = additionalData ++ kv }
   }
 
   /** String view: JSON-string values come back unquoted (the historical
@@ -2142,7 +2135,7 @@ final class VdbStore private (
     * over the target (the reference's tmp-file + os.replace,
     * pico_vdb.py:343-393).
     */
-  def save(path: String): Unit = timed("save") {
+  def save(path: String): Unit = writeOp("save") {
     val hadFreshHnsw = hnswStateForSave.isDefined
     val snapDir = StoreIO.save(this, path)
     storagePath = Some(path)
@@ -2152,8 +2145,11 @@ final class VdbStore private (
     // Bumping the version also re-buckets the ANN/pack caches from the
     // new lineage on next use (incremental, no refit).
     val old = current
-    current = spark.read.schema(VdbStore.schema).parquet(snapDir).cache()
-    storeVersion += 1
+    val reread = spark.read.schema(VdbStore.schema).parquet(snapDir).cache()
+    hnswLock.synchronized {
+      current = reread
+      storeVersion += 1
+    }
     old.unpersist(false)
     // The version bump would also orphan the graph cache — but this
     // save just WROTE those graphs into the new snapshot's sidecar, so
@@ -2183,14 +2179,6 @@ final class VdbStore private (
     s"""{"embedding_dim": $dim, $ann$hnsw$pq$bit"additional_data": {$kv}}"""
   }
 
-  /** Swap in the next snapshot. `touch` declares what the mutation did
-    * to ACTIVE rows, for the HNSW shard-local invalidation delta:
-    * [[HnswTouchIds]] (the upserted/deleted id set), [[HnswTouchNone]]
-    * (tracked, nothing active touched — vacuum), or
-    * [[HnswTouchUnknown]] (poisons the delta → next graph refresh is a
-    * full rebuild, never a silently wrong graph). The parameter is
-    * required so a future mutation path cannot forget to decide.
-    */
   /** Release every Spark-side cache this store pins — the cached
     * snapshot, the packed block cache, the q8/pq/bit tier caches, the
     * HNSW shard store and the ANN assignment (round 21: bench/tool
@@ -2228,25 +2216,55 @@ final class VdbStore private (
     annIndex = None
   }
 
+  /** Swap in the next snapshot. `touch` declares what the mutation did
+    * to ACTIVE rows, for the HNSW shard-local invalidation delta:
+    * [[HnswTouchIds]] (the upserted/deleted id set), [[HnswTouchNone]]
+    * (tracked, nothing active touched — vacuum), or
+    * [[HnswTouchUnknown]] (poisons the delta → next graph refresh is a
+    * full rebuild, never a silently wrong graph). The parameter is
+    * required so a future mutation path cannot forget to decide.
+    *
+    * A write's snapshot costs the same whatever the store's history,
+    * as picovdb's in-place writes do (pico_vdb.py:403-537). Its cached
+    * plan is a leaf over `next`'s rows, so it does not embed the
+    * snapshot it replaces. A write's union adds partitions (an upsert's
+    * batch); a narrow coalesce folds them back to at most the replaced
+    * snapshot's count or the default parallelism, whichever is larger
+    * (an empty store's first write keeps its own). The RDD lineage
+    * still grows by a constant per swap, so every 16th mutation cuts it
+    * with a local checkpoint.
+    */
   private def swap(next: DataFrame, touch: HnswTouch): Unit = {
-    // Cache the new snapshot; long upsert chains get their lineage cut by
-    // a local checkpoint so plans don't grow unboundedly.
     mutations += 1
-    storeVersion += 1
-    val pinned =
-      if (mutations % 16 == 0) next.localCheckpoint(true)
-      else next.cache()
-    pinned.count() // materialize before unpinning the old snapshot
     val old = current
-    current = pinned
-    old.unpersist(false)
-    touch match {
-      case HnswTouchIds(ids, n) => hnswNoteMutation(Some(ids), n)
-      case HnswTouchNone => hnswNoteMutation(Some(current.limit(0)), 0L)
-      case HnswTouchUnknown => hnswNoteMutation(None, 0L)
+    val held = old.queryExecution.toRdd.getNumPartitions
+    val bounded =
+      if (held == 0) next
+      else next.coalesce(math.max(held, spark.sparkContext.defaultParallelism))
+    val pinned =
+      if (mutations % 16 == 0) bounded.localCheckpoint(true)
+      else org.apache.spark.sql.SnapshotLeaf.of(bounded).cache()
+    pinned.count() // materialize before unpinning the old snapshot
+    // readers that build from (rows, version) under hnswLock see both
+    // change together with the graph delta
+    hnswLock.synchronized {
+      current = pinned
+      storeVersion += 1
+      hnswNoteMutation(touch)
     }
+    old.unpersist(false)
   }
   private var mutations: Int = 0
+
+  // Writers read `current`, build the next snapshot from it and swap
+  // it in; this lock serializes that sequence, as the reference's RW
+  // lock does (pico_vdb.py:1019-1063), so concurrent writers never
+  // drop each other's rows. Readers take no lock: they read an
+  // immutable snapshot. Lock order: writeLock before hnswLock.
+  private val writeLock = new Object
+
+  private def writeOp[T](op: String)(f: => T): T =
+    writeLock.synchronized(timed(op)(f))
 }
 
 final case class VdbRecord(id: String, vector: Array[Float], metaJson: String)
@@ -2257,8 +2275,7 @@ private final case class RawRecord(id: Option[String], vector: Array[Float],
 private[core] sealed trait HnswTouch
 private[core] case object HnswTouchNone extends HnswTouch
 private[core] case object HnswTouchUnknown extends HnswTouch
-private[core] final case class HnswTouchIds(ids: org.apache.spark.sql.DataFrame,
-                                            n: Long) extends HnswTouch
+private[core] final case class HnswTouchIds(ids: Iterable[String]) extends HnswTouch
 
 object VdbStore {
 

@@ -72,11 +72,16 @@ final class HnswStore[K](
 
   def unpersist(blocking: Boolean = false): Unit = {
     shards.unpersist(blocking)
+    segments.foreach(_.unpersist(blocking))
     swapQPrep(null)
     synchronized {
       if (q8ShardsRef != null) { q8ShardsRef.unpersist(blocking); q8ShardsRef = null }
     }
   }
+
+  // stores whose persisted shards only this store's union reads
+  // ([[append]]'s new segment): released with this store
+  @volatile private var segments: List[HnswStore[K]] = Nil
 
   /** INT8 sibling of `shards` — the quantized copy of each shard's
     * UNIT matrix, persisted as codes ONLY (the packedQ8Buckets trade:
@@ -192,17 +197,19 @@ final class HnswStore[K](
     * immediately. Repeated small appends accumulate small graphs whose
     * per-query entry overhead grows with shard count — fold them with
     * [[compact]] when that taxes the fan-out (the Lucene segment-merge
-    * pattern). The new shards are persisted here; `unpersist()` on the
-    * RETURNED store releases only the union handle — release the
-    * source stores through their own handles.
+    * pattern). The new shards are persisted here and owned by the
+    * RETURNED store: its `unpersist()` releases them, never the source
+    * store, which is released through its own handle.
     */
   def append(rdd: RDD[(K, Array[Float])], numShards: Int = 0): HnswStore[K] = {
     val extra = HnswStore.fromRDD(spark, rdd, normalize = normalized,
       assumeNormalized = false, m = m, efConstruction = efConstruction,
       numShards = numShards)
     extra.persist()
-    new HnswStore[K](spark, shards.union(extra.shards), normalized,
+    val out = new HnswStore[K](spark, shards.union(extra.shards), normalized,
       m, efConstruction)
+    out.segments = List(extra)
+    out
   }
 
   /** Re-pack every row into fresh slab-sized shards and rebuild their
@@ -249,8 +256,11 @@ final class HnswStore[K](
     * is an id scan over the persisted shards — nothing full-store
     * shuffles; the one repartition moves just the repacked rows
     * (bounded by the caller's incremental threshold). The repack
-    * target is slab-sized: `ceil(repackRows / rowsPerSlab)` partitions,
-    * so a one-row update of a loaded store rebuilds exactly ONE graph
+    * target is as many graphs as the touched shards it replaces, or
+    * more when the rows exceed that many slabs
+    * (`ceil(repackRows / rowsPerSlab)`): a refresh builds its graphs
+    * as parallel as the build it updates, and a one-row update of a
+    * loaded store rebuilds exactly ONE graph
     * ([[graft.core.Hnsw.buildsInJvm]]-pinned in HnswPersistSpec).
     *
     * The returned store is UNPERSISTED (its kept shards still read
@@ -266,10 +276,11 @@ final class HnswStore[K](
       val d = bc.value
       !sh.block.ids.exists(d.contains)
     }
-    val survivors = shards.filter { sh =>
+    val touched = shards.filter { sh =>
       val d = bc.value
       sh.block.ids.exists(d.contains)
-    }.flatMap { sh =>
+    }
+    val survivors = touched.flatMap { sh =>
       val d = bc.value
       val b = sh.block
       val dm = b.dim
@@ -278,15 +289,20 @@ final class HnswStore[K](
       }.filterNot(row => d.contains(row._1))
     }
     val repack = survivors.union(changed)
-    val nRows = repack.count()
+    // one job sizes the repack: (touched shards, rows to repack, row dim)
+    val (nTouched, nRows, rowDim) = touched.map { sh =>
+      val d = bc.value
+      (1L, sh.block.ids.count(id => !d.contains(id)).toLong, sh.block.dim)
+    }.union(changed.map(row => (0L, 1L, row._2.length)))
+      .fold((0L, 0L, 0)) { (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)) }
     if (nRows == 0) {
       val out = new HnswStore[K](spark, keep, normalized, m, efConstruction)
       out.releaseOnMaterialize = List(bc)
       return out
     }
-    val rowDim = repack.map(_._2.length).take(1).head
     val rowsPerSlab = math.max(1, maxBlockFloats / math.max(1, rowDim))
-    val nPart = math.max(1L, (nRows + rowsPerSlab - 1) / rowsPerSlab).toInt
+    val slabs = (nRows + rowsPerSlab - 1) / rowsPerSlab
+    val nPart = math.max(1L, math.min(nRows, math.max(slabs, nTouched))).toInt
     val extra = HnswStore.fromRDD(spark, repack.repartition(nPart),
       normalize = false, assumeNormalized = normalized,
       m = m, efConstruction = efConstruction, maxBlockFloats = maxBlockFloats)
