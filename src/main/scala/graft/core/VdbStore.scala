@@ -480,7 +480,6 @@ final class VdbStore private (
       if (hnswParams.isDefined && hnswCache.isDefined && hnswDirtyValid) {
         val grown = touch match {
           case HnswTouchIds(ids) => Some(hnswDirty ++ ids)
-          case HnswTouchNone => Some(hnswDirty) // tracked, nothing touched (vacuum)
           case HnswTouchUnknown => None
         }
         grown.filter(_.size <= conf.hnswIncrCap) match {
@@ -794,10 +793,11 @@ final class VdbStore private (
     // (orderBy.limit(nTomb-reuse)) was a global Sort+Limit funnelling
     // ~all tombstones through one partition on tombstone-heavy stores
     // (VERDICT r3 "what's wrong" #1). Update-only batches touch no
-    // slots: no batch id can be tombstoned (it would be an insert).
+    // slots: no batch id can be tombstoned (it would be an insert), so
+    // consumeN is 0.
     val consumeN = inserts.size - tombstonedBatchN
     val consumed =
-      if (inserts.isEmpty || consumeN <= 0) Array.empty[String]
+      if (consumeN <= 0) Array.empty[String]
       else current.filter(col("deleted"))
         .join(broadcast(batchIds.toDF("_id_")), Seq("_id_"), "left_anti")
         .orderBy(col("_id_").desc).limit(consumeN)
@@ -2092,7 +2092,7 @@ final class VdbStore private (
   /** Drop tombstones and compact partitions (pico_vdb.py:831-853). */
   // vacuum drops tombstones only — no ACTIVE row changes, so the graph
   // delta is empty (tracked, nothing touched)
-  def vacuum(): Unit = writeLock.synchronized { swap(active, HnswTouchNone) }
+  def vacuum(): Unit = writeLock.synchronized { swap(active, HnswTouchIds(Nil)) }
 
   // ------------------------------------------------------------- side data
   // `additionalData` holds the RAW JSON value text per key — the
@@ -2218,11 +2218,11 @@ final class VdbStore private (
 
   /** Swap in the next snapshot. `touch` declares what the mutation did
     * to ACTIVE rows, for the HNSW shard-local invalidation delta:
-    * [[HnswTouchIds]] (the upserted/deleted id set), [[HnswTouchNone]]
-    * (tracked, nothing active touched — vacuum), or
-    * [[HnswTouchUnknown]] (poisons the delta → next graph refresh is a
-    * full rebuild, never a silently wrong graph). The parameter is
-    * required so a future mutation path cannot forget to decide.
+    * [[HnswTouchIds]] (the upserted/deleted id set; empty when no
+    * active row changed, as in vacuum), or [[HnswTouchUnknown]]
+    * (poisons the delta → next graph refresh is a full rebuild, never a
+    * silently wrong graph). The parameter is required so a future
+    * mutation path cannot forget to decide.
     *
     * A write's snapshot costs the same whatever the store's history,
     * as picovdb's in-place writes do (pico_vdb.py:403-537). Its cached
@@ -2273,7 +2273,6 @@ private final case class RawRecord(id: Option[String], vector: Array[Float],
 
 /** What a snapshot swap did to active rows — see [[VdbStore]] swap. */
 private[core] sealed trait HnswTouch
-private[core] case object HnswTouchNone extends HnswTouch
 private[core] case object HnswTouchUnknown extends HnswTouch
 private[core] final case class HnswTouchIds(ids: Iterable[String]) extends HnswTouch
 

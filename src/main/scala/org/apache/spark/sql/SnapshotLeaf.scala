@@ -1,34 +1,19 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** `Dataset.checkpoint`'s construction without the checkpoint: a frame
   * whose logical plan is one `LogicalRDD` leaf over `df`'s physical
   * rows. Caching it caches the same rows as caching `df`, but its plan
   * no longer embeds `df`'s, so a chain of frames each built from the
   * last keeps a constant-size plan; an evicted partition still
-  * recomputes through the RDD lineage. `df` is planned as
-  * `Dataset.cache` plans it (the final stage's shuffle partitions are
-  * not coalesced), so the leaf has the partitions a cached `df` would.
-  * `LogicalRDD.fromDataset`, `Dataset.ofRows` and the session clone are
-  * private[sql].
+  * recomputes through the RDD lineage. `LogicalRDD.fromDataset` and
+  * `Dataset.ofRows` are private[sql].
   */
 object SnapshotLeaf {
   def of(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val session = ds.sparkSession
-    val cachePlanning =
-      if (session.sessionState.conf.getConf(SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING)) {
-        session
-      } else {
-        classic.SparkSession.getOrCloneSessionWithConfigsOff(session,
-          Seq(SQLConf.ADAPTIVE_EXECUTION_APPLY_FINAL_STAGE_SHUFFLE_OPTIMIZATIONS))
-      }
-    val origin = classic.Dataset.ofRows(cachePlanning, ds.logicalPlan)
-    val qe = origin.queryExecution
-    val rdd = SQLExecution.withNewExecutionId(qe, Some("snapshot"))(qe.toRdd)
-    classic.Dataset.ofRows(session,
-      LogicalRDD.fromDataset(rdd, origin, ds.isStreaming))
+    classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD.fromDataset(ds.queryExecution.toRdd, ds, ds.isStreaming))
   }
 }
