@@ -137,6 +137,98 @@ class HnswPersistSpec extends AnyFunSuite {
     store.unpersist()
   }
 
+  test("a tombstoned store saves and loads with zero builds, live rows and identical answers") {
+    var rows = randData(300, 12, seed = 17, unit = true).toMap
+    val store = HnswStore.fromDataset[Long](rows.toSeq.toDS(), normalize = false,
+      assumeNormalized = true, m = 8, efConstruction = 60, numShards = 3).persist()
+    store.materialize()
+    // update a few rows and delete a few more: their old nodes are dead
+    val changed = randData(4, 12, seed = 19, unit = true)
+      .map { case (i, v) => (i * 7, v) }
+    val deleted = Seq(3L, 50L, 101L, 250L)
+    rows = rows ++ changed -- deleted
+    val touched = store.rebuildTouched((changed.map(_._1) ++ deleted).toSet,
+      spark.sparkContext.parallelize(changed, 1)).persist()
+    assert(touched.materialize()._1 == rows.size.toLong)
+    store.unpersist()
+    val queries = (changed.map(_._2) ++ randData(6, 12, seed = 23, unit = true).map(_._2))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
+    val wantGraph = collectHits(touched.searchMerged(queries, k = 6, ef = 24))
+    val wantExact = collectHits(touched.searchMerged(queries, k = 6, exact = true))
+    val dir = tmpDir("hnswtomb")
+    val snap = touched.save(dir)
+    assert(HnswIO.savedShape(spark, snap)._1 == rows.size.toLong,
+      "the saved shape counts live rows")
+    val before = Hnsw.buildsInJvm
+    val loaded = HnswStore.load[Long](spark, dir).persist()
+    assert(loaded.materialize()._1 == rows.size.toLong)
+    assert(collectHits(loaded.searchMerged(queries, k = 6, ef = 24)) == wantGraph)
+    assert(collectHits(loaded.searchMerged(queries, k = 6, exact = true)) == wantExact)
+    assert(Hnsw.buildsInJvm == before, "a tombstoned store must load without a build")
+    loaded.unpersist(); touched.unpersist()
+
+    // the same through VdbStore: updates and deletes, save, load
+    val s = hnswVdbStore()
+    s.enableHnsw(m = 8, efConstruction = 60)
+    val q = Array.fill(8)(0.3f)
+    s.queryOne(q, topK = 5, efSearch = 48)
+    val v = new Array[Float](8); v(1) = 1f
+    s.upsert(Seq(VdbRecord("h007", v, """{"g": 3}""")))
+    s.delete(Seq("h011", "h012", "h013"))
+    val want = s.queryOne(q, topK = 5, efSearch = 48).map(h => (h.id, h.metrics))
+    val wantV = s.queryOne(v, topK = 3, efSearch = 48).map(h => (h.id, h.metrics))
+    assert(s.hnswLastRebuildMode == "incremental")
+    val vdir = tmpDir("vdbhnswtomb") + "/store"
+    s.save(vdir)
+    val vBefore = Hnsw.buildsInJvm
+    val l = VdbStore.load(spark, vdir)
+    assert(l.hnswRestoreMode == "loaded", "a tombstoned sidecar must hydrate on load")
+    assert(l.queryOne(q, topK = 5, efSearch = 48).map(h => (h.id, h.metrics)) == want)
+    assert(l.queryOne(v, topK = 3, efSearch = 48).map(h => (h.id, h.metrics)) == wantV)
+    assert(l.lastQueryStrategy.contains("hnsw"))
+    assert(Hnsw.buildsInJvm == vBefore, "loading a tombstoned sidecar must not build")
+  }
+
+  test("a Format-1 shard file (no dead mask) still loads") {
+    val data = randData(200, 8, seed = 29, unit = true)
+    val store = HnswStore.fromDataset[Long](data.toDS(), normalize = false,
+      assumeNormalized = true, m = 8, efConstruction = 60, numShards = 2).persist()
+    store.materialize()
+    val queries = randData(5, 8, seed = 31, unit = true).toArray
+    val wantGraph = collectHits(store.searchMerged(queries, k = 5, ef = 24))
+    val wantExact = collectHits(store.searchMerged(queries, k = 5, exact = true))
+    // the Format-1 layout: header, ids, norms flag, rows, topology
+    val dir = new java.io.File(tmpDir("hnswv1"))
+    val shards = store.shards.collect()
+    shards.zipWithIndex.foreach { case (sh, i) =>
+      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
+        new java.io.FileOutputStream(new java.io.File(dir, f"shard-$i%05d-000.hnsw"))))
+      try {
+        val b = sh.block
+        out.writeInt(0x47484E53)
+        out.writeInt(1)
+        out.writeInt(b.dim)
+        out.writeInt(b.rows)
+        out.writeByte(0)
+        b.ids.foreach(out.writeLong)
+        out.writeBoolean(false)
+        (0 until b.rows * b.dim).foreach(j => out.writeFloat(b.data(j)))
+        sh.graph.writeGraph(out)
+      } finally out.close()
+    }
+    val meta = s"""{"format": 1, "key": 0, "dim": 8, "rows": 200, """ +
+      s""""shards": ${shards.length}, "normalized": true, "m": 8, "efc": 60}"""
+    java.nio.file.Files.write(new java.io.File(dir, "_hnsw_meta.json").toPath,
+      meta.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val before = Hnsw.buildsInJvm
+    val loaded = HnswIO.loadFrom[Long](spark, dir.toString).persist()
+    assert(loaded.materialize() == ((200L, shards.length)))
+    assert(collectHits(loaded.searchMerged(queries, k = 5, ef = 24)) == wantGraph)
+    assert(collectHits(loaded.searchMerged(queries, k = 5, exact = true)) == wantExact)
+    assert(Hnsw.buildsInJvm == before)
+    loaded.unpersist(); store.unpersist()
+  }
+
   // ---- VdbStore integration: the sidecar rides the snapshot ----
 
   private def hnswVdbStore(n: Int = 120, dim: Int = 8): VdbStore = {

@@ -257,6 +257,213 @@ class HnswStoreSpec extends AnyFunSuite {
     store.unpersist()
   }
 
+  test("incremental maintenance matches a model: 30 refreshes of upserts and deletes, both store modes") {
+    val ratio = new graft.core.GraftConf(spark).annIncrRatio
+    val dim = 16
+    val k = 5
+    Seq(true, false).foreach { unitMode =>
+      val mode = if (unitMode) "unit" else "cosine"
+      val rng = new scala.util.Random(if (unitMode) 211 else 223)
+      def vec(): Array[Float] = {
+        val v = Array.fill(dim)(rng.nextFloat() - 0.5f)
+        if (!unitMode) v
+        else {
+          val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+          v.map(x => (x / n).toFloat)
+        }
+      }
+      // the store's exact arithmetic: a plain dot over unit rows, the
+      // cosine over raw rows
+      def score(q: Array[Float], v: Array[Float]): Double = {
+        val dot = q.zip(v).map { case (a, b) => a.toDouble * b.toDouble }.sum
+        if (unitMode) dot
+        else {
+          val qn = math.sqrt(q.map(x => x.toDouble * x).sum)
+          val vn = math.sqrt(v.map(x => x.toDouble * x).sum)
+          if (qn == 0.0 || vn == 0.0) 0.0 else dot / (qn * vn)
+        }
+      }
+      val model = scala.collection.mutable.LinkedHashMap[Long, Array[Float]]()
+      (0 until 480).foreach(i => model(i.toLong) = vec())
+      var nextId = 1000L
+      def build(rows: Seq[(Long, Array[Float])]): HnswStore[Long] =
+        owned(HnswStore.fromDataset[Long](rows.toDS(), normalize = false,
+          assumeNormalized = unitMode, numShards = 3).persist())
+      def top(qs: Seq[(Long, Array[Float])], rows: Seq[(Long, Array[Float])],
+              kk: Int): Map[Long, Seq[(Long, Double)]] =
+        qs.map { case (qid, q) =>
+          qid -> rows.map { case (id, v) => (id, score(q, v)) }
+            .sortBy { case (id, s) => (-s, id) }.take(kk)
+        }.toMap
+      def hits(df: org.apache.spark.sql.DataFrame): Array[(Long, Int, Long, Double)] =
+        df.select(col("qid"), col("rank"), col("id"), col("score")).collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+      def recall(st: HnswStore[Long], qs: Array[(Long, Array[Float])],
+                 want: Map[Long, Seq[(Long, Double)]]): Double = {
+        val got = hits(st.searchMerged(qs, 10, ef = 32)).groupBy(_._1)
+        qs.map { case (qid, _) =>
+          val g = got.getOrElse(qid, Array.empty).map(_._3).toSet
+          want(qid).count(w => g(w._1)).toDouble / want(qid).size
+        }.sum / qs.length
+      }
+
+      var store = build(model.toSeq)
+      store.materialize()
+      var compactions = 0
+      var sawDead = false
+      var sawSharedSupersede = false
+      var prevDead = 0
+      (1 to 30).foreach { round =>
+        val at = s"$mode round $round"
+        val live = model.keys.toSeq
+        val upd = rng.shuffle(live).take(8)
+        val del = rng.shuffle(live.filterNot(upd.contains)).take(6)
+        val ins = (0 until 5).map { _ => nextId += 1; nextId }
+        val old = (upd ++ del).map(id => id -> model(id))
+        val changed = (upd ++ ins).map(id => id -> vec())
+        changed.foreach { case (id, v) => model(id) = v }
+        del.foreach(model.remove)
+        val refreshed = owned(store.rebuildTouched((upd ++ del ++ ins).toSet,
+          spark.sparkContext.parallelize(changed, 2)).persist())
+        assert(refreshed.materialize()._1 == model.size.toLong,
+          s"$at: materialize must report live rows")
+        store.unpersist()
+        store = refreshed
+        val rows = model.toSeq
+
+        // shard layout: a node is dead when its (id, vector) is no longer
+        // the model's; every live row sits in exactly one shard
+        val layout = store.shards.map { sh =>
+          val b = sh.block
+          (b.ids.toSeq, (0 until b.rows).map(r =>
+            java.util.Arrays.copyOfRange(b.data, r * b.dim, (r + 1) * b.dim)))
+        }.collect()
+        var liveSeen = Map.empty[Long, Int]
+        var dead = 0
+        layout.foreach { case (ids, vs) =>
+          if (ids.distinct.length < ids.length) sawSharedSupersede = true
+          var shardDead = 0
+          ids.zip(vs).foreach { case (id, v) =>
+            if (model.get(id).exists(java.util.Arrays.equals(_, v)))
+              liveSeen = liveSeen.updated(id, liveSeen.getOrElse(id, 0) + 1)
+            else shardDead += 1
+          }
+          assert(shardDead <= ratio * ids.length,
+            s"$at: a shard holds $shardDead dead of ${ids.length} nodes, past the ratio")
+          dead += shardDead
+        }
+        assert(liveSeen.keySet == model.keySet && liveSeen.values.forall(_ == 1),
+          s"$at: every live row sits in exactly one shard")
+        if (dead > 0) sawDead = true
+        if (dead < prevDead) compactions += 1
+        prevDead = dead
+
+        // exact: brute force over the live rows — ids, ranks, scores
+        val qs = (old.take(6).map(_._2) ++ changed.take(3).map(_._2) ++
+          Seq.fill(3)(vec())).zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
+        val want = top(qs.toSeq, rows, k)
+        def assertExact(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+          val got = hits(df)
+          assert(got.length == qs.length * k, s"$at $name: ${got.length} rows")
+          got.foreach { case (qid, rank, id, s) =>
+            val (wid, ws) = want(qid)(rank - 1)
+            assert(id == wid && math.abs(s - ws) < 1e-9,
+              s"$at $name qid=$qid rank=$rank: got ($id, $s) want ($wid, $ws)")
+          }
+        }
+        val allow = graft.core.SetMember((model.keys ++ del).toArray)
+        assertExact("searchMerged exact", store.searchMerged(qs, k, exact = true))
+        assertExact("searchMergedMember exact",
+          store.searchMergedMember(qs, k, allow, deny = false, exact = true))
+        assertExact("searchMergedMemberQ8 covering",
+          store.searchMergedMemberQ8(qs, k, allow, deny = false, ef = 10000,
+            overfetch = 10000))
+
+        // no dead node surfaces through any entry point: every hit is a
+        // live id, once per query, carrying its current vector's score
+        val deny = graft.core.SetMember(
+          rng.shuffle(model.keys.filterNot(upd.contains).toSeq).take(20).toArray)
+        val qds = qs.toSeq.toDS().repartition(2)
+        val entries = Seq(
+          "searchMerged" -> store.searchMerged(qs, k, ef = 16),
+          "searchPacked" -> store.searchPacked(qds, k, ef = 16),
+          "searchMergedMember" -> store.searchMergedMember(qs, k, allow, deny = false, ef = 16),
+          "searchPackedMember" -> store.searchPackedMember(qds, k, deny, deny = true, ef = 16),
+          "searchMergedMemberQ8" -> store.searchMergedMemberQ8(qs, k, allow, deny = false, ef = 16),
+          "searchPackedMemberQ8" -> store.searchPackedMemberQ8(qds, k, deny, deny = true, ef = 16))
+        val qv = qs.toMap
+        entries.foreach { case (name, df) =>
+          val got = hits(df)
+          got.groupBy(_._1).foreach { case (qid, hs) =>
+            assert(hs.map(_._3).distinct.length == hs.length,
+              s"$at $name qid=$qid: an id surfaced twice")
+          }
+          got.foreach { case (qid, _, id, s) =>
+            assert(model.contains(id), s"$at $name qid=$qid: deleted id $id surfaced")
+            assert(math.abs(s - score(qv(qid), model(id))) < 1e-4,
+              s"$at $name qid=$qid: id $id scored $s, its live row scores " +
+                s"${score(qv(qid), model(id))}")
+          }
+        }
+        // a filter whose only members are dead nodes plus two live rows:
+        // the underfill snap returns exactly the live two
+        val tiny = graft.core.SetMember((del ++ upd.take(2)).toArray)
+        Seq("searchMergedMember" -> store.searchMergedMember(qs, k, tiny, deny = false, ef = 8),
+            "searchMergedMemberQ8" -> store.searchMergedMemberQ8(qs, k, tiny, deny = false, ef = 8))
+          .foreach { case (name, df) =>
+            val got = hits(df)
+            qs.foreach { case (qid, _) =>
+              assert(got.filter(_._1 == qid).map(_._3).sorted.toSeq == upd.take(2).sorted,
+                s"$at $name qid=$qid: a sub-k filter must surface exactly its live members")
+            }
+          }
+
+        // graph recall stays within 0.02 of a fresh build over the same rows
+        val rq = (changed.map(_._2) ++ Seq.fill(27)(vec()))
+          .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
+        val wantR = top(rq.toSeq, rows, 10)
+        val fresh = build(rows.sortBy(_._1))
+        val rFresh = recall(fresh, rq, wantR)
+        val rIncr = recall(store, rq, wantR)
+        fresh.unpersist()
+        assert(rIncr >= rFresh - 0.02, s"$at: recall@10 $rIncr vs a fresh build's $rFresh")
+      }
+      assert(sawDead, s"$mode: updates and deletes must leave tombstones")
+      assert(sawSharedSupersede,
+        s"$mode: an updated id's new row must land in the shard of its old one")
+      assert(compactions > 0, s"$mode: no shard was ever compacted")
+      store.unpersist()
+    }
+  }
+
+  test("refreshes keep the shards' lineage bounded: 40 refreshes, at most 2x refresh 1") {
+    var rows = randData(120, 8, seed = 37, unit = true).toMap
+    var store = owned(HnswStore.fromDataset[Long](rows.toSeq.toDS(),
+      normalize = false, assumeNormalized = true, numShards = 2).persist())
+    store.materialize()
+    val rng = new scala.util.Random(41)
+    var first = 0
+    (1 to 40).foreach { refresh =>
+      val ids = Seq(rng.nextInt(120).toLong, 1000L + refresh)
+      val changed = ids.map { id =>
+        val v = Array.fill(8)(rng.nextFloat() - 0.5f)
+        val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+        (id, v.map(x => (x / n).toFloat))
+      }
+      rows = rows ++ changed
+      val next = owned(store.rebuildTouched(ids.toSet,
+        spark.sparkContext.parallelize(changed, 1)).persist())
+      assert(next.materialize()._1 == rows.size.toLong)
+      store.unpersist()
+      store = next
+      val len = store.shards.toDebugString.length
+      if (refresh == 1) first = len
+      else assert(len <= 2 * first,
+        s"refresh $refresh: lineage ${len} characters, ${first} after refresh 1")
+    }
+    store.unpersist()
+  }
+
   test("searchPacked (Dataset queries) is bit-identical to searchMerged, both modes") {
     val data = randData(400, 16, seed = 71, unit = false) // cosine mode
     val store = owned(HnswStore.fromDataset[Long](
