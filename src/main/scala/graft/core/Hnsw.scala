@@ -31,18 +31,25 @@ import graft.operators.Kernels
   *  - neighbor selection: the paper's distance-diversity heuristic
   *    (select a candidate only if it is closer to the query than to
   *    every already-selected neighbor) on layer 0, simple top-M above.
+  *
+  * A graph is immutable once built. Growth is a build that starts from
+  * an existing graph ([[Hnsw.build]]'s `start`): the new nodes run the
+  * same insertion loop against a copy of its lists, so queries still
+  * reading the old graph never see a half-linked node. Deletion is not
+  * the graph's business: the sharded store tombstones nodes and filters
+  * them at result collection ([[searchFiltered]]).
   */
 final class Hnsw private (
     val dim: Int,
-    data: Array[Float], // row-major, node i at offset i*dim
+    private val data: Array[Float], // row-major, node i at offset i*dim
     val n: Int,
-    m: Int,
-    levels: Array[Int],
+    private val m: Int,
+    private val levels: Array[Int],
     // nbrs(node)(layer) = packed neighbor ids, count in nbrCnt
-    nbrs: Array[Array[Array[Int]]],
-    nbrCnt: Array[Array[Int]],
-    entry: Int,
-    maxLevel: Int) extends Serializable {
+    private val nbrs: Array[Array[Array[Int]]],
+    private val nbrCnt: Array[Array[Int]],
+    private val entry: Int,
+    private val maxLevel: Int) extends Serializable {
 
   private def sim(q: Array[Float], node: Int): Double =
     Kernels.dotPackedF(q, data, node * dim).toDouble
@@ -336,11 +343,14 @@ final class Hnsw private (
 
 object Hnsw {
 
-  /** Completed graph builds in this JVM — test instrumentation for the
-    * persistence contract ("a load must NOT rebuild"): local-mode specs
-    * snapshot it around a save/load cycle. In local[*] every executor
-    * build increments it; on a real cluster it only observes
-    * driver-side builds (specs are local-mode by construction).
+  /** Graphs built in this JVM, fresh or extended from a start graph —
+    * test instrumentation for the persistence contract ("a load must
+    * NOT rebuild") and the incremental refresh's build count: local-mode
+    * specs snapshot it around a save/load cycle or a refresh. Loading a
+    * graph and tombstoning nodes build nothing and do not count. In
+    * local[*] every executor build increments it; on a real cluster it
+    * only observes driver-side builds (specs are local-mode by
+    * construction).
     */
   private val buildCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   def buildsInJvm: Long = buildCounter.get()
@@ -349,8 +359,9 @@ object Hnsw {
     * caller-supplied packed matrix (which must be the SAME rows in the
     * same order the graph was built on — the shard codec guarantees
     * it by persisting slab and topology together). Deserialized
-    * neighbor arrays are sized to their counts: loaded graphs serve
-    * searches; growth goes through a rebuild, never in-place links.
+    * neighbor arrays are sized to their counts; a build that grows a
+    * loaded graph copies them into cap-sized arrays first, so the
+    * loaded graph itself is never linked in place.
     */
   private[graft] def readGraph(in: java.io.DataInputStream,
                                data: Array[Float], dim: Int): Hnsw = {
@@ -409,6 +420,14 @@ object Hnsw {
     * Deterministic for a fixed input order. `batch` > 1 runs each
     * batch's candidate searches in parallel against the frozen graph.
     *
+    * `start` grows an existing graph instead: its nodes are rows
+    * `0 until start.n` of `data` (same rows, same order) and only rows
+    * `start.n until n` are inserted, by the same loop a fresh build
+    * runs (a fresh build is the empty start). Every new node draws its
+    * level from its node index, as in a fresh build. The start graph's
+    * neighbor lists are copied into cap-sized arrays before any link
+    * lands, so `start` is never mutated.
+    *
     * `parallelism` bounds the search threads: <= 0 is auto — inside a
     * Spark task it is the task's CPU allocation (`TaskContext.cpus`,
     * usually 1 → sequential, so per-slab builds in
@@ -423,23 +442,39 @@ object Hnsw {
   def build(data: Array[Float], n: Int, dim: Int,
             m: Int = 16, efConstruction: Int = 100,
             batch: Int = 256, seedSequential: Int = 1024,
-            parallelism: Int = 0): Hnsw = {
+            parallelism: Int = 0, start: Option[Hnsw] = None): Hnsw = {
     require(n >= 0 && dim > 0 && data.length >= n * dim)
+    start.foreach { g =>
+      require(g.dim == dim && g.m == m && g.n <= n,
+        s"start graph (n=${g.n}, dim=${g.dim}, m=${g.m}) cannot grow to " +
+          s"(n=$n, dim=$dim, m=$m)")
+    }
+    val n0 = start.fold(0)(_.n)
     val mMax = m
     val mMax0 = 2 * m
     val mL = 1.0 / math.log(m.toDouble)
     val levels = Array.tabulate(n) { i =>
-      // per-node deterministic level draw
-      val r = new java.util.Random(i * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
-      val u = math.max(r.nextDouble(), 1e-12)
-      math.min((-math.log(u) * mL).toInt, 24)
+      if (i < n0) start.get.levels(i)
+      else {
+        // per-node deterministic level draw
+        val r = new java.util.Random(i * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
+        val u = math.max(r.nextDouble(), 1e-12)
+        math.min((-math.log(u) * mL).toInt, 24)
+      }
     }
     val nbrs = Array.tabulate(n)(i =>
-      Array.tabulate(levels(i) + 1)(l =>
-        new Array[Int](if (l == 0) mMax0 else mMax)))
-    val nbrCnt = Array.tabulate(n)(i => new Array[Int](levels(i) + 1))
-    var entry = -1
-    var maxLevel = -1
+      Array.tabulate(levels(i) + 1) { l =>
+        val ns = new Array[Int](if (l == 0) mMax0 else mMax)
+        if (i < n0) {
+          val g = start.get
+          System.arraycopy(g.nbrs(i)(l), 0, ns, 0, g.nbrCnt(i)(l))
+        }
+        ns
+      })
+    val nbrCnt = Array.tabulate(n)(i =>
+      if (i < n0) start.get.nbrCnt(i).clone() else new Array[Int](levels(i) + 1))
+    var entry = start.fold(-1)(_.entry)
+    var maxLevel = start.fold(-1)(_.maxLevel)
 
     def simIJ(a: Int, q: Array[Float]): Double =
       Kernels.dotPackedF(q, data, a * dim).toDouble
@@ -615,7 +650,7 @@ object Hnsw {
       out
     }
 
-    var i = 0
+    var i = n0
     // sequential seed phase — at least ONE node: the batch phase
     // descends from `entry`, and seedSequential=0 would leave it -1
     // (negative packed-matrix offset on the first candidate search)

@@ -443,10 +443,10 @@ final class VdbStore private (
   // reference's FAISS-HNSW (pico_vdb.py:169-212), distributed as one
   // graph per packed slab. Opt-in like enableAnn and under the same
   // O28 bypass rules; when both accelerators are enabled the graph
-  // wins (it is the recall-class upgrade). Maintenance is a lazy
-  // per-version REBUILD: slab graphs build in parallel tasks (~6 s at
-  // the 100k x 1024 headline, constant wall per core at scale), so
-  // the IVF incremental machinery has nothing to amortize here.
+  // wins (it is the recall-class upgrade). Maintenance is lazy, per
+  // version: a small delta updates the shards in place (tombstones +
+  // inserts into the existing graphs, HnswStore.rebuildTouched); past
+  // the gates below the slab graphs rebuild in parallel tasks.
   // Persisted since round 15: a fresh cache saves beside the rows
   // (StoreIO sidecar via HnswIO) and load hydrates it with zero
   // rebuilds — see restoreHnsw. (Append-only ingest can maintain
@@ -519,9 +519,10 @@ final class VdbStore private (
   def hnswRestoreMode: String = hnswRestoreModeVar
 
   /** How the most recent [[refreshHnsw]] got its graphs: "none" (never
-    * refreshed), "full" (every slab rebuilt), or "incremental" (only
-    * slabs holding touched rows rebuilt; untouched slabs — persisted-
-    * sidecar loads included — carried). The annLastRebuildMode analog
+    * refreshed), "full" (every slab rebuilt), or "incremental" (touched
+    * shards updated in place — tombstones, inserts, compaction past the
+    * ratio; untouched shards — persisted-sidecar loads included —
+    * carried). The annLastRebuildMode analog
     * for the graph index, surfaced for the same introspection reason
     * (pico_vdb.py:884-921).
     */
@@ -592,7 +593,7 @@ final class VdbStore private (
       }
       // the hydrated cache (if any) is the new incremental baseline:
       // mutations from here on accumulate a delta against IT, so a
-      // loaded store's first small upsert rebuilds only touched slabs
+      // loaded store's first small upsert updates only touched shards
       hnswResetDirty()
     }
 
@@ -605,22 +606,24 @@ final class VdbStore private (
             timed("hnsw_refresh") {
               import spark.implicits._
               val act = active
-              // Shard-local invalidation (round 16, the reference's
-              // incremental contract pico_vdb.py:195-204, 866-921 done
-              // the distributed way): when every swap since the cached
-              // build declared its touched ids, keep the untouched
-              // slabs' graphs — loaded-from-sidecar ones included —
-              // and rebuild ONLY the slabs holding touched rows. Gated
-              // like the IVF incremental path (annIncrRatio of the
-              // store) and by graft.hnsw.incr.cap (the touched set is
-              // held on the driver and broadcast, so it must be
-              // driver-sized); a mutation wave past either gate
-              // amortizes a full rebuild anyway.
+              // In-place shard maintenance (the reference's incremental
+              // contract pico_vdb.py:195-204, 866-921 done the
+              // distributed way): when every swap since the cached
+              // build declared its touched ids, tombstone the touched
+              // ids' old nodes and insert their current rows into the
+              // existing graphs; untouched shards — loaded-from-sidecar
+              // ones included — carry as they are. Gated like the IVF
+              // incremental path (annIncrRatio of the cached store's
+              // live rows, known since its materialize — no count job)
+              // and by graft.hnsw.incr.cap (the touched set is held on
+              // the driver and broadcast, so it must be driver-sized);
+              // a mutation wave past either gate amortizes a full
+              // rebuild anyway.
               val incr: Option[graft.operators.HnswStore[String]] = old match {
                 case Some((_, p, prev)) if p == params && hnswDirtyValid &&
                     hnswDirty.size <= conf.hnswIncrCap &&
                     hnswDirty.size.toDouble <=
-                      conf.annIncrRatio * math.max(1L, act.count()) =>
+                      conf.annIncrRatio * math.max(1L, prev.liveRowCount) =>
                   if (hnswDirty.isEmpty) {
                     // tombstone-only churn (vacuum): active rows are
                     // byte-identical, the graphs are already current
@@ -641,17 +644,24 @@ final class VdbStore private (
                 case _ => None
               }
               val st = incr.getOrElse {
+                // one graph per core at least: the snapshot's own layout
+                // can be coarser (AQE coalesces a small first write), and
+                // every later refresh keeps the full build's shards
+                val cores = spark.sparkContext.defaultParallelism
                 val built = graft.operators.HnswStore.fromDataset(
                   act.select(col("_id_"), col("_vector_"))
                     .as[(String, Array[Float])],
                   normalize = false, assumeNormalized = true,
-                  m = params._1, efConstruction = params._2).persist()
+                  m = params._1, efConstruction = params._2,
+                  numShards =
+                    if (act.queryExecution.toRdd.getNumPartitions < cores) cores
+                    else 0).persist()
                 built.materialize()
                 hnswLastRebuildModeVar = "full"
                 built
               }
               hnswCache = Some((storeVersion, params, st))
-              // the incremental store's kept shards read through the
+              // the incremental store's shards read through the
               // previous cache until materialized above — safe to
               // release the old handle now (never when reusing it)
               old.filter(_._3 ne st).foreach(_._3.unpersist())

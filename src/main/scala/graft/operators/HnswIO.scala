@@ -24,10 +24,13 @@ import graft.core.{Hnsw, StoreIO, VecBlock}
   * One binary file per shard, written BY ITS OWN TASK (the build
   * parallelism is the write parallelism — no driver funnel, no
   * shuffle), holding the packed slab (ids + float32 matrix + cosine
-  * norms when present) and the graph topology ([[Hnsw.writeGraph]]).
-  * The unit-row matrix is NOT persisted: it is deterministic from the
-  * slab ([[HnswStore.unitOf]]) and re-derived on load — halves the
-  * file for cosine-mode stores.
+  * norms when present), the graph topology ([[Hnsw.writeGraph]]) and,
+  * since Format 2, the shard's dead-node mask, so a tombstoned store
+  * saves and loads without a build. Format 1 files (no mask: every
+  * node live) still load. The unit-row matrix is NOT persisted: it is
+  * deterministic from the slab ([[HnswStore.unitOf]]) and re-derived
+  * on load — halves the file for cosine-mode stores. The meta's `rows`
+  * counts live rows.
   *
   * Scale model (100 TB): saves and loads are embarrassingly parallel —
   * one sequential file stream per ≤128 MB shard, no driver data, no
@@ -46,7 +49,8 @@ import graft.core.{Hnsw, StoreIO, VecBlock}
 object HnswIO {
 
   private val Magic = 0x47484E53 // "GHNS"
-  private val Format = 1
+  private val Format = 2
+  private val Formats = Set(1, Format)
   private val MetaFile = "_hnsw_meta.json"
 
   private def keyTag[K](ct: ClassTag[K]): Int = ct.runtimeClass match {
@@ -123,6 +127,9 @@ object HnswIO {
     if (b.norms != null) writeDoubles(out, b.norms)
     writeFloats(out, b.data, b.rows * b.dim)
     sh.graph.writeGraph(out)
+    val dead = if (sh.dead == null) Array.emptyLongArray else sh.dead.toLongArray
+    out.writeInt(dead.length)
+    dead.foreach(out.writeLong)
   }
 
   /** Read one shard; every structural invariant is checked loudly
@@ -137,7 +144,7 @@ object HnswIO {
     val magic = in.readInt()
     require(magic == Magic, f"not an HNSW shard file (magic 0x$magic%08X)")
     val fmt = in.readInt()
-    require(fmt == Format, s"unsupported HNSW shard format $fmt (have $Format)")
+    require(Formats(fmt), s"unsupported HNSW shard format $fmt (have $Format)")
     val dim = in.readInt()
     val rows = in.readInt()
     require(dim == expectDim && rows >= 0,
@@ -167,7 +174,18 @@ object HnswIO {
     val graph = Hnsw.readGraph(in, unit, dim)
     require(graph.n == rows,
       s"HNSW shard graph covers ${graph.n} nodes but slab has $rows rows")
-    new HnswShard[K](block, unit, graph)
+    val dead =
+      if (fmt == 1) null
+      else {
+        val words = in.readInt()
+        require(words >= 0 && words <= (rows + 63) / 64,
+          s"corrupt HNSW dead mask: $words words for $rows rows")
+        val bits = java.util.BitSet.valueOf(Array.fill(words)(in.readLong()))
+        require(bits.length() <= rows,
+          s"HNSW dead mask marks node ${bits.length() - 1} of $rows")
+        if (bits.isEmpty) null else bits
+      }
+    new HnswShard[K](block, unit, graph, dead)
   }
 
   /** Write every shard of `store` under `dir` (replaced if present).
@@ -215,7 +233,7 @@ object HnswIO {
             if (!tfs.rename(tmp, p))
               throw new java.io.IOException(
                 s"HnswIO.saveInto: could not commit $tmp -> $p")
-            sh.block.rows.toLong
+            sh.liveRows.toLong
           }
         }.collect()
       } finally bcConf.destroy()
@@ -236,8 +254,9 @@ object HnswIO {
 
   private def metaInt(s: String, key: String): Int = metaLong(s, key).toInt
 
-  /** Expected totals recorded at save time — callers validate a loaded
-    * store against these (and their own row counts) before trusting it.
+  /** Expected totals recorded at save time — (live rows, shard files);
+    * callers validate a loaded store against these (and their own row
+    * counts) before trusting it.
     */
   def savedShape(spark: SparkSession, dir: String): (Long, Int) = {
     val d = new Path(dir)
@@ -265,7 +284,7 @@ object HnswIO {
     val metaStr = try new String(metaIn.readAllBytes(), StandardCharsets.UTF_8)
                   finally metaIn.close()
     val keyT = keyTag(implicitly[ClassTag[K]])
-    require(metaInt(metaStr, "format") == Format,
+    require(Formats(metaInt(metaStr, "format")),
       s"unsupported HNSW snapshot format in $dir")
     require(metaInt(metaStr, "key") == keyT,
       s"HNSW snapshot in $dir holds key type ${metaInt(metaStr, "key")}, requested $keyT")

@@ -17,11 +17,69 @@ import graft.core.{BlockStore, BoundedTopKG, Hnsw, VecBlock}
   * (raw rows) a normalized copy is packed next to it so graph
   * similarity is true cosine while the exact path keeps the
   * raw/raw-with-norms arithmetic the oracles hash-match.
+  *
+  * `dead` tombstones nodes by NODE INDEX (null when none is dead): a
+  * deleted row, or the old version of an updated one, stays in the
+  * slab and the graph as a navigation waypoint until the shard is
+  * compacted ([[HnswStore.rebuildTouched]]), but no search returns it.
+  * The mask is by node, not by id, because one shard can hold a dead
+  * old version and a live new version of the same id. Graph walks
+  * filter dead nodes at result collection; exact scans read [[live]].
   */
 final class HnswShard[K](
     val block: VecBlock[K],
     val unit: Array[Float],
-    val graph: Hnsw) extends Serializable
+    val graph: Hnsw,
+    val dead: java.util.BitSet = null) extends Serializable {
+
+  def liveRows: Int = if (dead == null) block.rows else block.rows - dead.cardinality()
+
+  def isLive(node: Int): Boolean = dead == null || !dead.get(node)
+
+  /** Node indices of the live rows, ascending. */
+  @transient lazy val liveNodes: Array[Int] =
+    (0 until block.rows).filter(isLive).toArray
+
+  /** The slab restricted to its live rows, for exact scans — the slab
+    * itself when no node is dead. Derived once per shard object.
+    */
+  @transient lazy val live: VecBlock[K] =
+    if (dead == null) block
+    else {
+      val idx = liveNodes
+      val d = block.dim
+      val ids = scala.reflect.ClassTag[K](block.ids.getClass.getComponentType)
+        .newArray(idx.length)
+      val data = new Array[Float](idx.length * d)
+      val norms = if (block.norms == null) null else new Array[Double](idx.length)
+      var i = 0
+      while (i < idx.length) {
+        ids(i) = block.ids(idx(i))
+        System.arraycopy(block.data, idx(i) * d, data, i * d, d)
+        if (norms != null) norms(i) = block.norms(idx(i))
+        i += 1
+      }
+      new VecBlock[K](ids, data, d, norms)
+    }
+
+  /** The live rows of `q8`, this shard's int8 codes (one row per node). */
+  private[operators] def liveCodes(q8: graft.core.Q8Block[K]): graft.core.Q8Block[K] =
+    if (dead == null) q8
+    else {
+      val idx = liveNodes
+      val d = q8.dim
+      val codes = new Array[Byte](idx.length * d)
+      val scales = new Array[Float](idx.length)
+      var i = 0
+      while (i < idx.length) {
+        System.arraycopy(q8.codes, idx(i) * d, codes, i * d, d)
+        scales(i) = q8.scales(idx(i))
+        i += 1
+      }
+      new graft.core.Q8Block[K](live.ids, codes, d, scales,
+        if (q8.norms == null) null else idx.map(q8.norms(_)))
+    }
+}
 
 /** Distributed sharded-HNSW vector index: `RDD[HnswShard]`, one graph
   * per bounded slab (≤ `maxBlockFloats` floats ≈ 128 MB), persisted
@@ -157,17 +215,23 @@ final class HnswStore[K](
     if (prev != null && (prev ne next)) prev.unpersist(false)
   }
 
-  /** Force the build; returns (total rows, shard count). */
+  /** Force the build; returns (live rows, shard count). Dead nodes
+    * are not rows. Records the live row count and the dimension, so
+    * neither [[liveRowCount]] nor [[dim]] runs a job afterwards.
+    */
   def materialize(): (Long, Int) = {
-    val counts = shards.map(_.block.rows.toLong).collect()
+    val stats = shards.map(sh => (sh.liveRows.toLong, sh.block.dim)).collect()
     // executor copies of lineage-only broadcasts (rebuildTouched's
-    // dirty set — ADVICE r16) are safe to free once every shard is
-    // materialized; unpersist not destroy, so an evicted kept shard
-    // recomputing through its lineage just re-fetches from the driver
+    // dirty set and routing table — ADVICE r16) are safe to free once
+    // every shard is materialized; unpersist not destroy, so an evicted
+    // shard recomputing through its lineage just re-fetches them
     val rel = releaseOnMaterialize
     releaseOnMaterialize = Nil
     rel.foreach(_.unpersist(false))
-    (counts.sum, counts.length)
+    val rows = stats.map(_._1).sum
+    liveRowsVar = rows
+    dimVar = stats.headOption.map(_._2).getOrElse(-1)
+    (rows, stats.length)
   }
 
   // broadcast handles referenced only by this store's shard lineage,
@@ -177,9 +241,24 @@ final class HnswStore[K](
   @volatile private[operators] var releaseOnMaterialize:
     List[org.apache.spark.broadcast.Broadcast[_]] = Nil
 
-  /** Store dimension (one tiny job on first use; empty store → -1). */
-  lazy val dim: Int =
-    shards.map(_.block.dim).take(1).headOption.getOrElse(-1)
+  @volatile private var liveRowsVar: Long = -1L
+  @volatile private var dimVar: Int = Int.MinValue
+
+  /** Live rows, as of the last [[materialize]] (which runs if none has). */
+  def liveRowCount: Long = {
+    if (liveRowsVar < 0) materialize()
+    liveRowsVar
+  }
+
+  /** Store dimension (empty store → -1): learned by [[materialize]] or
+    * inherited from the store a refresh grew from, else one tiny job
+    * on first use.
+    */
+  def dim: Int = {
+    if (dimVar == Int.MinValue)
+      dimVar = shards.map(_.block.dim).take(1).headOption.getOrElse(-1)
+    dimVar
+  }
 
   /** Persist every shard (slab + graph topology) under `path` as an
     * immutable pointer-flipped snapshot; [[HnswStore.load]] restores
@@ -212,25 +291,19 @@ final class HnswStore[K](
     out
   }
 
-  /** Re-pack every row into fresh slab-sized shards and rebuild their
-    * graphs — O(N·log N) construction total but perfectly parallel
-    * (one build per slab task). Exact-mode results are unchanged
-    * (spec-pinned: packing is scoring-order-free); graph recall
-    * typically improves over a long append tail (fewer, larger
-    * graphs). Rows pass through byte-identically: unit slabs re-pack
-    * under `assumeNormalized`, cosine slabs re-pack raw with norms
-    * recomputed by the same arithmetic.
+  /** Re-pack every live row into fresh slab-sized shards and rebuild
+    * their graphs — O(N·log N) construction total but perfectly
+    * parallel (one build per slab task). Exact-mode results are
+    * unchanged (spec-pinned: packing is scoring-order-free); graph
+    * recall typically improves over a long append tail (fewer, larger
+    * graphs). Dead nodes are dropped. Rows pass through
+    * byte-identically: unit slabs re-pack under `assumeNormalized`,
+    * cosine slabs re-pack raw with norms recomputed by the same
+    * arithmetic.
     */
   def compact(numShards: Int = 0,
               maxBlockFloats: Int = BlockStore.MaxBlockFloats): HnswStore[K] = {
-    val rows = shards.flatMap { sh =>
-      val b = sh.block
-      val d = b.dim
-      Iterator.tabulate(b.rows) { r =>
-        (b.ids(r),
-          java.util.Arrays.copyOfRange(b.data, r * d, (r + 1) * d))
-      }
-    }
+    val rows = shards.flatMap(HnswStore.liveRowsOf[K])
     // numShards=0 folds to the cluster's parallelism — inheriting the
     // union's partitioning would rebuild the same fragmented layout
     val target =
@@ -240,75 +313,105 @@ final class HnswStore[K](
       numShards = target, maxBlockFloats = maxBlockFloats)
   }
 
-  /** Shard-local invalidation — the reference's incremental index
-    * maintenance (pico_vdb.py:195-204, 866-921,
-    * test_task36_faiss_incremental_threshold.py) done the distributed
-    * way: shards containing NO touched id keep their graphs (and their
-    * persist state flows through untouched — the union references the
-    * same cached shard objects), and ONLY the touched shards' rows +
-    * the mutated rows pay graph construction.
+  /** In-place shard maintenance — the reference's incremental index
+    * upkeep (FAISS `remove_ids` + `add_with_ids` under a 0.2 ratio,
+    * pico_vdb.py:195-204, 866-921,
+    * test_task36_faiss_incremental_threshold.py) done per shard, each
+    * shard in its own task, with no shuffle of store rows.
     *
     * `dirty` is every id upserted or deleted since this store was
     * built; `changed` is the CURRENT row of each dirty id that still
-    * exists (deleted ids simply absent). Surviving rows of touched
-    * shards re-extract from the shard slabs themselves (byte-identical
-    * floats, the [[compact]] convention), so the only store-scale work
-    * is an id scan over the persisted shards — nothing full-store
-    * shuffles; the one repartition moves just the repacked rows
-    * (bounded by the caller's incremental threshold). The repack
-    * target is as many graphs as the touched shards it replaces, or
-    * more when the rows exceed that many slabs
-    * (`ceil(repackRows / rowsPerSlab)`): a refresh builds its graphs
-    * as parallel as the build it updates, and a one-row update of a
-    * loaded store rebuilds exactly ONE graph
-    * ([[graft.core.Hnsw.buildsInJvm]]-pinned in HnswPersistSpec).
+    * exists (deleted ids simply absent). Per shard:
+    *  - tombstone: live nodes whose id is dirty join the shard's dead
+    *    mask (deleted ids, and the old versions of updated ones);
+    *  - insert: the shard's changed rows go into its existing graph
+    *    ([[graft.core.Hnsw.build]] from the shard's graph — one build,
+    *    the graph the shard held is not mutated);
+    *  - compact: once the shard's dead share passes `annIncrRatio`
+    *    (picovdb's 0.2), or the slab would outgrow `maxBlockFloats`,
+    *    its live rows and inserts re-pack into fresh slabs and graphs.
+    * A shard with nothing to do passes through as the same object; a
+    * tombstone-only update builds nothing.
     *
-    * The returned store is UNPERSISTED (its kept shards still read
-    * through this store's cache): persist + materialize it BEFORE
-    * unpersisting this store, or the kept graphs rebuild from lineage.
+    * Routing: an updated id's new row goes to the partition (and shard)
+    * that held its old row, so its dead and live versions share a
+    * shard; a new id goes to partition `hash mod partitions`, into that
+    * partition's last shard (a fresh one if it holds none). One job
+    * over the shards' ids finds the held ids; the changed rows (bounded
+    * by the caller's incremental threshold) shuffle to their
+    * partitions and zip with the shards. Inserts are applied in id
+    * order, so a refresh is deterministic.
+    *
+    * The returned store's shards are locally checkpointed: its first
+    * materialization cuts their lineage, which would otherwise grow by
+    * one zip per refresh. Persist + materialize it BEFORE unpersisting
+    * this store, which its shards read until then.
     */
   def rebuildTouched(dirty: Set[K], changed: RDD[(K, Array[Float])],
       maxBlockFloats: Int = BlockStore.MaxBlockFloats): HnswStore[K] = {
     if (dirty.isEmpty) return this
     val sc = shards.sparkContext
+    val nParts = shards.getNumPartitions
+    if (nParts == 0)
+      return HnswStore.fromRDD(spark, changed, normalize = false,
+        assumeNormalized = normalized, m = m, efConstruction = efConstruction,
+        maxBlockFloats = maxBlockFloats)
     val bc = sc.broadcast(dirty)
-    val keep = shards.filter { sh =>
+    // the one lookup job: the partition holding each dirty id's live node
+    val held = shards.mapPartitionsWithIndex { (pi, it) =>
       val d = bc.value
-      !sh.block.ids.exists(d.contains)
-    }
-    val touched = shards.filter { sh =>
+      it.flatMap { sh =>
+        val ids = sh.block.ids
+        (0 until sh.block.rows).iterator
+          .filter(r => sh.isLive(r) && d.contains(ids(r)))
+          .map(r => (ids(r), pi))
+      }
+    }.collect().toMap
+    val bcHeld = sc.broadcast(held)
+    val routed = changed.map { row =>
+      (bcHeld.value.getOrElse(row._1, math.floorMod(row._1.hashCode, nParts)), row)
+    }.partitionBy(new org.apache.spark.HashPartitioner(nParts))
+    val ratio = new graft.core.GraftConf(spark).annIncrRatio
+    val norm = normalized
+    val mm = m
+    val efc = efConstruction
+    val mbf = maxBlockFloats
+    val localOrd = ord
+    val localCt = ct
+    val next = shards.zipPartitions(routed) { (shIt, rowIt) =>
       val d = bc.value
-      sh.block.ids.exists(d.contains)
+      val shs = shIt.toArray
+      val rows = rowIt.map(_._2).toArray.sortBy(_._1)(localOrd)
+      if (shs.isEmpty) HnswStore.buildShards(rows.iterator, norm, mbf, mm, efc)(localCt)
+      else {
+        // per shard: the nodes to tombstone; an updated id's insert
+        // follows its old node, a new id's goes to the last shard
+        val owner = new java.util.HashMap[K, Integer]()
+        val kills = shs.zipWithIndex.map { case (sh, si) =>
+          val ids = sh.block.ids
+          val bits = new java.util.BitSet(sh.block.rows)
+          var r = 0
+          while (r < sh.block.rows) {
+            if (sh.isLive(r) && d.contains(ids(r))) { bits.set(r); owner.put(ids(r), si) }
+            r += 1
+          }
+          bits
+        }
+        val inserts = shs.indices.map(_ => Array.newBuilder[(K, Array[Float])])
+        rows.foreach { row =>
+          val si = owner.get(row._1)
+          inserts(if (si == null) shs.length - 1 else si.intValue) += row
+        }
+        shs.iterator.zipWithIndex.flatMap { case (sh, si) =>
+          HnswStore.updateShard(sh, kills(si), inserts(si).result(),
+            norm, ratio, mbf, mm, efc)(localCt)
+        }
+      }
     }
-    val survivors = touched.flatMap { sh =>
-      val d = bc.value
-      val b = sh.block
-      val dm = b.dim
-      Iterator.tabulate(b.rows) { r =>
-        (b.ids(r), java.util.Arrays.copyOfRange(b.data, r * dm, (r + 1) * dm))
-      }.filterNot(row => d.contains(row._1))
-    }
-    val repack = survivors.union(changed)
-    // one job sizes the repack: (touched shards, rows to repack, row dim)
-    val (nTouched, nRows, rowDim) = touched.map { sh =>
-      val d = bc.value
-      (1L, sh.block.ids.count(id => !d.contains(id)).toLong, sh.block.dim)
-    }.union(changed.map(row => (0L, 1L, row._2.length)))
-      .fold((0L, 0L, 0)) { (a, b) => (a._1 + b._1, a._2 + b._2, math.max(a._3, b._3)) }
-    if (nRows == 0) {
-      val out = new HnswStore[K](spark, keep, normalized, m, efConstruction)
-      out.releaseOnMaterialize = List(bc)
-      return out
-    }
-    val rowsPerSlab = math.max(1, maxBlockFloats / math.max(1, rowDim))
-    val slabs = (nRows + rowsPerSlab - 1) / rowsPerSlab
-    val nPart = math.max(1L, math.min(nRows, math.max(slabs, nTouched))).toInt
-    val extra = HnswStore.fromRDD(spark, repack.repartition(nPart),
-      normalize = false, assumeNormalized = normalized,
-      m = m, efConstruction = efConstruction, maxBlockFloats = maxBlockFloats)
-    val out = new HnswStore[K](spark, keep.union(extra.shards), normalized,
-      m, efConstruction)
-    out.releaseOnMaterialize = List(bc)
+    next.localCheckpoint()
+    val out = new HnswStore[K](spark, next, normalized, m, efConstruction)
+    out.dimVar = dimVar
+    out.releaseOnMaterialize = List(bc, bcHeld)
     out
   }
 
@@ -669,8 +772,10 @@ object HnswStore {
     }
   }
 
-  /** The unfiltered scorer: the exact sequential-double scoreBlock, or
-    * one beam search per query at `max(ef, k)`.
+  /** The unfiltered scorer: the exact sequential-double scoreBlock over
+    * the live rows, or one beam search per query at `max(ef, k)` — a
+    * walk that denies dead nodes at result collection when the shard
+    * has any.
     */
   private[operators] def scoreShard[K](k: Int, ef: Int, exact: Boolean)
       : Scorer[K, HnswShard[K]] = {
@@ -679,13 +784,17 @@ object HnswStore {
       val (_, qvecs, qnorms, qunits) = q
       requireShardDim(shard.block.dim, qvecs)
       if (exact) {
-        BlockStore.scoreBlock(heaps, shard.block, qvecs, qnorms,
+        BlockStore.scoreBlock(heaps, shard.live, qvecs, qnorms,
           Double.NegativeInfinity, exact = true)
       } else {
         val ids = shard.block.ids
+        val dead = shard.dead
+        val alive = (i: Int) => !dead.get(i)
         var qi = 0
         while (qi < qunits.length) {
-          val hits = shard.graph.search(qunits(qi), k, efk)
+          val hits =
+            if (dead == null) shard.graph.search(qunits(qi), k, efk)
+            else shard.graph.searchFiltered(qunits(qi), k, efk, alive)
           var h = 0
           while (h < hits.length) {
             heaps(qi).offer(hits(h)._2, ids(hits(h)._1))
@@ -698,11 +807,12 @@ object HnswStore {
   }
 
   /** The membership scorer — see [[HnswStore!.searchMergedMember]]. In
-    * exact mode (or when the beam already covers the slab) this IS the
-    * exact member scan; otherwise each query runs the filtered beam
-    * search, snapping to the exact member scan on underfill (see the
+    * exact mode (or when the beam already covers the live rows) this IS
+    * the exact member scan over the live rows; otherwise each query
+    * runs the filtered beam search (dead nodes never accepted),
+    * snapping to the exact member scan on underfill (see the
     * component-exhaustion proof inline) — so a shard under-reports a
-    * query only when it truly holds fewer than k member rows.
+    * query only when it truly holds fewer than k live member rows.
     */
   private[operators] def scoreShardMember[K: ClassTag](k: Int, ef: Int,
       exact: Boolean): Scorer[K, HnswShard[K]] = {
@@ -710,12 +820,12 @@ object HnswStore {
     (heaps, shard, q, member, deny, widen) => {
       val (_, qvecs, qnorms, qunits) = q
       requireShardDim(shard.block.dim, qvecs)
-      if (exact || efk >= shard.block.rows) {
-        BlockStore.scoreBlockMember(heaps, shard.block, qvecs, qnorms,
+      if (exact || efk >= shard.liveRows) {
+        BlockStore.scoreBlockMember(heaps, shard.live, qvecs, qnorms,
           member, deny, exact)
       } else {
         val ids = shard.block.ids
-        val accept = (i: Int) => member.contains(ids(i)) != deny
+        val accept = (i: Int) => shard.isLive(i) && member.contains(ids(i)) != deny
         var qi = 0
         while (qi < qunits.length) {
           val hits = shard.graph.searchFiltered(qunits(qi), k, efk, accept)
@@ -738,7 +848,7 @@ object HnswStore {
             widen.add(1L)
             val qv = Array(qvecs(qi))
             val qn = if (qnorms == null) null else Array(qnorms(qi))
-            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.block,
+            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.live,
               qv, qn, member, deny, exact)
           }
           qi += 1
@@ -749,8 +859,8 @@ object HnswStore {
 
   /** The membership scorer with the INT8 traversal composition — see
     * [[HnswStore!.searchMergedMemberQ8]]. At a covering beam (`ef >=`
-    * shard rows) the quantized MEMBER SCAN over the shard's int8 unit
-    * slab replaces the walk (keeping the compressed tier in the
+    * live shard rows) the quantized MEMBER SCAN over the live rows of
+    * the shard's int8 unit slab replaces the walk (keeping the compressed tier in the
     * covering-parity path, the q84/q95 rule), with ONE fused fp32
     * double rescore of the `scanK = k × overfetch` survivors from the
     * co-resident slab; otherwise each query runs the int8 filtered beam
@@ -773,15 +883,16 @@ object HnswStore {
       val d = shard.block.dim
       requireShardDim(d, qvecs)
       val ids = shard.block.ids
-      if (efk >= shard.block.rows) {
+      if (efk >= shard.liveRows) {
         // covering beam: int8 member scan (unit rows, so qnorms = null —
         // the dequantized dot IS the cosine estimate) + fused rescore
         val scanHeaps = HnswStore.heaps[K](qunits.length, scanK)
-        Q8Store.scoreBlockMember(scanHeaps, q8, qunits, null, member, deny)
+        Q8Store.scoreBlockMember(scanHeaps, shard.liveCodes(q8), qunits, null,
+          member, deny)
         val cands = Q8Store.CandIndex.build[K](scanHeaps.map(_.sortedHits()))
-        Q8Store.rescoreBlock(heaps, shard.block, cands, qvecs, qnorms)
+        Q8Store.rescoreBlock(heaps, shard.live, cands, qvecs, qnorms)
       } else {
-        val accept = (i: Int) => member.contains(ids(i)) != deny
+        val accept = (i: Int) => shard.isLive(i) && member.contains(ids(i)) != deny
         val data = shard.block.data
         val vnorms = shard.block.norms
         var qi = 0
@@ -810,7 +921,7 @@ object HnswStore {
             widen.add(1L)
             val qv = Array(qvecs(qi))
             val qn = if (qnorms == null) null else Array(qnorms(qi))
-            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.block,
+            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.live,
               qv, qn, member, deny, exact = true)
           }
           qi += 1
@@ -857,13 +968,68 @@ object HnswStore {
     val assume = assumeNormalized
     val mbf = maxBlockFloats
     val shards = rdd.mapPartitions { it =>
-      BlockStore.packPartition[K](it, norm, assume, mbf).map { block =>
-        val unit = unitOf(block)
-        new HnswShard[K](block, unit,
-          Hnsw.build(unit, block.rows, block.dim, mm, efc))
-      }
+      BlockStore.packPartition[K](it, norm, assume, mbf).map(shardOf(_, mm, efc))
     }
     new HnswStore[K](spark, shards, norm || assume, m, efConstruction)
+  }
+
+  /** A shard over `block` with a freshly built graph. */
+  private def shardOf[K](block: VecBlock[K], m: Int, efc: Int): HnswShard[K] = {
+    val unit = unitOf(block)
+    new HnswShard[K](block, unit, Hnsw.build(unit, block.rows, block.dim, m, efc))
+  }
+
+  /** Pack rows that are unit (`normalized`) or raw into slab-sized
+    * shards, one fresh graph each — the per-partition build of
+    * [[fromRDD]], [[compact]] and a refresh's compaction.
+    */
+  private[operators] def buildShards[K: ClassTag](
+      rows: Iterator[(K, Array[Float])], normalized: Boolean,
+      maxBlockFloats: Int, m: Int, efc: Int): Iterator[HnswShard[K]] =
+    BlockStore.packPartition[K](rows, normalize = false,
+      assumeNormalized = normalized, maxBlockFloats = maxBlockFloats)
+      .map(shardOf(_, m, efc))
+
+  /** The live (id, row) pairs of a shard, rows copied out of the slab. */
+  private[operators] def liveRowsOf[K](sh: HnswShard[K]): Iterator[(K, Array[Float])] = {
+    val b = sh.block
+    val d = b.dim
+    (0 until b.rows).iterator.filter(sh.isLive).map { r =>
+      (b.ids(r), java.util.Arrays.copyOfRange(b.data, r * d, (r + 1) * d))
+    }
+  }
+
+  /** One shard's refresh step (see [[HnswStore!.rebuildTouched]]):
+    * tombstone the nodes in `kill`, then insert `rows` into the graph,
+    * or compact the shard when its dead share passes `ratio` or the
+    * slab would outgrow `maxBlockFloats`. Yields the shard itself when
+    * there is nothing to do, and nothing when compaction leaves no row.
+    */
+  private[operators] def updateShard[K: ClassTag](sh: HnswShard[K],
+      kill: java.util.BitSet, rows: Array[(K, Array[Float])],
+      normalized: Boolean, ratio: Double, maxBlockFloats: Int,
+      m: Int, efc: Int): Iterator[HnswShard[K]] = {
+    if (kill.isEmpty && rows.isEmpty) return Iterator(sh)
+    val dead = kill.clone().asInstanceOf[java.util.BitSet]
+    if (sh.dead != null) dead.or(sh.dead)
+    val b = sh.block
+    val nodes = b.rows + rows.length
+    val tomb = new HnswShard[K](b, sh.unit, sh.graph, if (dead.isEmpty) null else dead)
+    if (dead.cardinality() > ratio * nodes ||
+        nodes.toLong * b.dim > maxBlockFloats)
+      buildShards(liveRowsOf(tomb) ++ rows.iterator, normalized, maxBlockFloats, m, efc)
+    else if (rows.isEmpty) Iterator(tomb)
+    else {
+      val add = BlockStore.packPartition[K](rows.iterator, normalize = false,
+        assumeNormalized = normalized, maxBlockFloats = Int.MaxValue).next()
+      require(add.dim == b.dim,
+        s"HnswStore: inserted rows have dim ${add.dim}, shard dim is ${b.dim}")
+      val block = new VecBlock[K](b.ids ++ add.ids, b.data ++ add.data, b.dim,
+        if (b.norms == null) null else b.norms ++ add.norms)
+      val unit = if (block.norms == null) block.data else sh.unit ++ unitOf(add)
+      val graph = Hnsw.build(unit, nodes, b.dim, m, efc, start = Some(sh.graph))
+      Iterator(new HnswShard[K](block, unit, graph, tomb.dead))
+    }
   }
 
   /** Unit-row matrix for graph traversal over `block`: the slab itself

@@ -486,8 +486,8 @@ class HnswPersistSpec extends AnyFunSuite {
     val got = loaded.queryOne(probe, topK = 1)
     assert(loaded.lastQueryStrategy.contains("hnsw"))
     assert(got.head.id == "h020")
-    assert(Hnsw.buildsInJvm == before4 + 1,
-      "a shared-slab delete re-packs that slab's survivors only")
+    assert(Hnsw.buildsInJvm == before4,
+      "a shared-slab delete tombstones the row and builds nothing")
 
     // 5) the cap gates the path: cap 0 falls back to the full rebuild
     spark.conf.set("graft.hnsw.incr.cap", "0")
