@@ -360,12 +360,7 @@ final class HnswStore[K](
     // the one lookup job: the partition holding each dirty id's live node
     val held = shards.mapPartitionsWithIndex { (pi, it) =>
       val d = bc.value
-      it.flatMap { sh =>
-        val ids = sh.block.ids
-        (0 until sh.block.rows).iterator
-          .filter(r => sh.isLive(r) && d.contains(ids(r)))
-          .map(r => (ids(r), pi))
-      }
+      it.flatMap(sh => HnswStore.liveDirty(sh, d).map(r => (sh.block.ids(r), pi)))
     }.collect().toMap
     val bcHeld = sc.broadcast(held)
     val routed = changed.map { row =>
@@ -388,12 +383,10 @@ final class HnswStore[K](
         // follows its old node, a new id's goes to the last shard
         val owner = new java.util.HashMap[K, Integer]()
         val kills = shs.zipWithIndex.map { case (sh, si) =>
-          val ids = sh.block.ids
           val bits = new java.util.BitSet(sh.block.rows)
-          var r = 0
-          while (r < sh.block.rows) {
-            if (sh.isLive(r) && d.contains(ids(r))) { bits.set(r); owner.put(ids(r), si) }
-            r += 1
+          HnswStore.liveDirty(sh, d).foreach { r =>
+            bits.set(r)
+            owner.put(sh.block.ids(r), si)
           }
           bits
         }
@@ -989,6 +982,11 @@ object HnswStore {
     BlockStore.packPartition[K](rows, normalize = false,
       assumeNormalized = normalized, maxBlockFloats = maxBlockFloats)
       .map(shardOf(_, m, efc))
+
+  /** The live nodes of a shard whose id is in `dirty`. */
+  private def liveDirty[K](sh: HnswShard[K], dirty: Set[K]): Iterator[Int] =
+    (0 until sh.block.rows).iterator
+      .filter(r => sh.isLive(r) && dirty.contains(sh.block.ids(r)))
 
   /** The live (id, row) pairs of a shard, rows copied out of the slab. */
   private[operators] def liveRowsOf[K](sh: HnswShard[K]): Iterator[(K, Array[Float])] = {
