@@ -444,17 +444,16 @@ object Hnsw {
             batch: Int = 256, seedSequential: Int = 1024,
             parallelism: Int = 0, start: Option[Hnsw] = None): Hnsw = {
     require(n >= 0 && dim > 0 && data.length >= n * dim)
-    start.foreach { g =>
-      require(g.dim == dim && g.m == m && g.n <= n,
-        s"start graph (n=${g.n}, dim=${g.dim}, m=${g.m}) cannot grow to " +
-          s"(n=$n, dim=$dim, m=$m)")
-    }
-    val n0 = start.fold(0)(_.n)
+    val g = start.orNull
+    require(g == null || (g.dim == dim && g.m == m && g.n <= n),
+      s"start graph (n=${g.n}, dim=${g.dim}, m=${g.m}) cannot grow to " +
+        s"(n=$n, dim=$dim, m=$m)")
+    val n0 = if (g == null) 0 else g.n
     val mMax = m
     val mMax0 = 2 * m
     val mL = 1.0 / math.log(m.toDouble)
     val levels = Array.tabulate(n) { i =>
-      if (i < n0) start.get.levels(i)
+      if (i < n0) g.levels(i)
       else {
         // per-node deterministic level draw
         val r = new java.util.Random(i * 0x9E3779B97F4A7C15L + 0x2545F4914F6CDD1DL)
@@ -465,16 +464,13 @@ object Hnsw {
     val nbrs = Array.tabulate(n)(i =>
       Array.tabulate(levels(i) + 1) { l =>
         val ns = new Array[Int](if (l == 0) mMax0 else mMax)
-        if (i < n0) {
-          val g = start.get
-          System.arraycopy(g.nbrs(i)(l), 0, ns, 0, g.nbrCnt(i)(l))
-        }
+        if (i < n0) System.arraycopy(g.nbrs(i)(l), 0, ns, 0, g.nbrCnt(i)(l))
         ns
       })
     val nbrCnt = Array.tabulate(n)(i =>
-      if (i < n0) start.get.nbrCnt(i).clone() else new Array[Int](levels(i) + 1))
-    var entry = start.fold(-1)(_.entry)
-    var maxLevel = start.fold(-1)(_.maxLevel)
+      if (i < n0) g.nbrCnt(i).clone() else new Array[Int](levels(i) + 1))
+    var entry = if (g == null) -1 else g.entry
+    var maxLevel = if (g == null) -1 else g.maxLevel
 
     def simIJ(a: Int, q: Array[Float]): Double =
       Kernels.dotPackedF(q, data, a * dim).toDouble

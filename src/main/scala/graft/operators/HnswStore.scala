@@ -781,13 +781,11 @@ object HnswStore {
           Double.NegativeInfinity, exact = true)
       } else {
         val ids = shard.block.ids
-        val dead = shard.dead
-        val alive = (i: Int) => !dead.get(i)
         var qi = 0
         while (qi < qunits.length) {
           val hits =
-            if (dead == null) shard.graph.search(qunits(qi), k, efk)
-            else shard.graph.searchFiltered(qunits(qi), k, efk, alive)
+            if (shard.dead == null) shard.graph.search(qunits(qi), k, efk)
+            else shard.graph.searchFiltered(qunits(qi), k, efk, shard.isLive)
           var h = 0
           while (h < hits.length) {
             heaps(qi).offer(hits(h)._2, ids(hits(h)._1))

@@ -300,7 +300,8 @@ class HnswStoreSpec extends AnyFunSuite {
           .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
       def recall(st: HnswStore[Long], qs: Array[(Long, Array[Float])],
                  want: Map[Long, Seq[(Long, Double)]]): Double = {
-        val got = hits(st.searchMerged(qs, 10, ef = 32)).groupBy(_._1)
+        // the smallest beam (ef = k), so graph quality shows in recall
+        val got = hits(st.searchMerged(qs, 10, ef = 10)).groupBy(_._1)
         qs.map { case (qid, _) =>
           val g = got.getOrElse(qid, Array.empty).map(_._3).toSet
           want(qid).count(w => g(w._1)).toDouble / want(qid).size
