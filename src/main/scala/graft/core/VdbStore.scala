@@ -504,7 +504,7 @@ final class VdbStore private (
 
   def disableHnsw(): Unit = hnswLock.synchronized {
     hnswParams = None
-    hnswCache.foreach(_._3.unpersist())
+    hnswCache.foreach(_._3.retire())
     hnswCache = None
     hnswResetDirty()
   }
@@ -560,7 +560,7 @@ final class VdbStore private (
       // a pre-existing cache (the post-save rehydrate path) is rooted
       // in superseded lineage — release it either way; on success the
       // loaded store takes its place
-      hnswCache.foreach(_._3.unpersist())
+      hnswCache.foreach(_._3.retire())
       hnswCache = None
       dir.foreach { d =>
         try {
@@ -597,7 +597,12 @@ final class VdbStore private (
       hnswResetDirty()
     }
 
-  private def refreshHnsw(): Option[graft.operators.HnswStore[String]] =
+  /** The up-to-date graph store, refreshed if a write made it stale,
+    * pinned for the calling read: it joins `pins`, which the call
+    * releases when it returns ([[timedReading]]), so a concurrent
+    * refresh cannot free it under the read.
+    */
+  private def refreshHnsw(pins: HnswPins): Option[graft.operators.HnswStore[String]] =
     hnswLock.synchronized {
       hnswParams.map { params =>
         hnswCache match {
@@ -663,14 +668,27 @@ final class VdbStore private (
               hnswCache = Some((storeVersion, params, st))
               // the incremental store's shards read through the
               // previous cache until materialized above — safe to
-              // release the old handle now (never when reusing it)
-              old.filter(_._3 ne st).foreach(_._3.unpersist())
+              // release the old handle now (never when reusing it);
+              // reads still pinned on it, or lazy frames over it, keep
+              // it readable
+              old.filter(_._3 ne st).foreach(_._3.retire())
               hnswResetDirty()
               st
             }
         }
-      }
+      }.map { st => st.acquire(); pins += st; st }
     }
+
+  private type HnswPins =
+    scala.collection.mutable.ListBuffer[graft.operators.HnswStore[String]]
+
+  /** [[timed]] for a read that may use the graph store: every store
+    * [[refreshHnsw]] pins for it is released when it returns.
+    */
+  private def timedReading[T](op: String)(f: HnswPins => T): T = {
+    val pins: HnswPins = scala.collection.mutable.ListBuffer.empty
+    timed(op)(try f(pins) finally pins.foreach(_.release()))
+  }
 
   /** Introspection: (enabled, nList, lastRebuildMode, upToDate) — the
     * reference records `_last_faiss_rebuild_mode` the same way
@@ -938,7 +956,7 @@ final class VdbStore private (
       ids: Option[Seq[String]] = None,
       whereFn: Option[(String, String) => Boolean] = None,
       nProbe: Int = 0,
-      efSearch: Int = 0): Seq[Seq[VdbHit]] = timed("query") {
+      efSearch: Int = 0): Seq[Seq[VdbHit]] = timedReading("query") { pins =>
     // reference's batch-shape message (pico_vdb.py:572-575)
     vectors.foreach { v =>
       require(v.length == dim,
@@ -984,7 +1002,7 @@ final class VdbStore private (
     val hnswFiltered: Option[(graft.operators.HnswStore[String], MemberTest[String], Boolean, Boolean)] =
       if (hnswParams.isEmpty) None
       else filteredMember.flatMap { case (m, dny, bloom) =>
-        refreshHnsw().map(h => (h, m, dny, bloom))
+        refreshHnsw(pins).map(h => (h, m, dny, bloom))
       }
     val annFiltered: Option[(graft.operators.IvfIndex, MemberTest[String], Boolean, Boolean)] =
       if (hnswFiltered.isDefined || annNList.isEmpty) None
@@ -996,7 +1014,7 @@ final class VdbStore private (
     // every accelerator alike)
     val hnsw =
       if (annFiltered.isEmpty && hnswFiltered.isEmpty && unfiltered &&
-          betterThan.isEmpty) refreshHnsw()
+          betterThan.isEmpty) refreshHnsw(pins)
       else None
     val ann =
       if (hnsw.isEmpty && unfiltered && betterThan.isEmpty) refreshAnn()
@@ -1303,7 +1321,7 @@ final class VdbStore private (
               ids: Option[Seq[String]] = None,
               whereFn: Option[(String, String) => Boolean] = None,
               nProbe: Int = 0,
-              efSearch: Int = 0): DataFrame = timed("queryDF") {
+              efSearch: Int = 0): DataFrame = timedReading("queryDF") { pins =>
     import spark.implicits._
     val qds0 = queries
       .select(col(qidCol).cast(LongType).as("qid"),
@@ -1325,7 +1343,7 @@ final class VdbStore private (
     val hnswFiltered =
       if (hnswParams.isEmpty) None
       else filteredMember.flatMap { case (m, dny, _) =>
-        refreshHnsw().map(h => (h, m, dny))
+        refreshHnsw(pins).map(h => (h, m, dny))
       }
     val annFiltered =
       if (hnswFiltered.isDefined || annNList.isEmpty) None
@@ -1334,7 +1352,7 @@ final class VdbStore private (
       }
     val hnsw =
       if (hnswFiltered.isEmpty && annFiltered.isEmpty && unfiltered &&
-          betterThan.isEmpty) refreshHnsw()
+          betterThan.isEmpty) refreshHnsw(pins)
       else None
     val ann =
       if (hnsw.isEmpty && hnswFiltered.isEmpty && annFiltered.isEmpty &&

@@ -24,7 +24,8 @@ import graft.core.{BlockStore, BoundedTopKG, Hnsw, VecBlock}
   * compacted ([[HnswStore.rebuildTouched]]), but no search returns it.
   * The mask is by node, not by id, because one shard can hold a dead
   * old version and a live new version of the same id. Graph walks
-  * filter dead nodes at result collection; exact scans read [[live]].
+  * filter dead nodes at result collection; exact scans read
+  * [[liveBlock]].
   */
 final class HnswShard[K](
     val block: VecBlock[K],
@@ -37,13 +38,17 @@ final class HnswShard[K](
   def isLive(node: Int): Boolean = dead == null || !dead.get(node)
 
   /** Node indices of the live rows, ascending. */
-  @transient lazy val liveNodes: Array[Int] =
-    (0 until block.rows).filter(isLive).toArray
+  def liveNodes: Array[Int] = (0 until block.rows).filter(isLive).toArray
 
   /** The slab restricted to its live rows, for exact scans — the slab
-    * itself when no node is dead. Derived once per shard object.
+    * itself when no node is dead, else a copy made on every call. Not
+    * cached on the shard: a cached copy would be up to a slab of heap
+    * the block manager does not count, derived again by every
+    * deserialized copy of the shard (the reason the q8 codes are a
+    * persisted RDD, see [[HnswStore]]). Scorers take it once per
+    * partition call, and only on the exact paths.
     */
-  @transient lazy val live: VecBlock[K] =
+  def liveBlock(): VecBlock[K] =
     if (dead == null) block
     else {
       val idx = liveNodes
@@ -62,8 +67,11 @@ final class HnswShard[K](
       new VecBlock[K](ids, data, d, norms)
     }
 
-  /** The live rows of `q8`, this shard's int8 codes (one row per node). */
-  private[operators] def liveCodes(q8: graft.core.Q8Block[K]): graft.core.Q8Block[K] =
+  /** The live rows of `q8`, this shard's int8 codes (one row per node),
+    * beside `live`, this shard's [[liveBlock]].
+    */
+  private[operators] def liveCodes(q8: graft.core.Q8Block[K],
+                                   live: VecBlock[K]): graft.core.Q8Block[K] =
     if (dead == null) q8
     else {
       val idx = liveNodes
@@ -136,6 +144,42 @@ final class HnswStore[K](
       if (q8ShardsRef != null) { q8ShardsRef.unpersist(blocking); q8ShardsRef = null }
     }
   }
+
+  /** Pin this store for a read in flight: a [[retire]] that comes
+    * first waits for the matching [[release]].
+    */
+  private[graft] def acquire(): Unit = synchronized { readers += 1 }
+
+  private[graft] def release(): Unit = synchronized {
+    readers -= 1
+    if (readers == 0 && retired) free()
+  }
+
+  /** Release a store that a newer one supersedes, once no read pinned
+    * by [[acquire]] is in flight. The shards of a refreshed store are
+    * locally checkpointed ([[rebuildTouched]]): freeing their blocks
+    * leaves nothing to recompute them from. So when a lazy frame over
+    * them was handed out (the query-table searches), the shard blocks
+    * stay for the ContextCleaner to free once nothing references the
+    * shards, and only the store's other caches go now. Otherwise the
+    * store is unpersisted.
+    */
+  def retire(): Unit = synchronized {
+    retired = true
+    if (readers == 0) free()
+  }
+
+  private def free(): Unit =
+    if (escaped && shards.isCheckpointed) {
+      swapQPrep(null)
+      if (q8ShardsRef != null) { q8ShardsRef.unpersist(false); q8ShardsRef = null }
+    } else unpersist()
+
+  // guarded by this: reads pinned in flight, whether a lazy frame over
+  // the shards was handed out, whether a newer store supersedes this one
+  private var readers = 0
+  private var escaped = false
+  private var retired = false
 
   // stores whose persisted shards only this store's union reads
   // ([[append]]'s new segment): released with this store
@@ -328,15 +372,19 @@ final class HnswStore[K](
     *    ([[graft.core.Hnsw.build]] from the shard's graph — one build,
     *    the graph the shard held is not mutated);
     *  - compact: once the shard's dead share passes `annIncrRatio`
-    *    (picovdb's 0.2), or the slab would outgrow `maxBlockFloats`,
-    *    its live rows and inserts re-pack into fresh slabs and graphs.
+    *    (picovdb's 0.2), its live rows and inserts re-pack into fresh
+    *    slabs and graphs.
     * A shard with nothing to do passes through as the same object; a
     * tombstone-only update builds nothing.
     *
     * Routing: an updated id's new row goes to the partition (and shard)
     * that held its old row, so its dead and live versions share a
     * shard; a new id goes to partition `hash mod partitions`, into that
-    * partition's last shard (a fresh one if it holds none). One job
+    * partition's last shard (a fresh one if it holds none). A shard
+    * whose slab is full (`maxBlockFloats`, as packed) passes its rows
+    * to the partition's last shard, and past that one's room they
+    * build fresh shards, so an update to a full slab tombstones there
+    * and never rebuilds it. One job
     * over the shards' ids finds the held ids; the changed rows (bounded
     * by the caller's incremental threshold) shuffle to their
     * partitions and zip with the shards. Inserts are applied in id
@@ -344,8 +392,10 @@ final class HnswStore[K](
     *
     * The returned store's shards are locally checkpointed: its first
     * materialization cuts their lineage, which would otherwise grow by
-    * one zip per refresh. Persist + materialize it BEFORE unpersisting
-    * this store, which its shards read until then.
+    * one zip per refresh. Persist + materialize it BEFORE releasing
+    * this store, which its shards read until then, and release this
+    * one with [[retire]]: checkpointed shards cannot be recomputed, so
+    * a lazy frame over them must keep their blocks.
     */
   def rebuildTouched(dirty: Set[K], changed: RDD[(K, Array[Float])],
       maxBlockFloats: Int = BlockStore.MaxBlockFloats): HnswStore[K] = {
@@ -390,15 +440,26 @@ final class HnswStore[K](
           }
           bits
         }
+        // a shard with no room left (packPartition fills every slab but
+        // the last) passes the row to the last shard, else to fresh
+        // shards: the two versions of an id need only share a partition
+        val last = shs.length - 1
+        val cap = math.max(1, mbf / math.max(1, shs(last).block.dim))
+        val room = shs.map(sh => cap - sh.block.rows)
         val inserts = shs.indices.map(_ => Array.newBuilder[(K, Array[Float])])
+        val spill = Array.newBuilder[(K, Array[Float])]
         rows.foreach { row =>
           val si = owner.get(row._1)
-          inserts(if (si == null) shs.length - 1 else si.intValue) += row
+          val at = Seq(if (si == null) last else si.intValue, last).find(room(_) > 0)
+          at match {
+            case Some(i) => inserts(i) += row; room(i) -= 1
+            case None => spill += row
+          }
         }
         shs.iterator.zipWithIndex.flatMap { case (sh, si) =>
           HnswStore.updateShard(sh, kills(si), inserts(si).result(),
             norm, ratio, mbf, mm, efc)(localCt)
-        }
+        } ++ HnswStore.buildShards(spill.result().iterator, norm, mbf, mm, efc)(localCt)
       }
     }
     next.localCheckpoint()
@@ -626,6 +687,7 @@ final class HnswStore[K](
             else HnswStore.ranked(prep._1, merged, k).toSeq
           spark.createDataset(rows)(outEnc)
         case Right(ds) =>
+          synchronized { escaped = true } // the frame reads the shards lazily
           val norm = normalized
           val bcMem = if (filtered) sc.broadcast((member, deny)) else null
           val qblocks = ds.rdd.mapPartitionsWithIndex { (pi, it) =>
@@ -777,7 +839,7 @@ object HnswStore {
       val (_, qvecs, qnorms, qunits) = q
       requireShardDim(shard.block.dim, qvecs)
       if (exact) {
-        BlockStore.scoreBlock(heaps, shard.live, qvecs, qnorms,
+        BlockStore.scoreBlock(heaps, shard.liveBlock(), qvecs, qnorms,
           Double.NegativeInfinity, exact = true)
       } else {
         val ids = shard.block.ids
@@ -812,11 +874,12 @@ object HnswStore {
       val (_, qvecs, qnorms, qunits) = q
       requireShardDim(shard.block.dim, qvecs)
       if (exact || efk >= shard.liveRows) {
-        BlockStore.scoreBlockMember(heaps, shard.live, qvecs, qnorms,
+        BlockStore.scoreBlockMember(heaps, shard.liveBlock(), qvecs, qnorms,
           member, deny, exact)
       } else {
         val ids = shard.block.ids
         val accept = (i: Int) => shard.isLive(i) && member.contains(ids(i)) != deny
+        lazy val live = shard.liveBlock() // underfill snaps only
         var qi = 0
         while (qi < qunits.length) {
           val hits = shard.graph.searchFiltered(qunits(qi), k, efk, accept)
@@ -839,7 +902,7 @@ object HnswStore {
             widen.add(1L)
             val qv = Array(qvecs(qi))
             val qn = if (qnorms == null) null else Array(qnorms(qi))
-            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.live,
+            BlockStore.scoreBlockMember(Array(heaps(qi)), live,
               qv, qn, member, deny, exact)
           }
           qi += 1
@@ -877,15 +940,17 @@ object HnswStore {
       if (efk >= shard.liveRows) {
         // covering beam: int8 member scan (unit rows, so qnorms = null —
         // the dequantized dot IS the cosine estimate) + fused rescore
+        val live = shard.liveBlock()
         val scanHeaps = HnswStore.heaps[K](qunits.length, scanK)
-        Q8Store.scoreBlockMember(scanHeaps, shard.liveCodes(q8), qunits, null,
-          member, deny)
+        Q8Store.scoreBlockMember(scanHeaps, shard.liveCodes(q8, live), qunits,
+          null, member, deny)
         val cands = Q8Store.CandIndex.build[K](scanHeaps.map(_.sortedHits()))
-        Q8Store.rescoreBlock(heaps, shard.live, cands, qvecs, qnorms)
+        Q8Store.rescoreBlock(heaps, live, cands, qvecs, qnorms)
       } else {
         val accept = (i: Int) => shard.isLive(i) && member.contains(ids(i)) != deny
         val data = shard.block.data
         val vnorms = shard.block.norms
+        lazy val live = shard.liveBlock() // underfill snaps only
         var qi = 0
         while (qi < qunits.length) {
           val hits = shard.graph.searchFilteredQ8(qunits(qi), scanK,
@@ -912,7 +977,7 @@ object HnswStore {
             widen.add(1L)
             val qv = Array(qvecs(qi))
             val qn = if (qnorms == null) null else Array(qnorms(qi))
-            BlockStore.scoreBlockMember(Array(heaps(qi)), shard.live,
+            BlockStore.scoreBlockMember(Array(heaps(qi)), live,
               qv, qn, member, deny, exact = true)
           }
           qi += 1
@@ -997,9 +1062,10 @@ object HnswStore {
 
   /** One shard's refresh step (see [[HnswStore!.rebuildTouched]]):
     * tombstone the nodes in `kill`, then insert `rows` into the graph,
-    * or compact the shard when its dead share passes `ratio` or the
-    * slab would outgrow `maxBlockFloats`. Yields the shard itself when
-    * there is nothing to do, and nothing when compaction leaves no row.
+    * or compact the shard when its dead share passes `ratio` (the
+    * caller routes no more rows to a shard than its slab has room for).
+    * Yields the shard itself when there is nothing to do, and nothing
+    * when compaction leaves no row.
     */
   private[operators] def updateShard[K: ClassTag](sh: HnswShard[K],
       kill: java.util.BitSet, rows: Array[(K, Array[Float])],
@@ -1011,8 +1077,7 @@ object HnswStore {
     val b = sh.block
     val nodes = b.rows + rows.length
     val tomb = new HnswShard[K](b, sh.unit, sh.graph, if (dead.isEmpty) null else dead)
-    if (dead.cardinality() > ratio * nodes ||
-        nodes.toLong * b.dim > maxBlockFloats)
+    if (dead.cardinality() > ratio * nodes)
       buildShards(liveRowsOf(tomb) ++ rows.iterator, normalized, maxBlockFloats, m, efc)
     else if (rows.isEmpty) Iterator(tomb)
     else {

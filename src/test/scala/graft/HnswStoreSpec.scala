@@ -465,6 +465,116 @@ class HnswStoreSpec extends AnyFunSuite {
     store.unpersist()
   }
 
+  test("a full slab tombstones its updated rows and passes them on: one extended graph, then one fresh shard") {
+    val dim = 8
+    val mbf = 40 * dim // 40-row slabs
+    def unit(rng: scala.util.Random): Array[Float] = {
+      val v = Array.fill(dim)(rng.nextFloat() - 0.5f)
+      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+      v.map(x => (x / n).toFloat)
+    }
+    var rows = randData(100, dim, seed = 43, unit = true).toMap
+    var store = owned(HnswStore.fromDataset[Long](rows.toSeq.sortBy(_._1).toDS(),
+      normalize = false, assumeNormalized = true, numShards = 1,
+      maxBlockFloats = mbf).persist())
+    assert(store.materialize() == ((100L, 3)))
+    def layout(st: HnswStore[Long]): Seq[(Seq[Long], Int)] =
+      st.shards.map(sh => (sh.block.ids.toSeq, sh.liveRows)).collect().toSeq
+    val before = layout(store)
+    assert(before.map(_._1.length) == Seq(40, 40, 20))
+    val rng = new scala.util.Random(47)
+    def refresh(dirty: Seq[Long], changed: Seq[(Long, Array[Float])]): Unit = {
+      rows = rows ++ changed
+      val next = owned(store.rebuildTouched(dirty.toSet,
+        spark.sparkContext.parallelize(changed, 1), maxBlockFloats = mbf).persist())
+      assert(next.materialize()._1 == rows.size.toLong)
+      store.unpersist()
+      store = next
+    }
+
+    // 1) three updates in the first (full) slab: tombstoned there, their
+    // new rows extend the last shard — one build, no slab rebuilt
+    val upd = before.head._1.take(3)
+    val builds1 = Hnsw.buildsInJvm
+    refresh(upd, upd.map(id => id -> unit(rng)))
+    assert(Hnsw.buildsInJvm == builds1 + 1, "one extended graph, not a full slab")
+    val after1 = layout(store)
+    assert(after1.head == ((before.head._1, 37)), "the full slab keeps its nodes, 3 dead")
+    assert(after1(1) == before(1))
+    assert(after1(2)._1 == before(2)._1 ++ upd.sorted && after1(2)._2 == 23)
+
+    // 2) 25 new ids: 17 fill the last shard's room, 8 build a fresh shard
+    val ins = (1000L until 1025L)
+    val builds2 = Hnsw.buildsInJvm
+    refresh(ins, ins.map(id => id -> unit(rng)))
+    assert(Hnsw.buildsInJvm == builds2 + 2)
+    val after2 = layout(store)
+    assert(after2.map(_._1.length) == Seq(40, 40, 40, 8))
+    assert(after2(3)._1 == ins.drop(17))
+
+    val queries = (upd.map(rows(_)) ++ Seq.fill(4)(unit(rng)))
+      .zipWithIndex.map { case (v, i) => (i.toLong, v) }.toArray
+    val want = brute(rows.toSeq, queries.toSeq, 5)
+    val got = store.searchMerged(queries, 5, exact = true)
+      .select(col("qid"), col("rank"), col("id")).collect()
+    assert(got.length == queries.length * 5)
+    got.foreach(r => assert(r.getLong(2) == want(r.getLong(0))(r.getInt(1) - 1)._1))
+  }
+
+  test("a retired store stays readable for pinned reads and handed-out frames, and is freed otherwise") {
+    val data = randData(150, 8, seed = 53, unit = true)
+    var rows = data.toMap
+    val base = owned(HnswStore.fromDataset[Long](data.toDS(),
+      normalize = false, assumeNormalized = true, numShards = 2).persist())
+    base.materialize()
+    val rng = new scala.util.Random(59)
+    def refreshed(from: HnswStore[Long]): HnswStore[Long] = {
+      val changed = Seq(rng.nextInt(150).toLong, 2000L + rng.nextInt(1000)).map { id =>
+        val v = Array.fill(8)(rng.nextFloat() - 0.5f)
+        val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+        (id, v.map(x => (x / n).toFloat))
+      }
+      rows = rows ++ changed
+      val next = owned(from.rebuildTouched(changed.map(_._1).toSet,
+        spark.sparkContext.parallelize(changed, 1)).persist())
+      next.materialize()
+      next
+    }
+    def cached(st: HnswStore[Long]): Boolean =
+      spark.sparkContext.getPersistentRDDs.contains(st.shards.id)
+    def hits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long)] =
+      df.select(col("qid"), col("rank"), col("id")).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(h => (h._1, h._2)).toSeq
+    val queries = data.take(4).toArray
+
+    // a read pinned before the retire keeps the checkpointed shards
+    // until it is released
+    val r1 = refreshed(base)
+    assert(r1.shards.isCheckpointed)
+    val want1 = hits(r1.searchMerged(queries, 5, exact = true))
+    r1.acquire()
+    val r2 = refreshed(r1)
+    r1.retire()
+    assert(cached(r1))
+    assert(hits(r1.searchMerged(queries, 5, exact = true)) == want1)
+    r1.release()
+    assert(!cached(r1), "the last pinned read frees a retired store")
+
+    // a handed-out lazy frame, first collected after the retire, still
+    // reads the shards
+    val frame = r2.searchPacked(queries.toSeq.toDS(), 5, exact = true)
+    val want2 = hits(r2.searchMerged(queries, 5, exact = true))
+    val r3 = refreshed(r2)
+    r2.retire()
+    assert(cached(r2))
+    assert(hits(frame) == want2, "a superseded frame collects the rows of its store")
+
+    // neither: retiring frees the store at once
+    refreshed(r3)
+    r3.retire()
+    assert(!cached(r3))
+  }
+
   test("searchPacked (Dataset queries) is bit-identical to searchMerged, both modes") {
     val data = randData(400, 16, seed = 71, unit = false) // cosine mode
     val store = owned(HnswStore.fromDataset[Long](

@@ -1798,6 +1798,43 @@ class VdbStoreSpec extends AnyFunSuite {
     assert(s.lastQueryStrategy.contains("exact"))
   }
 
+  test("a queryDF frame over a refreshed graph store collects again after a later refresh") {
+    val s = freshStore(8)
+    val rng = new scala.util.Random(17)
+    def unit(): Array[Float] = {
+      val v = Array.fill(8)(rng.nextFloat() - 0.5f)
+      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+      v.map(x => (x / n).toFloat)
+    }
+    s.upsert((0 until 120).map(i => rec(f"h$i%03d", unit(), s"""{"g": ${i % 4}}""")))
+    s.enableHnsw(m = 8, efConstruction = 40)
+    val q = unit()
+    s.queryOne(q, topK = 3)
+    assert(s.hnswLastRebuildMode == "full")
+    // an upsert and a query: the graph store is now a refreshed one,
+    // whose shards are locally checkpointed
+    s.upsert(Seq(rec("h007", unit()), rec("n1", unit())))
+    s.queryOne(q, topK = 3)
+    assert(s.hnswLastRebuildMode == "incremental")
+    import spark.implicits._
+    val qdf = Seq((1L, q), (2L, unit())).toDF("qid", "qvec")
+    def rows(frame: org.apache.spark.sql.DataFrame): Seq[(Long, String, Double, Int)] =
+      frame.select(col("qid"), col("_id_"), col("score"), col("rank")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getDouble(2), r.getInt(3)))
+        .sortBy(r => (r._1, r._4)).toSeq
+    // two frames over the same store: one collected now, one not yet
+    val later = s.queryDF(qdf, "qid", "qvec", topK = 5)
+    val first = rows(s.queryDF(qdf, "qid", "qvec", topK = 5))
+    assert(s.lastQueryStrategy.contains("hnsw"))
+    assert(first.length == 10)
+    // a later write and query supersede the frames' graph store
+    s.upsert(Seq(rec("h011", unit()), rec("n2", unit())))
+    s.queryOne(q, topK = 3)
+    assert(s.hnswLastRebuildMode == "incremental")
+    assert(rows(later) == first, "a superseded frame must collect the rows of its store")
+    assert(rows(later) == first, "and collect them again")
+  }
+
   test("localReplica: in-process queryOne/get match the distributed store; snapshot semantics") {
     val rng = new scala.util.Random(77)
     val s = freshStore(dim = 16)
