@@ -148,12 +148,10 @@ final class HnswStore[K](
   /** Pin this store for a read in flight: a [[retire]] that comes
     * first waits for the matching [[release]].
     */
-  private[graft] def acquire(): Unit = synchronized { readers += 1 }
+  private[graft] def acquire(): Unit = pinLock.synchronized { readers += 1 }
 
-  private[graft] def release(): Unit = synchronized {
-    readers -= 1
-    if (readers == 0 && retired) free()
-  }
+  private[graft] def release(): Unit =
+    if (pinLock.synchronized { readers -= 1; readers == 0 && retired }) free()
 
   /** Release a store that a newer one supersedes, once no read pinned
     * by [[acquire]] is in flight. The shards of a refreshed store are
@@ -164,19 +162,22 @@ final class HnswStore[K](
     * shards, and only the store's other caches go now. Otherwise the
     * store is unpersisted.
     */
-  def retire(): Unit = synchronized {
-    retired = true
-    if (readers == 0) free()
-  }
+  def retire(): Unit =
+    if (pinLock.synchronized { retired = true; readers == 0 }) free()
 
   private def free(): Unit =
-    if (escaped && shards.isCheckpointed) {
+    if (pinLock.synchronized(escaped) && shards.isCheckpointed) {
       swapQPrep(null)
-      if (q8ShardsRef != null) { q8ShardsRef.unpersist(false); q8ShardsRef = null }
+      synchronized {
+        if (q8ShardsRef != null) { q8ShardsRef.unpersist(false); q8ShardsRef = null }
+      }
     } else unpersist()
 
-  // guarded by this: reads pinned in flight, whether a lazy frame over
-  // the shards was handed out, whether a newer store supersedes this one
+  // reads pinned in flight, whether a lazy frame over the shards was
+  // handed out, whether a newer store supersedes this one. A lock of
+  // their own: the store's monitor is held through the q8 codes' build
+  // job, and acquire runs under the VdbStore's graph lock
+  private val pinLock = new Object
   private var readers = 0
   private var escaped = false
   private var retired = false
@@ -379,7 +380,7 @@ final class HnswStore[K](
     *
     * Routing: an updated id's new row goes to the partition (and shard)
     * that held its old row, so its dead and live versions share a
-    * shard; a new id goes to partition `hash mod partitions`, into that
+    * shard while the slab has room; a new id goes to partition `hash mod partitions`, into that
     * partition's last shard (a fresh one if it holds none). A shard
     * whose slab is full (`maxBlockFloats`, as packed) passes its rows
     * to the partition's last shard, and past that one's room they
@@ -687,7 +688,7 @@ final class HnswStore[K](
             else HnswStore.ranked(prep._1, merged, k).toSeq
           spark.createDataset(rows)(outEnc)
         case Right(ds) =>
-          synchronized { escaped = true } // the frame reads the shards lazily
+          pinLock.synchronized { escaped = true } // the frame reads the shards lazily
           val norm = normalized
           val bcMem = if (filtered) sc.broadcast((member, deny)) else null
           val qblocks = ds.rdd.mapPartitionsWithIndex { (pi, it) =>
