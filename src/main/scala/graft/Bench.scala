@@ -1538,6 +1538,7 @@ object Bench {
     // against ground truth the same way (bench/hf_query.py:22-51).
     if (!picovdbOnly) try {
       import org.apache.spark.sql.functions.col
+      import spark.implicits._
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val recallQs = emb.filter(col("vec_id") < 100)
         .select(col("vec_id"), col("embedding")).collect()
@@ -1556,7 +1557,8 @@ object Bench {
       // records it under an explicit alias
       val npDefault = graft.operators.IvfIndex.defaultNProbe(idx.nList)
       (Seq(1, 4, 8, 16) :+ npDefault).distinct.sorted.foreach { np =>
-        val approx = idx.search(recallQs, k = 10, nProbe = np, normalized = false)
+        val approx = idx.searchMerged[Long](recallQs, k = 10, nProbe = np,
+            normalized = false)
           .select("qid", "id").collect()
           .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
         val perQ = recallQs.map { case (qid, _) =>
@@ -1602,7 +1604,7 @@ object Bench {
       }.toMap
       val npDefC = graft.operators.IvfIndex.defaultNProbe(idxC.nList)
       (Seq(1, 2, 4) :+ npDefC).distinct.sorted.foreach { np =>
-        val approx = idxC.search(qsC, k = 10, nProbe = np)
+        val approx = idxC.searchMerged[Long](qsC, k = 10, nProbe = np)
           .select("qid", "id").collect()
           .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
         val perQ = qsC.map { case (qid, _) =>

@@ -308,8 +308,10 @@ object Queries {
       // testing GENUINE probing, not the snap.
       val np = math.max(1, idx.nList / 4)
       val qs = queries
+      val spark = idx.assigned.sparkSession
+      import spark.implicits._
       def top(nProbe: Int): Map[Long, Set[Long]] =
-        idx.search(qs, k, nProbe, normalized = false)
+        idx.searchMerged[Long](qs, k, nProbe, normalized = false)
           .select(col("qid"), col("id")).collect()
           .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
       val exact = top(idx.nList)
@@ -342,6 +344,7 @@ object Queries {
     * by q47-q49; bit-level behavior is pinned in IvfIndexSpec.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val emb = t(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 20)
       .select(col("vec_id"), col("embedding")).collect()
@@ -357,7 +360,7 @@ object Queries {
     // scan (graft.ann.exactscan.fraction), which would make this
     // "ann" catalog entry silently measure the exact path — the entry
     // exists to time GENUINE probing (same np as the recall floor)
-    idx.search(queries, k = 10, nProbe = math.max(1, idx.nList / 4),
+    idx.searchMerged[Long](queries, k = 10, nProbe = math.max(1, idx.nList / 4),
         normalized = false)
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("n_hits"))
@@ -369,32 +372,33 @@ object Queries {
   }
 
   /** Dataset-query-side IVF ANN (O27 scale path): the query batch stays
-    * a DataFrame end-to-end — per-row codegen centroid probes +
-    * bounded-heap top-k, no driver collect anywhere. Bit-identical
-    * output to [[annIvf]] (searchDs parity spec), registered separately
-    * so the distributed path carries its own bench number (VERDICT r7
-    * #6). Same index cache key as q26: whichever runs first builds.
+    * a Dataset end-to-end through [[operators.IvfIndex.searchPacked]] —
+    * per-row probes, the bucketed packed kernels and a bounded-heap
+    * merge, no driver collect anywhere. Registered separately from
+    * [[annIvf]] so the distributed path carries its own bench number
+    * (VERDICT r7 #6). Same index cache key as q26: whichever runs first
+    * builds.
     * ("No driver collect" scopes to the SEARCH path; the one-time
     * recall-floor validation collects its 20 queries on first call per
     * dataset only — by-name arg, cache-hit calls run nothing.)
     */
   def annIvfDs(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val emb = t(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 20)
-      .select(col("vec_id"), col("embedding"))
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
     val idx = operators.IvfIndex.cached(s"$dir/embeddings#16")(
       operators.IvfIndex.build(emb, "vec_id", "embedding", nList = 16,
         normalized = false))
-    // same invariant, same cache key as q26 (searchDs output is
-    // spec-pinned bit-identical to search, so one validation covers
-    // both entries)
-    assertRecallFloor(s"$dir/embeddings#16@k10", idx,
-      queries.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)), 10)
+    // same invariant, same cache key as q26 (the packed and merged
+    // searches score the same probed buckets with the same kernels, so
+    // one validation covers both entries)
+    assertRecallFloor(s"$dir/embeddings#16@k10", idx, queries.collect(), 10)
     // same explicit quarter-list nProbe as q26 (below the exactscan
-    // crossover) so the bit-parity claim keeps comparing PROBED runs;
-    // same checked-artifact output shape as q26 (recall invariant
-    // oracle — see annIvf's scaladoc)
-    idx.searchDs(queries, "vec_id", "embedding", k = 10,
+    // crossover) so both entries time PROBED runs; same
+    // checked-artifact output shape as q26 (recall invariant oracle —
+    // see annIvf's scaladoc)
+    idx.searchPacked[Long](queries, k = 10,
         nProbe = math.max(1, idx.nList / 4), normalized = false)
       .groupBy(col("qid"))
       .agg(count(lit(1)).as("n_hits"))
@@ -403,16 +407,16 @@ object Queries {
   }
 
   /** Oracled exact-parity ANN entry (q47, VERDICT r8 next-round #2): the
-    * same IVF probe-join + bounded-heap `top_k_hits` machinery as q26,
-    * run at nProbe = nList — every list is probed, so the candidate set
-    * is the whole store and the result is EXACT by construction
-    * (IvfIndexSpec proves nProbe=nList ≡ the exact path bit-for-bit).
-    * That makes this the one ANN entry a DuckDB top-k oracle can
-    * hash-match, giving the probe-join plumbing a green CORRECTNESS row
-    * instead of a units-only argument. Distinct query slice from
-    * q01/q26 so the entry carries its own evidence.
+    * same driver-batch IVF search as q26 ([[operators.IvfIndex.searchMerged]]
+    * with sequential-double scoring), run at nProbe = nList — every
+    * list is probed, so the candidate set is the whole store and the
+    * result is EXACT by construction (IvfIndexSpec proves nProbe=nList
+    * ≡ the exact path), so a DuckDB top-k oracle can hash-match it.
+    * Distinct query slice from q01/q26 so the entry carries its own
+    * evidence.
     */
   def annIvfExact(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val emb = t(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") >= 60 && col("vec_id") < 80)
       .select(col("vec_id"), col("embedding")).collect()
@@ -420,7 +424,8 @@ object Queries {
     val idx = operators.IvfIndex.cached(s"$dir/embeddings#16")(
       operators.IvfIndex.build(emb, "vec_id", "embedding", nList = 16,
         normalized = false))
-    idx.search(queries, k = 10, nProbe = idx.nList, normalized = false)
+    idx.searchMerged[Long](queries, k = 10, nProbe = idx.nList,
+        normalized = false, exact = true)
       .select(col("qid"), col("rank").cast("long").as("rank"),
         col("id").as("vec_id"), round(col("score"), 6).as("score"))
   }
@@ -429,9 +434,9 @@ object Queries {
     * at nProbe = nList with exact double scoring — every bucket probed
     * and the cosine arithmetic identical to the declarative plan (the
     * gemmQueries kernels), so the same DuckDB top-k oracle hash-matches.
-    * The bucketed-SIMD twin of q47's probe-join entry: between them the
-    * whole ANN surface (probe selection, bucket cogroup, packed kernels,
-    * heap merge) carries green CORRECTNESS rows.
+    * The Dataset-query twin of q47's driver-batch entry: between them
+    * the whole ANN surface (probe selection, bucket cogroup, packed
+    * kernels, heap merge) carries green CORRECTNESS rows.
     */
   def annIvfPacked(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -42,16 +42,6 @@ final class GraftConf(spark: SparkSession) {
   def annNProbeFor(nList: Int): Int =
     annNProbeOpt.getOrElse(graft.operators.IvfIndex.defaultNProbe(nList))
 
-  /** Batch-size threshold (rows) above which [[graft.operators.IvfIndex.searchDs]]
-    * routes through the packed-kernel path (VERDICT r9 next-round #3:
-    * the declarative row-join measured 40-54 ms/q at the 10M smoke
-    * vs 0.9-2.2 ms/q packed — nothing enforced the path-selection rule
-    * in code). 0 disables routing (always declarative).
-    */
-  def annDsRouteThreshold: Int =
-    opt("ann.dsroute.threshold", "GRAFT_ANN_DSROUTE_THRESHOLD").map(_.toInt)
-      .getOrElse(1024)
-
   /** Probe-fraction crossover for IVF search (the argsort-vs-
     * argpartition crossover idea from the reference, pico_vdb.py:
     * 160-167, applied one level up): when a search's requested
@@ -62,9 +52,8 @@ final class GraftConf(spark: SparkSession) {
     * same as the full exact scan. At or past the fraction every
     * search path snaps nProbe to nList: the all-bucket scan, exact
     * results, recall 1.0. >= 1.0 disables the snap (always probe as
-    * requested). Applied uniformly across searchMerged/searchPacked/
-    * search/searchDs and the q8 twins so cross-path parity holds at
-    * every nProbe.
+    * requested). Applied uniformly across the searchMerged* and
+    * searchPacked* searches so cross-path parity holds at every nProbe.
     */
   def annExactScanFraction: Double =
     opt("ann.exactscan.fraction", "GRAFT_ANN_EXACTSCAN_FRACTION")

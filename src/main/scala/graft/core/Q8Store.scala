@@ -149,10 +149,9 @@ final class Q8Store[K](
     * the per-partition k-heaps merge up a depth-2 treeAggregate exactly
     * like [[BlockStore.topKMerged]].
     *
-    * Output matches `IvfIndex.searchDs`: (qid, id, score, rank).
-    * Duplicate qids merge into one k-row result (the declarative
-    * groupBy, like `searchDs`) — batches needing independent results
-    * per duplicate must key them uniquely.
+    * Output: (qid, id, score, rank). Duplicate qids merge into one
+    * k-row result (a declarative groupBy) — batches needing
+    * independent results per duplicate must key them uniquely.
     */
   def rescoredTopK(
       queries: Array[(Long, Array[Float])],

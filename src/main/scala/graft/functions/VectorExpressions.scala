@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
   * exactly), so a double query vector scores against float store rows
   * WITHOUT a per-pair `cast("array<double>")`. That cast sat in the IVF
   * probe-join hot path and allocated a fresh double array per
-  * (query, candidate) pair — the dominant cost of `searchDs` at scale
-  * (measured 8x on the 100k ScaleSmoke ANN phase).
+  * (query, candidate) pair — the dominant cost of that declarative
+  * probe join at scale (measured 8x on the 100k ScaleSmoke ANN phase).
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

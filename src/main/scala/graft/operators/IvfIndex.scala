@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) ANN index — the batch-native analog of the
@@ -111,13 +112,6 @@ final class IvfIndex(
     swapPackedAllowedState(Nil)
   }
 
-  /** Which path the most recent [[searchDs]] call took ("declarative"
-    * or "packed") — lets callers and the routing spec assert the
-    * bulk-route rule without timing heuristics.
-    */
-  @volatile private var lastDsRoute: String = "declarative"
-  def lastSearchDsPath: String = lastDsRoute
-
   /** Probe strategy of the most recent search on this index:
     * "probe(np=N)" (pruned IVF scan), "exact_snap(requested=N)" (the
     * crossover below snapped the request to the all-list exact scan),
@@ -194,209 +188,13 @@ final class IvfIndex(
     }
   }
 
-  /** Nearest-centroid ids for one query vector (driver-side; centroids
-    * are tiny by construction). Inner-product order, matching the
-    * assignment rule.
-    */
-  private[operators] def probesFor(q: Array[Double], nProbe: Int): Array[Int] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      var s = 0.0; var j = 0
-      while (j < c.length && j < q.length) { s += c(j) * q(j); j += 1 }
-      (-s, i) // inner product similarity, descending
-    }.sorted.take(nProbe).map(_._2)
-
-  /** ANN top-k: prune to nProbe centroid partitions per query, exact
-    * cosine top-k inside the pruned set. Output: qid, id, score, rank.
-    * `nProbe <= 0` (the default) resolves to the recall-first
-    * [[IvfIndex.defaultNProbe]] for this index.
-    */
-  def search(queries: Array[(Long, Array[Float])], k: Int, nProbe: Int = 0,
-             normalized: Boolean = true): DataFrame = {
-    // mis-dimensioned queries fail loudly here (ADVICE r8): truncated
-    // dot products would silently score garbage, and the searchDs
-    // bit-parity claim is scoped to index-dimensioned queries (its e0
-    // uses the index dim; README "ANN" caveat)
-    if (dim > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dim,
-        s"IvfIndex.search: query $qid has dim ${v.length}, index dim is $dim")
-    }
-    val np = resolveNProbe(nProbe)
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    // (qid, probe centroid) pairs — broadcast-joined against the store's
-    // centroid_id so each query only scans its probed partitions.
-    val qnorm: Array[(Long, Array[Double])] = queries.map { case (qid, v) =>
-      val d = v.map(_.toDouble)
-      val n = math.sqrt(d.map(x => x * x).sum)
-      qid -> (if (!normalized && n != 0.0) d.map(_ / n)
-              else if (n == 0.0) { val e = new Array[Double](d.length); if (e.nonEmpty) e(0) = 1.0; e }
-              else d)
-    }
-    val probes = qnorm.flatMap { case (qid, q) =>
-      probesFor(q, np).map(c => (qid, c))
-    }.toSeq.toDF("qid", "centroid_id")
-    val qdf = qnorm.toSeq.toDF("qid", "qvec")
-
-    // mixed-type dot: the double query vector scores the float store row
-    // directly — no per-(query,row) cast allocation (see DotProduct)
-    val rawScore = graft.functions.dot_product(col("qvec"), col(vecCol))
-    // store-side norm precomputed BELOW the joins (VERDICT r7 #5): the
-    // projection runs once per store row per scan; in the old shape the
-    // sqrt sat above the query join, so a row probed by Q queries paid
-    // Q norm computations.
-    val base =
-      if (normalized) assigned
-      else assigned.withColumn("_vnorm",
-        sqrt(graft.functions.l2_norm_sq(col(vecCol))))
-    val score =
-      if (normalized) rawScore
-      else when(col("_vnorm") === 0.0, lit(0.0))
-        .otherwise(rawScore / col("_vnorm"))
-    val cand = base
-      .join(broadcast(probes), Seq("centroid_id"))
-      .join(broadcast(qdf), Seq("qid"))
-      .select(col("qid"), col(idCol).as("id"), score.as("score"))
-    // bounded-heap aggregate, not a Window: only k rows per query cross
-    // the shuffle (a row_number Window would shuffle every candidate in
-    // the probed buckets); tie-break identical (score desc, id asc)
-    cand.groupBy(col("qid"))
-      .agg(graft.functions.top_k_hits(col("score"), col("id"), k).as("hits"))
-      .select(col("qid"), posexplode(col("hits")))
-      .select(col("qid"), col("col.id").as("id"), col("col.score").as("score"),
-        (col("pos") + 1).as("rank"))
-  }
-
-  /** Dataset-query-side ANN top-k — the scale path when the query batch
-    * is itself a table (millions of stored queries; the driver-array
-    * [[search]] caps at driver memory). No collect anywhere: per-row
-    * probes come from the codegen `nearest_centroids` expression (same
-    * inner-product order and tie rule as the driver-side `probesFor`),
-    * candidates join the assigned store on `centroid_id`, and the
-    * bounded-heap `top_k_hits` aggregate moves only k rows per query
-    * through the shuffle — the IVF analog of `CosineTopK.gemmQueries`.
-    *
-    * Shuffle shape: both sides hash-partition on `centroid_id`, so
-    * parallelism equals the probed list count — with the √N default
-    * nList that grows with the store, and AQE broadcasts a small side
-    * outright. Candidate volume (Σ per-list queries × list size) is
-    * the IVF search cost itself, not join overhead.
-    *
-    * Output matches [[search]]: (qid, id, score, rank).
-    */
-  def searchDs(queries: DataFrame, qidCol: String, qvecCol: String,
-               k: Int, nProbe: Int = 0, normalized: Boolean = true): DataFrame = {
-    // Bulk auto-route (VERDICT r9 next-round #3): above the
-    // graft.ann.dsroute.threshold batch size, the declarative row-join
-    // below loses ~10-20x per candidate to the packed kernels (10M
-    // smoke: 40-54 ms/q vs 0.9-2.2 ms/q), so big batches route through
-    // [[searchPacked]] with exact=true — sequential-double scoring,
-    // bit-equal scores to this path's codegen dot (same query values,
-    // same accumulation order), so routing changes throughput, not
-    // results (ranks can differ only on exact score ties). Routing is
-    // schema-gated to the shapes whose semantics match exactly:
-    // normalized stores (the un-normalized packed path scores a zero
-    // query 0 where this path maps it to e0, and pre-normalizing to
-    // float would shift scores by ulps vs the double qv here —
-    // un-normalized bulk callers use searchPacked directly), long
-    // qids, float query vectors (a double-vector batch would silently
-    // narrow), long/int/string ids, and DISTINCT qids: on duplicate
-    // qids this path's groupBy merges the duplicates' candidate sets
-    // into ONE k-row result while the packed path keeps each row
-    // independent, so duplicates must stay declarative (round-10
-    // self-review). The gate probe is one column-pruned
-    // count+countDistinct job over the qid column; callers looping
-    // tiny batches off an expensive upstream plan can pin
-    // graft.ann.dsroute.threshold=0 to skip it.
-    val routeThreshold = new graft.core.GraftConf(assigned.sparkSession)
-      .annDsRouteThreshold
-    lastDsRoute = "declarative"
-    if (normalized && routeThreshold > 0 &&
-        queries.schema(qidCol).dataType == org.apache.spark.sql.types.LongType &&
-        (queries.schema(qvecCol).dataType match {
-          case org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType, _) => true
-          case _ => false
-        })) {
-      val idT = assigned.schema(idCol).dataType
-      val supported = idT == org.apache.spark.sql.types.LongType ||
-        idT == org.apache.spark.sql.types.IntegerType ||
-        idT == org.apache.spark.sql.types.StringType
-      val gate =
-        if (!supported) null
-        else queries.select(count(lit(1)).as("n"),
-          countDistinct(col(qidCol)).as("d")).head()
-      if (gate != null && gate.getLong(0) >= routeThreshold &&
-          gate.getLong(1) == gate.getLong(0)) {
-        val spark = assigned.sparkSession
-        import spark.implicits._
-        val qds = queries.select(col(qidCol), col(qvecCol))
-          .as[(Long, Array[Float])]
-        lastDsRoute = "packed"
-        return idT match {
-          case org.apache.spark.sql.types.LongType =>
-            searchPacked[Long](qds, k, nProbe, normalized = true, exact = true)
-          case org.apache.spark.sql.types.IntegerType =>
-            searchPacked[Int](qds, k, nProbe, normalized = true, exact = true)
-          case _ =>
-            searchPacked[String](qds, k, nProbe, normalized = true, exact = true)
-        }
-      }
-    }
-    val np = resolveNProbe(nProbe)
-    // Query-side preparation matches the driver path ([[search]])
-    // bit-for-bit (ADVICE r7 — it used NormalizeL2, which works in
-    // FLOAT precision and applied the zero->e0 rule only when
-    // normalized=false): the all-zero query maps to e0 under BOTH
-    // normalized settings, and normalization divides in DOUBLE, the
-    // same `d.map(_ / n)` arithmetic the driver runs. e0's length is
-    // the index dim — equal to the driver path's (the query's own
-    // length) whenever the query is dimensioned for this index, which
-    // `search` now enforces up front; this path cannot inspect row
-    // dims without running a job, so the residual caveat is documented
-    // in README "ANN" (ADVICE r8).
-    val qd = col(qvecCol).cast("array<double>")
-    val qNormSq = graft.functions.l2_norm_sq(col(qvecCol))
-    val e0: org.apache.spark.sql.Column =
-      if (dim <= 0) qd
-      else array((lit(1.0) +: Seq.fill(dim - 1)(lit(0.0))): _*)
-    val qn =
-      if (normalized) when(qNormSq === 0.0, e0).otherwise(qd)
-      else {
-        val n = sqrt(qNormSq)
-        when(qNormSq === 0.0, e0).otherwise(transform(qd, x => x / n))
-      }
-    val probed = queries.select(col(qidCol).as("qid"), qn.as("_qv"),
-      explode(graft.functions.nearest_centroids(qn, centroids, np))
-        .as("centroid_id"))
-    // mixed-type dot — same arithmetic as the cast form (float widens
-    // exactly), none of its per-(query,row) allocation
-    val rawScore = graft.functions.dot_product(col("_qv"), col(vecCol))
-    // store-side norm below the join, one per store row (VERDICT r7 #5)
-    val base =
-      if (normalized) assigned
-      else assigned.withColumn("_vnorm",
-        sqrt(graft.functions.l2_norm_sq(col(vecCol))))
-    val score =
-      if (normalized) rawScore
-      else when(col("_vnorm") === 0.0, lit(0.0))
-        .otherwise(rawScore / col("_vnorm"))
-    probed.join(base, Seq("centroid_id"))
-      .select(col("qid"), col(idCol).as("id"), score.as("score"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.top_k_hits(col("score"), col("id"), k).as("hits"))
-      .select(col("qid"), posexplode(col("hits")))
-      .select(col("qid"), col("col.id").as("id"), col("col.score").as("score"),
-        (col("pos") + 1).as("rank"))
-  }
-
-  /** Packed-kernel Dataset-side ANN top-k — the throughput path.
-    * [[searchDs]] stays fully declarative (row-at-a-time codegen dot
-    * products through the probe join; bit-parity with [[search]]), but
-    * a row-join pays UnsafeRow traversal per (query, candidate) pair;
-    * this path instead packs each centroid's rows into the SIMD slabs
-    * the exact gemm path streams (graft.core.VecBlock — the
-    * IVF-bucketed analog of [[CosineTopK.gemmQueries]]), which measured
-    * ~10x the per-candidate throughput on the ScaleSmoke ANN phase.
+  /** Packed-kernel Dataset-query ANN top-k — the scale path when the
+    * query batch is itself a table (millions of stored queries, beyond
+    * driver memory; [[searchMerged]] is the driver-array twin). Each
+    * centroid's rows are packed into the SIMD slabs the exact gemm path
+    * streams (graft.core.VecBlock — the IVF-bucketed analog of
+    * [[CosineTopK.gemmQueries]]), which measured ~10x the per-candidate
+    * throughput of a declarative probe join on the ScaleSmoke ANN phase.
     *
     * Shuffle shape at scale: the store moves ONCE at first use into
     * centroid-keyed packed buckets, cached on the index (the same
@@ -404,17 +202,16 @@ final class IvfIndex(
     * (query vector + centroid id) shuffle in, buckets are cogrouped
     * in place (no store movement), and Q × nProbe × k heap entries
     * shuffle out of the merge — candidate scoring never crosses a
-    * stage boundary.
+    * stage boundary. A covering probe scans the flat slab pack
+    * instead ([[packedProbedTopK]]).
     *
-    * Scoring follows [[CosineTopK.gemmQueries]] arithmetic, NOT
-    * [[search]]'s normalize-the-query-first: `normalized=false` scores
-    * raw/raw cosine dot/(|q||v|) — `exact=true` is then bit-identical
-    * to the declarative `cosine_sim` plan and hash-matches the double
-    * cosine oracle (q48) — and a zero query in that mode scores 0
-    * everywhere (where [[search]] maps it to e0). In `normalized`
-    * mode the zero query maps to e0 for BOTH probe selection and
-    * scoring, matching search/searchDs. Duplicate qids stay
-    * independent results (per-row unique keying), as in
+    * Scoring follows [[CosineTopK.gemmQueries]] arithmetic:
+    * `normalized=false` scores raw/raw cosine dot/(|q||v|) — `exact=true`
+    * is then bit-identical to the declarative `cosine_sim` plan and
+    * hash-matches the double cosine oracle (q48) — and a zero query in
+    * that mode scores 0 everywhere. In `normalized` mode the zero query
+    * maps to e0 for BOTH probe selection and scoring. Duplicate qids
+    * stay independent results (per-row unique keying), as in
     * [[searchMerged]] and `gemmQueries`. The per-row keys come from
     * `zipWithUniqueId`, so their stability under partial stage retry
     * rests on Spark's indeterminate-stage rollback (an order-unstable
@@ -422,139 +219,20 @@ final class IvfIndex(
     * stage INDETERMINATE and a fetch failure re-runs it whole rather
     * than mixing old and new keys); callers whose query Dataset has
     * unstable ordering AND duplicate qids should localCheckpoint it
-    * first if they need retry-proof attribution. Ranks match
-    * [[searchDs]] except on floating-point reassociation ties;
-    * IvfIndexSpec asserts id-set parity on separated data.
+    * first if they need retry-proof attribution. Output:
+    * (qid, id, score, rank), bit-equal to [[searchMerged]] wherever the
+    * two score a query in the same slot (IvfPackedEngineSpec).
     */
-  def searchPacked[K](queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+  def searchPacked[K](queries: Dataset[(Long, Array[Float])],
                       k: Int, nProbe: Int = 0, normalized: Boolean = true,
                       exact: Boolean = false)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BlockStore, BoundedTopKG, VecBlock}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val sc = spark.sparkContext
-    val np = resolveNProbe(nProbe)
-    // Full scan (np = nList, requested or snapped): the probe shuffle
-    // below would ship every query vector nList times (Q x nList x dim
-    // floats through an exchange) just to land each copy on every
-    // bucket anyway. Route instead through the flat slab pack: each
-    // query partition packs ONCE, every (query slab x store slab) pair
-    // scores with the shared kernels, heaps absorb per query partition
-    // — the HnswStore.searchPacked shape. Per-position heaps keep
-    // duplicate qids independent, and scoreBlock + the tie rule are
-    // the same code as the probed path, so results are bit-identical
-    // (q48 oracle).
-    if (np >= nList && nList > 0) {
-      val bs = flatPack[K](normalized)
-      val localOrd = ord
-      val dimL = dim
-      val kk0 = k
-      val ex0 = exact
-      val norm0 = normalized
-      val qprep = queries.rdd.mapPartitionsWithIndex { (pi, it) =>
-        val arr = it.toArray
-        if (arr.isEmpty) Iterator.empty
-        else {
-          arr.foreach { case (qid, v) =>
-            if (dimL > 0) require(v.length == dimL,
-              s"IvfIndex.searchPacked: query $qid has dim ${v.length}, index dim is $dimL")
-          }
-          val qids = arr.map(_._1)
-          val qvecs = arr.map { case (_, v) =>
-            if (norm0 && Kn.normSqD(v) == 0.0) {
-              val e = new Array[Float](math.max(1, dimL)); e(0) = 1f; e
-            } else v
-          }
-          val qnorms =
-            if (norm0) null else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-          Iterator((pi, (qids, qvecs, qnorms)))
-        }
-      }.setName("graft.ivf.fullscan.qprep")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // bounded query-cache discipline: releasing the previous call's
-      // slab here (and in unpersistAssigned) keeps getPersistentRDDs
-      // flat across repeated full scans — see lastFullScanQPrep
-      swapFullScanQPrep(qprep)
-      qprep.count() // materialize before the cartesian (the r6 lesson)
-      val partials = qprep.cartesian(bs.blocks).map {
-        case ((pi, (qids, qvecs, qnorms)), block) =>
-          val heaps =
-            Array.fill(qids.length)(new BoundedTopKG[K](kk0)(localOrd))
-          BlockStore.scoreBlock(heaps, block, qvecs, qnorms,
-            Double.NegativeInfinity, ex0)
-          (pi, (qids, heaps))
-      }
-      val mergedRows = partials.reduceByKey { (x, y) =>
-        val a = x._2; val b = y._2
-        var i = 0
-        while (i < a.length) { a(i).absorb(b(i)); i += 1 }
-        x
-      }.flatMap { case (_, (qids, heaps)) =>
-        qids.iterator.zip(heaps.iterator).flatMap { case (qid, h) =>
-          h.sortedHits().iterator.zipWithIndex.map { case ((id, s), r) =>
-            (qid, id, s, r + 1)
-          }
-        }
-      }
-      return spark.createDataset(mergedRows)(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    }
-    val (packed, part) = packedBuckets[K](normalized)
-    val bcCent = sc.broadcast(centroids)
-    val dimLocal = dim
-    val kk = k
-    val ex = exact
-    val normStore = normalized
-    // keyed by a per-row unique id, NOT qid: duplicate qids in the
-    // batch must stay independent results (as searchMerged's
-    // per-position heaps and gemmQueries both keep them) — a
-    // reduceByKey on qid would silently merge their candidate sets.
-    // zipWithUniqueId is narrow (no shuffle, no count job).
-    val probed = queries.rdd.zipWithUniqueId().flatMap { case ((qid, v), uid) =>
-      // fail loudly on a mis-dimensioned query (same contract as
-      // `search`): dotPackedD iterates q.length over the packed slab,
-      // so a wrong-dim vector would silently read into the NEXT row
-      if (dimLocal > 0) require(v.length == dimLocal,
-        s"IvfIndex.searchPacked: query $qid has dim ${v.length}, index dim is $dimLocal")
-      // normalized mode: zero query -> e0 BEFORE probe selection, so
-      // probes and scores see the same vector (search/searchDs rule);
-      // cosine mode: raw/raw like gemmQueries (zero query -> score 0)
-      val pv =
-        if (normStore && Kn.normSqD(v) == 0.0) {
-          val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-        } else v
-      IvfIndex.probeIds(bcCent.value, pv, np).map(c => (c, (uid, qid, pv)))
-    }
-    val partials = packed.cogroup(probed, part).flatMap {
-      case (_, (blocks, qs)) =>
-        if (blocks.isEmpty || qs.isEmpty) Iterator.empty
-        else {
-          val qarr = qs.toArray
-          val qvecs = qarr.map(_._3)
-          val qnorms =
-            if (normStore) null
-            else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-          val heaps = Array.fill(qarr.length)(new BoundedTopKG[K](kk))
-          blocks.foreach(b => BlockStore.scoreBlock(
-            heaps, b.asInstanceOf[VecBlock[K]], qvecs, qnorms,
-            Double.NegativeInfinity, ex))
-          qarr.iterator.zip(heaps.iterator).map { case ((uid, qid, _), h) =>
-            (uid, (qid, h))
-          }
-        }
-    }
-    val rows = partials
-      .reduceByKey((a, b) => { a._2.absorb(b._2); a })
-      .flatMap { case (_, (qid, h)) =>
-        h.sortedHits().iterator.zipWithIndex.map { case ((id, s), r) =>
-          (qid, id, s, r + 1)
-        }
-      }
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    packedProbedTopK("searchPacked", queries, k, resolveNProbe(nProbe),
+      normalized, overfetch = 0, member = null, deny = false,
+      fp32Tier[K](normalized, exact, flatFullScan = false))
+
 
   /** Shuffle-free driver-batch ANN top-k — the IVF twin of
     * [[graft.core.BlockStore.topKMerged]] and the path that makes ANN
@@ -644,7 +322,8 @@ final class IvfIndex(
     * r13 wrong #2). Same kernels, same heaps, same tie rule over the
     * same rows, so results are bit-identical (q48/q49 oracle +
     * cross-path parity specs); queries go in PREPPED, with
-    * normalizeQueries=false so topKMerged's own prep is a no-op.
+    * normalizeQueries=false so topKMerged's own prep is a no-op. The
+    * Dataset engine reads the same flat pack's blocks (`flat`).
     */
   private def fp32Tier[K](normalized: Boolean, exact: Boolean,
       flatFullScan: Boolean)(
@@ -656,7 +335,8 @@ final class IvfIndex(
       fullScan =
         if (!flatFullScan) null
         else (qs, k) => flatPack[K](normalized).topKMerged(qs, k,
-          normalizeQueries = false, exact = exact))
+          normalizeQueries = false, exact = exact),
+      flat = () => flatPack[K](normalized).blocks)
 
   /** The engine of the driver-batch searches — [[searchMerged]],
     * [[searchMergedAllowed]], [[searchMergedQ8]],
@@ -665,10 +345,8 @@ final class IvfIndex(
     * the code pack and the per-task block scorer. Everything else
     * lives once here:
     *
-    *  - query prep: the dim check (named after the entry point),
-    *    zero → e0 in normalized mode (probes and scores see the same
-    *    vector, the search/searchDs rule), raw/raw cosine norms
-    *    otherwise (a zero query scores 0)
+    *  - query prep ([[IvfIndex.prepQuery]]), raw/raw cosine norms in
+    *    cosine mode (a zero query scores 0)
     *  - probe passes: the probe scans run parallel over queries on the
     *    driver (sequential they were most of the fixed overhead, ~0.4 s
     *    at 1000 × 316 × 1024), then a cid → probing-query inversion. An
@@ -703,18 +381,12 @@ final class IvfIndex(
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
       outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
     import graft.core.BoundedTopKG
-    import graft.operators.{Kernels => Kn}
     val spark = assigned.sparkSession
     val sc = spark.sparkContext
-    val dimLocal = dim
-    // fail loudly on a mis-dimensioned query (same contract as
-    // `search`): dotPackedD iterates q.length over the packed slab, so
-    // a wrong-dim vector would silently read into the NEXT row
-    if (dimLocal > 0) queries.foreach { case (qid, v) =>
-      require(v.length == dimLocal,
-        s"IvfIndex.$name: query $qid has dim ${v.length}, index dim is $dimLocal")
-    }
     val qids = queries.map(_._1)
+    val qvecs = queries.map { case (qid, v) =>
+      IvfIndex.prepQuery(name, dim, normalized, qid, v)
+    }
     val filtered = member != null
     var passes = 0
     val hits: Array[Array[(K, Double)]] =
@@ -722,13 +394,7 @@ final class IvfIndex(
         Array.empty
       else {
         val t = tier
-        val qvecs = queries.map { case (_, v) =>
-          if (normalized && Kn.normSqD(v) == 0.0) {
-            val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-          } else v
-        }
-        val qnorms =
-          if (normalized) null else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
+        val qnorms = IvfIndex.queryNorms(qvecs, normalized)
         if (t.fullScan != null && np >= nList && nList > 0)
           t.fullScan(qids.zip(qvecs), k)
         else {
@@ -836,12 +502,12 @@ final class IvfIndex(
       }.toSeq
     spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
   }
-
-  /** Latest [[searchPackedAllowed]] call's persisted state (query prep
+  /** Latest filtered Dataset-query call's persisted state (query prep
     * + accumulated result heaps + the materialized output rows) — the
-    * lastFullScanQPrep discipline: a new call (or unpersistAssigned)
-    * releases the previous call's RDDs, so repeated Dataset-query
-    * filtered batches hold ONE state set, not an unbounded trail.
+    * lastFullScanQPrep discipline in a slot of its own: a new filtered
+    * call (or unpersistAssigned) releases the previous one's RDDs, so
+    * repeated filtered batches hold ONE state set, not an unbounded
+    * trail, and no unfiltered call releases a filtered call's slabs.
     */
   @transient @volatile private var lastPackedAllowedState:
     List[org.apache.spark.rdd.RDD[_]] = Nil
@@ -854,198 +520,258 @@ final class IvfIndex(
 
   /** Membership-filtered Dataset-query IVF top-k (round 17) — the bulk
     * twin of [[searchMergedAllowed]], so pipelines whose query batch
-    * is itself a table (the [[searchPacked]] shape — millions of
-    * stored queries, beyond driver memory) get the same no-repack
-    * filtered path instead of falling back to the exact filtered scan
-    * (VERDICT r16 missing #2). Same [[graft.core.MemberTest]] rungs
-    * and polarity rules; Bloom callers own FP verification + refill
-    * as in the driver-batch twin.
+    * is itself a table (the [[searchPacked]] shape) get the same
+    * no-repack filtered path instead of falling back to the exact
+    * filtered scan. Same [[graft.core.MemberTest]] rungs and polarity
+    * rules; Bloom callers own FP verification + refill as in the
+    * driver-batch twin.
     *
-    * Shape per adaptive pass: still-underfilled queries ship their
-    * probe-slice rows into the cogroup against the CACHED bucket pack
-    * (Q_active × slice-width probe rows — query vectors move, store
-    * bytes never do), each co-located (bucket × its probing queries)
-    * group scans member rows only ([[graft.core.BlockStore.scoreBlockMember]]
-    * survivor compaction), and per-row-keyed heaps absorb across
-    * passes in a reduceByKey (duplicate qids stay independent, the
-    * searchPacked rule). Underfilled rows re-probe the NEXT
-    * centroid-ranked slice (probe count doubling — the strict
-    * (-score, cid) order makes a longer ranking extend a shorter one,
-    * so no bucket rescans), until every row fills or the sweep covers
-    * every list: a query returns fewer than k rows ONLY when the
-    * filtered store holds fewer than k — [[searchMergedAllowed]]'s
-    * contract, fully distributed.
+    * Per adaptive pass, still-underfilled query rows ship their
+    * probe-slice rows into the cogroup against the CACHED bucket pack,
+    * and each co-located (bucket × its probing queries) group scans
+    * member rows only ([[graft.core.BlockStore.scoreBlockMember]]
+    * survivor compaction). A query returns fewer than k rows ONLY when
+    * the filtered store holds fewer than k — [[searchMergedAllowed]]'s
+    * contract, fully distributed ([[adaptiveFilteredLoop]]).
     *
     * At `nProbe >= nList` (or the [[resolveNProbe]] crossover snap)
-    * the single pass routes through the flat slab pack and IS the
-    * exact filtered scan (oracled as q94); `exact = true` gives the
+    * the single pass scans the flat slab pack and IS the exact
+    * filtered scan (oracled as q94); `exact = true` gives the
     * sequential-double arithmetic, bit-matching searchMergedAllowed
     * at the same flags (spec-pinned). The output rows are
     * materialized before returning — intermediate pass state is
     * released, only the Q × k result stays cached (latest call only).
     */
   def searchPackedAllowed[K](
-      queries: org.apache.spark.sql.Dataset[(Long, Array[Float])], k: Int,
+      queries: Dataset[(Long, Array[Float])], k: Int,
       member: graft.core.MemberTest[K], deny: Boolean,
       nProbe: Int = 0, normalized: Boolean = true, exact: Boolean = false)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    packedProbedTopK("searchPackedAllowed", queries, k, resolveNProbe(nProbe),
+      normalized, overfetch = 0, member, deny,
+      fp32Tier[K](normalized, exact, flatFullScan = false))
+
+  /** Membership-filtered bulk IVF-SQ8 top-k (round 17) — the int8
+    * composition of [[searchPackedAllowed]], completing the
+    * filtered × {driver-batch, Dataset} × {fp32, int8} matrix. Each
+    * adaptive pass runs the fused cogroup of [[searchPackedQ8]]: the
+    * membership-filtered int8 candidate scan
+    * ([[graft.core.Q8Store.scoreBlockMember]] — 4× less filtered
+    * candidate bandwidth) feeds a per-bucket fp32 rescore of the
+    * `k × overfetch` surviving MEMBER rows from the co-located fp32
+    * blocks, one pass, no extra shuffle. At covering probes +
+    * covering overfetch the result is bit-equal to
+    * `searchPackedAllowed(exact = true)` (spec-pinned; oracled as
+    * q95). `overfetch <= 0` returns the scan-only approximate
+    * ranking.
+    */
+  def searchPackedQ8Allowed[K](
+      queries: Dataset[(Long, Array[Float])], k: Int,
+      member: graft.core.MemberTest[K], deny: Boolean,
+      nProbe: Int = 0, normalized: Boolean = true, overfetch: Int = 0)(
+      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    packedProbedTopK("searchPackedQ8Allowed", queries, k,
+      resolveNProbe(nProbe, tier = "q8"), normalized, overfetch, member, deny,
+      q8Tier[K](normalized))
+
+  /** The engine of the Dataset-query searches — [[searchPacked]],
+    * [[searchPackedAllowed]], [[searchPackedQ8]],
+    * [[searchPackedQ8Allowed]], [[searchPackedPq]] and
+    * [[searchPackedBit]] differ only in their [[IvfIndex.ProbedTier]],
+    * as the driver-batch searches do in [[mergedProbedTopK]].
+    * Everything else lives once here:
+    *
+    *  - query prep per row ([[IvfIndex.prepQuery]])
+    *  - the probe fan-out: each query row ships to the buckets of its
+    *    probe slice, keyed per ROW by `zipWithUniqueId`, so duplicate
+    *    qids stay independent results through the uid-keyed merge
+    *  - one fused cogroup per probe pass against the cached bucket
+    *    pack: the tier's scorer fills `k × overfetch`-bounded heaps
+    *    from each bucket's code blocks; with `overfetch > 0` those
+    *    candidates rescore in double from the CO-LOCATED fp32 blocks
+    *    of the same bucket (no second job, fp32 bytes touched only on
+    *    candidate hits; a filtered scan's candidates are member rows
+    *    already). The cut is per bucket — a SUPERSET of the merged
+    *    twins' global cut, so recall can only match or exceed theirs
+    *  - a covering probe on a tier with a flat pack (fp32): the probe
+    *    shuffle would land every query on every bucket, so each query
+    *    partition is prepped into ONE slab and scored against every
+    *    flat block through a cartesian. The cartesian reads the query
+    *    side once per block partition and reduceByKey merges the heaps
+    *    BY INDEX, so the slabs are persisted and counted first: an
+    *    order-unstable upstream re-read per block partition would hand
+    *    one read's heaps to another read's qids. Filtered, this single
+    *    pass IS the exact filtered scan
+    *  - filtered calls run [[adaptiveFilteredLoop]], materialize their
+    *    output, and keep their state in `lastPackedAllowedState`; an
+    *    unfiltered covering call keeps its slab in `lastFullScanQPrep`.
+    *    An allow set matching nothing returns no rows without a Spark
+    *    job (0 passes)
+    *
+    * The code tiers keep the probe shuffle at nProbe = nList, shipping
+    * each query vector nList times: that is the exact-parity gate shape
+    * (q81, q101), not a scale workload — at scale probe partially, or
+    * call `searchPacked(exact = true)`, which full probing equals at
+    * covering overfetch anyway.
+    */
+  private def packedProbedTopK[K, B, Q](
+      name: String, queries: Dataset[(Long, Array[Float])], k: Int, np: Int,
+      normalized: Boolean, overfetch: Int,
+      member: graft.core.MemberTest[K], deny: Boolean,
+      tier: => IvfIndex.ProbedTier[K, B, Q])(
+      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
+      ctB: scala.reflect.ClassTag[B],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
       outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BlockStore, BoundedTopKG}
-    import graft.operators.{Kernels => Kn}
+    import graft.core.{BoundedTopKG, Q8Store, VecBlock}
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val spark = assigned.sparkSession
-    val sc = spark.sparkContext
-    val np0 = resolveNProbe(nProbe)
-    val dimLocal = dim
-    val kk = k
-    val ex = exact
-    val normStore = normalized
-    val localOrd = ord
-    if (member.matchesNothing && !deny) {
+    val filtered = member != null
+    if (filtered && member.matchesNothing && !deny) {
       lastFilteredPassesVar = 0
       return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
         .toDF("qid", "id", "score", "rank")
     }
-    val bcMem = sc.broadcast((member, deny))
-    // shared per-row query prep (dim check, zero-vector -> e0)
-    def prepRow(qid: Long, v: Array[Float]): (Long, Array[Float]) = {
-      if (dimLocal > 0) require(v.length == dimLocal,
-        s"IvfIndex.searchPackedAllowed: query $qid has dim ${v.length}, index dim is $dimLocal")
-      val pv =
-        if (normStore && Kn.normSqD(v) == 0.0) {
-          val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-        } else v
-      (qid, pv)
-    }
-
-    // covering probes: the probe shuffle would land every query on
-    // every bucket anyway — route through the flat slab pack (the
-    // searchPacked full-scan shape) with the member scan; this single
-    // pass IS the exact filtered result. No row keys: the slab keeps
-    // each row's heap at its own index, duplicate qids stay
-    // independent. The cartesian reads each query partition once per
-    // block partition and reduceByKey merges the heaps BY INDEX, so
-    // the prepped slabs are persisted and counted first: an
-    // order-unstable upstream (a shuffled source) re-read per block
-    // partition would hand each read's heaps to another read's qids.
-    if (np0 >= nList && nList > 0) {
-      lastFilteredPassesVar = 1
-      val bs = flatPack[K](normalized)
-      val qblocks = queries.rdd.mapPartitionsWithIndex { (pi, it) =>
-        val arr = it.map { case (qid, v) => prepRow(qid, v) }.toArray
+    val t = tier
+    val bc = spark.sparkContext.broadcast((t.encode, t.open, (member, deny)))
+    val dimLocal = dim
+    val localOrd = ord
+    if (t.flat != null && np >= nList && nList > 0) {
+      if (filtered) lastFilteredPassesVar = 1
+      val slabs = queries.rdd.mapPartitionsWithIndex { (pi, it) =>
+        val arr = it.map { case (qid, v) =>
+          (qid, IvfIndex.prepQuery(name, dimLocal, normalized, qid, v))
+        }.toArray
         if (arr.isEmpty) Iterator.empty
         else {
-          val qids = arr.map(_._1)
           val qvecs = arr.map(_._2)
-          val qnorms =
-            if (normStore) null else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-          Iterator((pi, (qids, qvecs, qnorms)))
+          Iterator((pi, (arr.map(_._1), qvecs, IvfIndex.queryNorms(qvecs, normalized))))
         }
-      }.setName("graft.ivf.filtered.qprep")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      swapPackedAllowedState(List(qblocks))
-      qblocks.count()
-      val partials = qblocks.cartesian(bs.blocks).map {
+      }.setName(if (filtered) "graft.ivf.filtered.qprep" else "graft.ivf.fullscan.qprep")
+        .persist(MEMORY_AND_DISK)
+      if (filtered) swapPackedAllowedState(List(slabs)) else swapFullScanQPrep(slabs)
+      slabs.count()
+      val rows = slabs.cartesian(t.flat()).map {
         case ((pi, (qids, qvecs, qnorms)), block) =>
-          val (mem, dny) = bcMem.value
-          val heaps =
-            Array.fill(qids.length)(new BoundedTopKG[K](kk)(localOrd))
-          BlockStore.scoreBlockMember(heaps, block, qvecs, qnorms,
-            mem, dny, ex)
+          val (encode, open, (mem, dny)) = bc.value
+          val heaps = Array.fill(qids.length)(new BoundedTopKG[K](k)(localOrd))
+          open(encode(qvecs), qnorms, mem, dny)(heaps, qids.indices.toArray, -1, block)
           (pi, (qids, heaps))
-      }
-      val rows = partials.reduceByKey { (x, y) =>
-        val a = x._2; val b = y._2
+      }.reduceByKey { (x, y) =>
         var i = 0
-        while (i < a.length) { a(i).absorb(b(i)); i += 1 }
+        while (i < x._2.length) { x._2(i).absorb(y._2(i)); i += 1 }
         x
       }.flatMap { case (_, (qids, heaps)) =>
         qids.iterator.zip(heaps.iterator).flatMap { case (qid, h) =>
-          h.sortedHits().iterator.zipWithIndex.map { case ((id, s), r) =>
-            (qid, id, s, r + 1)
-          }
+          IvfIndex.hitRows(qid, h, k)
         }
-      }.setName("graft.ivf.filtered.out")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      swapPackedAllowedState(List(rows))
-      return spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
+      }
+      return if (filtered) keepFiltered(rows) else frame(rows)
     }
-
-    // prepped queries keyed per ROW (zipWithUniqueId — duplicate qids
-    // stay independent results, the searchPacked rule), persisted once
-    // and reused by every adaptive pass
-    val qprep = queries.rdd.zipWithUniqueId().map { case ((qid, v), uid) =>
-      (uid, prepRow(qid, v))
-    }.setName("graft.ivf.filtered.qprep")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    qprep.count()
-
-    val (packed, part) = packedBuckets[K](normalized)
-    adaptiveFilteredLoop[K](qprep, kk, np0, probes =>
-      packed.cogroup(probes, part).flatMap {
-        case (_, (blocks, qs)) =>
-          if (blocks.isEmpty || qs.isEmpty) Iterator.empty
-          else {
-            val (mem, dny) = bcMem.value
-            val qarr = qs.toArray
-            val qvecs = qarr.map(_._3)
-            val qnorms =
-              if (normStore) null
-              else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-            val heaps = Array.fill(qarr.length)(new BoundedTopKG[K](kk)(localOrd))
-            blocks.foreach(b => BlockStore.scoreBlockMember(
-              heaps, b.asInstanceOf[graft.core.VecBlock[K]], qvecs, qnorms,
-              mem, dny, ex))
-            qarr.iterator.zip(heaps.iterator).map { case ((uid, qid, _), h) =>
-              (uid, (qid, h))
+    val (fpPacked, part) = packedBuckets[K](normalized)
+    val codes = t.packed
+    val rescore = overfetch > 0
+    val scanK =
+      if (!rescore) k
+      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
+    val pass = (probes: RDD[(Int, (Long, Long, Array[Float]))]) => {
+      val groups =
+        if (rescore) codes.cogroup(fpPacked, probes, part)
+        else codes.cogroup(probes, part).mapValues { case (c, qs) =>
+          (c, Iterable.empty[VecBlock[K]], qs)
+        }
+      groups.flatMap { case (cid, (codeBlocks, fpBlocks, qs)) =>
+        if (codeBlocks.isEmpty || qs.isEmpty) Iterator.empty
+        else {
+          val (encode, open, (mem, dny)) = bc.value
+          val qarr = qs.toArray
+          val qvecs = qarr.map(_._3)
+          val qnorms = IvfIndex.queryNorms(qvecs, normalized)
+          val score = open(encode(qvecs), qnorms, mem, dny)
+          val all = qarr.indices.toArray
+          val heaps = Array.fill(qarr.length)(new BoundedTopKG[K](scanK)(localOrd))
+          codeBlocks.foreach(b => score(heaps, all, cid, b))
+          val out =
+            if (!rescore) heaps
+            else {
+              val cands = Q8Store.CandIndex.build[K](heaps.map(_.sortedHits()))
+              val exact = Array.fill(qarr.length)(new BoundedTopKG[K](k)(localOrd))
+              fpBlocks.foreach(b => Q8Store.rescoreBlock(exact, b, cands, qvecs, qnorms))
+              exact
             }
-          }
-      }.reduceByKey((a, b) => { a._2.absorb(b._2); a }))
+          qarr.iterator.zip(out.iterator).map { case ((uid, qid, _), h) => (uid, (qid, h)) }
+        }
+      }.reduceByKey((a, b) => { a._2.absorb(b._2); a })
+    }
+    val bcCent = spark.sparkContext.broadcast(centroids)
+    val prepped = queries.rdd.zipWithUniqueId().map { case ((qid, v), uid) =>
+      (uid, (qid, IvfIndex.prepQuery(name, dimLocal, normalized, qid, v)))
+    }
+    if (!filtered)
+      frame(pass(IvfIndex.fanOut(prepped, bcCent, 0, np)).flatMap {
+        case (_, (qid, h)) => IvfIndex.hitRows(qid, h, k)
+      })
+    else {
+      // persisted once and reused by every adaptive pass
+      val qprep = prepped.setName("graft.ivf.filtered.qprep").persist(MEMORY_AND_DISK)
+      qprep.count()
+      adaptiveFilteredLoop[K](qprep, k, np, bcCent, pass)
+    }
   }
 
-  /** The adaptive probe-slice driver shared by [[searchPackedAllowed]]
-    * and [[searchPackedQ8Allowed]] (review r17: the two copies had
-    * already drifted cosmetically). `passPartials` turns one pass's
-    * probe rows `(cid, (uid, qid, prepped-vector))` into per-row
-    * result heaps, reduced by uid. Everything else is shared: per-row
-    * SEEDED heaps (a row whose probe slice lands only on empty buckets
-    * emits no partial and would otherwise vanish from the underfilled
-    * set — searchMergedAllowed keeps driver-side heaps per query; this
-    * is the distributed equivalent), strict probe-order slices (no
-    * bucket rescans), a shrinking shuffle join of still-underfilled
-    * rows per pass (no driver traffic), the per-pass heap merge with
-    * its cached-mutation discipline, and the eager Q × k output
-    * materialization under the latest-call-only state cache.
+  private def frame[K](rows: RDD[(Long, K, Double, Int)])(
+      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    assigned.sparkSession.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
+
+  /** Materializes a filtered call's output rows and makes them the
+    * latest filtered call's state, releasing what the call held before.
+    */
+  private def keepFiltered[K](rows: RDD[(Long, K, Double, Int)])(
+      implicit outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
+    rows.setName("graft.ivf.filtered.out")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    rows.count()
+    swapPackedAllowedState(List(rows))
+    frame(rows)
+  }
+
+  /** The adaptive probe-slice loop of filtered [[packedProbedTopK]]
+    * calls. `pass` turns one pass's probe rows `(cid, (uid, qid,
+    * prepped-vector))` into per-row result heaps, reduced by uid.
+    * Per-row SEEDED heaps (a row whose probe slice lands only on empty
+    * buckets emits no partial and would otherwise vanish from the
+    * underfilled set — searchMergedAllowed keeps driver-side heaps per
+    * query; this is the distributed equivalent), strict probe-order
+    * slices doubling per pass (the strict (-score, cid) order makes a
+    * longer ranking extend a shorter one, so no bucket rescans), a
+    * shrinking shuffle join of still-underfilled rows per pass (no
+    * driver traffic), the per-pass heap merge with its cached-mutation
+    * discipline, and the eager Q × k output materialization under the
+    * latest-call-only state cache.
     */
   private def adaptiveFilteredLoop[K](
-      qprep: org.apache.spark.rdd.RDD[(Long, (Long, Array[Float]))],
-      kk: Int, np0: Int,
-      passPartials: org.apache.spark.rdd.RDD[(Int, (Long, Long, Array[Float]))]
-        => org.apache.spark.rdd.RDD[(Long, (Long, graft.core.BoundedTopKG[K]))])(
+      qprep: RDD[(Long, (Long, Array[Float]))], kk: Int, np0: Int,
+      bcCent: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
+      pass: RDD[(Int, (Long, Long, Array[Float]))]
+        => RDD[(Long, (Long, graft.core.BoundedTopKG[K]))])(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
     import graft.core.BoundedTopKG
-    val spark = assigned.sparkSession
     val localOrd = ord
-    val bcCent = spark.sparkContext.broadcast(centroids)
-    var results: org.apache.spark.rdd.RDD[(Long, (Long, BoundedTopKG[K]))] =
+    var results: RDD[(Long, (Long, BoundedTopKG[K]))] =
       qprep.mapValues { case (qid, _) => (qid, new BoundedTopKG[K](kk)(localOrd)) }
-    var active: org.apache.spark.rdd.RDD[(Long, (Long, Array[Float]))] = qprep
+    var active: RDD[(Long, (Long, Array[Float]))] = qprep
     var activeN = 1L // any nonzero sentinel; refreshed after each pass
     var prevNp = 0
     var curNp = math.max(1, math.min(np0, math.max(nList, 1)))
     var passes = 0
     while (activeN > 0 && prevNp < nList && nList > 0) {
       passes += 1
-      val lo = prevNp
-      val hi = curNp
-      val probes = active.flatMap { case (uid, (qid, pv)) =>
-        val full = IvfIndex.probeIds(bcCent.value, pv, hi)
-        java.util.Arrays.copyOfRange(full, math.min(lo, full.length), full.length)
-          .map(c => (c, (uid, qid, pv)))
-      }
-      val passResult = passPartials(probes)
+      val passResult = pass(IvfIndex.fanOut(active, bcCent, prevNp, curNp))
       // the mutating absorb may run map-side against the PERSISTED
       // previous-round heaps (reduceByKey's combiner seeds with the
       // cached object itself) — safe only because the old `results` is
@@ -1062,7 +788,7 @@ final class IvfIndex(
       activeN = mergedP.filter(_._2._2.filled < kk).count()
       swapPackedAllowedState(List(qprep, mergedP))
       results = mergedP
-      prevNp = hi
+      prevNp = curNp
       if (activeN > 0) {
         val under = mergedP.filter(_._2._2.filled < kk).mapValues(_ => ())
         active = qprep.join(under).mapValues(_._1)
@@ -1075,110 +801,13 @@ final class IvfIndex(
         "IvfIndex: Dataset filtered search re-probed adaptively — {} passes " +
           "from initial nProbe {}; {} queries have < k filtered rows in the store",
         passes, np0, activeN + 0L)
-    val rows =
-      results.flatMap { case (_, (qid, h)) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map { case ((id, s), r) =>
-          (qid, id, s, r + 1)
-        }
-      }.setName("graft.ivf.filtered.out")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rows.count()
-    swapPackedAllowedState(List(rows))
+    val out = keepFiltered(results.flatMap { case (_, (qid, h)) =>
+      IvfIndex.hitRows(qid, h, kk)
+    })
     qprep.unpersist(false)
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
+    out
   }
 
-  /** Membership-filtered bulk IVF-SQ8 top-k (round 17) — the int8
-    * composition of [[searchPackedAllowed]], completing the
-    * filtered × {driver-batch, Dataset} × {fp32, int8} matrix. Same
-    * adaptive probe-slice loop (per-row seeded heaps, shrinking
-    * distributed join of still-underfilled rows, no bucket rescans),
-    * but each pass runs [[searchPackedQ8]]'s FUSED cogroup: the
-    * membership-filtered int8 candidate scan
-    * ([[graft.core.Q8Store.scoreBlockMember]] — 4× less filtered
-    * candidate bandwidth) feeds a per-bucket fp32 rescore of the
-    * `k × overfetch` surviving MEMBER rows from the co-located fp32
-    * blocks, one pass, no extra shuffle. At covering probes +
-    * covering overfetch the result is bit-equal to
-    * `searchPackedAllowed(exact = true)` (spec-pinned; oracled as
-    * q95). `overfetch <= 0` returns the scan-only approximate
-    * ranking. Same MemberTest rungs/polarity; Bloom callers own
-    * verification + refill.
-    */
-  def searchPackedQ8Allowed[K](
-      queries: org.apache.spark.sql.Dataset[(Long, Array[Float])], k: Int,
-      member: graft.core.MemberTest[K], deny: Boolean,
-      nProbe: Int = 0, normalized: Boolean = true, overfetch: Int = 0)(
-      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
-      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BoundedTopKG, Q8Block, Q8Store, VecBlock}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val sc = spark.sparkContext
-    val np0 = resolveNProbe(nProbe, tier = "q8")
-    val dimLocal = dim
-    val kk = k
-    val scanK =
-      if (overfetch <= 0) k
-      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
-    val doRescore = overfetch > 0
-    val normStore = normalized
-    val localOrd = ord
-    if (member.matchesNothing && !deny) {
-      lastFilteredPassesVar = 0
-      return spark.createDataset(Seq.empty[(Long, K, Double, Int)])(outEnc)
-        .toDF("qid", "id", "score", "rank")
-    }
-    val bcMem = sc.broadcast((member, deny))
-    val (fpPacked, part) = packedBuckets[K](normalized)
-    val q8Packed = packedQ8Buckets[K](normalized)
-    val qprep = queries.rdd.zipWithUniqueId().map { case ((qid, v), uid) =>
-      if (dimLocal > 0) require(v.length == dimLocal,
-        s"IvfIndex.searchPackedQ8Allowed: query $qid has dim ${v.length}, index dim is $dimLocal")
-      val pv =
-        if (normStore && Kn.normSqD(v) == 0.0) {
-          val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-        } else v
-      (uid, (qid, pv))
-    }.setName("graft.ivf.filtered.qprep")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    qprep.count()
-    adaptiveFilteredLoop[K](qprep, kk, np0, probes =>
-      q8Packed.cogroup(fpPacked, probes, part).flatMap {
-        case (_, (q8Blocks, fpBlocks, qs)) =>
-          if (q8Blocks.isEmpty || qs.isEmpty) Iterator.empty
-          else {
-            val (mem, dny) = bcMem.value
-            val qarr = qs.toArray
-            val qvecs = qarr.map(_._3)
-            val qnorms =
-              if (normStore) null
-              else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-            // membership-filtered int8 candidate scan over this
-            // bucket's quantized slabs
-            val scanHeaps = Array.fill(qarr.length)(new BoundedTopKG[K](scanK)(localOrd))
-            q8Blocks.foreach(b => Q8Store.scoreBlockMember(
-              scanHeaps, b.asInstanceOf[Q8Block[K]], qvecs, qnorms, mem, dny))
-            val outHeaps =
-              if (!doRescore) scanHeaps
-              else {
-                // fused fp32 rescore: the candidates are MEMBER rows
-                // by construction, so the plain candidate-restricted
-                // rescore needs no second membership check
-                val approx = scanHeaps.map(_.sortedHits())
-                val cands = Q8Store.CandIndex.build[K](approx)
-                val heaps = Array.fill(qarr.length)(new BoundedTopKG[K](kk)(localOrd))
-                fpBlocks.foreach(b => Q8Store.rescoreBlock(
-                  heaps, b.asInstanceOf[VecBlock[K]], cands, qvecs, qnorms))
-                heaps
-              }
-            qarr.iterator.zip(outHeaps.iterator).map { case ((uid, qid, _), h) =>
-              (uid, (qid, h))
-            }
-          }
-      }.reduceByKey((a, b) => { a._2.absorb(b._2); a }))
-  }
 
   /** IVF-SQ8 driver-batch top-k (round 12): [[searchMerged]]'s
     * broadcast-down/heaps-up shape over INT8-quantized bucket slabs —
@@ -1350,24 +979,31 @@ final class IvfIndex(
       outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
     mergedProbedTopK("searchMergedPq", queries, k,
       resolveNProbe(nProbe, tier = "pq"), normalized, overfetch,
-      member = null, deny = false, {
-        val mm = if (m > 0) m else graft.core.PqStore.autoM(dim)
-        val (codebook, pqPacked) = packedPqBuckets[K](normalized, mm, byResidual)
-        // ADC tables cost `chunk * m * ksub * 4` bytes PER TASK (one
-        // table per query, built once per task) — chunk the batch so
-        // that stays under graft.pq.table.budget.mb. The headline
-        // 1000q/m=64 batch is one chunk (unchanged plan); oversized
-        // batches trade extra passes over the (RAM-resident) code pack
-        // for bounded task memory instead of an executor OOM.
-        val bytesPerQuery = mm.toLong * codebook.ksub.toLong * 4L
-        val budgetBytes =
-          new graft.core.GraftConf(assigned.sparkSession).pqTableBudgetMb.toLong << 20
-        new IvfIndex.ProbedTier[K, graft.core.PqBlock[K], Array[Float]](
-          pqPacked, identity,
-          IvfIndex.pqScorer[K](codebook, if (byResidual) centroids else null),
-          chunk = math.max(1, math.min(Int.MaxValue.toLong,
-            budgetBytes / math.max(1L, bytesPerQuery)).toInt))
-      })
+      member = null, deny = false, pqTier[K](normalized, m, byResidual))
+
+  /** The PQ tier, `m = 0` picking [[graft.core.PqStore.autoM]]. ADC
+    * tables cost `chunk * m * ksub * 4` bytes PER TASK in the merged
+    * engine (one table per query, built once per task) — `chunk` splits
+    * the batch so that stays under graft.pq.table.budget.mb. The
+    * headline 1000q/m=64 batch is one chunk; oversized batches trade
+    * extra passes over the (RAM-resident) code pack for bounded task
+    * memory instead of an executor OOM.
+    */
+  private def pqTier[K](normalized: Boolean, m: Int, byResidual: Boolean)(
+      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)])
+      : IvfIndex.ProbedTier[K, graft.core.PqBlock[K], Array[Float]] = {
+    val mm = if (m > 0) m else graft.core.PqStore.autoM(dim)
+    val (codebook, pqPacked) = packedPqBuckets[K](normalized, mm, byResidual)
+    val bytesPerQuery = mm.toLong * codebook.ksub.toLong * 4L
+    val budgetBytes =
+      new graft.core.GraftConf(assigned.sparkSession).pqTableBudgetMb.toLong << 20
+    new IvfIndex.ProbedTier[K, graft.core.PqBlock[K], Array[Float]](
+      pqPacked, identity,
+      IvfIndex.pqScorer[K](codebook, if (byResidual) centroids else null),
+      chunk = math.max(1, math.min(Int.MaxValue.toLong,
+        budgetBytes / math.max(1L, bytesPerQuery)).toInt))
+  }
 
   /** IVF-bit driver-batch top-k (round 15): the binary-sketch analog
     * of [[searchMergedPq]] and the cheapest rung of the composed
@@ -1395,263 +1031,87 @@ final class IvfIndex(
       outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
     mergedProbedTopK("searchMergedBit", queries, k,
       resolveNProbe(nProbe, tier = "bit"), normalized, overfetch,
-      member = null, deny = false,
-      new IvfIndex.ProbedTier[K, graft.core.BitBlock[K], Array[Long]](
-        packedBitBuckets[K](normalized, bits), IvfIndex.bitSketches(_, bits),
-        IvfIndex.bitScorer[K](bits)))
+      member = null, deny = false, bitTier[K](normalized, bits))
+
+  private def bitTier[K](normalized: Boolean, bits: Int)(
+      implicit ct: scala.reflect.ClassTag[K],
+      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)])
+      : IvfIndex.ProbedTier[K, graft.core.BitBlock[K], Array[Long]] =
+    new IvfIndex.ProbedTier[K, graft.core.BitBlock[K], Array[Long]](
+      packedBitBuckets[K](normalized, bits), IvfIndex.bitSketches(_, bits),
+      IvfIndex.bitScorer[K](bits))
 
   /** Bulk (Dataset-query) IVF-SQ8 top-k (round 12): [[searchPacked]]'s
     * probe-shuffle shape over the int8 bucket slabs — the composed
     * analog for query batches too large for a driver array. Because
     * the quantized and fp32 bucket RDDs share one partitioner, the
     * int8 candidate scan and the fp32 rescore FUSE into a single
-    * cogroup pass: per probed bucket, scan the q8 slabs into
-    * `k*overfetch`-bounded heaps, then rescore those candidates from
-    * the CO-LOCATED fp32 blocks of the same bucket — no second job,
-    * no extra shuffle, fp32 bytes touched only on candidate hits.
-    *
-    * The candidate cut is per-bucket (each probed bucket keeps its own
-    * `k*overfetch` per query) — a SUPERSET of the global cut
-    * [[searchMergedQ8]] applies, so recall can only match or exceed
-    * the merged path at equal overfetch, and at covering overfetch
-    * the rescored result is bit-equal to `searchPacked(exact=true)`
+    * cogroup pass ([[packedProbedTopK]]). At covering overfetch the
+    * rescored result is bit-equal to `searchPacked(exact=true)`
     * (spec-pinned). `overfetch <= 0` returns the scan-only
-    * approximate ranking. Query prep, duplicate-qid independence
-    * (uid-keyed merge), tie rule, and output shape match
-    * [[searchPacked]].
+    * approximate ranking.
     */
-  def searchPackedQ8[K](queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+  def searchPackedQ8[K](queries: Dataset[(Long, Array[Float])],
                         k: Int, nProbe: Int = 0, normalized: Boolean = true,
                         overfetch: Int = 0)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.Q8Store
-    val np = resolveNProbe(nProbe, tier = "q8")
-    packedFusedTopK[K, graft.core.Q8Block[K]]("searchPackedQ8", queries, k,
-      np, normalized, overfetch, packedQ8Buckets[K](normalized),
-      (scanHeaps, _, _, blocks, qvecs, qnorms) =>
-        // int8 candidate scan over this bucket's quantized slabs
-        blocks.foreach(b => Q8Store.scoreBlock(scanHeaps, b, qvecs, qnorms)))
-  }
-
-  /** The shared engine of the packed composed tiers —
-    * [[searchPackedQ8]] / [[searchPackedPq]] / [[searchPackedBit]]
-    * differ ONLY in the per-bucket candidate scan (int8 dot / ADC
-    * tables / sketch encode + Hamming), so the probe exchange, the
-    * fused cogroup, the shared fp32 rescore and the uid-keyed merge
-    * live once here and a fix lands once (round-18 review: the three
-    * bodies had already been copied verbatim). Shape: zipWithUniqueId
-    * query prep with the zero→e0 convention, probe fan-out against the
-    * broadcast centroids, ONE cogroup pass per probed bucket — `scan`
-    * fills `k×overfetch`-bounded heaps from the tier's code slabs
-    * (receiving the bucket id and the broadcast centroids for
-    * per-bucket prep like residual offsets), then the survivors
-    * rescore against the CO-LOCATED fp32 blocks, fp32 bytes touched
-    * only on candidate hits — and the duplicate-qid-independent
-    * reduceByKey emit. `overfetch <= 0` skips the rescore (scan-only
-    * approximate ranking).
-    */
-  private def packedFusedTopK[K, B](
-      name: String,
-      queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-      k: Int, np: Int, normalized: Boolean, overfetch: Int,
-      codePacked: org.apache.spark.rdd.RDD[(Int, B)],
-      scan: (Array[graft.core.BoundedTopKG[K]], Int, Array[Array[Double]],
-             Iterable[B], Array[Array[Float]], Array[Double]) => Unit)(
-      implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
-      ctB: scala.reflect.ClassTag[B],
-      rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.{BoundedTopKG, Q8Store}
-    import graft.operators.{Kernels => Kn}
-    val spark = assigned.sparkSession
-    val sc = spark.sparkContext
-    val (fpPacked, part) = packedBuckets[K](normalized)
-    val bcCent = sc.broadcast(centroids)
-    val dimLocal = dim
-    val kk = k
-    val scanK =
-      if (overfetch <= 0) k
-      else math.min(math.max(k.toLong * overfetch, k.toLong), Int.MaxValue.toLong).toInt
-    val doRescore = overfetch > 0
-    val normStore = normalized
-    val scanLocal = scan
-    val probed = queries.rdd.zipWithUniqueId().flatMap { case ((qid, v), uid) =>
-      if (dimLocal > 0) require(v.length == dimLocal,
-        s"IvfIndex.$name: query $qid has dim ${v.length}, index dim is $dimLocal")
-      val pv =
-        if (normStore && Kn.normSqD(v) == 0.0) {
-          val e = new Array[Float](math.max(1, dimLocal)); e(0) = 1f; e
-        } else v
-      IvfIndex.probeIds(bcCent.value, pv, np).map(c => (c, (uid, qid, pv)))
-    }
-    val partials = codePacked.cogroup(fpPacked, probed, part).flatMap {
-      case (cid, (codeBlocks, fpBlocks, qs)) =>
-        if (codeBlocks.isEmpty || qs.isEmpty) Iterator.empty
-        else {
-          val qarr = qs.toArray
-          val qvecs = qarr.map(_._3)
-          val qnorms =
-            if (normStore) null
-            else qvecs.map(v => math.sqrt(Kn.normSqD(v)))
-          val scanHeaps = Array.fill(qarr.length)(new BoundedTopKG[K](scanK))
-          scanLocal(scanHeaps, cid, bcCent.value, codeBlocks, qvecs, qnorms)
-          val outHeaps =
-            if (!doRescore) scanHeaps
-            else {
-              // fused rescore: candidates of THIS bucket probed against
-              // the co-located fp32 blocks of the same bucket
-              val approx = scanHeaps.map(_.sortedHits())
-              val cands = Q8Store.CandIndex.build[K](approx)
-              val heaps = Array.fill(qarr.length)(new BoundedTopKG[K](kk))
-              fpBlocks.foreach(b =>
-                Q8Store.rescoreBlock(heaps, b, cands, qvecs, qnorms))
-              heaps
-            }
-          qarr.iterator.zip(outHeaps.iterator).map { case ((uid, qid, _), h) =>
-            (uid, (qid, h))
-          }
-        }
-    }
-    val rows = partials
-      .reduceByKey((a, b) => { a._2.absorb(b._2); a })
-      .flatMap { case (_, (qid, h)) =>
-        h.sortedHits().iterator.take(kk).zipWithIndex.map { case ((id, s), r) =>
-          (qid, id, s, r + 1)
-        }
-      }
-    spark.createDataset(rows)(outEnc).toDF("qid", "id", "score", "rank")
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    packedProbedTopK("searchPackedQ8", queries, k,
+      resolveNProbe(nProbe, tier = "q8"), normalized, overfetch,
+      member = null, deny = false, q8Tier[K](normalized))
 
   /** Bulk (Dataset-query) IVF-PQ top-k: [[searchPackedQ8]]'s fused
     * probe-shuffle shape over the PRODUCT-QUANTIZED bucket slabs — the
-    * composed analog for query batches too large for a driver array,
-    * completing the merged/packed x q8/pq matrix. The code pack keeps
-    * the fp32 pack's partitioner (encode is a preservesPartitioning
-    * mapPartitions), so the ADC candidate scan and the fp32 rescore
-    * FUSE into one cogroup pass: per probed bucket, scan the code
-    * slabs into `k*overfetch`-bounded heaps, then rescore those
-    * candidates from the CO-LOCATED fp32 blocks — no second job, no
-    * extra shuffle, fp32 bytes touched only on candidate hits.
+    * composed analog for query batches too large for a driver array.
+    * The code pack keeps the fp32 pack's partitioner (encode is a
+    * preservesPartitioning mapPartitions), so the ADC candidate scan
+    * and the fp32 rescore fuse into one cogroup pass.
     *
     * ADC tables are built per (query, probed bucket) — `O(dim*ksub)`
     * each, amortized over the bucket's rows. At the >=128 MB slab
     * sizes the store packs for (32k+ rows at 1024-d), the build is
     * ~13% of the scan; for SMALL stores the one-table-per-task
-    * [[searchMergedPq]] shape is cheaper — same routing guidance as
-    * exact merged-vs-packed. Task memory is bounded by the bucket's
-    * probing fan-in (queries-per-bucket x m x ksub floats), not the
-    * global batch size, so no chunking is needed on this path. With
-    * `byResidual` the per-(query,bucket) `dot(q,c_cid)` offset rides
-    * the same scan ([[graft.core.PqStore.scoreBlock]]'s offsets).
-    *
-    * The candidate cut is per-bucket (a SUPERSET of the merged path's
-    * global cut), so recall can only match or exceed
-    * [[searchMergedPq]] at equal overfetch, and at covering overfetch
-    * the rescored result is bit-equal to `searchPacked(exact = true)`
-    * (spec-pinned; oracled as q81 at nProbe = nList). Query prep,
-    * duplicate-qid independence (uid-keyed merge), tie rule, and
-    * output shape match [[searchPackedQ8]].
-    *
-    * KNOWN COST at nProbe >= nList (shared with [[searchPackedQ8]]):
-    * unlike [[searchPacked]], which reroutes full scans through the
-    * flat slab pack, the quantized cogroup paths ship each query
-    * vector nList times through the probe exchange (Q x nList x dim
-    * floats). Full probing on a quantized path is the exact-parity
-    * GATE shape (q81), not a scale workload — at scale either probe
-    * partially (the point of IVF) or call `searchPacked(exact=true)`,
-    * which full probing equals at covering overfetch anyway.
+    * [[searchMergedPq]] shape is cheaper. Task memory is bounded by
+    * the bucket's probing fan-in (queries-per-bucket x m x ksub
+    * floats), not the global batch size, so no chunking is needed on
+    * this path. At covering overfetch the rescored result is bit-equal
+    * to `searchPacked(exact = true)` (spec-pinned; oracled as q81 at
+    * nProbe = nList).
     */
-  def searchPackedPq[K](queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+  def searchPackedPq[K](queries: Dataset[(Long, Array[Float])],
                         k: Int, nProbe: Int = 0, normalized: Boolean = true,
                         overfetch: Int = 0, m: Int = 0,
                         byResidual: Boolean = true)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.PqStore
-    val np = resolveNProbe(nProbe, tier = "pq")
-    val mm = if (m > 0) m else graft.core.PqStore.autoM(dim)
-    val (codebook, pqPacked) = packedPqBuckets[K](normalized, mm, byResidual)
-    val bcCb = assigned.sparkSession.sparkContext.broadcast(codebook)
-    val useResidual = byResidual
-    packedFusedTopK[K, graft.core.PqBlock[K]]("searchPackedPq", queries, k,
-      np, normalized, overfetch, pqPacked,
-      (scanHeaps, cid, cents, blocks, qvecs, qnorms) => {
-        val cbk = bcCb.value
-        val tables = qvecs.map(cbk.adcTable)
-        val c =
-          if (useResidual && cid >= 0 && cid < cents.length) cents(cid)
-          else null
-        val offsets =
-          if (c == null) null
-          else qvecs.map { q =>
-            var s = 0.0; var t = 0
-            while (t < q.length) { s += q(t) * c(t); t += 1 }
-            s
-          }
-        // ADC candidate scan over this bucket's code slabs
-        blocks.foreach(b =>
-          PqStore.scoreBlock(scanHeaps, tables, cbk.ksub, b, qnorms, offsets))
-      })
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    packedProbedTopK("searchPackedPq", queries, k,
+      resolveNProbe(nProbe, tier = "pq"), normalized, overfetch,
+      member = null, deny = false, pqTier[K](normalized, m, byResidual))
 
   /** Bulk (Dataset-query) IVF-bit top-k (round 18): [[searchPackedQ8]]'s
-    * fused probe-shuffle shape over the BINARY-SKETCH bucket slabs —
-    * the last composed tier without a Dataset-query twin (queryDF
-    * previously fell back to the fp32 probed scan for ann+bit). Per
-    * probed bucket: queries arriving at the bucket sketch under the
-    * store's seeded hyperplanes (regenerated in-task from the seed —
-    * ~1 MB, never shuffled; repeated per bucket, the
-    * [[searchPackedPq]] per-bucket-prep trade), the Hamming XOR+popcount
-    * scan over the co-located sketch slabs keeps `k * overfetch`
-    * candidates per query, and the fused fp32 rescore re-ranks them
-    * from the SAME bucket's float blocks — no second job, no extra
-    * shuffle, float bytes touched only on candidate hits.
-    *
-    * The candidate cut is per-bucket (a SUPERSET of
-    * [[searchMergedBit]]'s global cut), so recall can only match or
-    * exceed the merged twin at equal overfetch; at covering probes +
-    * covering overfetch the rescored result is the exact scan (the
-    * q79/q82 keep-all argument applied per bucket — every member row
-    * of every probed bucket is a candidate), which the q101 catalog
-    * entry hash-matches against the DuckDB oracle. `overfetch <= 0`
-    * returns the scan-only angle-estimate ranking. Query prep,
-    * duplicate-qid independence, tie rule, output shape and the
-    * KNOWN nProbe >= nList probe-exchange cost all match
-    * [[searchPackedQ8]].
+    * fused probe-shuffle shape over the BINARY-SKETCH bucket slabs.
+    * Per probed bucket, queries sketch under the store's seeded
+    * hyperplanes (regenerated in-task from the seed, never shuffled),
+    * the Hamming XOR+popcount scan keeps `k * overfetch` candidates
+    * per query, and the fused fp32 rescore re-ranks them from the SAME
+    * bucket's float blocks. At covering probes + covering overfetch
+    * the rescored result is the exact scan (every member row of every
+    * probed bucket is a candidate), which the q101 catalog entry
+    * hash-matches against the DuckDB oracle. `overfetch <= 0` returns
+    * the scan-only angle-estimate ranking.
     */
-  def searchPackedBit[K](queries: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+  def searchPackedBit[K](queries: Dataset[(Long, Array[Float])],
                          k: Int, nProbe: Int = 0, normalized: Boolean = true,
                          overfetch: Int = 0, bits: Int = 256)(
       implicit ct: scala.reflect.ClassTag[K], ord: Ordering[K],
       rowEnc: org.apache.spark.sql.Encoder[(K, Array[Float], Int)],
-      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame = {
-    import graft.core.BitStore
-    val np = resolveNProbe(nProbe, tier = "bit")
-    val nBits = bits
-    packedFusedTopK[K, graft.core.BitBlock[K]]("searchPackedBit", queries, k,
-      np, normalized, overfetch, packedBitBuckets[K](normalized, bits),
-      (scanHeaps, _, _, blocks, qvecs, _) => {
-        // in-task query sketches under the pack's seeded hyperplanes
-        // (dims validated against each slab by the scan below)
-        val qDim = qvecs(0).length
-        val planes = BitStore.hyperplanes(nBits, qDim, BitStore.DefaultSeed)
-        val w = (nBits + 63) >>> 6
-        val qcodes = new Array[Long](qvecs.length * w)
-        var i = 0
-        while (i < qvecs.length) {
-          BitStore.encodeRow(qvecs(i), 0, qDim, planes, nBits, qcodes, i * w)
-          i += 1
-        }
-        blocks.foreach { blk =>
-          require(blk.dim == qDim,
-            s"IvfIndex.searchPackedBit: query dim $qDim != store sketch dim ${blk.dim}")
-          BitStore.scoreBlock(scanHeaps, blk, qcodes, nBits)
-        }
-      })
-  }
+      outEnc: org.apache.spark.sql.Encoder[(Long, K, Double, Int)]): DataFrame =
+    packedProbedTopK("searchPackedBit", queries, k,
+      resolveNProbe(nProbe, tier = "bit"), normalized, overfetch,
+      member = null, deny = false, bitTier[K](normalized, bits))
+
 
   /** Product-quantized twins of [[packedBuckets]] (IVF-PQ): the
     * codebook trains once from a bounded content-hashed sample of the
@@ -1920,12 +1380,12 @@ final class IvfIndex(
 
 object IvfIndex {
 
-  /** Nearest-centroid probe ids for one float query — the closure-safe
-    * twin of the instance `probesFor` (task closures must not capture
-    * the index: `assigned` is a DataFrame). Same inner-product order
-    * and (-score, index) tie rule as `probesFor`/`nearest_centroids`;
-    * ranking is scale-invariant, so raw (un-normalized) queries probe
-    * identically to their normalized forms.
+  /** Nearest-centroid probe ids for one float query, closure-safe
+    * (task closures must not capture the index: `assigned` is a
+    * DataFrame). Inner-product order with the (-score, index) tie rule
+    * of `nearest_centroids`, matching the assignment rule; ranking is
+    * scale-invariant, so raw (un-normalized) queries probe identically
+    * to their normalized forms.
     */
   private[graft] def probeIds(cents: Array[Array[Double]],
                               q: Array[Float], np: Int): Array[Int] = {
@@ -1943,6 +1403,45 @@ object IvfIndex {
     scored.sorted.take(np).map(_._2)
   }
 
+  /** A query vector prepped for the scan. A mis-dimensioned query fails
+    * loudly, named after the entry point: dotPackedD iterates q.length
+    * over the packed slab, so a wrong-dim vector would silently read
+    * into the NEXT row. In normalized mode the zero query maps to e0
+    * BEFORE probe selection, so probes and scores see the same vector.
+    */
+  private[operators] def prepQuery(name: String, dim: Int, normalized: Boolean,
+      qid: Long, v: Array[Float]): Array[Float] = {
+    if (dim > 0) require(v.length == dim,
+      s"IvfIndex.$name: query $qid has dim ${v.length}, index dim is $dim")
+    if (normalized && Kernels.normSqD(v) == 0.0) {
+      val e = new Array[Float](math.max(1, dim)); e(0) = 1f; e
+    } else v
+  }
+
+  /** Cosine-mode query norms; null for a normalized store. */
+  private[operators] def queryNorms(qvecs: Array[Array[Float]],
+      normalized: Boolean): Array[Double] =
+    if (normalized) null else qvecs.map(v => math.sqrt(Kernels.normSqD(v)))
+
+  /** Probe rows `(cid, (uid, qid, v))` of each query row for slice
+    * [lo, hi) of its centroid ranking.
+    */
+  private[operators] def fanOut(rows: RDD[(Long, (Long, Array[Float]))],
+      cents: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
+      lo: Int, hi: Int): RDD[(Int, (Long, Long, Array[Float]))] =
+    rows.flatMap { case (uid, (qid, v)) =>
+      val full = probeIds(cents.value, v, hi)
+      java.util.Arrays.copyOfRange(full, math.min(lo, full.length), full.length)
+        .map(c => (c, (uid, qid, v)))
+    }
+
+  /** One query's (qid, id, score, rank) rows, best first. */
+  private[operators] def hitRows[K](qid: Long, h: graft.core.BoundedTopKG[K],
+      k: Int): Iterator[(Long, K, Double, Int)] =
+    h.sortedHits().iterator.take(k).zipWithIndex.map { case ((id, s), r) =>
+      (qid, id, s, r + 1)
+    }
+
   /** A task's block scorer in [[IvfIndex.mergedProbedTopK]]: scores
     * code block `b` of bucket `cid` into `heaps`, the heaps of the
     * queries at positions `idxs` of the scan's batch.
@@ -1959,8 +1458,10 @@ object IvfIndex {
     *    filter (null: every row passes). Runs once per task, so
     *    per-task state (PQ's ADC tables) is built once.
     *  - `chunk`: the most queries one scan may carry
-    *  - `fullScan`: when set, serves an all-list probe instead of the
-    *    probed scan (fp32's flat slab pack)
+    *  - `fullScan`: when set, serves an all-list driver-batch probe
+    *    instead of the probed scan (fp32's flat slab pack)
+    *  - `flat`: when set, the Dataset engine scans these slab-sized
+    *    blocks for an all-list probe (fp32's flat slab pack)
     */
   private[operators] final class ProbedTier[K, B, Q](
       val packed: org.apache.spark.rdd.RDD[(Int, B)],
@@ -1969,7 +1470,8 @@ object IvfIndex {
         => ProbedScorer[K, B],
       val chunk: Int = Int.MaxValue,
       val fullScan: (Array[(Long, Array[Float])], Int)
-        => Array[Array[(K, Double)]] = null)
+        => Array[Array[(K, Double)]] = null,
+      val flat: () => RDD[B] = null)
 
   /** A task's accumulator: the per-query heaps, plus the tier's scorer.
     * The scorer is `@transient` — only heaps cross the combine tree

@@ -167,7 +167,7 @@ object ScaleSmoke {
 
     // ---- ANN phase (VERDICT r8 next-round #4): the Dataset-side IVF
     // search at the same scale as the exact phases — build at √N lists
-    // on this store, searchDs a 100k-query Dataset, record wall +
+    // on this store, searchPacked a 100k-query Dataset, record wall +
     // recall@10 vs the exact path, so the "probe join prunes to
     // nProbe/nList of the store" claim carries a measured row
     // (SCALING.md "ANN"). Query vectors are structure-free (IVF's worst
@@ -197,19 +197,26 @@ object ScaleSmoke {
       idx.assigned.count()
     }
     raw.unpersist(blocking = false) // assigned cache now holds the rows
-    // the declarative row-join path pays UnsafeRow traversal per
-    // (query, candidate) pair — ~10x the packed path's per-candidate
-    // cost — so its phase takes its own query count (default = the ANN
-    // batch; the 10M evidence pass drops it to keep the phase bounded
-    // and compares per-query rates)
+    // packed-kernel search: the store re-buckets ONCE into per-centroid
+    // SIMD slabs (timed as its own phase — an index-build cost), then
+    // query batches stream them with the gemm kernels
+    timed(s"ann pack buckets") {
+      // first searchPacked call builds + caches the packed buckets; a
+      // 1-query probe isolates the build cost into this phase
+      idx.searchPacked[Long](spark.createDataset(Seq((0L, annQVec(0)))),
+        k = 1, nProbe = 1, normalized = false).count()
+    }
+    // a query TABLE filtered down to its first SPARK_GRAFT_SMOKE_DSQ
+    // rows (default = the ANN batch; the 10M evidence pass drops it to
+    // keep the phase bounded and compares per-query rates)
     val nDsQ = sys.env.get("SPARK_GRAFT_SMOKE_DSQ").map(_.toInt).getOrElse(nAnnQ)
     val annQDs = spark.createDataset(sc.range(0, math.max(nDsQ.toLong, 100L), 1, 24)
-      .map(i => (i, annQVec(i)))).toDF("qid", "vec")
-    timed(s"ann searchDs ${nDsQ}q np=$nProbe") {
-      idx.searchDs(annQDs.filter(col("qid") < nDsQ), "qid", "vec", k = 10,
+      .map(i => (i, annQVec(i))))
+    timed(s"ann searchPacked ${nDsQ}q np=$nProbe query table") {
+      idx.searchPacked[Long](annQDs.filter(col("_1") < nDsQ), k = 10,
         nProbe = nProbe, normalized = false).count()
     }
-    val approx = idx.searchDs(annQDs.filter(col("qid") < 100), "qid", "vec",
+    val approx = idx.searchPacked[Long](annQDs.filter(col("_1") < 100),
         k = 10, nProbe = nProbe, normalized = false)
       .select("qid", "id").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
@@ -217,17 +224,8 @@ object ScaleSmoke {
       approx.getOrElse(qid, Set.empty[Long]).count(exactTop(qid)).toDouble / 10
     }.sum / sampleQ.length
     println(f"SMOKE ann recall@10 np=$nProbe     $recall%.3f  (nList=$nList, probed ${nProbe.toDouble / nList * 100}%.1f%% of store)")
-    // packed-kernel twin: the store re-buckets ONCE into per-centroid
-    // SIMD slabs (timed as its own phase — an index-build cost), then
-    // the same query batch streams them with the gemm kernels
     val annQTyped = spark.createDataset(sc.range(0, nAnnQ, 1, 24)
       .map(i => (i, annQVec(i))))
-    timed(s"ann pack buckets") {
-      // first searchPacked call builds + caches the packed buckets; a
-      // 1-query probe isolates the build cost into this phase
-      idx.searchPacked[Long](spark.createDataset(Seq((0L, annQVec(0)))),
-        k = 1, nProbe = 1, normalized = false).count()
-    }
     timed(s"ann searchPacked ${nAnnQ}q np=$nProbe") {
       idx.searchPacked[Long](annQTyped, k = 10, nProbe = nProbe,
         normalized = false).count()

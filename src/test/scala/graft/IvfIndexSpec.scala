@@ -49,7 +49,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(idx.nList == 4)
 
     val queries = data.filter(_._1 % 17 == 0).toArray
-    val ann = idx.search(queries, k = 5, nProbe = 1)
+    val ann = idx.searchMerged[Long](queries, k = 5, nProbe = 1, exact = true)
       .select("qid", "rank", "id").collect()
       .map(r => (r.getLong(0), r.getInt(3 - 2)))
 
@@ -62,68 +62,21 @@ class IvfIndexSpec extends AnyFunSuite {
       }.sortBy { case (_, id, s) => (-s, id) }.take(5).zipWithIndex
         .map { case ((_, id, _), r) => (qid, r + 1, id) }
     }
-    val annSet = idx.search(queries, k = 5, nProbe = 1)
+    val annSet = idx.searchMerged[Long](queries, k = 5, nProbe = 1, exact = true)
       .select("qid", "rank", "id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     assert(annSet == exact.toSet)
   }
 
   test("search rejects a mis-dimensioned query up front (ADVICE r8)") {
-    // truncated dot products would silently score garbage, and the
-    // searchDs bit-parity claim is scoped to index-dimensioned queries
+    // truncated dot products would silently score garbage
     val idx = owned(IvfIndex.build(clusteredData().toDF("vec_id", "vec"),
       "vec_id", "vec", nList = 4))
     val bad = Array((7L, Array.fill(5)(0.1f))) // index dim is 8
     val e = intercept[IllegalArgumentException] {
-      idx.search(bad, k = 3, nProbe = 1)
+      idx.searchMerged[Long](bad, k = 3, nProbe = 1)
     }
     assert(e.getMessage.contains("dim 5") && e.getMessage.contains("index dim is 8"))
-  }
-
-  test("searchDs (Dataset query side) matches driver-array search, ids/ranks/scores") {
-    val data = clusteredData()
-    val df = data.toDF("vec_id", "vec")
-    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4))
-    val queries = data.filter(_._1 % 17 == 0).toArray
-    val driver = idx.search(queries, k = 5, nProbe = 2)
-      .select("qid", "rank", "id", "score").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        math.rint(r.getDouble(3) * 1e9)))
-      .toSet
-    val qds = queries.toSeq.toDF("vec_id", "vec")
-    val ds = idx.searchDs(qds, "vec_id", "vec", k = 5, nProbe = 2)
-      .select("qid", "rank", "id", "score").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-        math.rint(r.getDouble(3) * 1e9)))
-      .toSet
-    assert(ds == driver)
-    // default nProbe resolves identically on both paths
-    assert(idx.searchDs(qds, "vec_id", "vec", k = 5).count() ==
-      idx.search(queries, k = 5).count())
-  }
-
-  test("searchDs matches search BIT-for-bit on normalized=false input incl. all-zero vectors") {
-    // ADVICE r7: searchDs normalized in float (NormalizeL2) and skipped
-    // the zero->e0 rule when normalized=true; both paths now share the
-    // driver's double arithmetic, so scores compare on exact bits.
-    val rng = new scala.util.Random(31)
-    val data = (0 until 120).map { i =>
-      (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
-    } :+ (999L, new Array[Float](8)) // zero store row (vnorm=0 branch)
-    val df = data.toDF("vec_id", "vec")
-    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4, normalized = false))
-    val queries = (data.filter(_._1 % 29 == 0) :+
-      ((1000L, new Array[Float](8)))).toArray // all-zero query -> e0
-    def key(res: org.apache.spark.sql.DataFrame) =
-      res.select("qid", "rank", "id", "score").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-    val qds = queries.toSeq.toDF("vec_id", "vec")
-    assert(key(idx.searchDs(qds, "vec_id", "vec", k = 5, nProbe = 2, normalized = false)) ==
-      key(idx.search(queries, k = 5, nProbe = 2, normalized = false)))
-    // the zero->e0 rule applies on the normalized=true path too
-    assert(key(idx.searchDs(qds, "vec_id", "vec", k = 5, nProbe = 2)) ==
-      key(idx.search(queries, k = 5, nProbe = 2)))
   }
 
   test("repeated full-scan searchPacked calls keep ONE cached query slab (VERDICT r14 wrong #1)") {
@@ -143,10 +96,8 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(liveQPreps == 0, "unpersistAssigned must release the last query slab")
   }
 
-  test("searchPacked (bucketed SIMD path) matches searchDs ids/ranks in both modes") {
-    // scoring follows gemmQueries arithmetic (not search's
-    // normalize-the-query-first), so scores can differ by fp
-    // reassociation — ranks/ids must agree wherever scores aren't ties
+  test("searchPacked (bucketed SIMD path) matches searchMerged ids/ranks in both modes") {
+    // ranks/ids must agree wherever scores aren't ties
     val data = clusteredData()
     val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
     val queries = data.filter(_._1 % 17 == 0).toArray
@@ -154,15 +105,12 @@ class IvfIndexSpec extends AnyFunSuite {
     def rkey(res: org.apache.spark.sql.DataFrame) =
       res.select("qid", "rank", "id").collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val ds = rkey(idx.searchDs(queries.toSeq.toDF("vec_id", "vec"),
-      "vec_id", "vec", k = 5, nProbe = 2))
+    val ds = rkey(idx.searchMerged[Long](queries, k = 5, nProbe = 2))
     assert(rkey(idx.searchPacked[Long](qds, k = 5, nProbe = 2, exact = true)) == ds)
     // float-kernel default agrees too (separated data, no near-ties)
     assert(rkey(idx.searchPacked[Long](qds, k = 5, nProbe = 2)) == ds)
 
-    // cosine mode (normalized=false) on random data, zero queries
-    // excluded (documented divergence: packed scores a zero query 0,
-    // search maps it to e0)
+    // cosine mode (normalized=false) on random data
     val rng = new scala.util.Random(31)
     val rdata = (0 until 120).map { i =>
       (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 3f))
@@ -170,51 +118,10 @@ class IvfIndexSpec extends AnyFunSuite {
     val ridx = owned(IvfIndex.build(rdata.toDF("vec_id", "vec"), "vec_id", "vec",
       nList = 4, normalized = false))
     val rq = rdata.filter(_._1 % 29 == 0).toArray
-    val rds = rkey(ridx.searchDs(rq.toSeq.toDF("vec_id", "vec"),
-      "vec_id", "vec", k = 5, nProbe = 2, normalized = false))
+    val rds = rkey(ridx.searchMerged[Long](rq, k = 5, nProbe = 2,
+      normalized = false))
     assert(rkey(ridx.searchPacked[Long](spark.createDataset(rq.toSeq),
       k = 5, nProbe = 2, normalized = false, exact = true)) == rds)
-  }
-
-  test("searchDs auto-routes bulk batches through the packed path (VERDICT r9 #3)") {
-    val data = clusteredData()
-    val idx = owned(IvfIndex.build(data.toDF("vec_id", "vec"), "vec_id", "vec", nList = 4))
-    // batch above the default 1024-row threshold: unique qids (the
-    // declarative groupBy merges duplicate qids), repeated vectors fine
-    val bulk = (0 until 1200).map(i => (i.toLong, data(i % data.size)._2))
-    val bulkDf = bulk.toDF("vec_id", "vec")
-    def rkey(res: org.apache.spark.sql.DataFrame) =
-      res.select("qid", "rank", "id").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    try {
-      val routed = rkey(idx.searchDs(bulkDf, "vec_id", "vec", k = 3, nProbe = 2))
-      assert(idx.lastSearchDsPath == "packed",
-        "a 1200-row batch must take the packed path")
-      // threshold=0 disables routing; results must agree (exact=true
-      // scoring on the routed path is bit-equal to the codegen dot)
-      spark.conf.set("graft.ann.dsroute.threshold", "0")
-      val declarative = rkey(idx.searchDs(bulkDf, "vec_id", "vec", k = 3, nProbe = 2))
-      assert(idx.lastSearchDsPath == "declarative")
-      assert(routed == declarative)
-      // below-threshold batches stay declarative under the default
-      spark.conf.unset("graft.ann.dsroute.threshold")
-      idx.searchDs(bulkDf.limit(10), "vec_id", "vec", k = 3, nProbe = 2).count()
-      assert(idx.lastSearchDsPath == "declarative")
-      // unsupported shapes never route: normalized=false keeps its
-      // zero-query e0 semantics on the declarative path
-      idx.searchDs(bulkDf, "vec_id", "vec", k = 3, nProbe = 2,
-        normalized = false).count()
-      assert(idx.lastSearchDsPath == "declarative")
-      // duplicate qids never route: the declarative groupBy MERGES a
-      // duplicate qid's candidate sets into one k-row result; the
-      // packed path would return independent per-row results — a
-      // semantic change, so the gate requires distinct qids
-      val dup = bulk :+ (0L, data(5)._2)
-      idx.searchDs(dup.toDF("vec_id", "vec"), "vec_id", "vec",
-        k = 3, nProbe = 2).count()
-      assert(idx.lastSearchDsPath == "declarative",
-        "duplicate qids must stay on the declarative (merging) path")
-    } finally spark.conf.unset("graft.ann.dsroute.threshold")
   }
 
   test("searchMerged (shuffle-free driver batch) matches searchPacked bit-for-bit") {
@@ -842,30 +749,6 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(ep.getMessage != null && ep.getMessage.contains("dim 5"))
   }
 
-  test("normalized=false store norm projects BELOW the probe join (one norm per store row)") {
-    // VERDICT r7 #5: the sqrt used to sit in the projection above the
-    // join, charging a store row once per probing query.
-    val rng = new scala.util.Random(7)
-    val data = (0 until 60).map { i =>
-      (i.toLong, Array.fill(8)((rng.nextFloat() - 0.5f) * 2f))
-    }
-    val df = data.toDF("vec_id", "vec")
-    val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 4,
-      normalized = false, cacheAssigned = false))
-    val qds = data.take(3).toDF("vec_id", "vec")
-    val frame = idx.searchDs(qds, "vec_id", "vec", k = 3, nProbe = 2,
-      normalized = false)
-    val lines = frame.queryExecution.executedPlan.toString
-      .linesIterator.toIndexedSeq
-    val joinIdx = lines.indexWhere(_.contains("Join"))
-    assert(joinIdx >= 0, s"no join in plan:\n${lines.mkString("\n")}")
-    val sqrtAbove = lines.take(joinIdx).filter(_.toLowerCase.contains("sqrt("))
-    assert(sqrtAbove.isEmpty,
-      s"store norm computed above the probe join:\n${sqrtAbove.mkString("\n")}")
-    // ... and it still exists somewhere below (the projection wasn't lost)
-    assert(lines.drop(joinIdx).exists(_.toLowerCase.contains("sqrt(")))
-  }
-
   test("probe-fraction crossover: past the fraction nProbe snaps to the exact all-list scan (VERDICT r12 #1)") {
     val rng = new scala.util.Random(31)
     val data = (0 until 300).map { i =>
@@ -894,7 +777,8 @@ class IvfIndexSpec extends AnyFunSuite {
     try {
       idx.searchMerged[Long](queries, k = 5, nProbe = 8).count()
       assert(idx.lastSearchStrategy == "probe(np=8)")
-      idx.search(queries, k = 5, nProbe = 8).count()
+      idx.searchPacked[Long](spark.createDataset(queries.toSeq), k = 5,
+        nProbe = 8).count()
       assert(idx.lastSearchStrategy == "probe(np=8)")
     } finally spark.conf.unset("graft.ann.exactscan.fraction")
     // driver-batch default (nProbe <= 0 -> nList/2) snaps too: the
@@ -950,7 +834,7 @@ class IvfIndexSpec extends AnyFunSuite {
     val df = data.toDF("vec_id", "vec")
     val idx = owned(IvfIndex.build(df, "vec_id", "vec", nList = 8))
     val queries = data.take(5).toArray
-    val ann = idx.search(queries, k = 10, nProbe = 8)
+    val ann = idx.searchMerged[Long](queries, k = 10, nProbe = 8, exact = true)
       .select("qid", "rank", "id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val exact = queries.flatMap { case (qid, q) =>
@@ -986,7 +870,7 @@ class IvfIndexSpec extends AnyFunSuite {
       }.sortBy { case (id, s) => (-s, id) }.take(10).map(_._1).toSet
     }.toMap
     def recallAt(nProbe: Int): Double = {
-      val approx = idx.search(queries, k = 10, nProbe = nProbe)
+      val approx = idx.searchMerged[Long](queries, k = 10, nProbe = nProbe)
         .select("qid", "id").collect()
         .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
       queries.map { case (qid, _) =>

@@ -157,11 +157,11 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("IvfIndex.probeIds agrees with NearestCentroids.topN bucket-for-bucket") {
-    // search/searchDs select probe buckets via the codegen
-    // NearestCentroids; searchPacked/searchMerged via the driver-side
-    // probeIds — if their inner-product order or tie rule ever
-    // diverged, the paths would probe DIFFERENT buckets and the
-    // cross-path parity specs would only catch it on unlucky data
+    // the codegen NearestCentroids (`nearest_centroids`) and the
+    // driver-side probeIds the IVF searches use must rank buckets
+    // alike — if their inner-product order or tie rule ever diverged,
+    // the two would pick DIFFERENT buckets for the same vector, and
+    // only unlucky data would show it
     val caseGen = for {
       dim <- Gen.choose(1, 16)
       k <- Gen.choose(1, 8)
