@@ -1913,11 +1913,17 @@ final class VdbStore private (
   // Store-version-cached packed matrix for the unfiltered query path.
   @volatile private var blockCache: Option[(Long, BlockStore[String])] = None
 
+  /** Runs after a pack's build job and before it is cached (test hook:
+    * lets a spec land a write at that point deterministically).
+    */
+  @volatile private[graft] var packBuiltHook: () => Unit = () => ()
+
   private def blockStore(): BlockStore[String] = blockCache match {
     case Some((v, bs)) if v == storeVersion => bs
     case old =>
       val bs = packCandidates(active).persist()
       bs.materialize()
+      packBuiltHook()
       blockCache = Some((storeVersion, bs))
       old.foreach(_._2.unpersist())
       bs
