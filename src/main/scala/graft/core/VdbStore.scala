@@ -235,9 +235,10 @@ final class VdbStore private (
       q8Cache match {
         case Some((v, s)) if v == storeVersion => s
         case old =>
-          val s = Q8Store.fromBlockStore(blockStore()).persist()
+          val (version, pack) = packed()
+          val s = Q8Store.fromBlockStore(pack).persist()
           s.materialize()
-          q8Cache = Some((storeVersion, s))
+          q8Cache = Some((version, s))
           old.foreach(_._2.unpersist(false))
           s
       }
@@ -298,12 +299,13 @@ final class VdbStore private (
       pqCache match {
         case Some((v, s)) if v == storeVersion => s
         case old =>
+          val (version, pack) = packed()
           val cb = pqBook.filter(b => b.dim == dim && pqM.contains(b.m))
-            .getOrElse(PqStore.train(blockStore(), pqM.get, 256, 20000, 42L, 8))
-          val s = PqStore.fromCodebook(blockStore(), cb).persist()
+            .getOrElse(PqStore.train(pack, pqM.get, 256, 20000, 42L, 8))
+          val s = PqStore.fromCodebook(pack, cb).persist()
           s.materialize()
           pqBook = Some(cb)
-          pqCache = Some((storeVersion, s))
+          pqCache = Some((version, s))
           old.foreach(_._2.unpersist(false))
           s
       }
@@ -367,9 +369,10 @@ final class VdbStore private (
       bitCache match {
         case Some((v, s)) if v == storeVersion => s
         case old =>
-          val s = BitStore.fromBlockStore(blockStore(), bitBits.get).persist()
+          val (version, pack) = packed()
+          val s = BitStore.fromBlockStore(pack, bitBits.get).persist()
           s.materialize()
-          bitCache = Some((storeVersion, s))
+          bitCache = Some((version, s))
           old.foreach(_._2.unpersist(false))
           s
       }
@@ -762,7 +765,9 @@ final class VdbStore private (
     }
   }
 
-  def active: DataFrame = current.filter(!col("deleted"))
+  def active: DataFrame = activeOf(current)
+
+  private def activeOf(rows: DataFrame): DataFrame = rows.filter(!col("deleted"))
 
   // ---------------------------------------------------------------- upsert
 
@@ -1910,24 +1915,41 @@ final class VdbStore private (
         resolved
   }
 
-  // Store-version-cached packed matrix for the unfiltered query path.
+  // The store-version-cached pack of the active rows, with the version
+  // it was built from. packLock serializes its check-build-swap, so
+  // concurrent first readers of a version build it once.
   @volatile private var blockCache: Option[(Long, BlockStore[String])] = None
+  private val packLock = new Object
 
   /** Runs after a pack's build job and before it is cached (test hook:
     * lets a spec land a write at that point deterministically).
     */
   @volatile private[graft] var packBuiltHook: () => Unit = () => ()
 
-  private def blockStore(): BlockStore[String] = blockCache match {
-    case Some((v, bs)) if v == storeVersion => bs
-    case old =>
-      val bs = packCandidates(active).persist()
-      bs.materialize()
-      packBuiltHook()
-      blockCache = Some((storeVersion, bs))
-      old.foreach(_._2.unpersist())
-      bs
+  /** The current pack and the version it holds. The build reads the
+    * rows and their version together under `hnswLock`, where [[swap]]
+    * publishes them, so a write that lands during the build leaves the
+    * pack tagged with the version it was built from: the next read
+    * rebuilds instead of serving stale rows under the new version.
+    */
+  private def packed(): (Long, BlockStore[String]) = blockCache match {
+    case Some(c @ (v, _)) if v == storeVersion => c
+    case _ => packLock.synchronized {
+      val (rows, version) = hnswLock.synchronized((current, storeVersion))
+      blockCache match {
+        case Some(c @ (v, _)) if v == version => c
+        case old =>
+          val bs = packCandidates(activeOf(rows)).persist()
+          bs.materialize()
+          packBuiltHook()
+          blockCache = Some((version, bs))
+          old.foreach(_._2.unpersist())
+          (version, bs)
+      }
+    }
   }
+
+  private def blockStore(): BlockStore[String] = packed()._2
 
   /** Pack (id, vector, meta) rows: the meta column rides row-aligned
     * beside the vectors, like the reference's `_docs` beside `_vectors`
