@@ -86,7 +86,7 @@ final class BlockStore[K](
     val ex = exact
     val localOrd = ord // don't capture `this` in the task closure
     blocks.mapPartitions { it =>
-      val (ids, qs, qn) = bc.value
+      val (ids, qs, qn, _) = bc.value
       BlockStore.scorePartition(it, ids, qs, qn, kk, threshold, ex)(localOrd)
     }
   }
@@ -114,7 +114,7 @@ final class BlockStore[K](
     try {
     val merged = blocks.treeAggregate(null: Array[BoundedTopKG[K]])(
       seqOp = (acc, block) => {
-        val (_, qs, qn) = bc.value
+        val (_, qs, qn, _) = bc.value
         val heaps = if (acc != null) acc
                     else Array.fill(qs.length)(new BoundedTopKG[K](kk)(localOrd))
         BlockStore.scoreBlock(heaps, block, qs, qn, threshold, ex)
@@ -150,6 +150,11 @@ final class BlockStore[K](
     * the copy: free for a persisted pack, and up to one partition's packed
     * data for a transient one.
     *
+    * With a `member`, only the rows whose id it contains score
+    * ([[BlockStore.scoreBlockMember]]); the test rides in the query
+    * broadcast. That is how the store's `ids` restriction reads the
+    * cached pack instead of packing its candidates.
+    *
     * Returns per input query (in input order): the ranked hits.
     */
   def topKMergedRows(
@@ -157,21 +162,27 @@ final class BlockStore[K](
       k: Int,
       betterThan: Option[Double] = None,
       normalizeQueries: Boolean = true,
-      exact: Boolean = false): Array[Array[PackedHit[K]]] = {
-    val (bc, threshold) = prepare(queries, betterThan, normalizeQueries)
+      exact: Boolean = false,
+      member: Option[MemberTest[K]] = None): Array[Array[PackedHit[K]]] = {
+    val (bc, threshold) = prepare(queries, betterThan, normalizeQueries, member)
     val kk = k
     val ex = exact
     val localOrd = ord
+    val localCt = ct
     val nq = queries.length
     try {
       val merged = blocks.mapPartitions { it =>
         if (!it.hasNext) Iterator.empty
         else {
-          val (_, qs, qn) = bc.value
+          val (_, qs, qn, m) = bc.value
           val heaps = Array.fill(qs.length)(new BoundedTopKG[K](kk)(localOrd))
           val scanned = scala.collection.mutable.ArrayBuffer.empty[VecBlock[K]]
           it.foreach { b =>
-            BlockStore.scoreBlock(heaps, b, qs, qn, threshold, ex)
+            m match {
+              case None => BlockStore.scoreBlock(heaps, b, qs, qn, threshold, ex)
+              case Some(t) => BlockStore.scoreBlockMember(heaps, b, qs, qn, t,
+                deny = false, ex, threshold)(localCt)
+            }
             scanned += b
           }
           Iterator.single(HeapsWithRows.of(heaps, scanned))
@@ -188,10 +199,31 @@ final class BlockStore[K](
     } finally bc.destroy()
   }
 
+  /** The rows of `ids` as id -> (meta, vector), in one job: each
+    * partition copies out its hits ([[BlockStore.copyRows]]). Ids the
+    * pack does not hold are absent; vectors are null unless
+    * `withVectors`.
+    */
+  def rowsOf(ids: Iterable[K], withVectors: Boolean)
+      : java.util.HashMap[K, (String, Array[Float])] = {
+    val want = new java.util.HashSet[K]()
+    ids.foreach(want.add)
+    val rows = new java.util.HashMap[K, (String, Array[Float])](want.size * 2)
+    if (!want.isEmpty) {
+      val wv = withVectors
+      blocks.mapPartitions { it =>
+        val found = BlockStore.copyRows(it, new java.util.HashSet[K](want), wv)
+        if (found.isEmpty) Iterator.empty else Iterator.single(found)
+      }.collect().foreach(rows.putAll)
+    }
+    rows
+  }
+
   private def prepare(
       queries: Array[(Long, Array[Float])],
       betterThan: Option[Double],
-      normalizeQueries: Boolean) = {
+      normalizeQueries: Boolean,
+      member: Option[MemberTest[K]] = None) = {
     val qids = queries.map(_._1)
     val cosineMode = !normalized
     val qvecs: Array[Array[Float]] =
@@ -204,7 +236,7 @@ final class BlockStore[K](
     // unit queries), the norms are ~1 and the division is a no-op.
     val qnorms: Array[Double] =
       if (cosineMode) qvecs.map(v => math.sqrt(Kernels.normSqD(v))) else null
-    val bc = blocks.sparkContext.broadcast((qids, qvecs, qnorms))
+    val bc = blocks.sparkContext.broadcast((qids, qvecs, qnorms, member))
     (bc, betterThan.getOrElse(Double.NegativeInfinity))
   }
 }
@@ -320,6 +352,31 @@ object BlockStore {
           if (metas == null) null else metas.result())
       }
     }
+  }
+
+  /** Copy the rows of the `want` ids out of `blocks`, as id ->
+    * (meta, vector), with a null vector unless `withVectors`. Found ids
+    * leave `want`, and the scan stops once it is empty: ids are unique
+    * within a pack.
+    */
+  private[core] def copyRows[K](
+      blocks: Iterator[VecBlock[K]],
+      want: java.util.Set[K],
+      withVectors: Boolean): java.util.HashMap[K, (String, Array[Float])] = {
+    val rows = new java.util.HashMap[K, (String, Array[Float])](want.size * 2)
+    while (!want.isEmpty && blocks.hasNext) {
+      val b = blocks.next()
+      var r = 0
+      while (r < b.rows && !want.isEmpty) {
+        val id = b.ids(r)
+        if (want.remove(id))
+          rows.put(id, (if (b.meta == null) null else b.meta(r),
+            if (withVectors) java.util.Arrays.copyOfRange(b.data, r * b.dim, (r + 1) * b.dim)
+            else null))
+        r += 1
+      }
+    }
+    rows
   }
 
   /** The hot loop: stream every block once, tile rows so a ~512 KB row
@@ -536,23 +593,9 @@ private[core] object HeapsWithRows {
     * were scored from.
     */
   def of[K](heaps: Array[BoundedTopKG[K]],
-            blocks: Iterable[VecBlock[K]]): HeapsWithRows[K] = {
-    val want = held(heaps)
-    val rows = new java.util.HashMap[K, (String, Array[Float])](want.size * 2)
-    val bi = blocks.iterator
-    while (!want.isEmpty && bi.hasNext) {
-      val b = bi.next()
-      var r = 0
-      while (r < b.rows && !want.isEmpty) {
-        val id = b.ids(r)
-        if (want.remove(id))
-          rows.put(id, (if (b.meta == null) null else b.meta(r),
-            java.util.Arrays.copyOfRange(b.data, r * b.dim, (r + 1) * b.dim)))
-        r += 1
-      }
-    }
-    new HeapsWithRows(heaps, rows)
-  }
+            blocks: Iterable[VecBlock[K]]): HeapsWithRows[K] =
+    new HeapsWithRows(heaps,
+      BlockStore.copyRows(blocks.iterator, held(heaps), withVectors = true))
 
   /** treeAggregate seqOp/combOp: absorb b's heaps into a's, then keep
     * only the rows the merged heaps still hold.

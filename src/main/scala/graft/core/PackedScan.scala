@@ -12,7 +12,7 @@ import graft.operators.Kernels
 /** Latest-call-only cache slot for bulk engines' materialized state
   * (the `IvfIndex.swapPackedAllowedState` discipline, extracted):
   * each call persists its output (and any pass intermediates it must
-  * keep alive), and the NEXT call — or the owner's teardown via
+  * keep alive, or hands over their release function), and the NEXT call — or the owner's teardown via
   * `swap(Nil)` — releases everything the new state doesn't reference.
   * A superseded call's still-lazy result DataFrame recomputes from
   * lineage — correct, one re-scan slower.
@@ -33,9 +33,11 @@ private[graft] final class LatestCallSlot extends Serializable {
       // the queryDF bloom rung holds a persisted DataFrame here)
       case d: Dataset[_] => d.unpersist(false)
       case r: RDD[_] => r.unpersist(false)
+      // a release handle, e.g. CosineTopK.GemmQueriesHandle.release
+      case release: Function0[_] => release()
       case other =>
         throw new IllegalStateException(
-          s"LatestCallSlot holds only RDDs/Datasets, got ${other.getClass}")
+          s"LatestCallSlot holds only RDDs, Datasets and release functions, got ${other.getClass}")
     }
   }
 }

@@ -222,6 +222,15 @@ final class VdbStore private (
   /** Entities the bloom bulk slot currently pins (test hook). */
   private[graft] def bloomBulkHeldCount: Int = bloomBulkSlot.size
 
+  // Latest-call slot for the exact queryDF strategies' packed query
+  // blocks (persisted by CosineTopK.gemmQueriesManaged): each exact
+  // bulk call releases the previous one's, as the flat q8/pq/bit
+  // engines' slots do, instead of leaving them to the ContextCleaner.
+  private val exactBulkSlot = new LatestCallSlot
+
+  /** Entities the exact bulk slot currently pins (test hook). */
+  private[graft] def exactBulkHeldCount: Int = exactBulkSlot.size
+
   // Serializes the q8/pq/bit cache check-then-build: without it two
   // concurrent first queries both quantize+persist, leaking one
   // orphaned persisted RDD (and, for pq, a redundant driver k-means).
@@ -970,7 +979,9 @@ final class VdbStore private (
     if (vectors.isEmpty) return Seq.empty
     import spark.implicits._
 
-    val cand = restrictCandidates(ids, where, whereFn)
+    // planned only by the strategies that read it: the exact ones test
+    // `ids` against the cached pack instead
+    lazy val cand = restrictCandidates(ids, where, whereFn)
 
     // O28 bypass rule (pico_vdb.py:667-668): any ids/where restriction
     // forces the exact path; the ANN accelerator only serves unfiltered
@@ -1275,10 +1286,17 @@ final class VdbStore private (
         // float32 SIMD scoring by default — the reference's own
         // precision (pico_vdb.py:26 Float = np.float32); set
         // graft.query.exact=true for double accumulation bit-identical
-        // to the declarative/DotProduct plan.
-        val bs = if (unfiltered) blockStore() else packCandidates(cand)
+        // to the declarative/DotProduct plan. `ids` is a membership
+        // test in the scan (the reference slices its matrix by id
+        // before the GEMM, pico_vdb.py:680-689), so without a
+        // where/whereFn the scan reads the cached pack; those two
+        // still pack their candidates for the call.
+        val bs =
+          if (where.isEmpty && whereFn.isEmpty) blockStore()
+          else packCandidates(restrictCandidates(None, where, whereFn))
         bs.topKMergedRows(queries, topK, betterThan,
-            normalizeQueries = true, exact = conf.queryExact)
+            normalizeQueries = true, exact = conf.queryExact,
+            member = ids.map(list => SetMember(list.toArray)))
           .toSeq.map(_.toSeq.map(h =>
             VdbHit(h.id, h.score, Option(h.meta), Some(h.vector))))
     }
@@ -1593,8 +1611,10 @@ final class VdbStore private (
               } else {
                 lastStrategy = Some(if (unfiltered) "exact" else "exact-filtered")
                 val bs = if (unfiltered) blockStore() else packCandidates(cand)
-                graft.operators.CosineTopK.gemmQueries[String](bs, qds, topK,
-                  betterThan, exact = conf.queryExact)
+                val scan = graft.operators.CosineTopK.gemmQueriesManaged[String](
+                  bs, qds, topK, betterThan, exact = conf.queryExact)
+                exactBulkSlot.swap(List(scan.release))
+                scan.df
               }
           }
         }
@@ -2060,22 +2080,20 @@ final class VdbStore private (
 
   // ------------------------------------------------------------------- get
 
-  def get(ids: Seq[String], includeVector: Boolean = false): Seq[VdbHit] = {
-    import spark.implicits._
-    val src =
-      if (ids.size <= conf.inListMax) active.filter(col("_id_").isin(ids: _*))
-      else active.join(broadcast(ids.distinct.toDF("_id_")), Seq("_id_"), "left_semi")
-    // the vector column is most of each cached row: read it only when
-    // the caller asked for vectors
-    val cols = Seq(col("_id_"), col("meta")) ++
-      (if (includeVector) Seq(col("_vector_")) else Nil)
-    val rows = src.select(cols: _*).collect()
-    val byId = rows.map(r => r.getString(0) -> r).toMap
-    ids.flatMap(byId.get).map { r =>
-      VdbHit(r.getString(0), Double.NaN, Option(r.getString(1)),
-        if (includeVector) Some(r.getSeq[Float](2).toArray) else None)
+  /** The live records of `ids`, in request order (a repeated id
+    * repeats; unknown and deleted ids are skipped) — the reference's
+    * `_id2idx` lookup (pico_vdb.py:927-957). One job over the cached
+    * pack: each partition copies out the rows it holds, and vectors
+    * only when asked for. The first read after a write packs the store.
+    */
+  def get(ids: Seq[String], includeVector: Boolean = false): Seq[VdbHit] =
+    if (ids.isEmpty) Seq.empty
+    else {
+      val rows = blockStore().rowsOf(ids, withVectors = includeVector)
+      ids.flatMap(id => Option(rows.get(id)).map { case (meta, vector) =>
+        VdbHit(id, Double.NaN, Option(meta), Option(vector))
+      })
     }
-  }
 
   /** Full driver-side materialization — API parity with the reference's
     * `get_all` (pico_vdb.py:976-1011), which returns a list. Collecting
@@ -2260,6 +2278,7 @@ final class VdbStore private (
     current.unpersist(false)
     blockCache.foreach(_._2.unpersist())
     blockCache = None
+    exactBulkSlot.swap(Nil)
     q8Cache.foreach(_._2.unpersist(false))
     q8Cache = None
     pqCache.foreach(_._2.unpersist(false))
