@@ -12,8 +12,9 @@ import graft.operators.Kernels
 /** Latest-call-only cache slot for bulk engines' materialized state
   * (the `IvfIndex.swapPackedAllowedState` discipline, extracted):
   * each call persists its output (and any pass intermediates it must
-  * keep alive, or hands over their release function), and the NEXT call — or the owner's teardown via
-  * `swap(Nil)` — releases everything the new state doesn't reference.
+  * keep alive, or hands over their release function), and the NEXT
+  * call — or the owner's teardown via `swap(Nil)` — releases
+  * everything the new state doesn't reference.
   * A superseded call's still-lazy result DataFrame recomputes from
   * lineage — correct, one re-scan slower.
   */
