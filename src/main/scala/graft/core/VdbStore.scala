@@ -714,6 +714,11 @@ final class VdbStore private (
     lastRebuildMode = annLastRebuildMode,
     upToDate = annIndex.isDefined && annVersion == storeVersion)
 
+  /** Runs after an IVF index's build and before it is cached (test
+    * hook: lets a spec land a write at that point deterministically).
+    */
+  @volatile private[graft] var annBuiltHook: () => Unit = () => ()
+
   private def annUpToDate: Option[graft.operators.IvfIndex] =
     annIndex.filter(_ => annVersion == storeVersion)
 
@@ -746,6 +751,7 @@ final class VdbStore private (
             graft.operators.IvfIndex.build(act, "_id_", "_vector_", lists,
               sampleCap = conf.annSampleCap)
         }
+        annBuiltHook()
         annIndex.foreach(_.unpersistAssigned())
         annIndex = Some(idx)
         annVersion = storeVersion
