@@ -1,6 +1,7 @@
 package graft.core
 
 import scala.reflect.ClassTag
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
@@ -218,6 +219,22 @@ final class BlockStore[K](
     }
     rows
   }
+
+  /** The (id, vector) rows of the ids in `ids`, read from the blocks
+    * as they stand: each partition copies out the rows it holds
+    * ([[BlockStore.copyRows]]). Lazy, so `ids` must outlive every
+    * action on the result.
+    */
+  def rowsIn(ids: Broadcast[Set[K]]): RDD[(K, Array[Float])] =
+    blocks.mapPartitions { it =>
+      val want = new java.util.HashSet[K]()
+      ids.value.foreach(want.add)
+      val found = BlockStore.copyRows(it, want, withVectors = true)
+      val out = new Array[(K, Array[Float])](found.size)
+      var i = 0
+      found.forEach((id, row) => { out(i) = (id, row._2); i += 1 })
+      out.iterator
+    }
 
   private def prepare(
       queries: Array[(Long, Array[Float])],

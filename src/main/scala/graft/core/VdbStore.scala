@@ -42,12 +42,20 @@ final case class VdbStats(active: Long, deleted: Long, total: Long, dim: Int,
 final class VdbStore private (
     val spark: SparkSession,
     val dim: Int,
-    @volatile private var current: DataFrame,
+    initialRows: DataFrame,
     @volatile private var additionalData: Map[String, String]) {
 
   import VdbStore._
 
   private val conf = new GraftConf(spark)
+
+  // The store's rows and the version they are, published as one value
+  // with one write ([[swap]], [[save]]), so a reader that builds
+  // derived state from `snap` tags it with the version it was built
+  // from without taking a lock.
+  @volatile private var snap: Snapshot = Snapshot(initialRows, 0L)
+  private def current: DataFrame = snap.rows
+  private def storeVersion: Long = snap.version
 
   /** Snapshot of the current store DataFrame (immutable). */
   def df: DataFrame = current
@@ -159,14 +167,16 @@ final class VdbStore private (
   def lastBloomRefillCount: Int = lastBloomRefills
 
   private def timed[T](op: String)(f: => T): T = {
-    spark.sparkContext.setJobDescription(s"graft.vdb.$op")
+    val sc = spark.sparkContext
+    val outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft.vdb.$op")
     val t0 = System.nanoTime()
     try f
     finally {
       val dt = (System.nanoTime() - t0) / 1e9
       timings += (op -> dt)
       VdbStore.log.debug("{} took {} s", op, dt)
-      spark.sparkContext.setJobDescription(null)
+      sc.setJobDescription(outer)
     }
   }
 
@@ -176,9 +186,12 @@ final class VdbStore private (
   // --- ANN (IVF) accelerator state: lazy + dirty-flagged like the
   // reference's FAISS maintenance (pico_vdb.py:195-204, 497, 536).
   @volatile private var annNList: Option[Int] = None
-  @volatile private var annIndex: Option[graft.operators.IvfIndex] = None
-  @volatile private var annVersion: Long = -1L
-  @volatile private var storeVersion: Long = 0L
+  // the index and the store version it was built from; annLock
+  // serializes its check-build-swap, so concurrent first queries of a
+  // version build it once
+  @volatile private var annCache: Option[(Long, graft.operators.IvfIndex)] = None
+  private val annLock = new Object
+  private def annIndex: Option[graft.operators.IvfIndex] = annCache.map(_._2)
   @volatile private var annMutationsSinceFit: Long = 0L
   @volatile private var annLastRebuildMode: String = "none"
 
@@ -444,10 +457,10 @@ final class VdbStore private (
   def enableAnn(): Unit = enableAnn(0)
 
   /** Disable the IVF accelerator and release its cached index. */
-  def disableAnn(): Unit = {
+  def disableAnn(): Unit = annLock.synchronized {
     annNList = None
     annIndex.foreach(_.unpersistAssigned())
-    annIndex = None
+    annCache = None
   }
 
   // ---- sharded-HNSW accelerator (round 13, operators.HnswStore) ----
@@ -620,76 +633,77 @@ final class VdbStore private (
         hnswCache match {
           case Some((v, p, st)) if v == storeVersion && p == params => st
           case old =>
-            timed("hnsw_refresh") {
-              import spark.implicits._
-              val act = active
-              // In-place shard maintenance (the reference's incremental
-              // contract pico_vdb.py:195-204, 866-921 done the
-              // distributed way): when every swap since the cached
-              // build declared its touched ids, tombstone the touched
-              // ids' old nodes and insert their current rows into the
-              // existing graphs; untouched shards — loaded-from-sidecar
-              // ones included — carry as they are. Gated like the IVF
-              // incremental path (annIncrRatio of the cached store's
-              // live rows, known since its materialize — no count job)
-              // and by graft.hnsw.incr.cap (the touched set is held on
-              // the driver and broadcast, so it must be driver-sized);
-              // a mutation wave past either gate amortizes a full
-              // rebuild anyway.
-              val incr: Option[graft.operators.HnswStore[String]] = old match {
-                case Some((_, p, prev)) if p == params && hnswDirtyValid &&
-                    hnswDirty.size <= conf.hnswIncrCap &&
-                    hnswDirty.size.toDouble <=
-                      conf.annIncrRatio * math.max(1L, prev.liveRowCount) =>
-                  if (hnswDirty.isEmpty) {
-                    // tombstone-only churn (vacuum): active rows are
-                    // byte-identical, the graphs are already current
-                    hnswLastRebuildModeVar = "incremental"
-                    Some(prev)
-                  } else {
-                    val dirtySet = hnswDirty
-                    val changed = act
-                      .join(broadcast(dirtySet.toSeq.toDF("_id_")),
-                        Seq("_id_"), "left_semi")
-                      .select(col("_id_"), col("_vector_"))
-                      .as[(String, Array[Float])].rdd
-                    val st = prev.rebuildTouched(dirtySet, changed)
-                    if (st ne prev) { st.persist(); st.materialize() }
-                    hnswLastRebuildModeVar = "incremental"
-                    Some(st)
-                  }
-                case _ => None
-              }
-              val st = incr.getOrElse {
-                // one graph per core at least: the snapshot's own layout
-                // can be coarser (AQE coalesces a small first write), and
-                // every later refresh keeps the full build's shards
-                val cores = spark.sparkContext.defaultParallelism
-                val built = graft.operators.HnswStore.fromDataset(
-                  act.select(col("_id_"), col("_vector_"))
-                    .as[(String, Array[Float])],
-                  normalize = false, assumeNormalized = true,
-                  m = params._1, efConstruction = params._2,
-                  numShards =
-                    if (act.queryExecution.toRdd.getNumPartitions < cores) cores
-                    else 0).persist()
-                built.materialize()
-                hnswLastRebuildModeVar = "full"
-                built
-              }
-              hnswCache = Some((storeVersion, params, st))
-              // the incremental store's shards read through the
-              // previous cache until materialized above — safe to
-              // release the old handle now (never when reusing it);
-              // reads still pinned on it, or lazy frames over it, keep
-              // it readable
-              old.filter(_._3 ne st).foreach(_._3.retire())
-              hnswResetDirty()
-              st
+            // In-place shard maintenance (the reference's incremental
+            // contract pico_vdb.py:195-204, 866-921 done the distributed
+            // way): when every swap since the cached build declared its
+            // touched ids, tombstone the touched ids' old nodes and
+            // insert their current rows into the existing graphs;
+            // untouched shards — loaded-from-sidecar ones included —
+            // carry as they are. Gated like the IVF incremental path
+            // (annIncrRatio of the cached store's live rows, known since
+            // its materialize — no count job) and by graft.hnsw.incr.cap
+            // (the touched set is held on the driver and broadcast, so
+            // it must be driver-sized); a mutation wave past either gate
+            // amortizes a full rebuild anyway.
+            val prev = old.collect {
+              case (_, p, prev) if p == params && hnswDirtyValid &&
+                  hnswDirty.size <= conf.hnswIncrCap &&
+                  hnswDirty.size.toDouble <=
+                    conf.annIncrRatio * math.max(1L, prev.liveRowCount) => prev
             }
+            // the touched rows come from the pack of the version being
+            // refreshed (a write cannot publish while hnswLock is held),
+            // which the query's own row fetch reads too; a pack build
+            // is timed apart, as `pack`. Tombstone-only churn (vacuum)
+            // leaves active rows byte-identical and needs none.
+            val pack = prev.filter(_ => hnswDirty.nonEmpty).map(_ => blockStore())
+            val st = timed("hnsw_refresh") {
+              val built = (prev, pack) match {
+                case (Some(p), None) => p
+                case (Some(p), Some(bs)) =>
+                  val dirty = spark.sparkContext.broadcast(hnswDirty)
+                  val next = p.rebuildTouched(dirty.value, bs.rowsIn(dirty))
+                  // destroyed once the new shards are materialized
+                  next.releaseOnMaterialize ::= dirty
+                  next.persist()
+                  next.materialize()
+                  next
+                case _ => fullHnswBuild(params)
+              }
+              hnswLastRebuildModeVar = if (prev.isDefined) "incremental" else "full"
+              built
+            }
+            hnswCache = Some((storeVersion, params, st))
+            // the incremental store's shards read through the
+            // previous cache until materialized above — safe to
+            // release the old handle now (never when reusing it);
+            // reads still pinned on it, or lazy frames over it, keep
+            // it readable
+            old.filter(_._3 ne st).foreach(_._3.retire())
+            hnswResetDirty()
+            st
         }
       }.map { st => st.acquire(); pins += st; st }
     }
+
+  /** Every slab's graph built anew from the active rows. */
+  private def fullHnswBuild(params: (Int, Int)): graft.operators.HnswStore[String] = {
+    import spark.implicits._
+    val act = active
+    // one graph per core at least: the snapshot's own layout can be
+    // coarser (AQE coalesces a small first write), and every later
+    // refresh keeps the full build's shards
+    val cores = spark.sparkContext.defaultParallelism
+    val built = graft.operators.HnswStore.fromDataset(
+      act.select(col("_id_"), col("_vector_")).as[(String, Array[Float])],
+      normalize = false, assumeNormalized = true,
+      m = params._1, efConstruction = params._2,
+      numShards =
+        if (act.queryExecution.toRdd.getNumPartitions < cores) cores
+        else 0).persist()
+    built.materialize()
+    built
+  }
 
   private type HnswPins =
     scala.collection.mutable.ListBuffer[graft.operators.HnswStore[String]]
@@ -712,7 +726,7 @@ final class VdbStore private (
     enabled = annNList.isDefined,
     nList = annIndex.map(_.nList).orElse(annNList).getOrElse(0),
     lastRebuildMode = annLastRebuildMode,
-    upToDate = annIndex.isDefined && annVersion == storeVersion)
+    upToDate = annUpToDate.isDefined)
 
   /** Runs after an IVF index's build and before it is cached (test
     * hook: lets a spec land a write at that point deterministically).
@@ -720,7 +734,7 @@ final class VdbStore private (
   @volatile private[graft] var annBuiltHook: () => Unit = () => ()
 
   private def annUpToDate: Option[graft.operators.IvfIndex] =
-    annIndex.filter(_ => annVersion == storeVersion)
+    annCache.collect { case (v, idx) if v == storeVersion => idx }
 
   /** Lazy maintenance with the reference's incremental rule
     * (pico_vdb.py:866-921): if the mutation volume since the last FULL
@@ -729,35 +743,41 @@ final class VdbStore private (
     * ratio, refit from scratch.
     */
   private def refreshAnn(): Option[graft.operators.IvfIndex] = annNList.map { n =>
-    annUpToDate.getOrElse {
-      timed("ann_refresh") {
-        val act = active
-        // auto mode (n == 0): an existing index's list count is always
-        // acceptable for incremental re-bucketing (√N drifting by a few
-        // rows must not force a refit); each FULL fit re-resolves √N
-        val idx = annIndex match {
-          case Some(prev)
-              if prev.dim == dim && (n == 0 || prev.nList == n) &&
-                 annMutationsSinceFit.toDouble <=
-                   conf.annIncrRatio * math.max(1L, act.count()) =>
-            annLastRebuildMode = "incremental"
-            graft.operators.IvfIndex.assign(act, prev.centroids, "_id_", "_vector_")
-          case _ =>
-            annLastRebuildMode = "full"
-            annMutationsSinceFit = 0L
-            val lists =
-              if (n > 0) n
-              else graft.operators.IvfIndex.defaultNList(act.count())
-            graft.operators.IvfIndex.build(act, "_id_", "_vector_", lists,
-              sampleCap = conf.annSampleCap)
+    annUpToDate.getOrElse(annLock.synchronized {
+      // the rows and the version they are, read together: a write that
+      // lands during the build leaves the index tagged with the version
+      // it was built from, and the next query rebuilds
+      val Snapshot(rows, version) = snap
+      annCache match {
+        case Some((v, idx)) if v == version => idx
+        case _ => timed("ann_refresh") {
+          val act = activeOf(rows)
+          // auto mode (n == 0): an existing index's list count is always
+          // acceptable for incremental re-bucketing (√N drifting by a few
+          // rows must not force a refit); each FULL fit re-resolves √N
+          val idx = annIndex match {
+            case Some(prev)
+                if prev.dim == dim && (n == 0 || prev.nList == n) &&
+                   annMutationsSinceFit.toDouble <=
+                     conf.annIncrRatio * math.max(1L, act.count()) =>
+              annLastRebuildMode = "incremental"
+              graft.operators.IvfIndex.assign(act, prev.centroids, "_id_", "_vector_")
+            case _ =>
+              annLastRebuildMode = "full"
+              annMutationsSinceFit = 0L
+              val lists =
+                if (n > 0) n
+                else graft.operators.IvfIndex.defaultNList(act.count())
+              graft.operators.IvfIndex.build(act, "_id_", "_vector_", lists,
+                sampleCap = conf.annSampleCap)
+          }
+          annBuiltHook()
+          annIndex.foreach(_.unpersistAssigned())
+          annCache = Some((version, idx))
+          idx
         }
-        annBuiltHook()
-        annIndex.foreach(_.unpersistAssigned())
-        annIndex = Some(idx)
-        annVersion = storeVersion
-        idx
       }
-    }
+    })
   }
 
   // the BUILT list count is saved (auto mode's annNList sentinel is 0,
@@ -773,9 +793,9 @@ final class VdbStore private (
   private[core] def restoreAnn(nList: Int, centroids: Array[Array[Double]]): Unit = {
     annNList = Some(nList)
     if (centroids.nonEmpty && centroids(0).length == dim) {
-      annIndex = Some(
-        graft.operators.IvfIndex.assign(active, centroids, "_id_", "_vector_"))
-      annVersion = storeVersion
+      val Snapshot(rows, version) = snap
+      annCache = Some((version,
+        graft.operators.IvfIndex.assign(activeOf(rows), centroids, "_id_", "_vector_")))
       annLastRebuildMode = "restored"
     }
   }
@@ -1410,6 +1430,7 @@ final class VdbStore private (
     def releaseBloomHeld(): Unit = bloomHeld.result().foreach {
       case d: org.apache.spark.sql.Dataset[_] => d.unpersist(false)
       case r: org.apache.spark.rdd.RDD[_] => r.unpersist(false)
+      case release: Function0[_] => release()
       case _ => ()
     }
     // the bloom result frame this call is assembling, tracked so a
@@ -1720,8 +1741,12 @@ final class VdbStore private (
               .select(col("qid"), col("qvec"))
               .as[(Long, Array[Float])]
             val bs = packCandidates(cand)
-            val refilled = graft.operators.CosineTopK.gemmQueries[String](
+            val refill = graft.operators.CosineTopK.gemmQueriesManaged[String](
               bs, subQ, topK, None, exact = conf.queryExact)
+            // its packed query blocks go with the other pins once the
+            // result below is materialized
+            bloomHeld += refill.release
+            val refilled = refill.df
             // refillQids stays persisted until the eager
             // materialization below: kept (left_anti) and subQ
             // (left_semi) read it, and unpersisting first would re-run
@@ -1953,21 +1978,27 @@ final class VdbStore private (
   @volatile private[graft] var packBuiltHook: () => Unit = () => ()
 
   /** The current pack and the version it holds. The build reads the
-    * rows and their version together under `hnswLock`, where [[swap]]
-    * publishes them, so a write that lands during the build leaves the
-    * pack tagged with the version it was built from: the next read
-    * rebuilds instead of serving stale rows under the new version.
+    * rows and their version with one read of `snap`, so a write that
+    * lands during the build leaves the pack tagged with the version it
+    * was built from: the next read rebuilds instead of serving stale
+    * rows under the new version. It takes no lock but `packLock`, so a
+    * graph refresh may read the pack under `hnswLock`. The build is
+    * timed as `pack`, apart from the call that needed it.
     */
   private def packed(): (Long, BlockStore[String]) = blockCache match {
     case Some(c @ (v, _)) if v == storeVersion => c
     case _ => packLock.synchronized {
-      val (rows, version) = hnswLock.synchronized((current, storeVersion))
+      val Snapshot(rows, version) = snap
       blockCache match {
         case Some(c @ (v, _)) if v == version => c
-        case old =>
-          val bs = packCandidates(activeOf(rows)).persist()
-          bs.materialize()
+        case _ =>
+          val bs = timed("pack") {
+            val b = packCandidates(activeOf(rows)).persist()
+            b.materialize()
+            b
+          }
           packBuiltHook()
+          val old = blockCache
           blockCache = Some((version, bs))
           old.foreach(_._2.unpersist())
           (version, bs)
@@ -2137,8 +2168,11 @@ final class VdbStore private (
     * the dirty state (pico_vdb.py:959 `rebuild_index`).
     */
   def rebuildIndex(): Unit = if (annNList.isDefined) {
-    val old = annIndex
-    annIndex = None // drop centroids so refresh takes the full-fit branch
+    val old = annLock.synchronized {
+      val o = annIndex
+      annCache = None // drop centroids so refresh takes the full-fit branch
+      o
+    }
     refreshAnn()
     old.foreach(_.unpersistAssigned()) // refresh saw None, release it here
     ()
@@ -2226,10 +2260,7 @@ final class VdbStore private (
     // new lineage on next use (incremental, no refit).
     val old = current
     val reread = spark.read.schema(VdbStore.schema).parquet(snapDir).cache()
-    hnswLock.synchronized {
-      current = reread
-      storeVersion += 1
-    }
+    hnswLock.synchronized { snap = Snapshot(reread, snap.version + 1) }
     old.unpersist(false)
     // The version bump would also orphan the graph cache — but this
     // save just WROTE those graphs into the new snapshot's sidecar, so
@@ -2294,7 +2325,7 @@ final class VdbStore private (
     hnswCache.foreach(_._3.unpersist())
     hnswCache = None
     annIndex.foreach(_.unpersistAssigned())
-    annIndex = None
+    annCache = None
   }
 
   /** Swap in the next snapshot. `touch` declares what the mutation did
@@ -2326,11 +2357,10 @@ final class VdbStore private (
       if (mutations % 16 == 0) bounded.localCheckpoint(true)
       else org.apache.spark.sql.SnapshotLeaf.of(bounded).cache()
     pinned.count() // materialize before unpinning the old snapshot
-    // readers that build from (rows, version) under hnswLock see both
-    // change together with the graph delta
+    // one write publishes the rows and their version; under hnswLock
+    // so a graph refresh sees them change together with its delta
     hnswLock.synchronized {
-      current = pinned
-      storeVersion += 1
+      snap = Snapshot(pinned, snap.version + 1)
       hnswNoteMutation(touch)
     }
     old.unpersist(false)
@@ -2341,7 +2371,9 @@ final class VdbStore private (
   // it in; this lock serializes that sequence, as the reference's RW
   // lock does (pico_vdb.py:1019-1063), so concurrent writers never
   // drop each other's rows. Readers take no lock: they read an
-  // immutable snapshot. Lock order: writeLock before hnswLock.
+  // immutable snapshot. Lock order: writeLock before hnswLock, and
+  // hnswLock before packLock (a graph refresh reads the pack); packed()
+  // takes no other lock.
   private val writeLock = new Object
 
   private def writeOp[T](op: String)(f: => T): T =
@@ -2356,6 +2388,9 @@ private final case class RawRecord(id: Option[String], vector: Array[Float],
 private[core] sealed trait HnswTouch
 private[core] case object HnswTouchUnknown extends HnswTouch
 private[core] final case class HnswTouchIds(ids: Iterable[String]) extends HnswTouch
+
+/** The store's rows and their version, published together. */
+private final case class Snapshot(rows: DataFrame, version: Long)
 
 object VdbStore {
 

@@ -266,13 +266,16 @@ final class HnswStore[K](
     */
   def materialize(): (Long, Int) = {
     val stats = shards.map(sh => (sh.liveRows.toLong, sh.block.dim)).collect()
-    // executor copies of lineage-only broadcasts (rebuildTouched's
-    // dirty set and routing table — ADVICE r16) are safe to free once
-    // every shard is materialized; unpersist not destroy, so an evicted
-    // shard recomputing through its lineage just re-fetches them
+    // lineage-only broadcasts (rebuildTouched's dirty set and routing
+    // table — ADVICE r16, and its caller's) are safe to free once every
+    // shard is materialized. Shards the materialize checkpointed have
+    // no lineage left, so the broadcasts are destroyed; otherwise only
+    // their executor copies go, and an evicted shard recomputing
+    // through its lineage re-fetches them
     val rel = releaseOnMaterialize
     releaseOnMaterialize = Nil
-    rel.foreach(_.unpersist(false))
+    val cut = shards.isCheckpointed
+    rel.foreach(b => if (cut) b.destroy() else b.unpersist(false))
     val rows = stats.map(_._1).sum
     liveRowsVar = rows
     dimVar = stats.headOption.map(_._2).getOrElse(-1)
@@ -283,7 +286,7 @@ final class HnswStore[K](
   // freed from executors at the first materialize() (see above);
   // without this each incremental refresh would leak a broadcast of
   // up to graft.hnsw.incr.cap ids for the life of the store
-  @volatile private[operators] var releaseOnMaterialize:
+  @volatile private[graft] var releaseOnMaterialize:
     List[org.apache.spark.broadcast.Broadcast[_]] = Nil
 
   @volatile private var liveRowsVar: Long = -1L
