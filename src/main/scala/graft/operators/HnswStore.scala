@@ -209,6 +209,11 @@ final class HnswStore[K](
     */
   @volatile private var q8ShardsRef: RDD[graft.core.Q8Block[K]] = null
 
+  /** Runs after the q8 codes' build job and before they are published
+    * (test hook: lets a spec hold a build at that point).
+    */
+  @volatile private[graft] var q8BuiltHook: () => Unit = () => ()
+
   private def q8Codes(): RDD[graft.core.Q8Block[K]] = {
     val cur = q8ShardsRef
     if (cur != null) cur
@@ -220,6 +225,7 @@ final class HnswStore[K](
         }.setName("graft.hnsw.q8shards")
           .persist(StorageLevel.MEMORY_AND_DISK)
         derived.count()
+        q8BuiltHook()
         q8ShardsRef = derived
       }
       q8ShardsRef
