@@ -609,7 +609,7 @@ final class LocalReplica private[core] (
     // direct byte-FMA kernel, NOT the batch path's dequantize-to-
     // scratch tiling: that trade amortizes the expansion over a query
     // batch, and at batch size ONE it made the int8 scan ~8x slower
-    // than the fp32 exact scan (measured in VdbStoreBench before this)
+    // than the fp32 exact scan (measured at 100k x 1024 before this)
     val merged = scanSlabs(q8Blocks, scanK) { (b, h) =>
       var r = 0
       while (r < b.rows) {

@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -140,9 +141,7 @@ final class HnswStore[K](
     shards.unpersist(blocking)
     segments.foreach(_.unpersist(blocking))
     swapQPrep(null)
-    synchronized {
-      if (q8ShardsRef != null) { q8ShardsRef.unpersist(blocking); q8ShardsRef = null }
-    }
+    dropQ8Codes(blocking)
   }
 
   /** Pin this store for a read in flight: a [[retire]] that comes
@@ -168,15 +167,12 @@ final class HnswStore[K](
   private def free(): Unit =
     if (pinLock.synchronized(escaped) && shards.isCheckpointed) {
       swapQPrep(null)
-      synchronized {
-        if (q8ShardsRef != null) { q8ShardsRef.unpersist(false); q8ShardsRef = null }
-      }
+      dropQ8Codes(false)
     } else unpersist()
 
   // reads pinned in flight, whether a lazy frame over the shards was
   // handed out, whether a newer store supersedes this one. A lock of
-  // their own: the store's monitor is held through the q8 codes' build
-  // job, and acquire runs under the VdbStore's graph lock
+  // their own: acquire runs under the VdbStore's graph lock
   private val pinLock = new Object
   private var readers = 0
   private var escaped = false
@@ -214,11 +210,21 @@ final class HnswStore[K](
     */
   @volatile private[graft] var q8BuiltHook: () => Unit = () => ()
 
+  // q8Lock serializes the codes' build, which runs a job; the store's
+  // monitor guards only q8ShardsRef and q8Drops, so freeing the store
+  // never waits for a build. A build publishes its codes only if no
+  // drop came in between: codes built for a freed store are released.
+  private val q8Lock = new Object
+  private var q8Drops = 0L
+
   private def q8Codes(): RDD[graft.core.Q8Block[K]] = {
     val cur = q8ShardsRef
     if (cur != null) cur
-    else synchronized {
-      if (q8ShardsRef == null) {
+    else q8Lock.synchronized {
+      val built = q8ShardsRef
+      if (built != null) built
+      else {
+        val drops = synchronized(q8Drops)
         val derived = shards.map { sh =>
           graft.core.Q8Store.quantize(
             new VecBlock[K](sh.block.ids, sh.unit, sh.block.dim, null))
@@ -226,10 +232,24 @@ final class HnswStore[K](
           .persist(StorageLevel.MEMORY_AND_DISK)
         derived.count()
         q8BuiltHook()
-        q8ShardsRef = derived
+        val kept = synchronized {
+          if (q8Drops == drops) q8ShardsRef = derived
+          q8Drops == drops
+        }
+        if (!kept) derived.unpersist(false)
+        derived
       }
-      q8ShardsRef
     }
+  }
+
+  private def dropQ8Codes(blocking: Boolean): Unit = {
+    val old = synchronized {
+      q8Drops += 1
+      val o = q8ShardsRef
+      q8ShardsRef = null
+      o
+    }
+    if (old != null) old.unpersist(blocking)
   }
 
   /** (shard, codes) pairs for the q8 beam paths: a lazy partition-wise
@@ -408,18 +428,31 @@ final class HnswStore[K](
     * a lazy frame over them must keep their blocks.
     */
   def rebuildTouched(dirty: Set[K], changed: RDD[(K, Array[Float])],
-      maxBlockFloats: Int = BlockStore.MaxBlockFloats): HnswStore[K] = {
-    if (dirty.isEmpty) return this
+      maxBlockFloats: Int = BlockStore.MaxBlockFloats): HnswStore[K] =
+    if (dirty.isEmpty) this
+    else {
+      val bc = shards.sparkContext.broadcast(dirty)
+      val out = rebuildTouched(bc, changed, maxBlockFloats)
+      out.releaseOnMaterialize ::= bc
+      out
+    }
+
+  /** [[rebuildTouched]] over a dirty set the caller has broadcast
+    * already (and releases once the returned store is materialized),
+    * so a refresh ships the set once.
+    */
+  def rebuildTouched(dirty: Broadcast[Set[K]], changed: RDD[(K, Array[Float])],
+      maxBlockFloats: Int): HnswStore[K] = {
+    if (dirty.value.isEmpty) return this
     val sc = shards.sparkContext
     val nParts = shards.getNumPartitions
     if (nParts == 0)
       return HnswStore.fromRDD(spark, changed, normalize = false,
         assumeNormalized = normalized, m = m, efConstruction = efConstruction,
         maxBlockFloats = maxBlockFloats)
-    val bc = sc.broadcast(dirty)
     // the one lookup job: the partition holding each dirty id's live node
     val held = shards.mapPartitionsWithIndex { (pi, it) =>
-      val d = bc.value
+      val d = dirty.value
       it.flatMap(sh => HnswStore.liveDirty(sh, d).map(r => (sh.block.ids(r), pi)))
     }.collect().toMap
     val bcHeld = sc.broadcast(held)
@@ -434,7 +467,7 @@ final class HnswStore[K](
     val localOrd = ord
     val localCt = ct
     val next = shards.zipPartitions(routed) { (shIt, rowIt) =>
-      val d = bc.value
+      val d = dirty.value
       val shs = shIt.toArray
       val rows = rowIt.map(_._2).toArray.sortBy(_._1)(localOrd)
       if (shs.isEmpty) HnswStore.buildShards(rows.iterator, norm, mbf, mm, efc)(localCt)
@@ -475,7 +508,7 @@ final class HnswStore[K](
     next.localCheckpoint()
     val out = new HnswStore[K](spark, next, normalized, m, efConstruction)
     out.dimVar = dimVar
-    out.releaseOnMaterialize = List(bc, bcHeld)
+    out.releaseOnMaterialize = List(bcHeld)
     out
   }
 

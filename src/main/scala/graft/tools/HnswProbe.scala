@@ -1,9 +1,9 @@
 package graft.tools
 
 /** HNSW recall/latency probe on CLUSTERED 100k x 1024 — the realistic
-  * embedding shape (real text/image embeddings cluster; the
-  * VdbStoreBench rows measure the uniform adversarial case where
-  * distance concentration caps every index's recall). No Spark needed:
+  * embedding shape (real text/image embeddings cluster; uniform random
+  * rows are the adversarial case, where distance concentration caps
+  * every index's recall). No Spark needed:
   * the graph index is driver-local by design.
   */
 object HnswProbe {

@@ -150,7 +150,7 @@ class PackedReadSpec extends AnyFunSuite {
     work.open()
     try {
       // the counter sees a Dataset action
-      assert(work.of(s.count())._2 >= 1)
+      assert(work.of(s.df.count())._2 >= 1)
       assert(work.of(s.get(few)) == ((1, 0)))
       assert(work.of(s.get(few, includeVector = true)) == ((1, 0)))
       assert(work.of(s.get(many, includeVector = true)) == ((1, 0)))

@@ -103,7 +103,7 @@ class PackedRefreshSpec extends AnyFunSuite {
     work.open()
     try {
       // the counter sees a Dataset action
-      assert(work.of(s.count())._2 >= 1)
+      assert(work.of(s.df.count())._2 >= 1)
       write(s)
       s.get(Seq("a001")) // builds the pack of the new version
       val refreshed = s.lastTimings("pack")
