@@ -46,6 +46,7 @@ class PackedReadSpec extends AnyFunSuite {
     assert(s.query(Seq(probe), topK = 1, ids = Some(Seq("late", "a000")))
       .head.map(_.id) == Seq("late"))
     assert(s.get(Seq("late")).map(_.id) == Seq("late"))
+    s.releaseCaches()
   }
 
   test("two concurrent first reads build the pack once") {
@@ -83,6 +84,7 @@ class PackedReadSpec extends AnyFunSuite {
     } finally {
       gate.countDown()
       s.packBuiltHook = () => ()
+      s.releaseCaches()
     }
   }
 

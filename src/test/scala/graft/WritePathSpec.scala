@@ -146,6 +146,12 @@ class WritePathSpec extends AnyFunSuite {
     assert(rowsOf(before) == want, "a frame from before the writes reads other rows")
     assert(rowsOf(atCheckpoint._1) == atCheckpoint._2,
       "the checkpointed frame reads other rows")
+    // a superseded checkpoint's blocks stay until its frames are
+    // collected; free them here so no later spec sees them go
+    atCheckpoint._1.queryExecution.logical.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    }
     s.releaseCaches()
   }
 
